@@ -2613,9 +2613,11 @@ def _q46_ann_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
     # (same-session A/B at sf0.1: no-ckpt 2.46 vs ckpt 2.71 min over 4
     # alternated rounds, results identical) — the cut pays exactly
     # when the corpus pass is expensive, i.e. at scale. The gate reads
-    # the scan's file-size statistics (no job).
+    # the scan's file-size statistics (no job), once for both cuts.
+    reuse = _scan_size_bytes(emb) >= _REUSE_CKPT_MIN_BYTES
+
     def _cut(df):
-        if _scan_size_bytes(emb) < _REUSE_CKPT_MIN_BYTES:
+        if not reuse:
             return df
         out, _ids = local_checkpoint_tracked(df)
         buckets.track_pinned(_ids)

@@ -481,6 +481,11 @@ def dsir_select(
     from .search import with_fixed_log2_x64
 
     if docb is None:
+        if docb_n_buckets is not None:
+            raise ValueError(
+                "docb_n_buckets was passed without docb: it declares "
+                "the bucket count of a caller-owned docb frame"
+            )
         docb, _ids = dsir_doc_buckets(documents, n_buckets)
         buckets.track_pinned(_ids)
     else:

@@ -1580,6 +1580,11 @@ def hybrid_rrf_topk(
     fusion assumes and would silently skew the RRF scores.
     """
     if sem is None:
+        if sem_k is not None:
+            raise ValueError(
+                "sem_k was passed without sem: it declares the k of a "
+                "caller-owned sem frame"
+            )
         sem = cosine_topk(embeddings, query_max_id=query_max_id, k=pool)
     else:
         missing = {"query_id", "neighbor_id", "rank"} - set(sem.columns)

@@ -302,9 +302,11 @@ def commit_fact_increment(
     new_rows = (
         fact.filter(F.col(time_col) > F.lit(wm)) if wm is not None else fact
     )
-    if new_rows.isEmpty():
+    # one aggregate answers both "anything new?" and the new mark; the
+    # count decides emptiness (rows with a NULL time_col still append)
+    n, new_wm = new_rows.agg(F.count(F.lit(1)), F.max(time_col)).first()
+    if n == 0:
         return {"mode": "noop", "snapshot_id": manifest["current"], "rows": 0}
-    new_wm = new_rows.agg(F.max(time_col)).first()[0]
     sid = snapshots.write_snapshot(
         new_rows, root, mode="append", meta={"watermark": _iso(new_wm)}
     )
@@ -315,6 +317,24 @@ def _iso(v):
     import datetime as _dt
 
     return v.isoformat() if isinstance(v, (_dt.datetime, _dt.date)) else v
+
+
+def _same_rows(a: DataFrame, b: DataFrame) -> bool:
+    """Multiset equality of two frames in ONE aggregate: each distinct
+    row's count in ``a`` minus its count in ``b`` must be zero (grouping
+    is null-safe and duplicates count). Frames with different column
+    lists are unequal."""
+    if a.columns != b.columns:
+        return False
+    w = "__same_rows_w"
+    return (
+        a.select("*", F.lit(1).alias(w))
+        .unionByName(b.select("*", F.lit(-1).alias(w)))
+        .groupBy(*a.columns)
+        .agg(F.sum(w).alias(w))
+        .filter(F.col(w) != 0)
+        .isEmpty()
+    )
 
 
 def run_incremental_pipeline(
@@ -347,14 +367,13 @@ def run_incremental_pipeline(
     }
     for name, df in dims.items():
         droot = os.path.join(warehouse, "silver", name)
-        # overwrite only when the content actually changed — dims are
-        # small, so the symmetric-difference probe is two tiny scans,
-        # and an unchanged re-run stays a no-op at EVERY layer (no
-        # spurious snapshot/dir growth between vacuums)
-        if snapshots._load(droot)["current"] is not None:
-            cur = snapshots.read_snapshot(spark, droot)
-            if cur.exceptAll(df).isEmpty() and df.exceptAll(cur).isEmpty():
-                continue
+        # overwrite only when the content actually changed, so an
+        # unchanged re-run stays a no-op at EVERY layer (no spurious
+        # snapshot/dir growth between vacuums)
+        if snapshots._load(droot)["current"] is not None and _same_rows(
+            snapshots.read_snapshot(spark, droot), df
+        ):
+            continue
         snapshots.write_snapshot(df, droot)
 
     out: dict = {}

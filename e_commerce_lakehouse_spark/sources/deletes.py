@@ -76,9 +76,7 @@ def _minus_prior_dvs(
     dvs = entry.get("dvs")
     if not dvs:
         return tagged
-    olddv = spark.read.parquet(
-        *[os.path.join(root, d) for d in dvs]
-    ).select("file", "pos")
+    olddv = S._read_dvs(spark, root, dvs)
     return tagged.join(
         F.broadcast(olddv),
         (tagged._file == olddv.file) & (tagged._pos == olddv.pos),
@@ -227,8 +225,8 @@ def _delete_where_dv(
     conj = functools.reduce(
         operator.and_, [S._predicate_col(p) for p in predicates]
     )
-    raw = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(root, f) for f in plan["files"]]
+    raw = S._scan_entry_files(
+        spark, entry, [os.path.join(root, f) for f in plan["files"]]
     )
     doomed = _minus_prior_dvs(spark, root, entry, _tag_positions(raw)).filter(
         F.coalesce(conj, F.lit(False))
@@ -307,9 +305,7 @@ def rewrite_deletes(
     if not dvs:
         return entry["id"]
 
-    dv = spark.read.parquet(*[os.path.join(root, d) for d in dvs]).select(
-        "file", "pos"
-    )
+    dv = S._read_dvs(spark, root, dvs)
     # per-file deleted counts are manifest-scale, not data-scale: one
     # groupBy over the KB sidecars
     per_file_deleted = {
@@ -339,18 +335,15 @@ def rewrite_deletes(
     files = {d: sorted(names) for d, names in keep.items()}
     if rewrite:
         tagged = _tag_positions(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(root, p) for p in rewrite]
+            S._scan_entry_files(
+                spark, entry, [os.path.join(root, p) for p in rewrite]
             )
         )
-        survivors = S._strip_hidden(
-            tagged.join(
-                F.broadcast(dv),
-                (tagged._file == dv.file) & (tagged._pos == dv.pos),
-                "left_anti",
-            ).drop("_file", "_pos"),
-            S._hidden_set(manifest),
-        )
+        survivors = tagged.join(
+            F.broadcast(dv),
+            (tagged._file == dv.file) & (tagged._pos == dv.pos),
+            "left_anti",
+        ).drop("_file", "_pos")
         data_dir = S._claim_data_dir(root, snap_id, "purge")
         S._write_data_dir(survivors, root, data_dir, manifest)
         manifest.setdefault("dir_stats", {})[data_dir] = S._collect_dir_stats(
@@ -491,7 +484,7 @@ def _merge_upsert_dv(
     matched = None
     try:
         if paths:
-            raw = spark.read.option("mergeSchema", "true").parquet(*paths)
+            raw = S._scan_entry_files(spark, entry, paths)
             tagged = _minus_prior_dvs(
                 spark, root, entry, _tag_positions(raw)
             )
@@ -688,7 +681,7 @@ def _apply_changes_dv(
     snap_id = manifest["snapshots"][-1]["id"] + 1
     dvs = list(entry.get("dvs", []))
     if paths:
-        raw = spark.read.option("mergeSchema", "true").parquet(*paths)
+        raw = S._scan_entry_files(spark, entry, paths)
         tagged = _minus_prior_dvs(
             spark, root, entry, _tag_positions(raw, *keys)
         )

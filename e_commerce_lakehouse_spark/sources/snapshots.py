@@ -34,9 +34,13 @@ read immutable dirs.
 
 At 100 TB nothing here scales with data size: the manifest carries
 directory names, not file lists or row data, and every operation other
-than the actual parquet write is O(#snapshots). Schema evolution across
-snapshots rides parquet ``mergeSchema`` on read, matching
-``catalog.append_evolve`` write-side semantics.
+than the actual parquet write is O(#snapshots). The manifest's schema
+is authoritative: every scan reads its files under the snapshot's
+recorded physical schema and never reads a footer to learn it, so
+building a read launches no Spark job. Files written before a column
+existed read it as NULL (or its initial default), which gives
+schema evolution across snapshots the ``catalog.append_evolve``
+write-side semantics.
 """
 
 from __future__ import annotations
@@ -1592,76 +1596,50 @@ def _project_entry_schema(
 ) -> DataFrame:
     """Make the ENTRY's recorded schema authoritative for reads: each
     logical column resolves to its physical file column (per the
-    entry's column mapping — stable physical names survive renames),
-    casts to the declared type, and null-pads when no file carries it
-    yet (a metadata-only ADD COLUMN); file columns outside the schema
-    (dropped columns, hidden transform columns) never surface. This is
-    what makes schema evolution a manifest edit instead of a data
-    rewrite — the Iceberg/Delta read contract."""
+    entry's column mapping — stable physical names survive renames)
+    of a :func:`_scan_entry_files` frame, which already carries every
+    physical column at its declared type (null-padded where a file
+    lacks it); an initial-default column reads its default on rows of
+    the dirs that predate it. File columns outside the schema (dropped
+    columns, hidden transform columns) never surface. This is what
+    makes schema evolution a manifest edit instead of a data rewrite —
+    the Iceberg/Delta read contract."""
     import pyspark.sql.types as T
 
     struct = T.StructType.fromJson(json.loads(entry["schema"]))
     mapping = entry.get("mapping", {})
-    raw_types = {f.name: f.dataType for f in df.schema.fields}
     cols = []
     for f in struct.fields:
         if f.name in hidden:
             continue
         meta = f.metadata or {}
-        phys = mapping.get(f.name, f.name)
-        if phys in raw_types:
-            col = F.col(phys)
-            # cast only on a REAL type difference: Spark refuses a cast
-            # between types that differ solely in nested nullability
-            # ("cannot cast array<bigint> to array<bigint>"), and no
-            # cast is needed there anyway
-            if (
-                raw_types[phys].simpleString()
-                != f.dataType.simpleString()
-            ):
-                col = col.cast(f.dataType)
-            if "initial_default" in meta:
-                # rows from dirs that predate the ADD read the default
-                # (the column did not exist there); every later write
-                # reads back exactly what it wrote, explicit NULLs
-                # included — dir membership, not value-coalescing.
-                # __src_dir is tagged by _with_src_dir BEFORE any DV
-                # anti-join (parquet _metadata resolves only on the
-                # scan relation)
-                col = F.when(
-                    F.col("__src_dir").isin(
-                        list(meta.get("default_dirs", []))
-                    ),
-                    F.lit(meta["initial_default"]).cast(f.dataType),
-                ).otherwise(col)
-            cols.append(col.alias(f.name))
-        elif "initial_default" in meta:
-            # no file carries the column yet: every row predates it
-            cols.append(
-                F.lit(meta["initial_default"]).cast(f.dataType).alias(f.name)
-            )
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+        col = F.col(mapping.get(f.name, f.name))
+        if "initial_default" in meta:
+            # rows from dirs that predate the ADD read the default
+            # (the column did not exist there); every later write
+            # reads back exactly what it wrote, explicit NULLs
+            # included — dir membership, not value-coalescing.
+            # __src_dir is tagged by _with_src_dir BEFORE any DV
+            # anti-join (parquet _metadata resolves only on the
+            # scan relation)
+            col = F.when(
+                F.col("__src_dir").isin(list(meta.get("default_dirs", []))),
+                F.lit(meta["initial_default"]).cast(f.dataType),
+            ).otherwise(col)
+        cols.append(col.alias(f.name))
     return df.select(*cols)
 
 
-def _has_widened_fields(entry: dict) -> bool:
-    return any(
-        "widened_from" in (f.get("metadata") or {})
-        for f in json.loads(entry["schema"])["fields"]
-    )
-
-
 def _scan_entry_files(spark: SparkSession, entry: dict, paths: list[str]) -> DataFrame:
-    """Raw scan of a snapshot's files. A widened column (metadata-only
-    ALTER COLUMN TYPE) leaves files at MIXED physical widths, which
-    parquet mergeSchema refuses to merge — read those with an EXPLICIT
-    physical schema instead (Spark 4's parquet readers up-cast
-    losslessly, and missing/extra file columns pad/prune exactly like
-    mergeSchema). Non-widened tables keep the mergeSchema path
-    untouched."""
-    if not _has_widened_fields(entry):
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+    """Raw scan of a snapshot's files under the entry's PHYSICAL schema:
+    the recorded fields, named through the column mapping, every one
+    nullable. The manifest's schema is authoritative — no footer is
+    read to plan the scan, so building the frame launches no Spark
+    job. Files missing a column read it as NULL, file columns outside
+    the schema (dropped or hidden transform columns) are pruned, and a
+    metadata-widened column's narrow files up-cast losslessly (Spark
+    4's type-widening parquet reads). ``_metadata`` still resolves on
+    the scan relation."""
     import pyspark.sql.types as T
 
     struct = T.StructType.fromJson(json.loads(entry["schema"]))
@@ -1673,6 +1651,14 @@ def _scan_entry_files(spark: SparkSession, entry: dict, paths: list[str]) -> Dat
         ]
     )
     return spark.read.schema(phys).parquet(*paths)
+
+
+def _read_dvs(spark: SparkSession, root: str, dvs: list[str]) -> DataFrame:
+    """The (file, pos) rows of ``dvs`` sidecar dirs, read under the
+    sidecars' fixed schema (no footer inference)."""
+    return spark.read.schema("file STRING, pos BIGINT").parquet(
+        *[os.path.join(root, d) for d in dvs]
+    )
 
 
 def _has_defaulted_fields(entry: dict) -> bool:
@@ -1699,9 +1685,10 @@ def _merge_rewrite_schema(manifest: dict, parent_schema_json: str, frame_schema)
     """Schema a REWRITE commit (replace_where / update_where / compact)
     records: the parent's fields win — a metadata-only added column not
     yet present in any data file must survive the rewrite — plus any
-    genuinely new fields the written frame introduces. Raw-read frames
-    carry hidden transform columns and retired (dropped) physicals;
-    those must never re-enter the logical schema."""
+    genuinely new fields the written frame introduces. Hidden transform
+    columns and retired (dropped) physical names must never re-enter
+    the logical schema: a caller's replacement rows may carry them, and
+    old files still hold their data."""
     import pyspark.sql.types as T
 
     skip = _hidden_set(manifest) | set(manifest.get("retired_physical", []))
@@ -2039,9 +2026,7 @@ def _apply_dvs(spark: SparkSession, root: str, entry: dict, df: DataFrame) -> Da
     dvs = entry.get("dvs")
     if not dvs:
         return df
-    dv = spark.read.parquet(*[os.path.join(root, d) for d in dvs]).select(
-        "file", "pos"
-    )
+    dv = _read_dvs(spark, root, dvs)
     tagged = df.select(
         "*",
         _rel_file_col().alias("_dv_file"),
@@ -2098,10 +2083,15 @@ def _guard_identity_mapping(entry: dict, op: str) -> None:
 
 
 def _guard_no_widened(entry: dict, op: str) -> None:
-    """Raw mergeSchema reads refuse the mixed physical widths a
-    metadata-only type widening leaves behind; refuse with the fix
-    spelled out instead of Spark's merge error."""
-    if _has_widened_fields(entry):
+    """Raw-file ops refuse a table whose files sit at mixed physical
+    widths after a metadata-only type widening, with the fix spelled
+    out. The scan itself reads them (the manifest schema up-casts the
+    narrow files); the refusal keeps these ops' rewrite and changelog
+    semantics to single-width tables until materialize_schema runs."""
+    if any(
+        "widened_from" in (f.get("metadata") or {})
+        for f in json.loads(entry["schema"])["fields"]
+    ):
         raise ValueError(
             f"{op}: snapshot {entry['id']} has metadata-widened columns "
             "(files at mixed physical widths); run materialize_schema() "
@@ -2263,9 +2253,9 @@ def add_column(root: str, name: str, dtype: str, default=None) -> int:
         if default is not None:
             # the default applies to rows that PREDATE the column —
             # i.e. rows in the dirs committed so far. Record them: a
-            # later scan cannot tell "file lacks the column" from
-            # "file has it with NULLs" after Spark's mergeSchema read,
-            # but dir membership is exact and immutable.
+            # scan under the manifest schema cannot tell "file lacks
+            # the column" from "file has it with NULLs", but dir
+            # membership is exact and immutable.
             cur = _entry(manifest, manifest["current"])
             meta = {
                 "initial_default": default,
@@ -2291,9 +2281,8 @@ def alter_column_type(root: str, name: str, dtype: str) -> int:
     """Metadata-only ALTER COLUMN TYPE, restricted to LOSSLESS
     widenings (int->long, float->double, decimal precision growth at
     fixed scale — Iceberg's promotion rules): old files keep their
-    narrow physical type and the read projection casts up (a real type
-    difference, so the cast survives `_project_entry_schema`'s
-    nullability-only skip). Anything lossy is refused — it would need a
+    narrow physical type and the scan reads them at the widened type
+    (`_scan_entry_files` up-casts losslessly). Anything lossy is refused — it would need a
     rewrite, not a manifest edit."""
     new_dt = _parse_ddl_type(dtype)
     import pyspark.sql.types as T
@@ -2398,9 +2387,10 @@ def read_snapshot(
     """Read the table: latest by default, a pinned ``snapshot_id``, a
     named ``tag`` (see :func:`tag_snapshot`), a ``branch`` head (the
     WAP audit read), or time travel to the newest snapshot committed
-    at/before ``as_of`` (unix seconds). Schemas are merged across dirs
-    so appends written after a column was added read back with nulls
-    in older rows."""
+    at/before ``as_of`` (unix seconds). The snapshot's recorded schema
+    is the read schema (no footer is consulted): rows of files written
+    before a column was added read it back as NULL, or as its initial
+    default."""
     manifest = _load(root)
     if sum(x is not None for x in (snapshot_id, tag, branch)) > 1:
         raise ValueError("pass at most one of snapshot_id / tag / branch")
@@ -2557,26 +2547,28 @@ def snapshot_file_changes(
     _guard_identity_mapping(_entry(manifest, to_id), "snapshot_file_changes")
     _guard_no_initial_defaults(_entry(manifest, to_id), "snapshot_file_changes")
     _guard_no_widened(_entry(manifest, to_id), "snapshot_file_changes")
-    old = set(_entry_units(root, manifest, _entry(manifest, from_id)))
-    new = set(_entry_units(root, manifest, _entry(manifest, to_id)))
+    from_entry, to_entry = _entry(manifest, from_id), _entry(manifest, to_id)
+    old = set(_entry_units(root, manifest, from_entry))
+    new = set(_entry_units(root, manifest, to_entry))
     added = sorted(os.path.join(d, f) for d, f in new - old)
     removed = sorted(os.path.join(d, f) for d, f in old - new)
 
-    def _read(paths, change_type):
-        df = _strip_hidden(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(root, p) for p in paths]
-            ),
-            _hidden_set(manifest),
+    def _read(entry, paths, change_type):
+        # added files read under the NEW snapshot's schema, removed
+        # ones under the OLD one's: each side as its snapshot saw it
+        df = _scan_entry_files(
+            spark, entry, [os.path.join(root, p) for p in paths]
         )
         return df.withColumn("_change_type", F.lit(change_type))
 
     if added and removed:
-        feed = _read(added, "insert").unionByName(
-            _read(removed, "delete"), allowMissingColumns=True
+        feed = _read(to_entry, added, "insert").unionByName(
+            _read(from_entry, removed, "delete"), allowMissingColumns=True
         )
-    elif added or removed:
-        feed = _read(added or removed, "insert" if added else "delete")
+    elif added:
+        feed = _read(to_entry, added, "insert")
+    elif removed:
+        feed = _read(from_entry, removed, "delete")
     else:
         entry = _entry(manifest, to_id)
         schema = json.loads(entry["schema"])
@@ -3534,10 +3526,9 @@ def replace_where(
     guards["replace_where_scope"] = F.coalesce(conj, F.lit(False))
     new_rows = guard_constraints(df, guards)
     if rewrite_paths:
-        retained = _strip_hidden(
-            spark.read.option("mergeSchema", "true").parquet(*rewrite_paths),
-            _hidden_set(manifest),
-        ).filter(~F.coalesce(conj, F.lit(False)))
+        retained = _scan_entry_files(spark, entry, rewrite_paths).filter(
+            ~F.coalesce(conj, F.lit(False))
+        )
         new_rows = retained.unionByName(new_rows, allowMissingColumns=True)
 
     snap_id = manifest["snapshots"][-1]["id"] + 1
@@ -3646,10 +3637,7 @@ def update_where(
         data_dir = _claim_data_dir(root, snap_id, "update")
         conj = _ft.reduce(_op.and_, [_predicate_col(p) for p in predicates])
         cond = F.coalesce(conj, F.lit(False))
-        rows = _strip_hidden(
-            spark.read.option("mergeSchema", "true").parquet(*rewrite_paths),
-            _hidden_set(manifest),
-        )
+        rows = _scan_entry_files(spark, entry, rewrite_paths)
         # all assignments evaluate against the OLD row (one select)
         updated = rows.select(
             *[
@@ -3784,11 +3772,8 @@ def compact_files(
 
     total = sum(s for _, _, s in small)
     n_out = max(1, -(-total // target_bytes))  # ceil
-    merged = _strip_hidden(
-        spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(root, d, f) for d, f, _ in small]
-        ),
-        _hidden_set(manifest),
+    merged = _scan_entry_files(
+        spark, entry, [os.path.join(root, d, f) for d, f, _ in small]
     ).repartition(n_out)
     snap_id = manifest["snapshots"][-1]["id"] + 1
     data_dir = _claim_data_dir(root, snap_id, "compact")
@@ -3889,11 +3874,8 @@ def optimize_zorder(
         for d, f in _entry_units(root, manifest, entry):
             if os.path.join(d, f) in pruned:
                 keep.setdefault(d, []).append(f)
-        rows = _strip_hidden(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(root, f) for f in plan["files"]]
-            ),
-            _hidden_set(manifest),
+        rows = _scan_entry_files(
+            spark, entry, [os.path.join(root, f) for f in plan["files"]]
         )
         clustered = zorder_layout(
             rows, cluster_cols, num_files=num_files, bits=bits

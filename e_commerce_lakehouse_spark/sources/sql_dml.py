@@ -1203,8 +1203,8 @@ def execute_dml(
                 )
             # ...and TYPES: same-named columns with drifted types would
             # append silently and flip the committed entry's schema to
-            # the source's — later mergeSchema reads across old+new dirs
-            # then fail or widen unexpectedly. Loud means types too.
+            # the source's — later reads of the old dirs under that
+            # schema then fail or widen unexpectedly. Loud means types too.
             src_types = {f.name: f.dataType.jsonValue() for f in df.schema.fields}
             drift = [
                 (f["name"], src_types[f["name"]], f["type"])

@@ -94,7 +94,7 @@ InputPartition PER FILE, read executor-side with pyarrow and shipped
 to the JVM as Arrow batches — no Python row loop, and a 10k-file
 backfill fans out across the cluster like any parquet scan. Schema is
 the CURRENT table schema: older files missing later-added columns pad
-nulls (mergeSchema read semantics); dropped/hidden partition columns
+nulls (the snapshot read contract); dropped/hidden partition columns
 in the files are pruned before the batch leaves the worker.
 
 Vacuum interplay: offsets pin snapshots, but ``vacuum``/``expire`` can

@@ -19,6 +19,16 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture(scope="session")
+def ecom_csv(tmp_path_factory):
+    """The six reference batch CSVs, seeded, with planted dirty rows
+    (tests/ecom_batch.py): ``(csv_dir, facts)``."""
+    from tests.ecom_batch import write_batch_csvs
+
+    d = str(tmp_path_factory.mktemp("ecom_csv"))
+    return d, write_batch_csvs(d, seed=7)
+
+
 def file_spans(path: str, col: str) -> list[int]:
     """Per-parquet-file (max - min) span of ``col`` from footer
     row-group statistics — the shared scanner for layout tests."""

@@ -922,6 +922,11 @@ def test_rrf_sem_contract_violations_raise(spark):
             docs, emb, query_max_id=5, k=5, pool=10,
             sem=sem.drop("rank"), sem_k=15,
         )
+    # sem_k without a sem frame describes nothing: refused, not ignored
+    with _pytest.raises(ValueError, match="without sem"):
+        similarity.hybrid_rrf_topk(
+            docs, emb, query_max_id=5, k=5, pool=10, sem_k=15
+        )
 
 
 def test_ivf_plan_broadcasts_probe_side(spark):

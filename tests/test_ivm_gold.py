@@ -1,5 +1,6 @@
 """Incremental gold refresh (plans/ivm.py): N-batch fold == full
-rebuild on the reference's own medallion tables, O(delta) file reads
+rebuild on the reference's medallion tables (seeded batch CSVs with
+planted dirty rows, tests/ecom_batch.py), O(delta) file reads
 pinned (the refresh never scans the base fact), vanished groups drop,
 watermark no-op. The round-6 verdict's flagship ask."""
 
@@ -17,9 +18,6 @@ from e_commerce_lakehouse_spark.plans import ivm, medallion
 from e_commerce_lakehouse_spark.sources import snapshots as S
 from e_commerce_lakehouse_spark.sources.csv import read_csv
 
-REF_CSV = "/root/reference/data/batch"
-
-
 @pytest.fixture()
 def tmpdir():
     d = tempfile.mkdtemp(prefix="ivm_")
@@ -27,10 +25,10 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _silver(spark):
-    """Reference CSVs -> silver fact_purchase_event + dim_products."""
+def _silver(spark, csv_dir):
+    """Batch CSVs -> silver fact_purchase_event + dim_products."""
     bronze = {
-        name: read_csv(spark, os.path.join(REF_CSV, f"{name}.csv"), schema)
+        name: read_csv(spark, os.path.join(csv_dir, f"{name}.csv"), schema)
         for name, schema in schemas.ECOM_TABLES.items()
     }
     fact = medallion.fact_purchase_event(bronze["orders"], bronze["order_items"])
@@ -45,12 +43,12 @@ def _rows(df):
     )
 
 
-def test_sales_fold_equals_rebuild_across_batches(spark, tmpdir):
+def test_sales_fold_equals_rebuild_across_batches(spark, tmpdir, ecom_csv):
     """Three appended batches + one replace_where delete: after every
     refresh, the incrementally-maintained sales_summary equals the
     full rebuild over the fact's current contents — value-exact
     (integer-cents state)."""
-    fact, dim, _ = _silver(spark)
+    fact, dim, _ = _silver(spark, ecom_csv[0])
     fact = fact.cache()
     fact_root = f"{tmpdir}/fact_purchase_event"
     state_root = f"{tmpdir}/gold_sales_state"
@@ -96,11 +94,11 @@ def test_sales_fold_equals_rebuild_across_batches(spark, tmpdir):
     assert info["mode"] == "noop" and info["files_read"] == []
 
 
-def test_refresh_never_scans_base_fact(spark, tmpdir):
+def test_refresh_never_scans_base_fact(spark, tmpdir, ecom_csv):
     """Plan gate: an append-batch refresh reads ONLY the appended
     files — both by the manifest set-difference the feed is built from
     and by the feed frame's actual inputFiles()."""
-    fact, _, _ = _silver(spark)
+    fact, _, _ = _silver(spark, ecom_csv[0])
     fact_root = f"{tmpdir}/fact"
     state_root = f"{tmpdir}/state"
 
@@ -132,11 +130,11 @@ def test_refresh_never_scans_base_fact(spark, tmpdir):
     assert set(refreshed["files_read"]) == set(info["added"])
 
 
-def test_vanished_groups_drop_and_review_fold(spark, tmpdir):
+def test_vanished_groups_drop_and_review_fold(spark, tmpdir, ecom_csv):
     """Deleting every row of a group removes its state row (signed
     count hits zero), matching the rebuild; review_summary's avg
     derives exactly from the maintained sum+count."""
-    fact, dim, reviews = _silver(spark)
+    fact, dim, reviews = _silver(spark, ecom_csv[0])
     reviews = reviews.cache()
     root = f"{tmpdir}/fact_reviews"
     state_root = f"{tmpdir}/gold_review_state"
@@ -177,7 +175,7 @@ def test_signed_delta_rejects_unknown_change_type(spark):
         ivm.signed_delta_aggregate(feed, ivm.SALES_SPEC).collect()
 
 
-def test_run_incremental_pipeline_end_to_end(spark, tmpdir):
+def test_run_incremental_pipeline_end_to_end(spark, tmpdir, ecom_csv):
     """The full medallion wired incrementally: batch 1 = pre-cut CSVs
     (bootstrap), batch 2 = complete CSVs (high-watermark fact APPEND +
     O(delta) gold refresh), batch 3 = re-run (no-op at every layer).
@@ -186,14 +184,15 @@ def test_run_incremental_pipeline_end_to_end(spark, tmpdir):
     import csv as _csv
     import shutil as _sh
 
+    ref_csv, facts = ecom_csv
     cut = "2023-01-01"
     early = os.path.join(tmpdir, "csv_early")
     os.makedirs(early)
     for name in ("categories", "products", "users"):
-        _sh.copy(os.path.join(REF_CSV, f"{name}.csv"), early)
+        _sh.copy(os.path.join(ref_csv, f"{name}.csv"), early)
 
     def _filter_csv(name, keep):
-        with open(os.path.join(REF_CSV, f"{name}.csv")) as fh:
+        with open(os.path.join(ref_csv, f"{name}.csv")) as fh:
             rows = list(_csv.DictReader(fh))
         kept = [r for r in rows if keep(r)]
         with open(os.path.join(early, f"{name}.csv"), "w", newline="") as fh:
@@ -206,7 +205,7 @@ def test_run_incremental_pipeline_end_to_end(spark, tmpdir):
     order_ids = {r["order_id"] for r in kept_orders}
     _filter_csv("order_items", lambda r: r["order_id"] in order_ids)
     _filter_csv("reviews", lambda r: r["review_date"] < cut)
-    assert 0 < len(kept_orders) < 10_000
+    assert 0 < len(kept_orders) < facts["rows"]["orders"]
 
     wh = os.path.join(tmpdir, "wh")
     out1 = ivm.run_incremental_pipeline(spark, early, wh)
@@ -232,7 +231,7 @@ def test_run_incremental_pipeline_end_to_end(spark, tmpdir):
 
     _gold_equals_full(early)
 
-    out2 = ivm.run_incremental_pipeline(spark, REF_CSV, wh)
+    out2 = ivm.run_incremental_pipeline(spark, ref_csv, wh)
     assert out2["fact_purchase_event"]["mode"] == "incremental"
     assert out2["sales_summary"]["mode"] == "incremental"
     # the refresh read ONLY the appended files
@@ -245,15 +244,23 @@ def test_run_incremental_pipeline_end_to_end(spark, tmpdir):
         )
     }
     assert set(out2["sales_summary"]["files_read"]).isdisjoint(batch1_files)
-    _gold_equals_full(REF_CSV)
+    _gold_equals_full(ref_csv)
 
-    out3 = ivm.run_incremental_pipeline(spark, REF_CSV, wh)
+    heads = {
+        t: S._load(f"{wh}/silver/{t}")["current"]
+        for t in ("dim_products", "dim_users", "fact_purchase_event",
+                  "fact_reviews")
+    }
+    out3 = ivm.run_incremental_pipeline(spark, ref_csv, wh)
     assert out3["fact_purchase_event"]["mode"] == "noop"
     assert out3["sales_summary"]["mode"] == "noop"
-    _gold_equals_full(REF_CSV)
+    # the unchanged re-run commits nothing at any silver table
+    for t, head in heads.items():
+        assert S._load(f"{wh}/silver/{t}")["current"] == head, t
+    _gold_equals_full(ref_csv)
 
 
-def test_streaming_gold_refresh_exactly_once(spark, tmpdir):
+def test_streaming_gold_refresh_exactly_once(spark, tmpdir, ecom_csv):
     """foreach_batch_gold_refresh: an availableNow file stream appends
     fact batches and folds gold forward; the result equals the full
     rebuild, and replaying a committed batch (same batch_id) changes
@@ -262,7 +269,7 @@ def test_streaming_gold_refresh_exactly_once(spark, tmpdir):
         foreach_batch_gold_refresh,
     )
 
-    fact, dim, _ = _silver(spark)
+    fact, dim, _ = _silver(spark, ecom_csv[0])
     src_dir = f"{tmpdir}/stream_src"
     fact.filter(F.col("order_id") % 2 == 0).write.parquet(f"{src_dir}/b0")
     fact.filter(F.col("order_id") % 2 == 1).write.parquet(f"{src_dir}/b1")
@@ -340,6 +347,99 @@ def test_fact_increment_survives_maintenance_commit(spark, tmp_path):
     out4 = ivm.commit_fact_increment(spark, fact, root4, "event_time")
     assert out4["mode"] == "incremental"
     assert S.read_snapshot(spark, root4).count() == 10
+
+
+def test_fact_increment_appends_null_time_rows(spark, tmp_path):
+    """A table bootstrapped empty carries a None watermark ("append
+    everything"): new rows whose time column is NULL still append —
+    emptiness is the row count, not the max — and the mark stays None.
+    Once a real mark exists, NULL-time rows never pass the filter."""
+    import datetime as dt
+
+    root = str(tmp_path / "fact")
+    schema = "id long, event_time timestamp"
+    empty = spark.createDataFrame([], schema)
+    assert ivm.commit_fact_increment(spark, empty, root, "event_time")["mode"] == "full"
+    nulls = spark.createDataFrame([(1, None), (2, None)], schema)
+    out = ivm.commit_fact_increment(spark, nulls, root, "event_time")
+    assert out["mode"] == "incremental"
+    assert sorted(r.id for r in S.read_snapshot(spark, root).collect()) == [1, 2]
+    m = S._load(root)
+    assert S._entry(m, m["current"])["meta"]["watermark"] is None
+
+    t = dt.datetime(2024, 1, 1)
+    mixed = spark.createDataFrame([(3, t), (4, None)], schema)
+    assert ivm.commit_fact_increment(spark, mixed, root, "event_time")["mode"] == "incremental"
+    later = spark.createDataFrame([(5, None), (3, t)], schema)
+    assert ivm.commit_fact_increment(spark, later, root, "event_time")["mode"] == "noop"
+    assert sorted(r.id for r in S.read_snapshot(spark, root).collect()) == [1, 2, 3, 4]
+
+
+def test_same_rows_is_multiset_equality(spark):
+    """The dim no-op probe: one value changed, a duplicated row, a NULL
+    on either side and a different column list all count as changed;
+    the same rows in another order (NULLs included) do not."""
+    schema = "id int, name string"
+    base = spark.createDataFrame([(1, "a"), (2, None), (3, "c")], schema)
+    same = spark.createDataFrame([(3, "c"), (2, None), (1, "a")], schema)
+    assert ivm._same_rows(base, same)
+    changed = spark.createDataFrame([(1, "a"), (2, None), (3, "C")], schema)
+    assert not ivm._same_rows(base, changed)
+    assert not ivm._same_rows(changed, base)
+    nulled = spark.createDataFrame([(1, "a"), (2, None), (3, None)], schema)
+    assert not ivm._same_rows(base, nulled)
+    dup = spark.createDataFrame([(1, "a"), (1, "a"), (2, None), (3, "c")], schema)
+    assert not ivm._same_rows(base, dup)
+    assert not ivm._same_rows(dup, base)
+    # same distinct rows, different multiplicities on both sides
+    dup2 = spark.createDataFrame([(1, "a"), (2, None), (3, "c"), (3, "c")], schema)
+    assert not ivm._same_rows(dup, dup2)
+    assert not ivm._same_rows(base, base.select("id"))
+    assert not ivm._same_rows(base, base.select("name", "id"))
+
+
+def test_pipeline_dim_probe_detects_one_changed_value(spark, tmp_path, ecom_csv):
+    """An unchanged dim commits nothing; one changed product name
+    commits a new dim_products snapshot carrying it, and leaves
+    dim_users alone."""
+    import csv as _csv
+    import shutil as _sh
+
+    src = str(tmp_path / "csv")
+    _sh.copytree(ecom_csv[0], src)
+    wh = str(tmp_path / "wh")
+    ivm.run_incremental_pipeline(spark, src, wh)
+
+    def heads():
+        return {
+            t: S._load(f"{wh}/silver/{t}")["current"]
+            for t in ("dim_products", "dim_users")
+        }
+
+    before = heads()
+    path = os.path.join(src, "products.csv")
+    with open(path) as fh:
+        rows = list(_csv.DictReader(fh))
+    # the newest version of one product (the one the dim keeps)
+    pid = rows[0]["product_id"]
+    latest = max(
+        (r for r in rows if r["product_id"] == pid),
+        key=lambda r: r["updated_at"],
+    )
+    latest["product_name"] = "renamed product"
+    with open(path, "w", newline="") as fh:
+        w = _csv.DictWriter(fh, fieldnames=rows[0].keys())
+        w.writeheader()
+        w.writerows(rows)
+
+    ivm.run_incremental_pipeline(spark, src, wh)
+    after = heads()
+    assert after["dim_users"] == before["dim_users"]
+    assert after["dim_products"] != before["dim_products"]
+    got = S.read_snapshot(spark, f"{wh}/silver/dim_products").filter(
+        F.col("product_id") == int(pid)
+    )
+    assert [r.product_name for r in got.collect()] == ["renamed product"]
 
 
 def test_join_view_maintenance_matches_rebuild(spark):

@@ -700,3 +700,6 @@ def test_dsir_caller_owned_feature_frame_is_identical(spark):
         sampling.dsir_select(docs, docb=docb)
     with _pytest.raises(ValueError, match="n_buckets=128"):
         sampling.dsir_select(docs, docb=docb, docb_n_buckets=128)
+    # a bucket count without a docb frame describes nothing: refused
+    with _pytest.raises(ValueError, match="without docb"):
+        sampling.dsir_select(docs, docb_n_buckets=256)

@@ -1,5 +1,6 @@
-"""Medallion pipeline on the REFERENCE's own CSV data (validates our
-silver/gold semantics against the source system's inputs directly) +
+"""Medallion pipeline on the reference's batch CSV schema (seeded
+inputs with planted dirty rows, tests/ecom_batch.py — validates our
+silver/gold semantics on the source system's table shapes) +
 incremental high-watermark load behavior."""
 
 from __future__ import annotations
@@ -15,8 +16,6 @@ from e_commerce_lakehouse_spark.plans import medallion
 from e_commerce_lakehouse_spark.sources import load_table
 from tests.conftest import SF_SMALL
 
-REF_CSV = "/root/reference/data/batch"
-
 
 @pytest.fixture()
 def tmpdir():
@@ -25,46 +24,58 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_full_pipeline_on_reference_data(spark, tmpdir):
-    counts = medallion.run_batch_pipeline(spark, REF_CSV, tmpdir)
-    # reference dataset sizes (BASELINE.md)
-    assert counts["bronze.categories"] == 13
-    assert counts["bronze.products"] == 20_000
-    assert counts["bronze.users"] == 10_000
-    assert counts["bronze.orders"] == 10_000
-    assert counts["bronze.reviews"] == 15_000
-    assert 30_000 < counts["bronze.order_items"] < 40_000
-    # silver: dedup keeps ≤ bronze counts; facts filter invalid rows
-    assert counts["silver.dim_products"] <= counts["bronze.products"]
-    assert counts["silver.dim_users"] <= counts["bronze.users"]
-    assert counts["silver.fact_purchase_event"] <= counts["bronze.order_items"]
-    assert counts["silver.fact_reviews"] <= counts["bronze.reviews"]
+def test_full_pipeline_on_reference_data(spark, tmpdir, ecom_csv):
+    csv_dir, facts = ecom_csv
+    counts = medallion.run_batch_pipeline(spark, csv_dir, tmpdir)
+    # bronze is a faithful copy of every CSV row, dirty ones included
+    for name, n in facts["rows"].items():
+        assert counts[f"bronze.{name}"] == n, name
+    # silver: dedup keeps exactly one row per id; facts drop exactly
+    # the planted invalid rows
+    assert counts["silver.dim_products"] == facts["distinct_products"]
+    assert counts["silver.dim_users"] == facts["distinct_users"]
+    assert counts["silver.fact_purchase_event"] == facts["valid_items"]
+    assert counts["silver.fact_reviews"] == facts["valid_reviews"]
     assert counts["gold.sales_summary"] > 0
     assert counts["gold.review_summary"] > 0
 
 
-def test_silver_semantics(spark, tmpdir):
-    counts = medallion.run_batch_pipeline(spark, REF_CSV, tmpdir)
+def test_silver_semantics(spark, tmpdir, ecom_csv):
+    csv_dir, facts = ecom_csv
+    assert facts["stale_products"] and facts["stale_users"]
+    assert facts["dirty_emails"] and facts["null_name_parts"]
+    medallion.run_batch_pipeline(spark, csv_dir, tmpdir)
     dimp = spark.read.parquet(f"{tmpdir}/silver/dim_products")
-    # dedup by product_id is total
+    # dedup by product_id is total, and keeps the NEWEST version
     assert dimp.count() == dimp.select("product_id").distinct().count()
+    assert dimp.filter(F.col("product_name") == facts["stale_name"]).count() == 0
     # category enrich landed
     assert dimp.filter(F.col("category_name").isNotNull()).count() > 0
 
     dimu = spark.read.parquet(f"{tmpdir}/silver/dim_users")
-    # F4 bug fixed: full_name is the real concatenation, never NULL
+    assert dimu.count() == dimu.select("user_id").distinct().count()
+    assert dimu.filter(F.col("first_name") == facts["stale_name"]).count() == 0
+    # F4 bug fixed: full_name is the real concatenation, never NULL —
+    # also when one name part is NULL
     assert dimu.filter(F.col("full_name").isNull()).count() == 0
     sample = dimu.filter(F.col("user_id") == 1).first()
     assert sample["full_name"] == f"{sample['first_name']} {sample['last_name']}"
+    half = dimu.filter(F.col("first_name").isNull() | F.col("last_name").isNull())
+    assert half.count() == facts["null_name_parts"]
+    assert half.filter(
+        F.col("full_name") != F.coalesce("first_name", "last_name")
+    ).count() == 0
     # emails normalized
     assert dimu.filter(F.col("email") != F.lower(F.trim("email"))).count() == 0
 
     fr = spark.read.parquet(f"{tmpdir}/silver/fact_reviews")
     assert fr.filter(~F.col("rating").between(1, 5)).count() == 0
+    fp = spark.read.parquet(f"{tmpdir}/silver/fact_purchase_event")
+    assert fp.filter((F.col("quantity") <= 0) | (F.col("price") <= 0)).count() == 0
 
 
-def test_gold_sales_summary_consistency(spark, tmpdir):
-    medallion.run_batch_pipeline(spark, REF_CSV, tmpdir)
+def test_gold_sales_summary_consistency(spark, tmpdir, ecom_csv):
+    medallion.run_batch_pipeline(spark, ecom_csv[0], tmpdir)
     gold = spark.read.parquet(f"{tmpdir}/gold/sales_summary")
     fact = spark.read.parquet(f"{tmpdir}/silver/fact_purchase_event")
     # total purchases across gold == fact rows (no row lost in agg/join)

@@ -2548,3 +2548,152 @@ def test_file_changes_slide_past_maintenance(spark, root):
     assert info["effective"] == [cid2, v3]
     assert not info["removed"]
     assert sorted(r.id for r in feed.collect()) == [14, 15]
+
+
+# ---------------------------------------------------------------------------
+# Reads take their schema from the manifest: building a read frame runs
+# no Spark job (no parquet footer inference), and the rows are the ones
+# the schema-evolution contract promises.
+# ---------------------------------------------------------------------------
+
+
+def _plan_only(spark, build):
+    """``build()``'s result and the number of Spark jobs it started.
+    Constructing a frame must not run anything; the listener bus is
+    drained so a job started during ``build`` is always counted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-only-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan-only read", False)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _shape_plain(spark, root):
+    v1 = S.write_snapshot(_df(spark, [{"id": 1, "v": "a"}, {"id": 2, "v": "b"}]), root)
+    v2 = S.write_snapshot(_df(spark, [{"id": 3, "v": "c"}]), root, mode="append")
+    return v1, v2
+
+
+def _shape_added_column(spark, root):
+    v1 = S.write_snapshot(_df(spark, [{"id": 1, "v": "a"}, {"id": 2, "v": "b"}]), root)
+    v2 = S.write_snapshot(
+        _df(spark, [{"id": 3, "v": "c", "x": 7}]), root, mode="append"
+    )
+    return v1, v2
+
+
+def _shape_renamed(spark, root):
+    v1, _ = _shape_plain(spark, root)
+    return v1, S.rename_column(root, "v", "w")
+
+
+def _shape_widened(spark, root):
+    v1 = S.write_snapshot(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"), root
+    )
+    S.alter_column_type(root, "id", "bigint")
+    v2 = S.write_snapshot(
+        spark.createDataFrame([(3_000_000_000, "c")], "id bigint, v string"),
+        root, mode="append",
+    )
+    return v1, v2
+
+
+def _shape_default(spark, root):
+    v1, _ = _shape_plain(spark, root)
+    S.add_column(root, "tier", "string", default="basic")
+    v2 = S.write_snapshot(
+        spark.createDataFrame(
+            [(4, "d", None), (5, "e", "gold")], "id long, v string, tier string"
+        ),
+        root, mode="append",
+    )
+    return v1, v2
+
+
+def _shape_dv(spark, root):
+    from e_commerce_lakehouse_spark.sources import deletes
+
+    v1, _ = _shape_plain(spark, root)
+    return v1, deletes.delete_where_dv(spark, root, [("id", "=", 2)])
+
+
+_BIG = 3_000_000_000
+
+#: shape -> (build, read rows, scan predicate, scan rows, changes rows
+#: from the first to the last snapshot, or None when the file-granular
+#: feed refuses the range)
+_READ_SHAPES = {
+    "plain": (
+        _shape_plain,
+        [(1, "a"), (2, "b"), (3, "c")],
+        ("id", ">=", 2), [(2, "b"), (3, "c")],
+        [(3, "c", "insert")],
+    ),
+    "added_column": (
+        _shape_added_column,
+        [(1, "a", None), (2, "b", None), (3, "c", 7)],
+        ("x", "=", 7), [(3, "c", 7)],
+        [(3, "c", 7, "insert")],
+    ),
+    "renamed": (
+        _shape_renamed,
+        [(1, "a"), (2, "b"), (3, "c")],
+        ("w", "=", "c"), [(3, "c")],
+        None,
+    ),
+    "widened": (
+        _shape_widened,
+        [(1, "a"), (2, "b"), (_BIG, "c")],
+        ("id", ">", 2), [(_BIG, "c")],
+        None,
+    ),
+    "initial_default": (
+        _shape_default,
+        [(1, "a", "basic"), (2, "b", "basic"), (3, "c", "basic"),
+         (4, "d", None), (5, "e", "gold")],
+        ("id", ">=", 3), [(3, "c", "basic"), (4, "d", None), (5, "e", "gold")],
+        None,
+    ),
+    "deletion_vectors": (
+        _shape_dv,
+        [(1, "a"), (3, "c")],
+        ("id", ">=", 2), [(3, "c")],
+        None,
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_READ_SHAPES))
+def test_reads_plan_from_manifest_without_spark_jobs(spark, root, shape):
+    build, read_rows, pred, scan_rows, change_rows = _READ_SHAPES[shape]
+    v_from, v_to = build(spark, root)
+
+    df, jobs = _plan_only(spark, lambda: S.read_snapshot(spark, root))
+    assert jobs == 0
+    assert _sorted_rows(df) == sorted(read_rows, key=repr)
+
+    df, jobs = _plan_only(spark, lambda: S.scan_snapshot(spark, root, [pred]))
+    assert jobs == 0
+    assert _sorted_rows(df) == sorted(scan_rows, key=repr)
+
+    if change_rows is None:
+        with pytest.raises(ValueError):
+            S.snapshot_file_changes(spark, root, v_from, v_to)
+        return
+    (feed, _info), jobs = _plan_only(
+        spark, lambda: S.snapshot_file_changes(spark, root, v_from, v_to)
+    )
+    assert jobs == 0
+    assert _sorted_rows(feed) == [(*r, v_to) for r in change_rows]
