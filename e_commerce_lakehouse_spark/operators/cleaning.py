@@ -36,19 +36,6 @@ def full_name(first: Column | str, last: Column | str) -> Column:
     return F.concat_ws(" ", F.trim(first), F.trim(last))
 
 
-def valid_range(df: DataFrame, col: str, lo, hi) -> DataFrame:
-    """rating.between(1,5)-style validation (silver_clean_transform.py:118)."""
-    return df.filter(F.col(col).between(lo, hi))
-
-
-def non_null(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Conjunction of isNotNull guards (silver_clean_transform.py:73,117)."""
-    pred = F.lit(True)
-    for c in cols:
-        pred = pred & F.col(c).isNotNull()
-    return df.filter(pred)
-
-
 def positive(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """(quantity > 0) & (price > 0) guards (silver_clean_transform.py:105)."""
     pred = F.lit(True)

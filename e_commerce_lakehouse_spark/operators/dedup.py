@@ -54,13 +54,6 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
-def exact_dedup_keep(documents: DataFrame) -> DataFrame:
-    """The deduplicated corpus itself: one row per distinct normalized
-    text (the min-doc_id representative)."""
-    keep = exact_dedup(documents).select(F.col("canonical_doc_id").alias("doc_id"))
-    return documents.join(keep, "doc_id", "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # 2. Exact n-gram / token-set Jaccard
 # ---------------------------------------------------------------------------
@@ -478,19 +471,6 @@ def minhash_sig_udf(num_hashes: int = 16, shingle: int = 3):
     # duplicates the eval or pushes a re-evaluating filter below the
     # spread_for_cpu exchange (that re-runs the kernel single-partition)
     return sm.asNondeterministic()
-
-
-def shingle_set_udf(shingle: int = 3):
-    """text -> array<string> distinct word shingles (the exact-verify
-    side of LSH dedup). Run it on the CANDIDATE doc set only — at scale
-    that's a tiny fraction of the corpus."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def sh(text: pd.Series) -> pd.Series:
-        return pd.Series([_shingles(t, shingle) for t in text])
-
-    return sh.asNondeterministic()  # see minhash_sig_udf note
 
 
 def minhash_lsh_pairs(
@@ -1110,6 +1090,12 @@ def span_dedup(documents: DataFrame, span_tokens: int = 10) -> DataFrame:
     Returns (doc_id, n_spans, n_spans_kept, clean_text); clean_text is
     NULL when every span was cut (and for NULL-text docs, which carry
     n_spans = NULL).
+
+    Spans are grouped on a 128-bit key made of two xxhash64 digests of
+    the span. The two halves are correlated (the second hashes the same
+    span behind a constant prefix) and xxhash64 is not cryptographic,
+    so the 2^-128 collision bound holds for non-adversarial input only:
+    a corpus built to collide in both halves could cut a distinct span.
     """
     s = span_tokens
     spans = documents.filter(F.col("text").isNotNull()).select(
@@ -1125,8 +1111,9 @@ def span_dedup(documents: DataFrame, span_tokens: int = 10) -> DataFrame:
     # reassembly carries the span text itself). This operator performs
     # DESTRUCTIVE surgery — a colliding pair of distinct spans would
     # silently cut the loser from its document — so the removal path
-    # keeps a 128-bit key: a struct of two independent xxhash64 labels
-    # (the second seeded by a prepended constant), 16 shuffle bytes
+    # keeps a 128-bit key: a struct of two xxhash64 labels (the second
+    # seeded by a prepended constant — correlated, see the docstring's
+    # non-adversarial caveat), 16 shuffle bytes
     # instead of md5's 32-char hex string. At the 100 TB design point
     # (~1e12 spans) 64-bit birthday collisions are expected in bulk;
     # 128 bits keeps them one-way 2^-128 events. Detection-only paths

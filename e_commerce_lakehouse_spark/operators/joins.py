@@ -19,18 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich_left(fact: DataFrame, dim: DataFrame, on, broadcast_dim: bool = True) -> DataFrame:
-    """Left-join a dimension onto a fact (reference J2). Dimensions are
-    broadcast by default — zero shuffle on the fact side."""
-    return fact.join(F.broadcast(dim) if broadcast_dim else dim, on, "left")
-
-
-def fact_join(left: DataFrame, right: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Fact-fact equi-join (reference J1). Shuffle join on the key;
-    AQE picks broadcast automatically when one side turns out small."""
-    return left.join(right, on, how)
-
-
 def semi_join(df: DataFrame, keys: DataFrame, on) -> DataFrame:
     """Keep rows of ``df`` whose key appears in ``keys`` (reference J3,
     done there as inner-join-on-projected-keys which can duplicate rows —

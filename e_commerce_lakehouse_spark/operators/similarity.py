@@ -120,9 +120,9 @@ def hyperplane_sketch(
     """
     # deterministic ±1 hyperplanes derived off-plan; the projection runs
     # as one Arrow-batched matmul kernel (band_codes_udf with a single
-    # band packs all sign bits into one code — the sketch). The same
-    # integer math as the sign_bits HOF expression, which runs
-    # interpreted (CodegenFallback) and was the q26 hot spot.
+    # band packs all sign bits into one code — the sketch). An
+    # equivalent per-row HOF expression runs interpreted
+    # (CodegenFallback) and was the q26 hot spot.
     # ``dim`` is a parameter (callers know their embedding width) — no
     # driver-side probe job.
     planes_arr = hyperplanes(planes, dim, seed)
@@ -318,41 +318,6 @@ def hyperplanes(planes: int, dim: int, seed: int = 7) -> list[list[int]]:
             ]
         )
     return out
-
-
-def _planes_lit(planes_arr: list[list[int]]) -> Column:
-    """All hyperplanes as ONE nested literal array<array<long>> so every
-    projection runs inside a single runtime `transform` loop instead of
-    `planes` unrolled aggregate expressions — unrolling blew codegen up
-    to multi-second compile times for a 2k-row input."""
-    return F.array(
-        *[F.array(*[F.lit(s) for s in row]).cast("array<long>") for row in planes_arr]
-    )
-
-
-def sign_bits(vec_q: Column, planes_arr: list[list[int]]) -> Column:
-    """array<long> of 0/1 sign bits of <v, h_i> for every plane, one
-    nested-loop expression."""
-    return F.transform(
-        _planes_lit(planes_arr),
-        lambda p: F.when(dot_q(vec_q, p) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ),
-    )
-
-
-def band_values(vec_q: Column, planes_arr: list[list[int]], bands: int) -> list[Column]:
-    """Split `planes_arr` sign bits into `bands` integer band codes over
-    a quantized vector column. Pure map-side expressions (no shuffle)."""
-    bpb = len(planes_arr) // bands
-    bits = sign_bits(vec_q, planes_arr)
-    vals = []
-    for b in range(bands):
-        v = F.lit(0).cast("long")
-        for j in range(bpb):
-            v = v + F.element_at(bits, b * bpb + j + 1) * F.lit(1 << j).cast("long")
-        vals.append(v)
-    return vals
 
 
 def embedding_neardup_pairs(

@@ -313,7 +313,7 @@ def rewrite_deletes(
         for r in dv.groupBy("file").agg(F.count("*").alias("cnt")).collect()
     }
 
-    dir_stats = manifest.get("dir_stats", {})
+    dir_stats = manifest["dir_stats"]
     keep: dict[str, list[str]] = {}
     rewrite: list[str] = []
     keep_marked: list[str] = []  # marked files below the threshold
@@ -346,7 +346,7 @@ def rewrite_deletes(
         ).drop("_file", "_pos")
         data_dir = S._claim_data_dir(root, snap_id, "purge")
         S._write_data_dir(survivors, root, data_dir, manifest)
-        manifest.setdefault("dir_stats", {})[data_dir] = S._collect_dir_stats(
+        manifest["dir_stats"][data_dir] = S._collect_dir_stats(
             root, data_dir
         )
         files[data_dir] = sorted(manifest["dir_stats"][data_dir])
@@ -523,7 +523,7 @@ def _merge_upsert_dv(
             matched.unpersist()
     new_stats = S._collect_dir_stats(root, data_dir)
     if S._parquet_dir_rows(root, data_dir):
-        manifest.setdefault("dir_stats", {})[data_dir] = new_stats
+        manifest["dir_stats"][data_dir] = new_stats
     else:
         # empty batch (e.g. an empty foreachBatch micro-batch): still
         # commit the entry — its meta batch id is the exactly-once
@@ -701,7 +701,7 @@ def _apply_changes_dv(
     S._write_data_dir(_guarded(post, manifest), root, data_dir, manifest)
     new_stats = S._collect_dir_stats(root, data_dir)
     if S._parquet_dir_rows(root, data_dir):
-        manifest.setdefault("dir_stats", {})[data_dir] = new_stats
+        manifest["dir_stats"][data_dir] = new_stats
     else:
         # delete-only feed: nothing appended — don't reference (or
         # leave behind) an empty dir

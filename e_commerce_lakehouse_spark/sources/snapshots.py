@@ -55,7 +55,6 @@ import time
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_MANIFEST = "_manifest.json"  # legacy single-file manifest (pre-versioned)
 _MANIFEST_DIR = "_manifests"
 _VERSION_HINT = "_version_hint.text"
 _VERSION_RE = re.compile(r"^v(\d{10})\.json$")
@@ -132,14 +131,13 @@ _HEAVY_ENTRY_KEYS = frozenset(("dirs", "files", "dvs", "schema", "mapping"))
 _ENTRY_DELTA_MAX_DEPTH = 32
 
 #: Metadata protocol version (Delta's reader/writer protocol, Iceberg's
-#: format-version): every commit stamps the version manifest with the
-#: format it used; readers REFUSE versions above what they understand —
-#: a loud "upgrade the engine" beats a KeyError deep in hydration when
-#: an older deployment opens a newer table. History: absent/1 =
-#: monolithic or round-10 full-payload split layouts; 2 = round-11
-#: delta-encoded entry payloads (base_ref chains); 3 = round-12
-#: append-only commit log (vN.json is an O(batch) log record replayed
-#: onto the newest checkpoint / full manifest at or below it).
+#: format-version): every commit record and checkpoint is stamped with
+#: it. Format 3 is the only layout this engine reads or writes: each
+#: ``vN.json`` is an O(batch) commit-log record replayed onto the newest
+#: ``ckpt-vN.json`` checkpoint at or below it (or the empty state).
+#: Older layouts (absent/1 = monolithic or full-payload split
+#: manifests, 2 = full delta-encoded heads) and newer ones are REFUSED
+#: loudly — a clear error beats a KeyError deep in hydration.
 _FORMAT_VERSION = 3
 
 #: Commit-log checkpoint cadence (Delta's checkpointInterval): a log
@@ -164,14 +162,21 @@ def _ckpt_path(root: str, v: int) -> str:
 
 
 def _check_format_version(root: str, rec: dict) -> None:
-    fv = rec.get("format_version", 1)
-    if fv > _FORMAT_VERSION:
+    fv = rec.get("format_version")
+    if fv == _FORMAT_VERSION:
+        return
+    if isinstance(fv, int) and fv > _FORMAT_VERSION:
         raise RuntimeError(
             f"{root}: table metadata format_version {fv} exceeds "
             f"this engine's supported {_FORMAT_VERSION}; upgrade "
             "the engine before reading (a newer writer committed "
             "metadata this version cannot interpret)"
         )
+    raise RuntimeError(
+        f"{root}: table metadata format_version {fv} is an older "
+        f"layout; this engine reads only format_version "
+        f"{_FORMAT_VERSION} (commit log + checkpoints)"
+    )
 
 
 def _apply_log_records(base: dict, records_desc: list[dict]) -> dict:
@@ -207,14 +212,12 @@ def _apply_log_records(base: dict, records_desc: list[dict]) -> dict:
 
 def _resolve_state(root: str, head: int) -> tuple[dict, int]:
     """Full table state at version ``head``: walk backwards collecting
-    log records until a BASE — a checkpoint file at that version, or a
-    full (non-log) version manifest — then replay the tail onto it.
-    Returns ``(state, base_version)``. The walk is bounded by
-    :data:`_CHECKPOINT_INTERVAL` on any table that has crossed the
-    cadence once (plus crash slack); a v2-era table's head manifest is
-    itself full, so migration reads exactly one file. A fresh v3 table
-    with no checkpoint yet replays its whole (short) log from the
-    implicit empty state at version 0."""
+    log records until a checkpoint file at that version, then replay
+    the tail onto it. Returns ``(state, base_version)``. The walk is
+    bounded by :data:`_CHECKPOINT_INTERVAL` on any table that has
+    crossed the cadence once (plus crash slack); a table with no
+    checkpoint yet replays its whole (short) log from the implicit
+    empty state at version 0."""
     records: list[dict] = []
     v = head
     while v > 0:
@@ -227,8 +230,6 @@ def _resolve_state(root: str, head: int) -> tuple[dict, int]:
         with open(_version_path(root, v)) as fh:
             rec = json.load(fh)
         _check_format_version(root, rec)
-        if "log" not in rec:
-            return _apply_log_records(rec, records), v
         records.append(rec)
         v -= 1
     return (
@@ -247,18 +248,7 @@ def _rebase_log_tracking(manifest: dict) -> None:
     snapshot id order, and the per-dir stats-ref pointer map. Called at
     load and after every successful commit (a second commit on the same
     loaded manifest — expire's two-phase — must diff against what it
-    just committed, not the originally loaded state). Manifests whose
-    dir_stats is a plain dict (hand-rolled tests, legacy monolithic)
-    drop tracking entirely — their next commit writes a full manifest,
-    which is always a valid base."""
-    ds = manifest.get("dir_stats")
-    if not isinstance(ds, _LazyDirStats) or ds._dirty:
-        # plain-dict dir_stats (hand-rolled / legacy) or an inline
-        # legacy tier pending externalization: the next commit must be
-        # a FULL manifest — the one-time migration write that cleanses
-        # the inline payload out of the replay chain
-        manifest.pop("_log_base", None)
-        return
+    just committed, not the originally loaded state)."""
     top = {
         k: v
         for k, v in manifest.items()
@@ -271,7 +261,7 @@ def _rebase_log_tracking(manifest: dict) -> None:
         "top": json.loads(json.dumps(top)),
         "order": order,
         "ids": set(order),
-        "stats": dict(ds._refs),
+        "stats": dict(manifest["dir_stats"]._refs),
     }
 
 
@@ -397,7 +387,7 @@ class _SnapEntry(dict):
     def __init__(self, light: dict, store: _RefStore):
         super().__init__(light)
         self._store = store
-        self._hydrated = "entry_ref" not in light
+        self._hydrated = False
         self._file_refs = None
 
     def _hydrate(self) -> None:
@@ -454,13 +444,11 @@ class _LazyDirStats(dict):
 
     __slots__ = ("_store", "_refs", "_dirty")
 
-    def __init__(self, store: _RefStore, refs: dict, inline: dict | None = None):
-        super().__init__(inline or {})
+    def __init__(self, store: _RefStore, refs: dict):
+        super().__init__()
         self._store = store
         self._refs = dict(refs)
-        # inline (legacy monolithic-manifest) dirs externalize on the
-        # next commit — the one-time migration write
-        self._dirty = set(inline or {})
+        self._dirty: set = set()
 
     def _hydrate(self, d) -> None:
         if not dict.__contains__(self, d) and d in self._refs:
@@ -546,10 +534,10 @@ class _LazyDirStats(dict):
 
 
 def _materialize_manifest(manifest: dict) -> dict:
-    """Fully hydrated, ref-free plain-dict form of a loaded manifest —
-    the legacy monolithic layout. Debugging/migration aid only; the
-    commit path never materializes (that would be the O(table) rewrite
-    the split removed)."""
+    """Fully hydrated, ref-free plain-dict dump of a loaded manifest,
+    for debugging and tests. No reader accepts it as a table layout,
+    and the commit path never materializes (that would be the O(table)
+    rewrite the split removed)."""
     out = {
         k: v
         for k, v in manifest.items()
@@ -563,41 +551,30 @@ def _materialize_manifest(manifest: dict) -> dict:
             {k: v for k, v in dict.items(s) if k != "entry_ref"}
         )
     out["snapshots"] = snaps
-    ds = manifest.get("dir_stats")
-    if isinstance(ds, _LazyDirStats):
-        ds._hydrate_all()
-        out["dir_stats"] = {d: dict.__getitem__(ds, d) for d in dict.keys(ds)}
-    elif isinstance(ds, dict):
-        out["dir_stats"] = ds
+    ds = manifest["dir_stats"]
+    ds._hydrate_all()
+    out["dir_stats"] = {d: dict.__getitem__(ds, d) for d in dict.keys(ds)}
     return out
 
 
 def _wire_lazy(root: str, manifest: dict) -> dict:
-    """Install the lazy metadata tier onto a freshly parsed manifest:
-    entries with an ``entry_ref`` become :class:`_SnapEntry`, the
-    ``dir_stats_refs`` pointer map becomes :class:`_LazyDirStats`.
-    Legacy monolithic manifests (inline dir_stats / full entries) pass
-    through as plain dicts and migrate at their next commit."""
+    """Install the lazy metadata tier onto a replayed state: every
+    light entry becomes a :class:`_SnapEntry`, the ``dir_stats_refs``
+    pointer map becomes :class:`_LazyDirStats`."""
     store = _RefStore(root)
     manifest["_store"] = store
-    manifest["snapshots"] = [
-        _SnapEntry(s, store) if "entry_ref" in s else s
-        for s in manifest.get("snapshots", [])
-    ]
-    refs = manifest.pop("dir_stats_refs", {})
-    inline = manifest.get("dir_stats")
-    manifest["dir_stats"] = _LazyDirStats(
-        store, refs, inline if isinstance(inline, dict) else None
-    )
+    manifest["snapshots"] = [_SnapEntry(s, store) for s in manifest["snapshots"]]
+    manifest["dir_stats"] = _LazyDirStats(store, manifest.pop("dir_stats_refs"))
     return manifest
 
 
 def _load(root: str) -> dict:
+    """The table state at its newest version (the empty state at
+    version 0 when nothing is committed), wired lazily and tracked for
+    the next commit's log record."""
     last_err = None
     for _ in range(3):
-        v = _latest_version(root)
-        if v is None:
-            break
+        v = _latest_version(root) or 0
         try:
             state, base_v = _resolve_state(root, v)
         except FileNotFoundError as e:
@@ -610,21 +587,7 @@ def _load(root: str) -> dict:
         manifest["_replay_base_version"] = base_v
         _rebase_log_tracking(manifest)
         return manifest
-    if last_err is not None and _latest_version(root) is not None:
-        raise last_err  # three races in a row: surface, don't read empty
-    # legacy single-file manifest (pre-versioned table): readable as-is;
-    # the first _commit migrates it into _manifests/ at version+1 as a
-    # FULL manifest (no log tracking), which seeds the replay base
-    path = os.path.join(root, _MANIFEST)
-    if os.path.exists(path):
-        with open(path) as fh:
-            manifest = json.load(fh)
-        manifest.setdefault("version", 0)
-        return _wire_lazy(root, manifest)
-    manifest = _wire_lazy(root, {"current": None, "snapshots": [], "version": 0})
-    manifest["_replay_base_version"] = 0
-    _rebase_log_tracking(manifest)
-    return manifest
+    raise last_err  # three races in a row: surface, don't read empty
 
 
 def _entry_summary(manifest: dict, s: dict) -> dict:
@@ -649,10 +612,7 @@ def _entry_summary(manifest: dict, s: dict) -> dict:
     if dvs or pdvs:
         out["added_dvs"] = len(dvs - pdvs)
         out["n_dvs"] = len(dvs)
-    ds = manifest.get("dir_stats")
-    peek = ds.peek if isinstance(ds, _LazyDirStats) else (
-        lambda d: ds.get(d) if isinstance(ds, dict) else None
-    )
+    peek = manifest["dir_stats"].peek
     n_files = n_rows = n_bytes = 0
     known = bool(added)
     for d in added:
@@ -744,7 +704,7 @@ def _entry_summary(manifest: dict, s: dict) -> dict:
     return out
 
 
-def _serialize(root: str, manifest: dict, want_full: bool = False):
+def _serialize(manifest: dict, want_full: bool = False):
     """Externalize heavy payload as immutable ref files (per-snapshot
     entry files, per-dir file lists with content sharing, per-dir
     stats), then build the commit record(s). Returns ``(full,
@@ -752,27 +712,21 @@ def _serialize(root: str, manifest: dict, want_full: bool = False):
 
     - ``log_body`` — the O(this commit's changes) log-record body
       (entries added/removed/replaced as LIGHT dicts, changed top-level
-      keys, changed stats-ref pointers), when the manifest carries load
-      tracking and the change is expressible as a diff; else None.
-    - ``full`` — the complete v2-style manifest state (checkpoint
-      shape), built when ``want_full`` or when no log body is possible
-      (legacy / hand-rolled manifests, order-divergent rewrites).
+      keys, changed stats-ref pointers), diffed against the load
+      tracking :func:`_rebase_log_tracking` recorded.
+    - ``full`` — the complete manifest state (checkpoint shape), built
+      only when ``want_full``; else None.
 
     New plain entries are replaced in-memory by hydrated lazy entries
     so a second commit on the same loaded manifest re-serializes
     pointers, not payload."""
-    store = manifest.get("_store")
-    if store is None:  # hand-rolled manifest (tests): wire on the fly
-        store = _RefStore(root)
-        manifest["_store"] = store
+    store = manifest["_store"]
     top = {
         k: v
         for k, v in manifest.items()
         if not k.startswith("_") and k not in _TOP_EXCLUDE
     }
-    base = manifest.get("_log_base")
-    ds = manifest.get("dir_stats")
-    can_log = base is not None and isinstance(ds, _LazyDirStats)
+    base = manifest["_log_base"]
     adds: list = []
     replaces: list = []
     by_id: dict = {}
@@ -788,14 +742,13 @@ def _serialize(root: str, manifest: dict, want_full: bool = False):
         # delta-encode vs the parent's payload when the chain allows:
         # O(this commit's changes) bytes instead of the cumulative
         # dirs list + full per-dir pointer map (see
-        # _ENTRY_DELTA_MAX_DEPTH). Parents outside the manifest list
-        # (hand-rolled tests) or plain legacy entries get full form.
+        # _ENTRY_DELTA_MAX_DEPTH). Root entries and parents no longer
+        # in the manifest list (expired) get the full form.
         parent = by_id.get(s.get("parent"))
         depth = 0
         payload: dict = {}
         if (
-            isinstance(parent, _SnapEntry)
-            and dict.__contains__(parent, "entry_ref")
+            parent is not None
             and dict.get(parent, "entry_depth", 0) < _ENTRY_DELTA_MAX_DEPTH
         ):
             parent._hydrate()
@@ -859,71 +812,53 @@ def _serialize(root: str, manifest: dict, want_full: bool = False):
         lazy._file_refs = child_refs
         by_id[lazy["id"]] = lazy
         manifest["snapshots"][i] = lazy
-        if can_log:
-            (replaces if s["id"] in base["ids"] else adds).append(light)
-    refs_map = ds.serialize() if isinstance(ds, _LazyDirStats) else None
-    log_body = None
-    if can_log:
-        # the record must reconstruct the exact snapshot order on
-        # replay (base order minus removals, replacements in place,
-        # additions appended) — any op that reorders falls back to a
-        # full manifest, which is always a valid base
-        cur_order = [s["id"] for s in manifest["snapshots"]]
-        cur_ids = set(cur_order)
-        removed = [i for i in base["order"] if i not in cur_ids]
-        expected = [i for i in base["order"] if i in cur_ids] + [
-            e["id"] for e in adds
-        ]
-        if expected == cur_order:
-            bstats = base["stats"]
-            body: dict = {}
-            if adds:
-                body["add"] = adds
-            if removed:
-                body["remove"] = removed
-            if replaces:
-                body["replace"] = replaces
-            set_d = {
-                k: v
-                for k, v in top.items()
-                if k not in base["top"] or base["top"][k] != v
-            }
-            unset = sorted(k for k in base["top"] if k not in top)
-            if set_d:
-                body["set"] = set_d
-            if unset:
-                body["unset"] = unset
-            stats_set = {
-                d: r for d, r in refs_map.items() if bstats.get(d) != r
-            }
-            stats_del = sorted(d for d in bstats if d not in refs_map)
-            if stats_set:
-                body["stats_set"] = stats_set
-            if stats_del:
-                body["stats_del"] = stats_del
-            log_body = body
+        (replaces if s["id"] in base["ids"] else adds).append(light)
+    refs_map = manifest["dir_stats"].serialize()
+    # the record must reconstruct the exact snapshot order on replay
+    # (base order minus removals, replacements in place, additions
+    # appended); no op reorders snapshots, so a divergence is a bug
+    cur_order = [s["id"] for s in manifest["snapshots"]]
+    cur_ids = set(cur_order)
+    removed = [i for i in base["order"] if i not in cur_ids]
+    expected = [i for i in base["order"] if i in cur_ids] + [
+        e["id"] for e in adds
+    ]
+    if expected != cur_order:
+        raise RuntimeError(
+            "snapshot order change is not expressible as a commit-log "
+            f"record: loaded {base['order']}, committing {cur_order}"
+        )
+    bstats = base["stats"]
+    log_body: dict = {}
+    if adds:
+        log_body["add"] = adds
+    if removed:
+        log_body["remove"] = removed
+    if replaces:
+        log_body["replace"] = replaces
+    set_d = {
+        k: v
+        for k, v in top.items()
+        if k not in base["top"] or base["top"][k] != v
+    }
+    unset = sorted(k for k in base["top"] if k not in top)
+    if set_d:
+        log_body["set"] = set_d
+    if unset:
+        log_body["unset"] = unset
+    stats_set = {d: r for d, r in refs_map.items() if bstats.get(d) != r}
+    stats_del = sorted(d for d in bstats if d not in refs_map)
+    if stats_set:
+        log_body["stats_set"] = stats_set
+    if stats_del:
+        log_body["stats_del"] = stats_del
     full = None
-    if want_full or log_body is None:
+    if want_full:
         full = dict(top)
-        full["snapshots"] = [
-            s.light() if isinstance(s, _SnapEntry) else s
-            for s in manifest["snapshots"]
-        ]
-        if refs_map is not None:
-            full["dir_stats_refs"] = refs_map
-        elif isinstance(ds, dict):  # hand-rolled: externalize everything
-            full["dir_stats_refs"] = {
-                d: store.write("stats", st) for d, st in ds.items()
-            }
+        full["snapshots"] = [s.light() for s in manifest["snapshots"]]
+        full["dir_stats_refs"] = refs_map
         full["format_version"] = _FORMAT_VERSION
     return full, log_body
-
-
-def _serialize_manifest(root: str, manifest: dict) -> dict:
-    """Back-compat shim: the full (checkpoint-shape) manifest state
-    with all heavy payload externalized — what v2 wrote as every
-    vN.json and v3 writes as periodic checkpoints."""
-    return _serialize(root, manifest, want_full=True)[0]
 
 
 def _commit(root: str, manifest: dict) -> None:
@@ -948,28 +883,21 @@ def _commit(root: str, manifest: dict) -> None:
     materializes ``ckpt-vN.json`` — the full light state — so
     :func:`_load` replays checkpoint + tail instead of the whole log
     (Delta's checkpoint + ``_last_checkpoint`` idea; here the
-    bounded backward probe replaces the pointer file). Manifests
-    without load tracking (legacy monolithic, hand-rolled) fall back
-    to writing a FULL manifest, which is itself a valid replay base —
-    that write IS the transparent migration from the round-11 layout.
-    The version-hint write afterwards is advisory only."""
+    bounded backward probe replaces the pointer file). ``manifest``
+    must come from :func:`_load`. The version-hint write afterwards is
+    advisory only."""
     mdir = _manifest_dir(root)
     os.makedirs(mdir, exist_ok=True)
-    target_v = manifest.get("version", 0) + 1
-    base_v = manifest.get("_replay_base_version")
+    target_v = manifest["version"] + 1
     ckpt_due = (
-        base_v is not None and (target_v - base_v) >= _CHECKPOINT_INTERVAL
+        target_v - manifest["_replay_base_version"] >= _CHECKPOINT_INTERVAL
     )
-    full, log_body = _serialize(root, manifest, want_full=ckpt_due)
-    if log_body is not None:
-        out = {
-            "format_version": _FORMAT_VERSION,
-            "version": target_v,
-            "log": log_body,
-        }
-    else:
-        out = full
-        out["version"] = target_v
+    full, log_body = _serialize(manifest, want_full=ckpt_due)
+    out = {
+        "format_version": _FORMAT_VERSION,
+        "version": target_v,
+        "log": log_body,
+    }
     manifest["version"] = target_v
     import tempfile
 
@@ -991,10 +919,7 @@ def _commit(root: str, manifest: dict) -> None:
             os.unlink(tmp)
         except FileNotFoundError:
             pass
-    if log_body is None:
-        # a full manifest IS a replay base — no checkpoint needed
-        manifest["_replay_base_version"] = target_v
-    elif ckpt_due:
+    if ckpt_due:
         # materialize the checkpoint AFTER the winning commit (Delta's
         # post-commit checkpoint write): best-effort — a crash or IO
         # error here just leaves a longer tail until the next committer
@@ -1036,34 +961,27 @@ def _prune_manifest_versions(root: str, keep_versions: int = 10) -> list[str]:
     reader's fast path cannot land on a pruned version.
 
     Log-model safety: a version file at or above the newest replay
-    BASE (checkpoint or full manifest) is load-bearing — readers
-    replay the tail ``(base, head]`` — so pruning only ever removes
-    versions strictly BELOW the base, however old they are. Superseded
-    checkpoints prune under the same rule."""
+    BASE (checkpoint) is load-bearing — readers replay the tail
+    ``(base, head]`` — so pruning only ever removes versions strictly
+    BELOW the base, however old they are. Superseded checkpoints prune
+    under the same rule."""
     head = _latest_version(root)
     if head is None:
         return []
     _write_version_hint(root, head)
     # newest replay base at or below head (same walk as _resolve_state,
-    # without materializing state)
-    base_v, v = head, head
+    # one stat per version); with none, the whole history replays from
+    # the empty state: keep all
+    base_v, v = 1, head
     while v > 0:
         if os.path.exists(_ckpt_path(root, v)):
             base_v = v
             break
-        try:
-            with open(_version_path(root, v)) as fh:
-                rec = json.load(fh)
-        except FileNotFoundError:
+        if not os.path.exists(_version_path(root, v)):
             # already-pruned region: nothing at or below v is needed
             base_v = v + 1
             break
-        if "log" not in rec:
-            base_v = v
-            break
         v -= 1
-    else:
-        base_v = 1  # whole history replays from the empty state: keep all
     removed = []
     for nm in sorted(os.listdir(_manifest_dir(root))):
         m = _VERSION_RE.match(nm) or _CKPT_RE.match(nm)
@@ -1121,7 +1039,7 @@ def _gc_ref_files(root: str, older_than_s: float = 3600.0) -> list[str]:
             # stats pointers carry refs
             entries = list(lg.get("add", ())) + list(lg.get("replace", ()))
             live.update((lg.get("stats_set") or {}).values())
-        else:
+        else:  # checkpoint: the full light state
             entries = m.get("snapshots", [])
             live.update(m.get("dir_stats_refs", {}).values())
         for s in entries:
@@ -1860,7 +1778,7 @@ def write_snapshot(
             entry_schema = _merge_append_schema(
                 parent["schema"], logical_schema
             )
-        m.setdefault("dir_stats", {})[data_dir] = dir_stats
+        m["dir_stats"][data_dir] = dir_stats
         if files is not None:
             files[data_dir] = sorted(dir_stats)
         entry = {
@@ -1981,7 +1899,7 @@ def _parquet_dir_rows(root: str, d: str) -> int:
 def _dir_files(root: str, manifest: dict, d: str) -> list[str]:
     """Parquet file names of one data dir — from recorded stats when
     present (no listing), else a directory listing."""
-    stats = manifest.get("dir_stats", {}).get(d)
+    stats = manifest["dir_stats"].get(d)
     if stats is not None:
         return sorted(stats)
     return sorted(
@@ -2750,18 +2668,15 @@ def expire_snapshots(
     # alive until pruned (time travel through retained versions).
     flat = []
     for s in retained:
-        if isinstance(s, _SnapEntry):
-            s._hydrate()
-            flat.append({
-                k: v
-                for k, v in dict.items(s)
-                if k not in ("entry_ref", "entry_depth")
-            })
-        else:
-            flat.append(s)
+        s._hydrate()
+        flat.append({
+            k: v
+            for k, v in dict.items(s)
+            if k not in ("entry_ref", "entry_depth")
+        })
     manifest["snapshots"] = flat
     for d in dead_dirs:
-        manifest.get("dir_stats", {}).pop(d, None)
+        manifest["dir_stats"].pop(d, None)
     dead_files = sorted(f for f in dead_files if f.split(os.sep, 1)[0] not in dead_dirs)
     if dry_run:
         return sorted(dead_dirs) + dead_files
@@ -2777,13 +2692,12 @@ def expire_snapshots(
             remaining.append(rel)  # stats stay; next expire retries
             continue
         d, f = os.path.split(rel)
-        ds = manifest.get("dir_stats", {})
+        ds = manifest["dir_stats"]
         fstats = ds.get(d)
         if fstats is not None and fstats.pop(f, None) is not None:
             # nested in-place edit: flag the dir so the next commit
             # writes a fresh stats ref for it
-            if isinstance(ds, _LazyDirStats):
-                ds.mark_dirty(d)
+            ds.mark_dirty(d)
         removed_files.append(rel)
     manifest["pending_delete"] = remaining
     _commit(root, manifest)
@@ -2915,7 +2829,7 @@ def metadata_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
         if manifest["current"] is None:
             raise KeyError(f"table {root} has no snapshots")
         entry = _entry(manifest, manifest["current"])
-        dir_stats = manifest.get("dir_stats", {})
+        dir_stats = manifest["dir_stats"]
         rows = []
         for d, f in _entry_units(root, manifest, entry):
             rows.append(
@@ -2938,7 +2852,7 @@ def metadata_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
         if manifest["current"] is None:
             raise KeyError(f"table {root} has no snapshots")
         entry = _entry(manifest, manifest["current"])
-        dir_stats = manifest.get("dir_stats", {})
+        dir_stats = manifest["dir_stats"]
         spec_cols = [
             _hidden_name(t) for t in manifest.get("partition_spec", [])
         ]
@@ -3032,7 +2946,7 @@ def remove_orphans(
         # entries forever while reporting removed=[]).
         for attempt in range(COMMIT_RETRIES):
             for name in removed:
-                manifest.get("dir_stats", {}).pop(name, None)
+                manifest["dir_stats"].pop(name, None)
             try:
                 _commit(root, manifest)
                 break
@@ -3285,7 +3199,7 @@ def plan_scan(
     if snapshot_id is None:
         raise KeyError(f"table {root} has no snapshots")
     entry = _entry(manifest, snapshot_id)
-    dir_stats = manifest.get("dir_stats", {})
+    dir_stats = manifest["dir_stats"]
     # hidden-partition pruning: predicates on a transformed source
     # column imply predicates on the hidden transform column, whose
     # per-file bounds are tight because writes range-cluster on it
@@ -3499,7 +3413,7 @@ def replace_where(
     _guard_identity_mapping(entry, "replace_where")
     _guard_no_initial_defaults(entry, "replace_where")
     _guard_no_widened(entry, "replace_where")
-    dir_stats = manifest.get("dir_stats", {})
+    dir_stats = manifest["dir_stats"]
 
     keep_verbatim: dict[str, list[str]] = {}
     rewrite_paths: list[str] = []
@@ -3536,7 +3450,7 @@ def replace_where(
     _write_data_dir(new_rows, root, data_dir, manifest)
 
     files = {d: sorted(names) for d, names in keep_verbatim.items()}
-    manifest.setdefault("dir_stats", {})[data_dir] = _collect_dir_stats(
+    manifest["dir_stats"][data_dir] = _collect_dir_stats(
         root, data_dir
     )
     files[data_dir] = sorted(manifest["dir_stats"][data_dir])
@@ -3653,7 +3567,7 @@ def update_where(
         )
         updated = guard_constraints(updated, manifest.get("constraints", {}))
         _write_data_dir(updated, root, data_dir, manifest)
-        manifest.setdefault("dir_stats", {})[data_dir] = _collect_dir_stats(
+        manifest["dir_stats"][data_dir] = _collect_dir_stats(
             root, data_dir
         )
         files[data_dir] = sorted(manifest["dir_stats"][data_dir])
@@ -3780,7 +3694,7 @@ def compact_files(
     _write_data_dir(merged, root, data_dir, manifest)
 
     files = {d: sorted(names) for d, names in keep.items()}
-    manifest.setdefault("dir_stats", {})[data_dir] = _collect_dir_stats(
+    manifest["dir_stats"][data_dir] = _collect_dir_stats(
         root, data_dir
     )
     files[data_dir] = sorted(manifest["dir_stats"][data_dir])
@@ -3884,7 +3798,7 @@ def optimize_zorder(
         data_dir = _claim_data_dir(root, snap_id, "zorder")
         _write_data_dir(clustered, root, data_dir, manifest)
         files = {d: sorted(names) for d, names in keep.items()}
-        manifest.setdefault("dir_stats", {})[data_dir] = _collect_dir_stats(
+        manifest["dir_stats"][data_dir] = _collect_dir_stats(
             root, data_dir
         )
         files[data_dir] = sorted(manifest["dir_stats"][data_dir])
@@ -4024,7 +3938,7 @@ def build_bloom_index(spark: SparkSession, root: str) -> int:
     if manifest["current"] is None:
         return 0
     entry = _entry(manifest, manifest["current"])
-    dir_stats = manifest.setdefault("dir_stats", {})
+    dir_stats = manifest["dir_stats"]
     # dirs with at least one (file, col) missing its bloom
     todo: dict[str, set[str]] = {}
     for d, fname in _entry_units(root, manifest, entry):
@@ -4097,10 +4011,9 @@ def build_bloom_index(spark: SparkSession, root: str) -> int:
             built.setdefault(fname, {}).setdefault(
                 r.c, [0] * (m // 64)
             )[r.w] = r.word
-        if isinstance(dir_stats, _LazyDirStats):
-            # the bloom words below mutate nested dicts in place — flag
-            # the dir so the commit externalizes a fresh stats ref
-            dir_stats.mark_dirty(d)
+        # the bloom words below mutate nested dicts in place — flag
+        # the dir so the commit externalizes a fresh stats ref
+        dir_stats.mark_dirty(d)
         for fname in fnames:
             fstats = dir_stats[d].setdefault(fname, {})
             for c in present:
@@ -4131,7 +4044,7 @@ def table_stats(root: str, snapshot_id: int | None = None) -> dict:
     if sid is None:
         raise KeyError(f"table {root} has no snapshots")
     entry = _entry(manifest, sid)
-    dir_stats = manifest.get("dir_stats", {})
+    dir_stats = manifest["dir_stats"]
     units = list(_entry_units(root, manifest, entry))
     # a null count is exact only when EVERY file contributes the stat;
     # a file with no stats at all, or stats pinned to other columns

@@ -1447,12 +1447,11 @@ def execute_dml(
         # checkpoint cadence, the next commit will re-checkpoint; a
         # persistently long tail means commits are failing their
         # best-effort checkpoint writes
-        meta_info["head_version"] = manifest.get("version", 0)
-        base_v = manifest.get("_replay_base_version")
-        if base_v is not None:
-            meta_info["replay_base_version"] = base_v
-            meta_info["log_tail_length"] = meta_info["head_version"] - base_v
-            meta_info["checkpoint_interval"] = snapshots._CHECKPOINT_INTERVAL
+        meta_info["head_version"] = manifest["version"]
+        base_v = manifest["_replay_base_version"]
+        meta_info["replay_base_version"] = base_v
+        meta_info["log_tail_length"] = meta_info["head_version"] - base_v
+        meta_info["checkpoint_interval"] = snapshots._CHECKPOINT_INTERVAL
         detail = {
             "format": "parquet",
             "location": root,

@@ -175,9 +175,10 @@ def test_stats_skipping_timestamps_and_legacy_manifest(spark, root):
     assert len(plan["pruned"]) >= 4, plan
     assert S.scan_snapshot(spark, root, [("ts", "<", cut)]).count() == 9
 
-    # legacy manifest without dir_stats: everything kept, result exact
+    # a table whose dirs carry no stats: everything kept, result exact
     m = S._load(root)
-    del m["dir_stats"]
+    for d in list(m["dir_stats"]):
+        m["dir_stats"].pop(d)
     S._commit(root, m)
     plan_legacy = S.plan_scan(root, [("ts", "<", cut)])
     assert plan_legacy["pruned"] == []
@@ -776,30 +777,26 @@ def test_reserved_hidden_prefix_and_legacy_p_columns(spark, root, tmp_path):
     assert S._load(root)["current"] is None  # nothing committed
 
     # legacy table: simulate by writing the parquet dir directly and
-    # hand-building a manifest entry with no hidden_cols record
+    # committing a manifest entry with no hidden_cols record
     legacy = str(tmp_path / "legacy")
-    import json as _json
     import time as _time
 
     df = spark.createDataFrame([(1, 42)], "id long, _p_value long")
     df.write.parquet(f"{legacy}/snap-00000001-overwrite")
-    S._commit(
-        legacy,
+    m = S._load(legacy)
+    m["current"] = 1
+    m["snapshots"].append(
         {
-            "current": 1,
-            "snapshots": [
-                {
-                    "id": 1,
-                    "op": "overwrite",
-                    "ts": _time.time(),
-                    "dirs": ["snap-00000001-overwrite"],
-                    "parent": None,
-                    "schema": df.schema.json(),
-                    "meta": {},
-                }
-            ],
-        },
+            "id": 1,
+            "op": "overwrite",
+            "ts": _time.time(),
+            "dirs": ["snap-00000001-overwrite"],
+            "parent": None,
+            "schema": df.schema.json(),
+            "meta": {},
+        }
     )
+    S._commit(legacy, m)
     back = S.read_snapshot(spark, legacy)
     assert "_p_value" in back.columns
     assert back.first()._p_value == 42
@@ -1385,30 +1382,6 @@ def test_versioned_manifest_same_parent_single_winner(spark, root):
     assert os.path.exists(os.path.join(root, "_manifests", "v0000000002.json"))
 
 
-def test_legacy_single_file_manifest_migrates(spark, root):
-    """A pre-versioned table (single _manifest.json, no _manifests/
-    dir) stays readable as-is; the first commit migrates it into the
-    versioned log at version+1 and subsequent loads prefer the log."""
-    import json as _json
-    import shutil as _shutil
-
-    S.write_snapshot(spark.range(7), root)
-    S.write_snapshot(spark.range(7, 10), root, mode="append")
-    manifest = S._load(root)
-    # rewrite the table as a legacy layout: one monolithic
-    # manifest.json with inline entries and dir_stats (the pre-split
-    # format), via the materializer
-    with open(os.path.join(root, "_manifest.json"), "w") as fh:
-        _json.dump(S._materialize_manifest(manifest), fh)
-    _shutil.rmtree(os.path.join(root, "_manifests"))
-    assert S._load(root)["version"] == 2  # legacy file readable
-    assert S.read_snapshot(spark, root).count() == 10
-    sid = S.write_snapshot(spark.range(10, 12), root, mode="append")
-    assert os.path.exists(os.path.join(root, "_manifests", "v0000000003.json"))
-    assert S._load(root)["current"] == sid
-    assert S.read_snapshot(spark, root).count() == 12
-
-
 def test_stale_version_hint_probed_past(spark, root):
     """A crash between the version-file link and the hint write leaves
     a stale-LOW hint; the gapless upward probe must still resolve the
@@ -1532,9 +1505,11 @@ def test_multiprocess_commit_cas_no_lost_updates(tmp_path):
     import multiprocessing as mp
 
     root = str(tmp_path / "tbl")
-    first = {"current": 1, "snapshots": [
+    first = S._load(root)
+    first["current"] = 1
+    first["snapshots"].append(
         {"id": 1, "op": "overwrite", "ts": 0.0, "dirs": [], "parent": None,
-         "schema": "{}", "meta": {}}], "version": 0}
+         "schema": "{}", "meta": {}})
     S._commit(root, first)
 
     def worker(wid, n, q):
@@ -1649,7 +1624,7 @@ def test_commit_metadata_is_o_batch(spark, root):
         per_commit[i][0] - per_commit[i - 1][0] for i in range(1, 40)
     ]
     assert max(deltas[-5:]) < 1500, deltas[-5:]
-    # the head manifest is small vs the materialized (legacy) form
+    # the head manifest is small vs the fully materialized dump
     import json as _json
 
     mat = len(_json.dumps(S._materialize_manifest(S._load(root))))
@@ -1657,50 +1632,6 @@ def test_commit_metadata_is_o_batch(spark, root):
     assert head_size < mat / 5, (head_size, mat)
     # correctness unaffected
     assert S.read_snapshot(spark, root).count() == 40 * 260
-
-
-def test_round9_monolithic_versioned_manifest_migrates(spark, root):
-    """A round-9-layout table (versioned vN.json holding INLINE entries
-    and dir_stats, no ref files) loads as-is; the next commit
-    externalizes into the split layout; data, time travel, and stats
-    pruning survive the migration."""
-    import json as _json
-    import shutil as _shutil
-
-    S.write_snapshot(spark.range(10).withColumn("v", F.col("id") * 2), root)
-    S.write_snapshot(
-        spark.range(10, 20).withColumn("v", F.col("id") * 2),
-        root,
-        mode="append",
-    )
-    mono = S._materialize_manifest(S._load(root))
-    mdir = os.path.join(root, "_manifests")
-    _shutil.rmtree(mdir)
-    os.makedirs(mdir)
-    mono["version"] = 2
-    with open(S._version_path(root, 2), "w") as fh:
-        _json.dump(mono, fh)
-    # loads and reads through the inline (legacy) representation
-    m = S._load(root)
-    assert m["version"] == 2
-    assert S.read_snapshot(spark, root).count() == 20
-    assert S.plan_scan(root, [("id", "<", 5)])["pruned"], "stats survived"
-    # the next commit migrates: entries externalize, stats become refs
-    sid = S.write_snapshot(
-        spark.range(20, 25).withColumn("v", F.col("id") * 2),
-        root,
-        mode="append",
-    )
-    with open(S._version_path(root, 3)) as fh:
-        head = _json.load(fh)
-    assert "dir_stats" not in head and head["dir_stats_refs"]
-    assert all("entry_ref" in s and "dirs" not in s for s in head["snapshots"])
-    assert S._load(root)["current"] == sid
-    assert S.read_snapshot(spark, root).count() == 25
-    assert (
-        S.read_snapshot(spark, root, snapshot_id=1).count() == 10
-    )  # time travel across the migration boundary
-    assert S.plan_scan(root, [("id", "<", 5)])["pruned"]
 
 
 def test_commit_summaries_in_history_and_inspection(spark, root):
@@ -2112,74 +2043,11 @@ def test_entry_delta_encoding_bounds_commit_bytes(spark, root):
     assert S.plan_scan(root, [("id", "<", 5)])["pruned"]
 
 
-def test_round10_full_payload_layout_migrates_to_delta(spark, root):
-    """A round-10-layout table (split manifest, FULL entry payloads,
-    no entry_depth/base_ref) reads as-is and the next commits delta
-    against its full payloads; expire re-roots chains so the old
-    history's refs collect."""
-    import json as _j
-
-    S.write_snapshot(spark.range(10).withColumn("v", F.col("id")), root)
-    S.write_snapshot(
-        spark.range(10, 20).withColumn("v", F.col("id")),
-        root, mode="append",
-    )
-    # fabricate the round-10 shape: full payload per entry, light
-    # entries without entry_depth
-    m = S._load(root)
-    store = m["_store"]
-    mdir = os.path.join(root, "_manifests")
-    lights = []
-    for s in m["snapshots"]:
-        s._hydrate()
-        payload = {
-            k: dict.__getitem__(s, k)
-            for k in ("dirs", "schema", "dvs", "mapping")
-            if dict.__contains__(s, k)
-        }
-        if dict.__contains__(s, "files"):
-            payload["file_refs"] = {
-                d: store.files_ref(lst)
-                for d, lst in dict.__getitem__(s, "files").items()
-            }
-        light = {
-            k: v for k, v in s.light().items()
-            if k not in ("entry_ref", "entry_depth")
-        }
-        light["entry_ref"] = store.write("entry", payload)
-        lights.append(light)
-    v = S._latest_version(root) + 1
-    head = S._serialize_manifest(root, m)  # full (checkpoint-shape) state
-    head["snapshots"] = lights
-    head["version"] = v
-    with open(S._version_path(root, v), "w") as fh:
-        _j.dump(head, fh)
-    # reads through full payloads
-    assert S.read_snapshot(spark, root).count() == 20
-    # next commit deltas against the round-10 full payload
-    S.write_snapshot(
-        spark.range(20, 25).withColumn("v", F.col("id")),
-        root, mode="append",
-    )
-    with open(S._version_path(root, S._latest_version(root))) as fh:
-        newhead = _j.load(fh)
-    new_light = (
-        newhead["log"]["add"][-1] if "log" in newhead
-        else newhead["snapshots"][-1]
-    )
-    assert new_light["entry_depth"] == 1
-    with open(os.path.join(mdir, new_light["entry_ref"])) as fh:
-        payload = _j.load(fh)
-    assert "base_ref" in payload and payload["dirs_add"]
-    assert S.read_snapshot(spark, root).count() == 25
-    assert S.read_snapshot(spark, root, snapshot_id=1).count() == 10
-
-
 def test_format_version_stamped_and_guarded(spark, root):
     """Protocol versioning (Delta reader/writer protocol analog):
     commits stamp format_version; a reader refuses a HIGHER version
-    loudly instead of mis-hydrating a future layout; absent version
-    (legacy layouts) reads as v1."""
+    loudly instead of mis-hydrating a future layout, and refuses an
+    absent or older version (format 3 is the only readable layout)."""
     import json as _j
 
     S.write_snapshot(spark.range(5), root)
@@ -2194,9 +2062,39 @@ def test_format_version_stamped_and_guarded(spark, root):
         _j.dump(m, fh)
     with pytest.raises(RuntimeError, match="format_version.*upgrade"):
         S._load(root)
+    # older layouts (absent = v1, 1, 2) are refused, not migrated
+    for fv in (None, 1, 2):
+        if fv is None:
+            m.pop("format_version", None)
+        else:
+            m["format_version"] = fv
+        with open(S._version_path(root, head + 1), "w") as fh:
+            _j.dump(m, fh)
+        with pytest.raises(RuntimeError, match="format_version"):
+            S._load(root)
     os.unlink(S._version_path(root, head + 1))
     S._write_version_hint(root, head)
     assert S.read_snapshot(spark, root).count() == 5
+
+
+def test_commit_refuses_reordered_snapshots(tmp_path):
+    """A log record can only append, replace in place and remove
+    snapshots; a commit whose snapshot order it cannot express raises
+    instead of writing a different record shape, and nothing lands."""
+    root = str(tmp_path / "tbl")
+    for sid in (1, 2):
+        m = S._load(root)
+        m["current"] = sid
+        m["snapshots"].append(
+            {"id": sid, "op": "append", "ts": 0.0, "dirs": [],
+             "parent": sid - 1 or None, "schema": "{}", "meta": {}})
+        S._commit(root, m)
+    m = S._load(root)
+    m["snapshots"].reverse()
+    with pytest.raises(RuntimeError, match="commit-log record"):
+        S._commit(root, m)
+    assert S._latest_version(root) == 2
+    assert [s["id"] for s in S._load(root)["snapshots"]] == [1, 2]
 
 
 def test_commit_log_bytes_flat_in_snapshot_count(spark, root):
@@ -2339,44 +2237,6 @@ def test_load_cost_bounded_by_cadence_not_table_age(spark, root):
     # and the tail is genuinely short right after a cadence crossing —
     # not pegged at the bound
     assert min(reads_at[n] for n in (40, 200, 400)) < S._CHECKPOINT_INTERVAL
-
-
-def test_round11_full_manifest_layout_migrates_to_log(spark, root):
-    """A round-11-layout table (every vN.json a FULL manifest,
-    format_version 2) loads transparently: the v2 head is itself a
-    valid replay base, subsequent commits append log records on top of
-    it, and data / time travel / tags survive the migration."""
-    import json as _j
-
-    S.write_snapshot(spark.range(10).withColumn("v", F.col("id")), root)
-    S.write_snapshot(
-        spark.range(10, 20).withColumn("v", F.col("id")), root,
-        mode="append",
-    )
-    S.tag_snapshot(root, "cut", 1)
-    # fabricate the round-11 head: the full manifest state stamped fv2
-    m = S._load(root)
-    full = S._serialize_manifest(root, m)
-    full["format_version"] = 2
-    v = S._latest_version(root) + 1
-    full["version"] = v
-    with open(S._version_path(root, v), "w") as fh:
-        _j.dump(full, fh)
-    # reads through the v2 base directly — exactly one record
-    m2 = S._load(root)
-    assert m2["_replay_base_version"] == v
-    assert S.read_snapshot(spark, root).count() == 20
-    # the next commit is an O(batch) log record on top of the v2 base
-    S.write_snapshot(
-        spark.range(20, 25).withColumn("v", F.col("id")), root,
-        mode="append",
-    )
-    with open(S._version_path(root, S._latest_version(root))) as fh:
-        head = _j.load(fh)
-    assert "log" in head and head["format_version"] == S._FORMAT_VERSION
-    assert S.read_snapshot(spark, root).count() == 25
-    assert S.read_snapshot(spark, root, snapshot_id=1).count() == 10
-    assert S.resolve_tag(root, "cut") == 1
 
 
 def test_round11_lifecycle_soak(spark, root):
