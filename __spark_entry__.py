@@ -19,7 +19,6 @@ canonicalizer hashes scalars only (round-1 q44 lesson).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -136,7 +135,7 @@ def _shared_vec_prep(spark: SparkSession, sf: str) -> DataFrame:
 def _shared_dsir_buckets(spark: SparkSession, sf: str) -> DataFrame:
     """DSIR hashed unigram+bigram doc-feature frame, materialized once
     per (session, sf) — the persisted document-feature-matrix analog
-    (sampling.dsir_doc_buckets docstring): every DSIR stage (target
+    (sampling.dsir_doc_buckets_frame docstring): every DSIR stage (target
     profile, raw profile, per-doc weight sum) reads it, and its build
     is the one corpus-wide gram explode of q34's dsir branch."""
     return corpus_cache.shared_df(
@@ -1155,43 +1154,22 @@ def _q33_approx_sketches(spark: SparkSession, sf: str) -> DataFrame:
     estimates (one-sided overcounts included) hash-gate EXACTLY
     against the oracle's identical cell construction
     (operators/sketches.py)."""
-    from e_commerce_lakehouse_spark.operators.parallelize import (
-        local_checkpoint_tracked,
-    )
-
     li = load_table(spark, sf, "lineitem")
     p_cents = money.CENTS_SQL.format(x="l_extendedprice")
-    # ONE shared (returnflag, linestatus, partkey) count frame can
-    # feed every key-granular branch — exact distinct, top-5 parts,
-    # the CMS build, AND the HLL register build — so lineitem is
-    # scanned TWICE total (frame + the percentile/sketch aggregate,
-    # which must see raw rows) instead of five times, and the per-key
-    # md5 hashing runs once per DISTINCT key instead of once per row.
-    # Each derivation is an exact identity (distinct projections of
-    # the key set, sums of the counts, max-folded registers) — both
-    # paths hash-gate against the same oracle. SIZE-GATED like q46's
-    # reuse checkpoints: at sf0.1 the frame's eager materialization
-    # barrier costs more than the saved 8 MB scans (same-session A/B:
-    # 5-scan 3.06 vs shared-frame 3.67 s min over 8 alternated
-    # rounds), while at scale five lineitem passes dwarf a
-    # part-cardinality-bounded checkpoint.
-    if _scan_size_bytes(li) >= _REUSE_CKPT_MIN_BYTES:
-        rf_part, _ids = local_checkpoint_tracked(
-            li.groupBy("l_returnflag", "l_linestatus", "l_partkey").agg(
-                F.count(F.lit(1)).alias("_cnt")
-            )
-        )
-        buckets.track_pinned(_ids)
-    else:
-        rf_part = None
+    # Every key-granular branch (exact distinct, top-5 parts, CMS, HLL
+    # registers) aggregates lineitem directly. A shared checkpointed
+    # (returnflag, linestatus, partkey) count frame would save scans,
+    # but its eager barrier cost more than it saved at sf0.1
+    # (same-session A/B: 5-scan 3.06 vs shared-frame 3.67 s min over
+    # 8 alternated rounds).
+
     # exact distinct as a TWO-LEVEL group-by, not count(DISTINCT) in
     # the sketch agg: mixing a distinct aggregate with percentile
     # buffers forces Spark's Expand+sort-agg rewrite (~8x slower
     # measured, and a full-width row expansion at 100 TB); two hash
     # aggregates + a 3-row broadcast join stay partial-agg safe.
     exact_distinct = (
-        (li if rf_part is None else rf_part)
-        .select("l_returnflag", "l_partkey")
+        li.select("l_returnflag", "l_partkey")
         .distinct()
         .groupBy("l_returnflag")
         .agg(F.count(F.lit(1)).alias("exact_parts"))
@@ -1244,9 +1222,7 @@ def _q33_approx_sketches(spark: SparkSession, sf: str) -> DataFrame:
     # lineitem once instead of twice. The merge row keeps its gate:
     # the oracle still recomputes the DIRECT estimate independently.
     regs_fine = sketch_ops.hll_registers(
-        li if rf_part is None else rf_part,
-        "l_partkey",
-        ["l_returnflag", "l_linestatus"],
+        li, "l_partkey", ["l_returnflag", "l_linestatus"]
     )
     hll_est = sketch_ops.hll_estimate_from_registers(
         sketch_ops.hll_merge_registers(regs_fine, ["l_returnflag"]),
@@ -1288,24 +1264,13 @@ def _q33_approx_sketches(spark: SparkSession, sf: str) -> DataFrame:
             "hll_x1000",
         )
     )
-    if rf_part is None:
-        cms_cells = sketch_ops.countmin_cells(li.select("l_partkey"), "l_partkey")
-        top_parts = (
-            li.groupBy("l_partkey")
-            .agg(F.count(F.lit(1)).alias("exact_cnt"))
-            .orderBy(F.desc("exact_cnt"), F.asc("l_partkey"))
-            .limit(5)
-        )
-    else:
-        cms_cells = sketch_ops.countmin_cells(
-            rf_part.select("l_partkey", "_cnt"), "l_partkey", weight_col="_cnt"
-        )
-        top_parts = (
-            rf_part.groupBy("l_partkey")
-            .agg(F.sum("_cnt").alias("exact_cnt"))
-            .orderBy(F.desc("exact_cnt"), F.asc("l_partkey"))
-            .limit(5)
-        )
+    cms_cells = sketch_ops.countmin_cells(li.select("l_partkey"), "l_partkey")
+    top_parts = (
+        li.groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).alias("exact_cnt"))
+        .orderBy(F.desc("exact_cnt"), F.asc("l_partkey"))
+        .limit(5)
+    )
     cms = sketch_ops.countmin_estimate(cms_cells, top_parts, "l_partkey").select(
         F.lit("cms").alias("kind"),
         F.lit(None).cast("string").alias("l_returnflag"),
@@ -2286,10 +2251,7 @@ def _q39_ivf_ann(spark: SparkSession, sf: str) -> DataFrame:
     # back-fill one chain's barriers with the other's tasks (guide
     # §2.6 overlap-independent-jobs) instead of serializing ~5 small
     # jobs end to end. The prep frame is materialized ONCE up front so
-    # the session cache is not raced. Thread-safety note: exactly ONE
-    # of the two chains persists RDDs (pq_index's code-frame
-    # checkpoint; sq8 only collects), so local_checkpoint_tracked's
-    # single-persisting-thread id-diff assumption holds.
+    # the session cache is not raced.
     prep = _shared_vec_prep(spark, sf)
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_pq = pool.submit(similarity.pq_index, emb, prep=prep)
@@ -2556,24 +2518,6 @@ def _q45_kmeans_cells(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-#: Reuse-checkpoint size gate: a twice-referenced ranking is only
-#: worth materializing when re-running its corpus pass costs more than
-#: the checkpoint's write+barrier. 256 MB of scanned input is far above
-#: every local test SF (sf0.1 embeddings ≈ 1 MB) and far below any
-#: production corpus, so the bench measures the cheap shape and a real
-#: deployment gets the reuse cut. Overridable for tests/tuning via
-#: $SPARK_GRAFT_REUSE_CKPT_MIN_BYTES.
-_REUSE_CKPT_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_REUSE_CKPT_MIN_BYTES", str(1 << 28))
-)
-
-
-def _scan_size_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate of a frame (file-source statistics —
-    derived from parquet file lengths, NO job)."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
 def _q46_ann_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
     """ANN surface, kind-tagged union:
       - kind='ann': OR-amplified multi-table LSH ANN (Indyk/Motwani
@@ -2596,35 +2540,16 @@ def _q46_ann_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
         same ids (vec_id ↔ doc_id), fused all-integer as
         Σ 1e6 div (60 + rank) over each system's top-20 pool; the
         oracle recomputes both rankings and the fusion arithmetic."""
-    from e_commerce_lakehouse_spark.operators.parallelize import (
-        local_checkpoint_tracked,
-    )
-
     emb = load_table(spark, sf, "embeddings")
-    # checkpoint the two rankings that are REFERENCED TWICE: the ann
-    # top-k feeds its own output branch AND ranking_quality, and ONE
-    # k=20 cosine pass feeds both the quality ground truth (rank <= 5
-    # prefix — identical rows to a k=5 run by construction) and rrf's
-    # semantic arm. Without the cut each consumer re-runs the full
-    # corpus pass behind these few-hundred-row frames (the q22
-    # double-eval pattern); with it, two corpus passes disappear.
-    # SIZE-GATED (round-13): below _REUSE_CKPT_MIN_BYTES of input the
-    # two materialization barriers cost MORE than the saved passes
-    # (same-session A/B at sf0.1: no-ckpt 2.46 vs ckpt 2.71 min over 4
-    # alternated rounds, results identical) — the cut pays exactly
-    # when the corpus pass is expensive, i.e. at scale. The gate reads
-    # the scan's file-size statistics (no job), once for both cuts.
-    reuse = _scan_size_bytes(emb) >= _REUSE_CKPT_MIN_BYTES
-
-    def _cut(df):
-        if not reuse:
-            return df
-        out, _ids = local_checkpoint_tracked(df)
-        buckets.track_pinned(_ids)
-        return out
-
-    ann = _cut(similarity.ann_topk_multi(emb, query_max_id=10, k=5, planes=8, tables=3))
-    exact20 = _cut(similarity.cosine_topk(emb, query_max_id=10, k=20))
+    # ONE k=20 cosine pass feeds both the quality ground truth (rank
+    # <= 5 prefix — identical rows to a k=5 run by construction) and
+    # rrf's semantic arm. The two twice-referenced rankings (ann,
+    # exact20) are NOT checkpointed: at sf0.1 the two materialization
+    # barriers cost more than the re-run corpus passes they save
+    # (same-session A/B: no-ckpt 2.46 vs ckpt 2.71 s min over 4
+    # alternated rounds, results identical).
+    ann = similarity.ann_topk_multi(emb, query_max_id=10, k=5, planes=8, tables=3)
+    exact20 = similarity.cosine_topk(emb, query_max_id=10, k=20)
     exact = exact20.filter(F.col("rank") <= 5)
     quality = similarity.ranking_quality(ann, exact, k=5)
     hneg = similarity.hard_negatives(emb, query_max_id=10, k=5)
@@ -2701,11 +2626,7 @@ def _q47_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     # pagerank's eager chain (edges/nodes/deg checkpoints + the node
     # count) and triangle's (undirected + oriented checkpoints) are
     # independent — submit them from two driver threads so one chain's
-    # barriers back-fill the other's idle tail (guide §2.6). Both
-    # chains use plain localCheckpoint (no tracked id-diff), so the
-    # single-persisting-thread assumption of local_checkpoint_tracked
-    # is not in play (pagerank's tracked round cut only fires past
-    # ckpt_every=8 iterations; this call runs 2).
+    # barriers back-fill the other's idle tail (guide §2.6).
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_pr = pool.submit(graph_ops.pagerank, edges, iters=2)
         f_tri = pool.submit(graph_ops.triangle_counts, edges)

@@ -59,41 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .parallelize import local_checkpoint_tracked, release_rdds
-
 DEFAULT_HOT_CAP = 1024
-
-# Block ids pinned by bucket_mate_pairs' internal materialization
-# (materialize_input=True). Spark's ContextCleaner frees checkpoint
-# blocks only after wrapper+proxy GC, so a long-lived session calling
-# the LSH pairing repeatedly would otherwise accumulate dead indexes
-# in executor storage memory. Callers release consumed indexes with
-# release_pinned_indexes(spark); bench.py's between-query sweep covers
-# its runs either way. Single-driver-thread assumption, like
-# parallelize.local_checkpoint_tracked.
-_PINNED_INDEX_BLOCKS: set[int] = set()
-
-
-def pinned_index_blocks() -> set[int]:
-    """Ids of checkpoint blocks currently pinned by internal
-    materializations — exposure for callers that manage lifecycle."""
-    return set(_PINNED_INDEX_BLOCKS)
-
-
-def track_pinned(ids: set[int]) -> None:
-    """Register internally-pinned checkpoint blocks from OTHER
-    operators (e.g. similarity.semdedup's assignment/pair frames) in
-    the same release registry, so one release_pinned_indexes(spark)
-    sweep covers every internal materialization."""
-    _PINNED_INDEX_BLOCKS.update(ids)
-
-
-def release_pinned_indexes(spark) -> None:
-    """Unpersist every internally-pinned banded index. Call AFTER the
-    pairing output has been consumed by an action — the blocks ARE the
-    index data while the returned frame is still live."""
-    release_rdds(spark, _PINNED_INDEX_BLOCKS)
-    _PINNED_INDEX_BLOCKS.clear()
 
 
 def _bucket_stats(banded: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -124,9 +90,7 @@ def bucket_mate_pairs(
     ``materialize_input=False`` skips the internal localCheckpoint —
     pass it ONLY when ``banded`` is already materialized (a
     corpus_cache frame / persisted index); an unmaterialized kernel
-    frame would re-run per pairing branch. With ``True`` the pinned
-    blocks are tracked — long-lived sessions release consumed indexes
-    via :func:`release_pinned_indexes`.
+    frame would re-run per pairing branch.
     """
     if hot_mode not in ("star", "grid"):
         raise ValueError(f"hot_mode must be star|grid, got {hot_mode!r}")
@@ -135,11 +99,8 @@ def bucket_mate_pairs(
         # this the upstream signature kernel would re-run per
         # reference. The checkpointed frame is the banded index (ids +
         # small keys), the cluster-scale analog of a persisted LSH
-        # index. Tracked so long-lived sessions can release superseded
-        # indexes (release_pinned_indexes) instead of leaking blocks
-        # until GC.
-        banded, ids = local_checkpoint_tracked(banded)
-        track_pinned(ids)
+        # index.
+        banded = banded.localCheckpoint()
     # Per-bucket size/min via a WINDOW, not a groupBy+join: one shuffle
     # on the bucket key instead of three join legs, and the downstream
     # small-bucket groupBy reuses the window's hash partitioning (no

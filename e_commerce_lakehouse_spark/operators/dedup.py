@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import buckets
-from .parallelize import local_checkpoint_tracked, spread_for_cpu
+from .parallelize import spread_for_cpu
 from .text import tokens
 
 # ---------------------------------------------------------------------------
@@ -655,10 +655,7 @@ def minhash_lsh_incremental(
         # cached band index (corpus_cache) pass it via ``banded``
         # (num_hashes/bands/sigs are then ignored — the index fixes them
         # — and the frame must already be materialized).
-        banded, _bids = local_checkpoint_tracked(
-            _minhash_banded(sigs, num_hashes, bands)
-        )
-        buckets.track_pinned(_bids)
+        banded = _minhash_banded(sigs, num_hashes, bands).localCheckpoint()
     else:
         _check_banded_schema(banded)
     probe = banded.filter(F.col("doc_id") >= new_min_doc_id).select(
@@ -823,8 +820,7 @@ def simhash_edit_pairs(
     # frame — e.g. corpus_cache.shared_df — so the corpus-wide SimHash
     # kernel runs once per session, not once per query
     if sh is None:
-        sh, _sids = local_checkpoint_tracked(simhash(documents, bits))
-        buckets.track_pinned(_sids)  # index ≡ probe side
+        sh = simhash(documents, bits).localCheckpoint()  # index ≡ probe side
     banded = sh.select(
         "doc_id",
         F.explode(
@@ -967,8 +963,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     # The initial witness counts them in the SAME one-job pass that
     # materializes the checkpoint; only when some exist (the rare
     # defensive path) do the initial blocks stay pinned so the
-    # singleton branch can read them at result time (registered with
-    # track_pinned so session sweeps reclaim them) — the common case
+    # singleton branch can read them at result time — the common case
     # keeps the r5 lifecycle exactly: every superseded round released,
     # one surviving checkpoint.
     canon, c_ids = local_checkpoint_tracked(
@@ -994,8 +989,6 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     ).first()
     prev = (_first.cnt, _first.s_hi, _first.s_lo)
     loops = canon.filter(~_is_edge) if _first.n_loops else None
-    if loops is not None:
-        buckets.track_pinned(c_ids)
     for _ in range(max_iter):
         # large-star: double the edges, take the whole-partition window
         # min per node, re-point strictly-larger neighbors at it. Output

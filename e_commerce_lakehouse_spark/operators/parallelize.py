@@ -58,28 +58,30 @@ def _persistent_rdd_ids(spark) -> set[int]:
 def local_checkpoint_tracked(
     df: DataFrame, eager: bool = True
 ) -> tuple[DataFrame, set[int]]:
-    """``df.localCheckpoint()`` plus the ids of the RDD blocks the
+    """``df.localCheckpoint()`` plus the id of the RDD block the
     checkpoint pinned, so iterative algorithms can release superseded
     rounds with :func:`release_rdds`. Spark's ContextCleaner only frees
     checkpoint blocks after BOTH the Python wrapper and the py4j proxy
     are garbage-collected — far too late for a loop that pins a fresh
     copy of its state every round (N rounds would hold N copies of the
     state in executor storage memory, evicting genuinely hot blocks at
-    scale). Assumes a single driver thread persists RDDs (true for this
-    engine's operators).
+    scale). The id is read from the checkpoint's own plan node (the
+    ``LogicalRDD`` Spark SQL wraps around the checkpointed RDD), never
+    from the session's global persistent-RDD set: concurrent driver
+    threads cannot mis-attribute each other's blocks, and blocks of a
+    ``.cache()``d input that materialize during the checkpoint job stay
+    the caller's.
 
     ``eager=False`` marks the checkpoint but defers materialization to
     the caller's next action — use when that action is immediate (e.g.
     a convergence-witness aggregate), folding checkpoint-write and
     witness into ONE job instead of two. The persist registration (and
-    therefore id tracking) happens at call time either way. Only safe
+    therefore the id) happens at call time either way. Only safe
     when the frame is consumed by an action before any multi-reference
     plan — a lazy checkpoint referenced twice inside its materializing
     job may compute partitions twice."""
-    spark = df.sparkSession
-    before = _persistent_rdd_ids(spark)
     out = df.localCheckpoint(eager=eager)
-    return out, _persistent_rdd_ids(spark) - before
+    return out, {int(out._jdf.queryExecution().logical().rdd().id())}
 
 
 def release_rdds(spark, ids: set[int]) -> None:

@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import buckets
-
 
 def _hash60(s: Column) -> Column:
     """md5 of a string column, first 15 hex digits as a 60-bit BIGINT —
@@ -354,11 +352,21 @@ def shuffle_positions(
 def dsir_doc_buckets_frame(
     documents: DataFrame, n_buckets: int = 256
 ) -> DataFrame:
-    """The UNmaterialized DSIR doc-feature frame (see
-    :func:`dsir_doc_buckets`) — exposed so a session cache
-    (corpus_cache.shared_df) can materialize ONE copy per (session,
-    sf) instead of re-running the corpus explode per call; the
-    persisted document-feature-matrix analog, same contract as
+    """Per-document hashed n-gram feature vectors for DSIR (Xie et al.
+    2023, "Data Selection for Language Models via Importance
+    Resampling"): unigram + bigram OCCURRENCES hashed into
+    ``n_buckets`` buckets via the module's engine-portable md5 hash —
+    one compact row per (doc, bucket) with the occurrence count.
+
+    This frame is THE intermediate every DSIR stage reads (target
+    model, raw model, per-doc scoring), so callers materialize it
+    once; at 100 TB it is the persisted document-feature matrix
+    (≤ n_buckets rows per doc — orders of magnitude smaller than the
+    exploded gram stream), built with one corpus explode and one
+    map-side-combining groupBy on the uniform (doc_id, bucket) key.
+    Returned UNmaterialized so a session cache (corpus_cache.shared_df)
+    can hold ONE copy per (session, sf) instead of re-running the
+    corpus explode per call — same contract as
     similarity.kmeans_prep_frame."""
     from .text import tokens
 
@@ -403,28 +411,6 @@ def dsir_doc_buckets_frame(
         .groupBy("doc_id", "lang", "source", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-
-
-def dsir_doc_buckets(
-    documents: DataFrame, n_buckets: int = 256
-) -> tuple[DataFrame, set[int]]:
-    """Per-document hashed n-gram feature vectors for DSIR (Xie et al.
-    2023, "Data Selection for Language Models via Importance
-    Resampling"): unigram + bigram OCCURRENCES hashed into
-    ``n_buckets`` buckets via the module's engine-portable md5 hash —
-    one compact row per (doc, bucket) with the occurrence count.
-
-    This frame is THE intermediate every DSIR stage reads (target
-    model, raw model, per-doc scoring), so it is checkpoint-
-    materialized once; at 100 TB it is the persisted document-feature
-    matrix (≤ n_buckets rows per doc — orders of magnitude smaller
-    than the exploded gram stream), built with one corpus explode and
-    one map-side-combining groupBy on the uniform (doc_id, bucket)
-    key. Returns (frame, pinned block ids) — callers release when
-    done (bench sweeps leftovers)."""
-    from .parallelize import local_checkpoint_tracked
-
-    return local_checkpoint_tracked(dsir_doc_buckets_frame(documents, n_buckets))
 
 
 def dsir_select(
@@ -486,8 +472,7 @@ def dsir_select(
                 "docb_n_buckets was passed without docb: it declares "
                 "the bucket count of a caller-owned docb frame"
             )
-        docb, _ids = dsir_doc_buckets(documents, n_buckets)
-        buckets.track_pinned(_ids)
+        docb = dsir_doc_buckets_frame(documents, n_buckets).localCheckpoint()
     else:
         if docb_n_buckets is None:
             raise ValueError(

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import buckets
-from .parallelize import local_checkpoint_tracked, spread_for_cpu
+from .parallelize import spread_for_cpu
 
 QUANT = 1_000_000  # micro-unit quantization for exact integer vector math
 
@@ -153,7 +153,7 @@ def ann_topk_lsh(
     """
     planes_arr = hyperplanes(planes, dim, seed)
     codes = band_codes_udf(planes_arr, bands=1)
-    side, _sids = local_checkpoint_tracked(
+    side = (
         spread_for_cpu(embeddings)
         .select(
             "vec_id",
@@ -161,8 +161,8 @@ def ann_topk_lsh(
             quantized("embedding").alias("vec"),
             F.element_at(codes("embedding"), 1).alias("sketch"),
         )
+        .localCheckpoint()
     )
-    buckets.track_pinned(_sids)
     q = side.filter(F.col("vec_id") < query_max_id).select(
         F.col("vec_id").alias("query_id"),
         F.col("sketch").alias("q_sketch"),
@@ -229,7 +229,7 @@ def ann_topk_multi(
     # materialize the sketch+vector side ONCE: both the probe build and
     # the corpus side reference it, and a self-join on a UDF-derived
     # frame would otherwise evaluate the Arrow kernel twice
-    side, _sids = local_checkpoint_tracked(
+    side = (
         spread_for_cpu(embeddings)
         .select(
             "vec_id",
@@ -237,8 +237,8 @@ def ann_topk_multi(
             quantized("embedding").alias("vec"),
             codes("embedding").alias("codes"),
         )
+        .localCheckpoint()
     )
-    buckets.track_pinned(_sids)
     # the corpus side carries label+vector THROUGH the bucket join, so
     # the candidate union never re-joins the corpus: the old
     # cand.join(corpus, neighbor_id) shape shuffled the ENTIRE corpus
@@ -596,16 +596,8 @@ def _kmeans_prep(embeddings: DataFrame) -> DataFrame:
     once per update — without the cut, every iteration re-runs the scan
     + repartition + quantize sub-DAG. Fan-out is capped: the Lloyd loop
     launches ~5 stages per round over this table, so task-count per
-    stage matters more than per-core spread for a small input.
-
-    The pinned blocks — the largest internal materialization in this
-    module (the full quantized corpus) — register in the shared release
-    registry, so ``buckets.release_pinned_indexes(spark)`` frees
-    superseded training runs in long-lived sessions instead of leaking
-    them until Python+py4j GC."""
-    out, ids = local_checkpoint_tracked(kmeans_prep_frame(embeddings))
-    buckets.track_pinned(ids)
-    return out
+    stage matters more than per-core spread for a small input."""
+    return kmeans_prep_frame(embeddings).localCheckpoint()
 
 
 def _assign_to_matrix_udf(cells: list[int], cent):
@@ -716,8 +708,6 @@ def kmeans_train_distributed(
     at small k): same vec_id<k seeding, same empty-cell drop, same
     exact integer distances, same floor(double-divide) mean (sums <
     2^53, so the double is exact)."""
-    from .buckets import local_checkpoint_tracked, track_pinned
-
     cent = v.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cell"), F.col("vec").alias("c_vec")
     )
@@ -752,8 +742,7 @@ def kmeans_train_distributed(
                 ).alias("c_vec")
             )
         )
-        cent, _ids = local_checkpoint_tracked(cent, eager=False)
-        track_pinned(_ids)
+        cent = cent.localCheckpoint(eager=False)
     return cent.select(F.col("cell").alias("centroid_id"), "c_vec")
 
 
@@ -844,15 +833,13 @@ def semdedup(
     a = _assign_to_matrix_udf(cells, cent)
     # one checkpoint feeds the returned assignment and the cell-grouped
     # pairwise pass — without it the assign kernel re-runs per branch.
-    # Pinned blocks go in the shared release registry
-    # (buckets.release_pinned_indexes) so long-lived sessions can sweep
-    # consumed runs.
-    assign_v, _ids = local_checkpoint_tracked(
-        v.select("vec_id", "vec", a("vec").alias("m")).select(
+    assign_v = (
+        v.select("vec_id", "vec", a("vec").alias("m"))
+        .select(
             "vec_id", "vec", F.col("m.cell").alias("cell"), F.col("m.d2").alias("d2")
         )
+        .localCheckpoint()
     )
-    buckets.track_pinned(_ids)
     assign = assign_v.select("vec_id", "cell", "d2")
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -897,13 +884,10 @@ def semdedup(
                 }))
         return pd.concat(out) if out else empty
 
-    pairs_full, _pids = local_checkpoint_tracked(
-        assign_v.groupBy("cell").applyInPandas(
-            cell_pairs,
-            "a_id long, b_id long, cell long, cosine double, drop_id long",
-        )
-    )
-    buckets.track_pinned(_pids)
+    pairs_full = assign_v.groupBy("cell").applyInPandas(
+        cell_pairs,
+        "a_id long, b_id long, cell long, cosine double, drop_id long",
+    ).localCheckpoint()
     pairs = pairs_full.select("a_id", "b_id", "cell", "cosine")
     drops = (
         pairs_full.select(F.col("drop_id").alias("vec_id"), "cell").distinct()
@@ -1105,12 +1089,11 @@ def pq_index(
     packed = " + ".join(
         f"(element_at(codes, {s + 1}) * {1 << (bits * s)})" for s in range(m)
     )
-    coded, _ids = local_checkpoint_tracked(
-        v.select("vec_id", codes("vec").alias("codes")).withColumn(
-            "pq_code", F.expr(packed)
-        )
+    coded = (
+        v.select("vec_id", codes("vec").alias("codes"))
+        .withColumn("pq_code", F.expr(packed))
+        .localCheckpoint()
     )
-    buckets.track_pinned(_ids)
 
     cellarrs = [np.asarray(c, dtype=np.int64) for c in cells]
     cents = [np.asarray(c, dtype=np.int64) for c in cent]

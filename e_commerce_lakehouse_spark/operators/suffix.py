@@ -43,7 +43,6 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import buckets
 from .parallelize import local_checkpoint_tracked, release_rdds, spread_for_cpu
 
 
@@ -143,8 +142,7 @@ def suffix_ranks(documents: DataFrame, rounds: int = 5) -> DataFrame:
     """(doc_id, pos, rem, rank): dense global rank of each suffix's
     first 2^rounds characters. Intermediate rounds are released as they
     are superseded; the final round's blocks stay pinned for the
-    result's lifetime (registered with track_pinned for session
-    sweeps)."""
+    result's lifetime (until the caller's sweep or GC)."""
     spark = documents.sparkSession
     prev_ids: set[int] | None = None
     state = None
@@ -154,7 +152,6 @@ def suffix_ranks(documents: DataFrame, rounds: int = 5) -> DataFrame:
         if prev_ids:
             release_rdds(spark, prev_ids)
         prev_ids = ids
-    buckets.track_pinned(prev_ids or set())
     return state.select("doc_id", "pos", "rem", F.col("r").alias("rank"))
 
 

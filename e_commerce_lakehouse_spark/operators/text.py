@@ -612,20 +612,16 @@ def doc_surprisal(documents: DataFrame, lm: DataFrame | None = None) -> DataFram
     Returns (doc_id, n_bigrams, surprisal_bits, mean_bits_x100) with
     mean quantized to exact integer hundredths (``div`` semantics).
     """
-    from .buckets import track_pinned
-    from .parallelize import local_checkpoint_tracked
-
     # ONE corpus explode: per-doc bigram counts feed BOTH the LM train
     # (self-scoring path — summing per-doc counts IS the global count)
     # and the score pass, so the explode+tokenize never runs twice.
-    # Checkpointed (tracked in the shared release registry) because the
-    # two passes are separate jobs.
-    counts, _cids = local_checkpoint_tracked(
+    # Checkpointed because the two passes are separate jobs.
+    counts = (
         _char_bigrams(documents)
         .groupBy("doc_id", "bg")
         .agg(F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
     )
-    track_pinned(_cids)
     if lm is None:
         lmc = counts.groupBy("bg").agg(F.sum("n").alias("c"))
         tot = lmc.agg(F.sum("c").alias("t"))
@@ -775,13 +771,9 @@ def pmi_collocations(documents: DataFrame, min_count: int = 3) -> DataFrame:
     # bigram slice) — checkpoint it so the corpus explode runs ONCE
     # (without this the union plan re-evaluates the explode per
     # consumer: measured 4s -> 10s on q17 before this landed)
-    from .buckets import track_pinned
-    from .parallelize import local_checkpoint_tracked
-
-    grouped, _gids = local_checkpoint_tracked(
-        tagged.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c"))
+    grouped = (
+        tagged.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
     )
-    track_pinned(_gids)
     uni = grouped.filter(
         F.col("b").isNull() & F.col("a").isNotNull()
     ).select("a", F.col("c").alias("c_a"))

@@ -142,6 +142,72 @@ def test_duplicate_clusters_releases_superseded_checkpoints(spark):
     release_rdds(spark, created)  # leave the session clean for other tests
 
 
+def _own_block_id(ck) -> int:
+    """Block id of a checkpointed frame, read from its LogicalRDD."""
+    return int(ck._jdf.queryExecution().logical().rdd().id())
+
+
+def test_checkpoint_ids_exclude_cached_input_blocks(spark):
+    """Checkpointing a frame that reads a lazily ``.cache()``d frame
+    materializes the cache's block in the same job; the tracked ids
+    must be the checkpoint's own block only, so releasing them leaves
+    the caller's cache intact."""
+    from e_commerce_lakehouse_spark.operators.parallelize import (
+        _persistent_rdd_ids,
+        local_checkpoint_tracked,
+        release_rdds,
+    )
+
+    base = spark.range(300).withColumn("v", F.col("id") * 3).cache()
+    try:
+        before = _persistent_rdd_ids(spark)
+        ck, ids = local_checkpoint_tracked(
+            base.groupBy((F.col("id") % 7).alias("k")).agg(F.sum("v").alias("s"))
+        )
+        cache_blocks = _persistent_rdd_ids(spark) - before - ids
+        assert ids == {_own_block_id(ck)}
+        assert cache_blocks, "the cached input should have materialized"
+        assert ck.count() == 7
+        release_rdds(spark, ids)
+        live = _persistent_rdd_ids(spark)
+        assert cache_blocks <= live
+        assert not ids & live
+    finally:
+        base.unpersist()
+
+
+def test_checkpoint_ids_are_per_thread(spark):
+    """Two driver threads checkpointing at the same moment each get
+    exactly their own block id; releasing one thread's block leaves the
+    other's frame readable."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from e_commerce_lakehouse_spark.operators.parallelize import (
+        _persistent_rdd_ids,
+        local_checkpoint_tracked,
+        release_rdds,
+    )
+
+    barrier = threading.Barrier(2)
+
+    def run(n):
+        df = spark.range(n).withColumn("x", F.col("id") * 2)
+        barrier.wait(timeout=60)
+        ck, ids = local_checkpoint_tracked(df)
+        return ck, ids
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        (ck_a, ids_a), (ck_b, ids_b) = pool.map(run, [50, 80])
+    assert ids_a == {_own_block_id(ck_a)}
+    assert ids_b == {_own_block_id(ck_b)}
+    assert ids_a != ids_b
+    assert (ids_a | ids_b) <= _persistent_rdd_ids(spark)
+    release_rdds(spark, ids_a)
+    assert ck_b.count() == 80
+    release_rdds(spark, ids_b)
+
+
 def test_dedup_by_clusters_end_to_end(spark):
     docs = _with_synthetic_dups(load_table(spark, SF_SMALL, "documents"))
     pairs = dedup.minhash_lsh_pairs(docs, num_hashes=16, bands=4, threshold_pct=99)

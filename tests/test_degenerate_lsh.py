@@ -170,25 +170,6 @@ def test_grid_cells_hard_bounded(spark):
     assert grid.count() == 257 * 256 // 2
 
 
-def test_release_pinned_indexes(spark):
-    """Internal materializations are tracked and releasable: after
-    consuming the pairs, release_pinned_indexes drops the pinned
-    checkpoint blocks (long-lived-session leak guard)."""
-    df = _banded(spark, 100, n_buckets=4)
-    pairs = buckets.bucket_mate_pairs(df, ["k"], "doc_id", hot_cap=10)
-    pairs.count()
-    assert buckets.pinned_index_blocks()
-    buckets.release_pinned_indexes(spark)
-    assert not buckets.pinned_index_blocks()
-    from e_commerce_lakehouse_spark.operators.parallelize import _persistent_rdd_ids
-
-    # none of the previously-pinned ids remain persisted
-    # (other frames may still be pinned by other tests' fixtures)
-    assert not (
-        {b for b in buckets.pinned_index_blocks()} & _persistent_rdd_ids(spark)
-    )
-
-
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_grid_equals_exact_on_random_buckets(spark, seed):
     """Randomized multi-bucket frames: the grid hot path must produce

@@ -32,21 +32,6 @@ def test_q01_broadcasts_dim_and_prunes_columns(spark):
     assert "SortMergeJoin" not in plan or "BroadcastHashJoin" in plan
 
 
-def test_size_gated_shapes_are_result_identical(spark, monkeypatch):
-    """q33's shared (rf, ls, partkey) count frame and q46's reuse
-    checkpoints are size-gated (_REUSE_CKPT_MIN_BYTES): the bench
-    exercises the small-input shape, a production corpus the
-    materialized one. Both shapes must return identical rows."""
-    from collections import Counter
-
-    for qname in ("q33_approx_sketches", "q46_ann_multiprobe"):
-        small = Counter(map(repr, Q[qname](spark, SF_SMALL).collect()))
-        monkeypatch.setattr(entrymod, "_REUSE_CKPT_MIN_BYTES", 0)
-        big = Counter(map(repr, Q[qname](spark, SF_SMALL).collect()))
-        monkeypatch.undo()
-        assert small == big, qname
-
-
 def test_q08_pushes_priority_filter_to_scan(spark):
     plan = plan_of(Q["q08_urgent_lineitems"](spark, SF_SMALL))
     assert "EqualTo(o_orderpriority,1-URGENT)" in plan  # pushed to parquet scan
