@@ -48,7 +48,7 @@ from e_commerce_lakehouse_spark.operators import (
 )
 from e_commerce_lakehouse_spark.operators import graph as graph_ops
 from e_commerce_lakehouse_spark.operators import sketches as sketch_ops
-from e_commerce_lakehouse_spark.operators.parallelize import spread_for_cpu
+from e_commerce_lakehouse_spark.operators.parallelize import overlap, spread_for_cpu
 from e_commerce_lakehouse_spark.session import tune_existing
 from e_commerce_lakehouse_spark.streaming import events as stream_events
 from e_commerce_lakehouse_spark.sources import load_table
@@ -2240,8 +2240,6 @@ def _q39_ivf_ann(spark: SparkSession, sf: str) -> DataFrame:
     One `pq_index` call shares training + a checkpointed code frame
     between the two PQ branches; sq8 shares the same session-cached
     quantized prep frame."""
-    from concurrent.futures import ThreadPoolExecutor
-
     emb = load_table(spark, sf, "embeddings")
     ivf = similarity.ivf_topk(emb)
     # The two trainers are INDEPENDENT eager chains over the same
@@ -2253,11 +2251,11 @@ def _q39_ivf_ann(spark: SparkSession, sf: str) -> DataFrame:
     # jobs end to end. The prep frame is materialized ONCE up front so
     # the session cache is not raced.
     prep = _shared_vec_prep(spark, sf)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_pq = pool.submit(similarity.pq_index, emb, prep=prep)
-        f_sq = pool.submit(similarity.sq8_index, emb, prep=prep)
-        codes, ptk = f_pq.result()
-        sq_codes, sq_topk = f_sq.result()
+    (codes, ptk), (sq_codes, sq_topk) = overlap(
+        spark,
+        lambda: similarity.pq_index(emb, prep=prep),
+        lambda: similarity.sq8_index(emb, prep=prep),
+    )
     nl = F.lit(None).cast("long")
     nd = F.lit(None).cast("double")
     ns = F.lit(None).cast("int")  # label is int32 in the testdata schema
@@ -2615,8 +2613,6 @@ def _q47_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         self-join has no hot key).
     The edge frame is session-cached — both branches and repeated
     bench passes reuse one window scan of the event log."""
-    from concurrent.futures import ThreadPoolExecutor
-
     edges = corpus_cache.shared_df(
         spark,
         ("click_edges", sf),
@@ -2627,10 +2623,11 @@ def _q47_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     # count) and triangle's (undirected + oriented checkpoints) are
     # independent — submit them from two driver threads so one chain's
     # barriers back-fill the other's idle tail (guide §2.6).
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_pr = pool.submit(graph_ops.pagerank, edges, iters=2)
-        f_tri = pool.submit(graph_ops.triangle_counts, edges)
-        pr_raw, tri_raw = f_pr.result(), f_tri.result()
+    pr_raw, tri_raw = overlap(
+        spark,
+        lambda: graph_ops.pagerank(edges, iters=2),
+        lambda: graph_ops.triangle_counts(edges),
+    )
     pr = pr_raw.select(
         F.lit("pagerank").alias("kind"), "node", "rank_scaled", nl.alias("tri_count")
     )

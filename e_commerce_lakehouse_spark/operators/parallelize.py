@@ -1,16 +1,23 @@
-"""Input-parallelism helper for CPU-heavy per-row operators.
+"""Driver-side parallelism helpers.
 
-Spark sizes scan splits by bytes (``spark.sql.files.maxPartitionBytes``),
-which is right for I/O-bound plans but wrong for compute-bound ones: a
-small file packs into ONE split, serializing an expensive Arrow kernel
-or per-pair verify onto one core. ``spread_for_cpu`` round-robins such
-inputs up to the session's default parallelism — and is a structural
-no-op at 100 TB, where the scan already yields thousands of splits.
+``spread_for_cpu`` is the input-parallelism helper for CPU-heavy
+per-row operators. Spark sizes scan splits by bytes
+(``spark.sql.files.maxPartitionBytes``), which is right for I/O-bound
+plans but wrong for compute-bound ones: a small file packs into ONE
+split, serializing an expensive Arrow kernel or per-pair verify onto
+one core. ``spread_for_cpu`` round-robins such inputs up to the
+session's default parallelism — and is a structural no-op at 100 TB,
+where the scan already yields thousands of splits.
+
+``overlap`` runs independent eager chains from concurrent driver
+threads; the checkpoint helpers own the block ids of iterative state.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
@@ -49,6 +56,35 @@ def spread_for_cpu(df: DataFrame, cap: int | None = None) -> DataFrame:
     if est_splits < target:
         return df.repartition(target)
     return df
+
+
+def overlap(spark, *calls: Callable[[], Any]) -> list[Any]:
+    """Run independent zero-argument ``calls`` from one driver thread
+    each and return their results in call order.
+
+    Each call's jobs are submitted concurrently to the same executors
+    (Spark's scheduler is thread-safe), so one chain's barriers — a
+    scalar collect, an eager checkpoint, a commit's metadata I/O —
+    back-fill with another chain's tasks instead of leaving cores idle.
+    The calls must share no mutable state; lazily built input frames
+    may be shared read-only.
+
+    Threads run through ``pyspark.inheritable_thread_target``, so each
+    inherits the caller's local properties (job group, description,
+    scheduler pool) and session tags: every job a call starts is
+    attributed to the caller's group. All calls run to completion even
+    when one fails; the first failure in call order is then re-raised,
+    so no sibling is left writing behind the caller's back."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(c)) for c in calls
+        ]
+    # leaving the pool joined every call: result() re-raises in order
+    return [f.result() for f in futures]
 
 
 def _persistent_rdd_ids(spark) -> set[int]:

@@ -468,21 +468,24 @@ def _merge_upsert_dv(
     S._guard_no_initial_defaults(entry, "merge_upsert_dv")
     S._guard_no_widened(entry, "merge_upsert_dv")
     cols = [f["name"] for f in json.loads(entry["schema"])["fields"]]
-    src = source.select(*cols)
-
-    rel_files, scan_meta = _plan_matched_scan(
-        manifest, root, src, keys, max_keyscan_keys, "merge_upsert_dv"
-    )
-    if rel_files is None:
-        rel_files = [
-            os.path.join(d, f)
-            for d, f in S._entry_units(root, manifest, entry)
-        ]
-    paths = [os.path.join(root, f) for f in rel_files]
-    snap_id = manifest["snapshots"][-1]["id"] + 1
-    dvs = list(entry.get("dvs", []))
+    # the batch feeds three consumers (the key collect, the matched
+    # join, the appended rows): persist it for this call so each
+    # consumer reads the cache instead of recomputing the batch
+    # (typically a foreachBatch frame over a Python RDD)
+    src = source.select(*cols).persist()
     matched = None
     try:
+        rel_files, scan_meta = _plan_matched_scan(
+            manifest, root, src, keys, max_keyscan_keys, "merge_upsert_dv"
+        )
+        if rel_files is None:
+            rel_files = [
+                os.path.join(d, f)
+                for d, f in S._entry_units(root, manifest, entry)
+            ]
+        paths = [os.path.join(root, f) for f in rel_files]
+        snap_id = manifest["snapshots"][-1]["id"] + 1
+        dvs = list(entry.get("dvs", []))
         if paths:
             raw = S._scan_entry_files(spark, entry, paths)
             tagged = _minus_prior_dvs(
@@ -521,6 +524,7 @@ def _merge_upsert_dv(
     finally:
         if matched is not None:
             matched.unpersist()
+        src.unpersist()
     new_stats = S._collect_dir_stats(root, data_dir)
     if S._parquet_dir_rows(root, data_dir):
         manifest["dir_stats"][data_dir] = new_stats
@@ -664,41 +668,48 @@ def _apply_changes_dv(
     missing = [c for c in cols if c not in changes.columns]
     if missing:
         raise ValueError(f"changes missing target columns {missing}")
-    changed_keys = changes.select(*keys).distinct()
-    post = changes.filter(
-        F.col("_change_type").isin("insert", "update_postimage")
-    ).select(*cols)
+    # the feed is read three times (the key collect, the doomed-key
+    # join, the post-state rows): persist its projection for this call
+    # so each consumer reads the cache instead of recomputing the feed
+    feed = changes.select(*cols, "_change_type").persist()
+    try:
+        changed_keys = feed.select(*keys).distinct()
+        post = feed.filter(
+            F.col("_change_type").isin("insert", "update_postimage")
+        ).select(*cols)
 
-    rel_files, scan_meta = _plan_matched_scan(
-        manifest, root, changes, keys, max_keyscan_keys, "apply_changes_dv"
-    )
-    if rel_files is None:
-        rel_files = [
-            os.path.join(d, f)
-            for d, f in S._entry_units(root, manifest, entry)
-        ]
-    paths = [os.path.join(root, f) for f in rel_files]
-    snap_id = manifest["snapshots"][-1]["id"] + 1
-    dvs = list(entry.get("dvs", []))
-    if paths:
-        raw = S._scan_entry_files(spark, entry, paths)
-        tagged = _minus_prior_dvs(
-            spark, root, entry, _tag_positions(raw, *keys)
+        rel_files, scan_meta = _plan_matched_scan(
+            manifest, root, feed, keys, max_keyscan_keys, "apply_changes_dv"
         )
-        # null-safe key match, exactly apply_changes' anti-join contract
-        ck = F.broadcast(changed_keys)
-        cond = functools.reduce(
-            operator.and_, [tagged[k].eqNullSafe(ck[k]) for k in keys]
-        )
-        doomed = tagged.join(ck, cond, "left_semi")
-        dv_dir, n_marked = _write_dv_sidecar(
-            root, snap_id, doomed.select("_file", "_pos")
-        )
-        if dv_dir is not None:
-            dvs.append(dv_dir)
+        if rel_files is None:
+            rel_files = [
+                os.path.join(d, f)
+                for d, f in S._entry_units(root, manifest, entry)
+            ]
+        paths = [os.path.join(root, f) for f in rel_files]
+        snap_id = manifest["snapshots"][-1]["id"] + 1
+        dvs = list(entry.get("dvs", []))
+        if paths:
+            raw = S._scan_entry_files(spark, entry, paths)
+            tagged = _minus_prior_dvs(
+                spark, root, entry, _tag_positions(raw, *keys)
+            )
+            # null-safe key match, exactly apply_changes' anti-join contract
+            ck = F.broadcast(changed_keys)
+            cond = functools.reduce(
+                operator.and_, [tagged[k].eqNullSafe(ck[k]) for k in keys]
+            )
+            doomed = tagged.join(ck, cond, "left_semi")
+            dv_dir, n_marked = _write_dv_sidecar(
+                root, snap_id, doomed.select("_file", "_pos")
+            )
+            if dv_dir is not None:
+                dvs.append(dv_dir)
 
-    data_dir = S._claim_data_dir(root, snap_id, "applych")
-    S._write_data_dir(_guarded(post, manifest), root, data_dir, manifest)
+        data_dir = S._claim_data_dir(root, snap_id, "applych")
+        S._write_data_dir(_guarded(post, manifest), root, data_dir, manifest)
+    finally:
+        feed.unpersist()
     new_stats = S._collect_dir_stats(root, data_dir)
     if S._parquet_dir_rows(root, data_dir):
         manifest["dir_stats"][data_dir] = new_stats

@@ -50,7 +50,9 @@ import json
 import os
 import re
 import shutil
+import threading
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1235,6 +1237,42 @@ def _collect_dir_stats(root: str, data_dir: str, stats_cols=None) -> dict:
     return out
 
 
+#: per-session [active writers, the caller's value] of the parquet
+#: timestamp type while snapshot writes run (see _micros_timestamps)
+_TS_TYPE_KEY = "spark.sql.parquet.outputTimestampType"
+_ts_type_lock = threading.Lock()
+_ts_type_writers: dict[int, list] = {}
+
+
+@contextmanager
+def _micros_timestamps(spark: SparkSession):
+    """Pin TIMESTAMP_MICROS for the duration of a data-dir write. The
+    setting is SESSION state and writes may run concurrently from
+    driver threads (the overlapped pipeline chains), so a per-write
+    save/restore would let one writer's restore land in the middle of
+    another's write (INT96 files, no time stats). The first active
+    writer of a session saves the caller's value and pins MICROS; the
+    last one restores it."""
+    conf, sid = spark.conf, id(spark)
+    with _ts_type_lock:
+        state = _ts_type_writers.setdefault(sid, [0, None])
+        if state[0] == 0:
+            state[1] = conf.get(_TS_TYPE_KEY, None)
+            conf.set(_TS_TYPE_KEY, "TIMESTAMP_MICROS")
+        state[0] += 1
+    try:
+        yield
+    finally:
+        with _ts_type_lock:
+            state[0] -= 1
+            if state[0] == 0:
+                del _ts_type_writers[sid]
+                if state[1] is not None:
+                    conf.set(_TS_TYPE_KEY, state[1])
+                else:
+                    conf.unset(_TS_TYPE_KEY)
+
+
 def _write_data_dir(
     df: DataFrame, root: str, data_dir: str, manifest: dict | None = None
 ) -> None:
@@ -1295,24 +1333,19 @@ def _write_data_dir(
                 for t in spec
             ],
         ).repartitionByRange(n_parts, *hidden_names)
-    conf = df.sparkSession.conf
-    key = "spark.sql.parquet.outputTimestampType"
-    prev = conf.get(key, None)
-    conf.set(key, "TIMESTAMP_MICROS")
-    try:
-        # append, NOT overwrite: every caller writes into a directory
-        # _claim_data_dir just created atomically (empty -> identical
-        # result), and overwrite semantics would DELETE+recreate the
-        # claimed dir, reopening the same-name interleaving window the
-        # claim exists to close (a concurrent writer's mkdir landing in
-        # the delete window would "claim" the same name)
-        os.makedirs(os.path.join(root, data_dir), exist_ok=True)
-        df.write.mode("append").parquet(os.path.join(root, data_dir))
-    except Exception:
-        shutil.rmtree(os.path.join(root, data_dir), ignore_errors=True)
-        raise
-    finally:
-        conf.set(key, prev) if prev is not None else conf.unset(key)
+    with _micros_timestamps(df.sparkSession):
+        try:
+            # append, NOT overwrite: every caller writes into a directory
+            # _claim_data_dir just created atomically (empty -> identical
+            # result), and overwrite semantics would DELETE+recreate the
+            # claimed dir, reopening the same-name interleaving window the
+            # claim exists to close (a concurrent writer's mkdir landing in
+            # the delete window would "claim" the same name)
+            os.makedirs(os.path.join(root, data_dir), exist_ok=True)
+            df.write.mode("append").parquet(os.path.join(root, data_dir))
+        except Exception:
+            shutil.rmtree(os.path.join(root, data_dir), ignore_errors=True)
+            raise
 
 
 @_retry_conflicts

@@ -711,3 +711,65 @@ def test_rewrite_deletes_threshold_noop_and_reorg_unconditional(spark, root):
     entry = S._entry(S._load(root), out["snapshot_id"])
     assert "dvs" not in entry  # unconditional purge cleared the state
     assert S.read_snapshot(spark, root).count() == 9_999
+
+
+def _counted_batch(spark, rows, schema):
+    """A batch over a Python RDD (what ``createDataFrame`` of local rows
+    and a foreachBatch source are) and an accumulator counting the
+    source rows computed: every read of such a batch recomputes the
+    whole RDD, whatever columns the read keeps."""
+    computed = spark.sparkContext.accumulator(0)
+
+    def tick(r):
+        computed.add(1)
+        return r
+
+    rdd = spark.sparkContext.parallelize(rows, 4).map(tick)
+    return spark.createDataFrame(rdd, schema), computed
+
+
+def test_dv_writers_compute_batch_once_and_release_it(spark, root):
+    """merge_upsert_dv and apply_changes_dv each read their batch three
+    times (the key collect, the matched join, the appended rows) but
+    compute it once, and leave no persisted block behind — also when
+    the write fails."""
+    from e_commerce_lakehouse_spark.operators.parallelize import (
+        _persistent_rdd_ids,
+    )
+
+    _table(spark, root)  # ids 0..999
+    before = _persistent_rdd_ids(spark)
+    # 250 keys, 143 of them matched (multiples of 7 below 1000)
+    src, computed = _counted_batch(
+        spark, [(i * 7, 10 + i % 3) for i in range(250)], "id long, k long"
+    )
+    D.merge_upsert_dv(spark, root, src, ["id"])
+    assert computed.value == 250
+    assert not _persistent_rdd_ids(spark) - before
+    got = {r.id: r.k for r in S.read_snapshot(spark, root).collect()}
+    assert len(got) == 1000 + 250 - 143
+    assert got[7] == 11 and got[1743] == 10 and got[1] == 1
+
+    feed, computed = _counted_batch(
+        spark,
+        [(i * 7, 20, "update_postimage") for i in range(250)],
+        "id long, k long, _change_type string",
+    )
+    D.apply_changes_dv(spark, root, feed, ["id"])
+    assert computed.value == 250
+    assert not _persistent_rdd_ids(spark) - before
+    got = {r.id: r.k for r in S.read_snapshot(spark, root).collect()}
+    assert len(got) == 1000 + 250 - 143 and got[7] == 20
+
+    S.set_constraint(root, "k_small", "k < 100")
+    bad, _ = _counted_batch(
+        spark, [(i * 7, 100) for i in range(250)], "id long, k long"
+    )
+    with pytest.raises(Exception, match="k_small|constraint"):
+        D.merge_upsert_dv(spark, root, bad, ["id"])
+    assert not _persistent_rdd_ids(spark) - before
+    with pytest.raises(Exception, match="k_small|constraint"):
+        D.apply_changes_dv(
+            spark, root, bad.withColumn("_change_type", F.lit("insert")), ["id"]
+        )
+    assert not _persistent_rdd_ids(spark) - before

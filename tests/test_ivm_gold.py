@@ -27,10 +27,7 @@ def tmpdir():
 
 def _silver(spark, csv_dir):
     """Batch CSVs -> silver fact_purchase_event + dim_products."""
-    bronze = {
-        name: read_csv(spark, os.path.join(csv_dir, f"{name}.csv"), schema)
-        for name, schema in schemas.ECOM_TABLES.items()
-    }
+    bronze = _bronze(spark, csv_dir)
     fact = medallion.fact_purchase_event(bronze["orders"], bronze["order_items"])
     dim = medallion.dim_products(bronze["products"], bronze["categories"])
     reviews = medallion.fact_reviews(bronze["reviews"])
@@ -41,6 +38,33 @@ def _rows(df):
     return sorted(
         tuple(r) for r in df.collect()
     )
+
+
+def _bronze(spark, csv_dir):
+    return {
+        name: read_csv(spark, os.path.join(csv_dir, f"{name}.csv"), schema)
+        for name, schema in schemas.ECOM_TABLES.items()
+    }
+
+
+def _gold_equals_full(spark, wh, csv_dir, tables=("sales", "reviews")):
+    """The incremental gold views under ``wh`` equal the full-recompute
+    pipeline over ``csv_dir``."""
+    bronze = _bronze(spark, csv_dir)
+    dim = medallion.dim_products(bronze["products"], bronze["categories"])
+    if "sales" in tables:
+        got_s = ivm.read_sales_summary(spark, f"{wh}/gold/sales_summary", dim)
+        want_s = medallion.sales_summary(
+            medallion.fact_purchase_event(bronze["orders"], bronze["order_items"]),
+            dim,
+        )
+        assert _rows(got_s) == _rows(want_s)
+    if "reviews" in tables:
+        got_r = ivm.read_review_summary(spark, f"{wh}/gold/review_summary", dim)
+        want_r = medallion.review_summary(
+            medallion.fact_reviews(bronze["reviews"]), dim
+        )
+        assert _rows(got_r) == _rows(want_r)
 
 
 def test_sales_fold_equals_rebuild_across_batches(spark, tmpdir, ecom_csv):
@@ -211,25 +235,7 @@ def test_run_incremental_pipeline_end_to_end(spark, tmpdir, ecom_csv):
     out1 = ivm.run_incremental_pipeline(spark, early, wh)
     assert out1["sales_summary"]["mode"] == "bootstrap"
 
-    def _gold_equals_full(csv_dir):
-        bronze = {
-            name: read_csv(spark, os.path.join(csv_dir, f"{name}.csv"), schema)
-            for name, schema in schemas.ECOM_TABLES.items()
-        }
-        dim = medallion.dim_products(bronze["products"], bronze["categories"])
-        got_s = ivm.read_sales_summary(spark, f"{wh}/gold/sales_summary", dim)
-        want_s = medallion.sales_summary(
-            medallion.fact_purchase_event(bronze["orders"], bronze["order_items"]),
-            dim,
-        )
-        assert _rows(got_s) == _rows(want_s)
-        got_r = ivm.read_review_summary(spark, f"{wh}/gold/review_summary", dim)
-        want_r = medallion.review_summary(
-            medallion.fact_reviews(bronze["reviews"]), dim
-        )
-        assert _rows(got_r) == _rows(want_r)
-
-    _gold_equals_full(early)
+    _gold_equals_full(spark, wh, early)
 
     out2 = ivm.run_incremental_pipeline(spark, ref_csv, wh)
     assert out2["fact_purchase_event"]["mode"] == "incremental"
@@ -244,7 +250,7 @@ def test_run_incremental_pipeline_end_to_end(spark, tmpdir, ecom_csv):
         )
     }
     assert set(out2["sales_summary"]["files_read"]).isdisjoint(batch1_files)
-    _gold_equals_full(ref_csv)
+    _gold_equals_full(spark, wh, ref_csv)
 
     heads = {
         t: S._load(f"{wh}/silver/{t}")["current"]
@@ -257,7 +263,7 @@ def test_run_incremental_pipeline_end_to_end(spark, tmpdir, ecom_csv):
     # the unchanged re-run commits nothing at any silver table
     for t, head in heads.items():
         assert S._load(f"{wh}/silver/{t}")["current"] == head, t
-    _gold_equals_full(ref_csv)
+    _gold_equals_full(spark, wh, ref_csv)
 
 
 def test_streaming_gold_refresh_exactly_once(spark, tmpdir, ecom_csv):
@@ -440,6 +446,150 @@ def test_pipeline_dim_probe_detects_one_changed_value(spark, tmp_path, ecom_csv)
         F.col("product_id") == int(pid)
     )
     assert [r.product_name for r in got.collect()] == ["renamed product"]
+
+
+_PIPELINE_TABLES = (
+    "silver/dim_products", "silver/dim_users", "silver/fact_purchase_event",
+    "silver/fact_reviews", "gold/sales_summary", "gold/review_summary",
+)
+
+
+def _heads(wh):
+    return {t: S._load(f"{wh}/{t}")["current"] for t in _PIPELINE_TABLES}
+
+
+def test_pipeline_chain_failure_leaves_other_tables_whole(
+    spark, tmp_path, ecom_csv, monkeypatch
+):
+    """The four table chains run concurrently. A failing chain
+    (fact_reviews' commit) does not stop the others: they commit whole,
+    the chain's error is re-raised after they finish, a re-run without
+    the fault completes the failed chain and matches the full rebuild,
+    and a further re-run commits nothing."""
+    csv_dir = ecom_csv[0]
+    wh = str(tmp_path / "wh")
+    real = ivm.commit_fact_increment
+
+    def faulty(spark_, fact, root, time_col):
+        if root.endswith("fact_reviews"):
+            raise RuntimeError("planted fact_reviews fault")
+        return real(spark_, fact, root, time_col)
+
+    monkeypatch.setattr(ivm, "commit_fact_increment", faulty)
+    with pytest.raises(RuntimeError, match="planted fact_reviews fault"):
+        ivm.run_incremental_pipeline(spark, csv_dir, wh)
+    monkeypatch.undo()
+
+    heads = _heads(wh)
+    assert heads["silver/fact_reviews"] is None
+    assert heads["gold/review_summary"] is None
+    bronze = _bronze(spark, csv_dir)
+    want = {
+        "dim_products": medallion.dim_products(
+            bronze["products"], bronze["categories"]
+        ),
+        "dim_users": medallion.dim_users(bronze["users"]),
+        "fact_purchase_event": medallion.fact_purchase_event(
+            bronze["orders"], bronze["order_items"]
+        ),
+    }
+    for name, df in want.items():
+        got = S.read_snapshot(spark, f"{wh}/silver/{name}")
+        assert ivm._same_rows(got.select(*df.columns), df), name
+    _gold_equals_full(spark, wh, csv_dir, tables=("sales",))
+
+    out = ivm.run_incremental_pipeline(spark, csv_dir, wh)
+    assert out["fact_reviews"]["mode"] == "full"
+    assert out["review_summary"]["mode"] == "bootstrap"
+    assert out["fact_purchase_event"]["mode"] == "noop"
+    assert out["sales_summary"]["mode"] == "noop"
+    _gold_equals_full(spark, wh, csv_dir)
+    done = _heads(wh)
+    for t in ("silver/dim_products", "silver/dim_users",
+              "silver/fact_purchase_event", "gold/sales_summary"):
+        assert done[t] == heads[t], t
+
+    ivm.run_incremental_pipeline(spark, csv_dir, wh)
+    assert _heads(wh) == done
+
+
+def _jobs_attributed(spark, fn):
+    """Run ``fn`` under a fresh job group; returns ``(jobs started
+    during the call, jobs of the group)``. Jobs are numbered in
+    submission order, so a marker job before and after the call
+    brackets every job the call started, whatever group it carries."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker():
+        g = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(g, "marker", False)
+        sc.parallelize([1], 1).count()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        (j,) = tracker.getJobIdsForGroup(g)
+        return j
+
+    lo = marker()
+    group = f"attr-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "attribution", False)
+    try:
+        fn()
+    finally:
+        hi = marker()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return set(range(lo + 1, hi)), set(tracker.getJobIdsForGroup(group))
+
+
+def test_overlapped_jobs_inherit_caller_job_group(spark, tmp_path, ecom_csv):
+    """Every job started from overlap's driver threads — directly, or
+    by the pipeline's four chains — carries the caller's job group."""
+    from e_commerce_lakehouse_spark.operators.parallelize import overlap
+
+    def calls():
+        got = overlap(
+            spark,
+            lambda: spark.range(100).count(),
+            lambda: spark.range(10).selectExpr("sum(id)").first()[0],
+        )
+        assert got == [100, 45]
+
+    started, grouped = _jobs_attributed(spark, calls)
+    assert started and started == grouped
+    started, grouped = _jobs_attributed(
+        spark,
+        lambda: ivm.run_incremental_pipeline(
+            spark, ecom_csv[0], str(tmp_path / "wh")
+        ),
+    )
+    assert started and started == grouped
+
+
+def test_overlap_reraises_first_failure_after_all_calls(spark):
+    """All calls finish before overlap raises, and it raises the first
+    failure in call order."""
+    import time
+
+    from e_commerce_lakehouse_spark.operators.parallelize import overlap
+
+    finished = []
+
+    def slow_ok():
+        time.sleep(0.5)
+        finished.append("slow")
+        return 1
+
+    def fail(msg):
+        def f():
+            raise ValueError(msg)
+        return f
+
+    with pytest.raises(ValueError, match="first"):
+        overlap(spark, fail("first"), slow_ok, fail("second"))
+    assert finished == ["slow"]
+    assert overlap(spark, lambda: 1, lambda: "b") == [1, "b"]
 
 
 def test_join_view_maintenance_matches_rebuild(spark):

@@ -2557,3 +2557,55 @@ def test_reads_plan_from_manifest_without_spark_jobs(spark, root, shape):
     )
     assert jobs == 0
     assert _sorted_rows(feed) == [(*r, v_to) for r in change_rows]
+
+
+def test_concurrent_writes_keep_micros_timestamps(spark, tmp_path):
+    """Snapshot writes pin TIMESTAMP_MICROS in session state; with
+    writers overlapping from driver threads, the caller's setting comes
+    back only when the LAST one finishes (a per-write restore would
+    drop a still-running write to INT96 files with no time stats)."""
+    import threading
+
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.outputTimestampType"
+    spark.conf.set(key, "INT96")
+    try:
+        first, second = S._micros_timestamps(spark), S._micros_timestamps(spark)
+        first.__enter__()
+        second.__enter__()
+        first.__exit__(None, None, None)
+        assert spark.conf.get(key) == "TIMESTAMP_MICROS"
+        second.__exit__(None, None, None)
+        assert spark.conf.get(key) == "INT96"
+
+        barrier = threading.Barrier(3)
+        roots = [str(tmp_path / f"t{i}") for i in range(3)]
+
+        def write(root):
+            df = spark.sql(
+                "SELECT id, timestamp'2024-01-01 00:00:00' + make_interval("
+                "0, 0, 0, 0, 0, 0, id) AS ts FROM range(50)"
+            ).repartition(2)
+            barrier.wait()
+            S.write_snapshot(df, root)
+
+        threads = [threading.Thread(target=write, args=(r,)) for r in roots]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert spark.conf.get(key) == "INT96"
+        for root in roots:
+            files = [
+                os.path.join(d, f)
+                for d, _, fs in os.walk(root)
+                for f in fs
+                if f.endswith(".parquet")
+            ]
+            assert files, root
+            for f in files:
+                col = pq.read_metadata(f).schema.column(1)
+                assert col.physical_type == "INT64", (f, col)
+    finally:
+        spark.conf.unset(key)
