@@ -30,30 +30,25 @@ def countmin_cells(
     key_col: str,
     depth: int = 4,
     width: int = 1024,
-    pre_aggregate: bool | None = None,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Build the sketch: (row_idx, col_idx, c) cell counts, one row
     per NON-EMPTY cell (at most depth*width). Each input row
     increments one cell per hash row.
 
-    Batch path (``pre_aggregate=True``): rows pre-aggregate to
-    per-KEY weights first (a partial-agg groupBy on the key), and
-    only the distinct keys pay the depth md5 hashes + explode —
-    hashing work scales with |distinct keys|, not |rows| (q33's
-    lineitem branch: 80k md5 calls instead of 9.6M at sf0.1).
-    Identical cells by construction; when the key cardinality itself
-    is huge the key groupBy still partial-aggs map-side and the cell
-    groupBy stays bounded by depth*width.
+    Batch input: rows pre-aggregate to per-KEY weights first (a
+    partial-agg groupBy on the key), and only the distinct keys pay
+    the depth md5 hashes + explode — hashing work scales with
+    |distinct keys|, not |rows| (q33's lineitem branch: 80k md5 calls
+    instead of 9.6M at sf0.1). Identical cells by construction; when
+    the key cardinality itself is huge the key groupBy still
+    partial-aggs map-side and the cell groupBy stays bounded by
+    depth*width.
 
-    Streaming path (``pre_aggregate=False``): the direct one-level
-    cell groupBy — a SINGLE stateful aggregation with state bounded
-    by depth*width rows regardless of stream length (two chained
+    Streaming input (``df.isStreaming``): the direct one-level cell
+    groupBy — a SINGLE stateful aggregation with state bounded by
+    depth*width rows regardless of stream length (two chained
     stateful aggs would trip Spark's streaming correctness check).
-    Default ``None`` picks by ``df.isStreaming``; cells are identical
-    either way."""
-    if pre_aggregate is None:
-        pre_aggregate = not df.isStreaming
+    Cells are identical either way."""
     pos = F.array(
         *[
             F.struct(
@@ -65,16 +60,10 @@ def countmin_cells(
             for i in range(depth)
         ]
     )
-    if weight_col is not None:
-        # caller-owned pre-aggregated weights (e.g. a shared per-key
-        # count frame that several sketch builds read instead of each
-        # re-scanning the raw table): cells are identical to the raw
-        # build because cell counts are sums of per-key weights
-        keyed = df.groupBy(key_col).agg(F.sum(weight_col).alias("_w"))
-    elif pre_aggregate:
-        keyed = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("_w"))
-    else:
+    if df.isStreaming:
         keyed = df.select(F.col(key_col), F.lit(1).cast("long").alias("_w"))
+    else:
+        keyed = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("_w"))
     return (
         keyed.select(F.explode(pos).alias("s"), "_w")
         .groupBy(F.col("s.row_idx").alias("row_idx"), F.col("s.col_idx").alias("col_idx"))

@@ -3,12 +3,12 @@
 The reference is append-only (SURVEY §2.9: never updates rows); a real
 lakehouse needs upsert. Without the Delta runtime in this container,
 MERGE is expressed relationally — a full-outer join where the source
-wins on conflict — plus an overwrite-writer for the table flow.
+wins on conflict.
 
 Scale notes: one shuffle on the merge key (or zero if both sides are
-bucketed on it). For partitioned targets, dynamic partition overwrite
-limits the rewrite to touched partitions — on Delta this same operator
-maps 1:1 onto MERGE INTO with file-level pruning.
+bucketed on it). These are the copy-on-write forms; snapshot tables
+write the same values merge-on-read through ``sources.deletes``
+(``merge_upsert_dv`` / ``apply_changes_dv``, pytest-pinned to them).
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ import functools
 import operator
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,30 +33,6 @@ def merge_upsert(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> D
         F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c) for c in cols
     ]
     return joined.select(*picked)
-
-
-def merge_into_parquet(
-    spark: SparkSession, source: DataFrame, path: str, keys: Sequence[str]
-) -> int:
-    """Table-level upsert: read target, merge, overwrite. Returns the
-    post-merge row count. (On Delta: target.merge(source, cond)
-    .whenMatchedUpdateAll().whenNotMatchedInsertAll() — same semantics.)"""
-    import os
-    import shutil
-
-    if os.path.isdir(path):
-        target = spark.read.parquet(path)
-        merged = merge_upsert(target, source.select(*target.columns), keys)
-        # write-aside then swap: never collect to the driver, never
-        # overwrite files still being read (same discipline as Delta's
-        # transactional swap, minus the log)
-        tmp = path.rstrip("/") + "__merge_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path)
-        os.rename(tmp, path)
-    else:
-        source.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path).count()
 
 
 def cdc_diff(old: DataFrame, new: DataFrame, keys: Sequence[str]) -> DataFrame:

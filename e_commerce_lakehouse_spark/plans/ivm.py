@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import merge_partial_aggregates
-from ..sources import snapshots
+from ..sources import deletes, snapshots
 
 # ---------------------------------------------------------------------------
 # Gold specs: SQL-string expressions over the silver fact row, rendered
@@ -610,19 +610,19 @@ def refresh_join_view(
     Each feed term joins a delta against at most one full side; AQE
     broadcasts the (small) delta so the unchanged base shuffles
     nothing. The base SCAN is pruned too: when the delta's distinct
-    join-key set is small (``max_keyscan_keys``, single join key), the
-    opposite base is read through :func:`~e_commerce_lakehouse_spark.
-    sources.snapshots.scan_snapshot` with an ``IN`` predicate — the
-    manifest min/max stats and (if built) the Bloom file index skip
-    every file holding none of the touched keys, so a narrow dim
-    change against a 100 TB fact opens only the matching fact files.
+    join-key set is small (``deletes.MAX_KEYSCAN_KEYS``, single join
+    key), the opposite base is read through
+    :func:`~e_commerce_lakehouse_spark.sources.snapshots.scan_snapshot`
+    with an ``IN`` predicate — the manifest min/max stats and (if
+    built) the Bloom file index skip every file holding none of the
+    touched keys, so a narrow dim change against a 100 TB fact opens
+    only the matching fact files.
     The IN filter is semantically free: rows with other keys cannot
     join the delta anyway."""
     a_cur = snapshots._load(a_root)["current"]
     b_cur = snapshots._load(b_root)["current"]
     if a_cur is None or b_cur is None:
         raise KeyError("both source tables need at least one snapshot")
-    max_keyscan_keys = 1000
     state_manifest = snapshots._load(state_root)
     if state_manifest["current"] is None:
         a = snapshots.read_snapshot(spark, a_root, snapshot_id=a_cur)
@@ -667,10 +667,10 @@ def refresh_join_view(
             keys = [
                 r[0]
                 for r in delta.select(join_keys[0]).distinct().limit(
-                    max_keyscan_keys + 1
+                    deletes.MAX_KEYSCAN_KEYS + 1
                 ).collect()
             ]
-            if len(keys) <= max_keyscan_keys and keys:
+            if len(keys) <= deletes.MAX_KEYSCAN_KEYS and keys:
                 return (
                     snapshots.scan_snapshot(
                         spark, root, [(join_keys[0], "in", keys)],

@@ -49,6 +49,7 @@ import operator
 import os
 import shutil
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,12 +57,11 @@ from pyspark.sql import functions as F
 from . import snapshots as S
 
 
-def _tag_positions(df: DataFrame, *extra_cols) -> DataFrame:
-    """(input columns or ``extra_cols``...) + (_file, _pos) off the RAW
-    scan — parquet ``_metadata`` only resolves on the scan relation."""
-    cols = list(extra_cols) if extra_cols else ["*"]
+def _tag_positions(df: DataFrame) -> DataFrame:
+    """Input columns + (_file, _pos) off the RAW scan — parquet
+    ``_metadata`` only resolves on the scan relation."""
     return df.select(
-        *cols,
+        "*",
         S._rel_file_col().alias("_file"),
         F.col("_metadata.row_index").alias("_pos"),
     )
@@ -117,29 +117,31 @@ def _fresh_current(manifest: dict, planned_id: int, op: str) -> None:
 
 
 #: driver-side cap on the batch-key IN-list used to prune the
-#: matched-scan (the plans/ivm.py keyscan pattern): below it, the
-#: merge/apply read side is O(batch-touched files) via plan_scan + the
-#: Bloom file index; above it, fall back to the full snapshot scan
+#: matched-scan (the keyscan pattern): below it, the merge/apply read
+#: side is O(batch-touched files) via plan_scan + the Bloom file index;
+#: above it, fall back to the full snapshot scan. The one keyscan cap:
+#: sql_dml's MERGE and plans.ivm's join-view refresh read it too
 MAX_KEYSCAN_KEYS = 1000
 
 
 def _batch_key_predicates(
-    source: DataFrame, keys: list[str], max_keys: int
+    source: DataFrame, keys: list[str]
 ) -> tuple[list[tuple] | None, bool]:
     """Per-column ``(key, "in", values)`` predicates over the batch's
     key values, for manifest file pruning of the matched-scan. The
     per-column cross product is a SUPERSET of the true composite-key
     match set, so pruning with them is sound; the exact match is still
     the join downstream. Returns ``(predicates, batch_is_empty)``;
-    predicates is None when the batch is too large to keyscan (fall
-    back to the full scan). A column whose batch values include NULL is
-    skipped — apply_changes_dv matches NULL keys via eqNullSafe, which
-    bounds/bloom stats cannot prune on that column (fewer conjuncts =
-    strictly more conservative, never wrong)."""
-    rows = source.select(*keys).distinct().limit(max_keys + 1).collect()
+    predicates is None when the batch has more than
+    :data:`MAX_KEYSCAN_KEYS` keys (fall back to the full scan). A
+    column whose batch values include NULL is skipped — the change
+    writer matches NULL keys via eqNullSafe, which bounds/bloom stats
+    cannot prune on that column (fewer conjuncts = strictly more
+    conservative, never wrong)."""
+    rows = source.select(*keys).distinct().limit(MAX_KEYSCAN_KEYS + 1).collect()
     if not rows:
         return None, True
-    if len(rows) > max_keys:
+    if len(rows) > MAX_KEYSCAN_KEYS:
         return None, False
     preds = []
     for k in keys:
@@ -151,12 +153,7 @@ def _batch_key_predicates(
 
 
 def _plan_matched_scan(
-    manifest: dict,
-    root: str,
-    source: DataFrame,
-    keys: list[str],
-    max_keys: int,
-    op: str,
+    manifest: dict, root: str, source: DataFrame, keys: list[str], op: str
 ) -> tuple[list[str] | None, dict]:
     """File list for the matched-position scan, pruned to the batch's
     keys when the batch is keyscan-small (the round-8 verdict's top
@@ -166,7 +163,7 @@ def _plan_matched_scan(
     (keyscan over the cap); [] means the batch is empty or every file
     was pruned. plan_scan reloads the manifest, so the freshness gate
     re-raises when a concurrent commit slid between the two loads."""
-    preds, empty = _batch_key_predicates(source, keys, max_keys)
+    preds, empty = _batch_key_predicates(source, keys)
     if empty:
         return [], {"keyscan": "empty_batch"}
     if preds is None:
@@ -193,6 +190,85 @@ def _guarded(df: DataFrame, manifest: dict) -> DataFrame:
     return guard_constraints(df, stored)
 
 
+def _load_guarded(root: str, op: str) -> tuple[dict, dict]:
+    """The manifest and its current entry, for an op that scans data
+    files by position: refuses an empty table and the layouts such a
+    raw scan cannot read (renamed columns, initial defaults, mixed
+    physical widths)."""
+    manifest = S._load(root)
+    if manifest["current"] is None:
+        raise KeyError(f"table {root} has no snapshots; write_snapshot first")
+    entry = S._entry(manifest, manifest["current"])
+    S._guard_identity_mapping(entry, op)
+    S._guard_no_initial_defaults(entry, op)
+    S._guard_no_widened(entry, op)
+    return manifest, entry
+
+
+def _commit_change(
+    root: str,
+    manifest: dict,
+    entry: dict,
+    op: str,
+    meta: dict,
+    marked: DataFrame | None,
+    appended: DataFrame | None = None,
+) -> int:
+    """The sidecar-and-commit half every DV writer shares: ``marked``'s
+    ``(_file, _pos)`` go to one sidecar, ``appended`` (CHECK-guarded)
+    to one data dir, and ONE entry on top of ``entry`` carries both —
+    atomic. The entry's schema widens by any column ``appended``
+    carries beyond the table's (apply_changes_dv's evolve_schema).
+
+    An ``appended`` frame always commits, even when it writes no rows
+    and nothing is marked: an empty micro-batch's entry is its
+    exactly-once record (its meta carries the batch id), it just
+    references no empty dir. Without one (DELETE), a change that marks
+    nothing commits nothing and returns ``entry``'s id."""
+    snap_id = manifest["snapshots"][-1]["id"] + 1
+    dvs = list(entry.get("dvs", []))
+    n_marked = 0
+    if marked is not None:
+        dv_dir, n_marked = _write_dv_sidecar(root, snap_id, marked)
+        if dv_dir is not None:
+            dvs.append(dv_dir)
+    if appended is None and not n_marked:
+        return entry["id"]
+    schema, data_dir = entry["schema"], None
+    if appended is not None:
+        table_cols = {f["name"] for f in json.loads(schema)["fields"]}
+        if set(appended.columns) - table_cols:
+            schema = S._merge_append_schema(schema, appended.schema)
+        data_dir = S._claim_data_dir(root, snap_id, op)
+        S._write_data_dir(_guarded(appended, manifest), root, data_dir, manifest)
+        if S._parquet_dir_rows(root, data_dir):
+            manifest["dir_stats"][data_dir] = S._collect_dir_stats(root, data_dir)
+        else:
+            shutil.rmtree(os.path.join(root, data_dir), ignore_errors=True)
+            data_dir = None
+    new_entry = {
+        "id": snap_id,
+        "op": op,
+        "ts": time.time(),
+        "dirs": entry["dirs"] + ([data_dir] if data_dir else []),
+        "parent": manifest["current"],
+        "schema": schema,
+        "meta": {**meta, "n_deleted": n_marked},
+    }
+    if dvs:
+        new_entry["dvs"] = dvs
+    if "files" in entry:
+        files = {d: list(fs) for d, fs in entry["files"].items()}
+        if data_dir:
+            files[data_dir] = sorted(manifest["dir_stats"][data_dir])
+        new_entry["files"] = files
+    manifest["snapshots"].append(new_entry)
+    manifest["current"] = snap_id
+    S._commit(root, manifest)
+    return snap_id
+
+
+@S._retry_conflicts
 def delete_where_dv(
     spark: SparkSession, root: str, predicates: list[tuple]
 ) -> int:
@@ -203,22 +279,11 @@ def delete_where_dv(
     matching positions are written. Already-deleted positions are
     never re-marked. Returns the new snapshot id (the unchanged
     current id when nothing matched — a no-op commits nothing)."""
-    return _delete_where_dv(spark, root, predicates)
-
-
-@S._retry_conflicts
-def _delete_where_dv(
-    spark: SparkSession, root: str, predicates: list[tuple]
-) -> int:
     if not predicates:
         raise ValueError("delete_where_dv: predicates must be non-empty")
     plan = S.plan_scan(root, predicates)
-    manifest = S._load(root)
+    manifest, entry = _load_guarded(root, "delete_where_dv")
     _fresh_current(manifest, plan["snapshot_id"], "delete_where_dv")
-    entry = S._entry(manifest, plan["snapshot_id"])
-    S._guard_identity_mapping(entry, "delete_where_dv")
-    S._guard_no_initial_defaults(entry, "delete_where_dv")
-    S._guard_no_widened(entry, "delete_where_dv")
     if not plan["files"]:
         return entry["id"]  # stats prove nothing matches
 
@@ -231,32 +296,8 @@ def _delete_where_dv(
     doomed = _minus_prior_dvs(spark, root, entry, _tag_positions(raw)).filter(
         F.coalesce(conj, F.lit(False))
     )
-    snap_id = manifest["snapshots"][-1]["id"] + 1
-    dv_dir, n_marked = _write_dv_sidecar(root, snap_id, doomed)
-    if dv_dir is None:
-        return entry["id"]
-
-    new_entry = {
-        "id": snap_id,
-        "op": "delete_dv",
-        "ts": time.time(),
-        "dirs": list(entry["dirs"]),
-        "parent": manifest["current"],
-        "schema": entry["schema"],
-        "dvs": entry.get("dvs", []) + [dv_dir],
-        "meta": {
-            "predicates": [S._json_safe_predicate(p) for p in predicates],
-            "n_deleted": n_marked,
-        },
-    }
-    if "files" in entry:
-        new_entry["files"] = {
-            d: list(fs) for d, fs in entry["files"].items()
-        }
-    manifest["snapshots"].append(new_entry)
-    manifest["current"] = snap_id
-    S._commit(root, manifest)
-    return snap_id
+    meta = {"predicates": [S._json_safe_predicate(p) for p in predicates]}
+    return _commit_change(root, manifest, entry, "delete_dv", meta, doomed)
 
 
 def _file_rows(fstats: dict | None) -> int | None:
@@ -294,13 +335,7 @@ def rewrite_deletes(
     Returns the new snapshot id; unchanged current when no DVs are
     active, or when nothing crosses the threshold and the stack is
     already depth <= 1 (a no-op commits nothing)."""
-    manifest = S._load(root)
-    if manifest["current"] is None:
-        raise KeyError(f"table {root} has no snapshots")
-    entry = S._entry(manifest, manifest["current"])
-    S._guard_identity_mapping(entry, "rewrite_deletes")
-    S._guard_no_initial_defaults(entry, "rewrite_deletes")
-    S._guard_no_widened(entry, "rewrite_deletes")
+    manifest, entry = _load_guarded(root, "rewrite_deletes")
     dvs = entry.get("dvs")
     if not dvs:
         return entry["id"]
@@ -415,13 +450,103 @@ def delete_mode(root: str) -> str:
     return S._load(root).get("delete_mode", "copy-on-write")
 
 
+def _merged_rows(
+    matched: DataFrame | None, batch: DataFrame, keys: list[str]
+) -> DataFrame:
+    """MERGE's post-state: per-column ``coalesce(source, target)`` for
+    the batch's matched keys (``operators.upsert.merge_upsert``'s
+    values: a source NULL keeps the target value), the batch row as-is
+    for the rest. The matched target rows are what the batch bounds,
+    so they are the broadcast side — a left outer join can build its
+    right side, where a right outer join could not build the batch."""
+    if matched is None:
+        return batch
+    cols = batch.columns
+    t = matched.select(*cols).alias("t")
+    s = batch.alias("s")
+    cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
+    return s.join(F.broadcast(t), cond, "left_outer").select(
+        *[F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c) for c in cols]
+    )
+
+
+@S._retry_conflicts
+def _write_changes(
+    spark: SparkSession,
+    root: str,
+    batch: DataFrame,
+    keys: list[str],
+    match_keys: Callable[[DataFrame], DataFrame],
+    post_state: Callable[[DataFrame | None, DataFrame], DataFrame],
+    meta: dict | None,
+    op: str,
+    entry_op: str,
+    prepare: Callable[[dict, list[str]], list[str]] | None = None,
+) -> int:
+    """The one merge-on-read change commit (MERGE, CDC APPLY and every
+    route onto them: the SQL MERGE, both streaming sinks, the ingest
+    CDC MERGE): the current rows of the batch's keys are DV-deleted by
+    position and their post-states append as one delta dir, in ONE
+    manifest entry. O(batch) writes, and — when the batch's distinct
+    keys fit under :data:`MAX_KEYSCAN_KEYS` — O(batch-touched files)
+    reads: the matched-scan opens only the files ``plan_scan`` + the
+    Bloom file index cannot prune on the keys' IN-list.
+
+    ``match_keys(batch)`` is the key frame target rows match null-safe;
+    ``post_state(matched, batch)`` builds the appended rows from the
+    matched target rows (None when no file was scanned) and the batch.
+    ``prepare(manifest, table_cols)`` runs each attempt's checks
+    against the loaded manifest and returns the batch columns to
+    project (default: the table's)."""
+    manifest, entry = _load_guarded(root, op)
+    cols = [f["name"] for f in json.loads(entry["schema"])["fields"]]
+    if prepare is not None:
+        cols = prepare(manifest, cols)
+    # the batch feeds three consumers (the key collect, the matched
+    # join, the appended rows): persist its projection for this call so
+    # each reads the cache instead of recomputing the batch (typically
+    # a foreachBatch frame over a Python RDD)
+    src = batch.select(*cols).persist()
+    matched = None
+    try:
+        key_frame = match_keys(src)
+        rel_files, scan_meta = _plan_matched_scan(
+            manifest, root, key_frame, keys, op
+        )
+        if rel_files is None:
+            rel_files = [
+                os.path.join(d, f)
+                for d, f in S._entry_units(root, manifest, entry)
+            ]
+        if rel_files:
+            raw = S._scan_entry_files(
+                spark, entry, [os.path.join(root, f) for f in rel_files]
+            )
+            tagged = _minus_prior_dvs(spark, root, entry, _tag_positions(raw))
+            kf = F.broadcast(key_frame)
+            cond = functools.reduce(
+                operator.and_, [tagged[k].eqNullSafe(kf[k]) for k in keys]
+            )
+            # batch-bounded: persisted so the appended rows' join reads
+            # the cache instead of scanning the candidate files again
+            matched = tagged.join(kf, cond, "left_semi").persist()
+        return _commit_change(
+            root, manifest, entry, entry_op,
+            {**(meta or {}), "scan": scan_meta},
+            matched, post_state(matched, src),
+        )
+    finally:
+        if matched is not None:
+            matched.unpersist()
+        src.unpersist()
+
+
 def merge_upsert_dv(
     spark: SparkSession,
     root: str,
     source: DataFrame,
     keys: list[str],
     meta: dict | None = None,
-    max_keyscan_keys: int = MAX_KEYSCAN_KEYS,
 ) -> int:
     """MERGE (WHEN MATCHED UPDATE source-wins-per-column / WHEN NOT
     MATCHED INSERT) as ONE merge-on-read commit: matched target rows
@@ -429,131 +554,22 @@ def merge_upsert_dv(
     keys append as one delta dir, and a single manifest entry carries
     both — atomic, exactly like ``operators.upsert.merge_upsert``'s
     values (per-column ``coalesce(source, target)``, pytest-pinned)
-    but O(batch) instead of O(table):
-
-    the copy-on-write merge path rewrites the WHOLE table every call
-    (mode='overwrite'), which at 100 TB is a full-table shuffle+write
-    per micro-batch; here BOTH sides are O(batch): when the batch's
-    distinct keys fit under ``max_keyscan_keys`` they are collected
-    driver-side and the matched-scan reads only the files
-    ``plan_scan`` + the Bloom file index cannot prune on an IN-list of
-    those keys (the batch-sized ``matched`` frame is persisted across
-    the sidecar and data writes so the second action reads the cache);
-    above the cap the scan falls back to the full snapshot. Only
-    matched positions and batch-sized rows are written; unmatched
-    files stay byte-identical. ``meta`` rides the commit (the
-    streaming sink's exactly-once batch id); the commit's
-    ``meta["scan"]`` records candidates/kept so the pruning is
-    observable per batch.
+    but O(batch) instead of O(table): the copy-on-write merge path
+    rewrites the WHOLE table every call (mode='overwrite'), which at
+    100 TB is a full-table shuffle+write per micro-batch. A NULL source
+    key matches nothing (merge_upsert's equi-join), so its row
+    inserts. ``meta`` rides the commit (the streaming sink's
+    exactly-once batch id); the commit's ``meta["scan"]`` records
+    candidates/kept so the pruning is observable per batch.
 
     Source must carry every table column and at most one row per key
     (pre-dedup by sequence column upstream, as the MERGE sink does)."""
-    return _merge_upsert_dv(spark, root, source, keys, meta, max_keyscan_keys)
-
-
-@S._retry_conflicts
-def _merge_upsert_dv(
-    spark: SparkSession,
-    root: str,
-    source: DataFrame,
-    keys: list[str],
-    meta: dict | None,
-    max_keyscan_keys: int = MAX_KEYSCAN_KEYS,
-) -> int:
-    manifest = S._load(root)
-    if manifest["current"] is None:
-        raise KeyError(f"table {root} has no snapshots; write_snapshot first")
-    entry = S._entry(manifest, manifest["current"])
-    S._guard_identity_mapping(entry, "merge_upsert_dv")
-    S._guard_no_initial_defaults(entry, "merge_upsert_dv")
-    S._guard_no_widened(entry, "merge_upsert_dv")
-    cols = [f["name"] for f in json.loads(entry["schema"])["fields"]]
-    # the batch feeds three consumers (the key collect, the matched
-    # join, the appended rows): persist it for this call so each
-    # consumer reads the cache instead of recomputing the batch
-    # (typically a foreachBatch frame over a Python RDD)
-    src = source.select(*cols).persist()
-    matched = None
-    try:
-        rel_files, scan_meta = _plan_matched_scan(
-            manifest, root, src, keys, max_keyscan_keys, "merge_upsert_dv"
-        )
-        if rel_files is None:
-            rel_files = [
-                os.path.join(d, f)
-                for d, f in S._entry_units(root, manifest, entry)
-            ]
-        paths = [os.path.join(root, f) for f in rel_files]
-        snap_id = manifest["snapshots"][-1]["id"] + 1
-        dvs = list(entry.get("dvs", []))
-        if paths:
-            raw = S._scan_entry_files(spark, entry, paths)
-            tagged = _minus_prior_dvs(
-                spark, root, entry, _tag_positions(raw)
-            )
-            # matched = target rows whose key appears in the
-            # (broadcast) batch — batch-bounded, so persist() makes the
-            # data-dir write below read the cache instead of paying a
-            # second full table scan
-            matched = tagged.join(
-                F.broadcast(src.select(*keys)), keys, "inner"
-            ).persist()
-            dv_dir, n_marked = _write_dv_sidecar(
-                root, snap_id, matched.select("_file", "_pos")
-            )
-            if dv_dir is not None:
-                dvs.append(dv_dir)
-
-            t = matched.select(*cols).alias("t")
-            s = src.alias("s")
-            cond = [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys]
-            # merged values == merge_upsert's coalesce(source, target);
-            # keys missing from the target insert as-is via the right
-            # join
-            appended = t.join(F.broadcast(s), cond, "right_outer").select(
-                *[
-                    F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c)
-                    for c in cols
-                ]
-            )
-        else:
-            appended = src
-
-        data_dir = S._claim_data_dir(root, snap_id, "merge")
-        S._write_data_dir(_guarded(appended, manifest), root, data_dir, manifest)
-    finally:
-        if matched is not None:
-            matched.unpersist()
-        src.unpersist()
-    new_stats = S._collect_dir_stats(root, data_dir)
-    if S._parquet_dir_rows(root, data_dir):
-        manifest["dir_stats"][data_dir] = new_stats
-    else:
-        # empty batch (e.g. an empty foreachBatch micro-batch): still
-        # commit the entry — its meta batch id is the exactly-once
-        # record — but don't reference (or leave behind) an empty dir
-        shutil.rmtree(os.path.join(root, data_dir), ignore_errors=True)
-        data_dir = None
-    new_entry = {
-        "id": snap_id,
-        "op": "merge_dv",
-        "ts": time.time(),
-        "dirs": entry["dirs"] + ([data_dir] if data_dir else []),
-        "parent": manifest["current"],
-        "schema": entry["schema"],
-        "meta": {**(meta or {}), "scan": scan_meta},
-    }
-    if dvs:
-        new_entry["dvs"] = dvs
-    if "files" in entry:
-        files = {d: list(fs) for d, fs in entry["files"].items()}
-        if data_dir:
-            files[data_dir] = sorted(new_stats)
-        new_entry["files"] = files
-    manifest["snapshots"].append(new_entry)
-    manifest["current"] = snap_id
-    S._commit(root, manifest)
-    return snap_id
+    return _write_changes(
+        spark, root, source, keys,
+        lambda b: b.select(*keys).dropna(subset=keys),
+        lambda matched, b: _merged_rows(matched, b, keys),
+        meta, "merge_upsert_dv", "merge_dv",
+    )
 
 
 def apply_changes_dv(
@@ -562,22 +578,19 @@ def apply_changes_dv(
     changes: DataFrame,
     keys: list[str],
     meta: dict | None = None,
-    max_keyscan_keys: int = MAX_KEYSCAN_KEYS,
     expected_base: int | None = None,
     evolve_schema: bool = False,
 ) -> int:
     """``operators.upsert.apply_changes`` (DLT APPLY CHANGES INTO —
     the CDC consumer that can DELETE) as one merge-on-read commit:
-    every changed key's current row is DV-deleted by position, the
+    every changed key's current row is DV-deleted by position (NULL
+    keys match null-safe, apply_changes' anti-join contract), the
     feed's post-state rows (insert / update_postimage) append as one
     delta dir, and a single manifest entry carries both. O(feed)
-    writes AND — when the feed's distinct keys fit under
-    ``max_keyscan_keys`` — O(feed-touched files) reads: the
-    matched-scan routes through ``plan_scan`` + the Bloom file index
-    on the feed's key IN-list exactly like :func:`delete_where_dv`,
-    instead of the copy-on-write path's O(table) rewrite per batch.
-    Feed contract unchanged: table columns + ``_change_type``, at most
-    one post-state per key.
+    writes and O(feed-touched files) reads, like
+    :func:`merge_upsert_dv`, instead of the copy-on-write path's
+    O(table) rewrite per batch. Feed contract unchanged: table columns
+    + ``_change_type``, at most one post-state per key.
 
     ``expected_base``: the snapshot id the FEED's values were derived
     from, for callers whose post-states are read-modify-write over the
@@ -598,60 +611,32 @@ def apply_changes_dv(
     already has). Names whose physical storage lingers in old files
     (previously dropped columns, hidden partition columns) are refused
     — they need an explicit add_column's fresh physical name."""
-    if expected_base is not None:
-        # UN-retried staleness check: once the head has moved past
-        # expected_base it never moves back, so letting the inner
-        # @_retry_conflicts loop re-load and re-raise would burn every
-        # retry sleep before the RECOMPUTING caller sees the conflict.
-        # The same gate inside _apply_changes_dv still covers the
-        # narrow window where a concurrent commit lands mid-attempt.
-        head = S._load(root)["current"]
-        if head != expected_base:
-            raise S.CommitConflict(
-                f"apply_changes_dv: feed derived from snapshot "
-                f"{expected_base} but current is {head}; recompute the "
-                "feed and retry"
-            )
-    return _apply_changes_dv(
-        spark, root, changes, keys, meta, max_keyscan_keys, expected_base,
-        evolve_schema,
-    )
-
-
-@S._retry_conflicts
-def _apply_changes_dv(
-    spark: SparkSession,
-    root: str,
-    changes: DataFrame,
-    keys: list[str],
-    meta: dict | None,
-    max_keyscan_keys: int = MAX_KEYSCAN_KEYS,
-    expected_base: int | None = None,
-    evolve_schema: bool = False,
-) -> int:
     if "_change_type" not in changes.columns:
         raise ValueError("changes must carry _change_type (see cdc_diff)")
-    manifest = S._load(root)
-    if manifest["current"] is None:
-        raise KeyError(f"table {root} has no snapshots; write_snapshot first")
-    if expected_base is not None and manifest["current"] != expected_base:
-        # before ANY work: the gate shares the manifest this attempt
-        # would commit with, so _commit's CAS covers the whole window
-        raise S.CommitConflict(
-            f"apply_changes_dv: feed derived from snapshot "
-            f"{expected_base} but current is {manifest['current']}; "
-            "recompute the feed and retry"
+
+    def stale(current) -> S.CommitConflict:
+        return S.CommitConflict(
+            f"apply_changes_dv: feed derived from snapshot {expected_base} "
+            f"but current is {current}; recompute the feed and retry"
         )
-    entry = S._entry(manifest, manifest["current"])
-    S._guard_identity_mapping(entry, "apply_changes_dv")
-    S._guard_no_initial_defaults(entry, "apply_changes_dv")
-    S._guard_no_widened(entry, "apply_changes_dv")
-    cols = [f["name"] for f in json.loads(entry["schema"])["fields"]]
-    extra: list[str] = []
-    if evolve_schema:
+
+    if expected_base is not None:
+        # UN-retried staleness check: once the head has moved past
+        # expected_base it never moves back, so letting the writer's
+        # retry loop re-load and re-raise would burn every retry sleep
+        # before the RECOMPUTING caller sees the conflict
+        head = S._load(root)["current"]
+        if head != expected_base:
+            raise stale(head)
+
+    def prepare(manifest: dict, cols: list[str]) -> list[str]:
+        if expected_base is not None and manifest["current"] != expected_base:
+            # the same gate on the manifest this attempt commits with,
+            # so _commit's CAS covers the whole window
+            raise stale(manifest["current"])
         extra = [
             c for c in changes.columns
-            if c not in cols and c != "_change_type"
+            if evolve_schema and c not in cols and c != "_change_type"
         ]
         bad = [
             c for c in extra
@@ -664,87 +649,19 @@ def _apply_changes_dv(
                 "their physical storage lingers in old files; "
                 "add_column first (fresh physical name)"
             )
-        cols = cols + extra
-    missing = [c for c in cols if c not in changes.columns]
-    if missing:
-        raise ValueError(f"changes missing target columns {missing}")
-    # the feed is read three times (the key collect, the doomed-key
-    # join, the post-state rows): persist its projection for this call
-    # so each consumer reads the cache instead of recomputing the feed
-    feed = changes.select(*cols, "_change_type").persist()
-    try:
-        changed_keys = feed.select(*keys).distinct()
-        post = feed.filter(
+        missing = [c for c in cols if c not in changes.columns]
+        if missing:
+            raise ValueError(f"changes missing target columns {missing}")
+        return cols + extra + ["_change_type"]
+
+    return _write_changes(
+        spark, root, changes, keys,
+        lambda b: b.select(*keys).distinct(),
+        lambda matched, b: b.filter(
             F.col("_change_type").isin("insert", "update_postimage")
-        ).select(*cols)
-
-        rel_files, scan_meta = _plan_matched_scan(
-            manifest, root, feed, keys, max_keyscan_keys, "apply_changes_dv"
-        )
-        if rel_files is None:
-            rel_files = [
-                os.path.join(d, f)
-                for d, f in S._entry_units(root, manifest, entry)
-            ]
-        paths = [os.path.join(root, f) for f in rel_files]
-        snap_id = manifest["snapshots"][-1]["id"] + 1
-        dvs = list(entry.get("dvs", []))
-        if paths:
-            raw = S._scan_entry_files(spark, entry, paths)
-            tagged = _minus_prior_dvs(
-                spark, root, entry, _tag_positions(raw, *keys)
-            )
-            # null-safe key match, exactly apply_changes' anti-join contract
-            ck = F.broadcast(changed_keys)
-            cond = functools.reduce(
-                operator.and_, [tagged[k].eqNullSafe(ck[k]) for k in keys]
-            )
-            doomed = tagged.join(ck, cond, "left_semi")
-            dv_dir, n_marked = _write_dv_sidecar(
-                root, snap_id, doomed.select("_file", "_pos")
-            )
-            if dv_dir is not None:
-                dvs.append(dv_dir)
-
-        data_dir = S._claim_data_dir(root, snap_id, "applych")
-        S._write_data_dir(_guarded(post, manifest), root, data_dir, manifest)
-    finally:
-        feed.unpersist()
-    new_stats = S._collect_dir_stats(root, data_dir)
-    if S._parquet_dir_rows(root, data_dir):
-        manifest["dir_stats"][data_dir] = new_stats
-    else:
-        # delete-only feed: nothing appended — don't reference (or
-        # leave behind) an empty dir
-        shutil.rmtree(os.path.join(root, data_dir), ignore_errors=True)
-        data_dir = None
-    new_dirs = entry["dirs"] + ([data_dir] if data_dir else [])
-    new_entry = {
-        "id": snap_id,
-        "op": "apply_changes_dv",
-        "ts": time.time(),
-        "dirs": new_dirs,
-        "parent": manifest["current"],
-        # evolve_schema: the widened schema commits ATOMICALLY with the
-        # post-state files that carry the new columns (parent-first
-        # field order, append-widening semantics)
-        "schema": (
-            S._merge_append_schema(entry["schema"], post.schema)
-            if extra else entry["schema"]
-        ),
-        "meta": {**(meta or {}), "scan": scan_meta},
-    }
-    if dvs:
-        new_entry["dvs"] = dvs
-    if "files" in entry:
-        files = {d: list(fs) for d, fs in entry["files"].items()}
-        if data_dir:
-            files[data_dir] = sorted(new_stats)
-        new_entry["files"] = files
-    manifest["snapshots"].append(new_entry)
-    manifest["current"] = snap_id
-    S._commit(root, manifest)
-    return snap_id
+        ).drop("_change_type"),
+        meta, "apply_changes_dv", "apply_changes_dv", prepare,
+    )
 
 
 def maintain(

@@ -1054,9 +1054,7 @@ def _merge_extended(
             # manifest can't prune on the batch's key IN-list (the
             # merge_upsert_dv keyscan pattern); exactness comes from
             # the join, the prune is a superset
-            preds, empty = deletes._batch_key_predicates(
-                source, keys, deletes.MAX_KEYSCAN_KEYS
-            )
+            preds, empty = deletes._batch_key_predicates(source, keys)
             if preds is not None and not empty:
                 target = snapshots.scan_snapshot(
                     spark, root, preds, snapshot_id=base

@@ -27,26 +27,6 @@ def _ref_cms(values: list[str]):
     return cells
 
 
-def test_cms_weighted_build_identical(spark):
-    """countmin_cells(weight_col=...) over a pre-aggregated per-key
-    count frame builds the EXACT same cell table as the raw-row build
-    — the identity that lets several sketch consumers share one
-    key-count frame instead of each re-scanning the raw table."""
-    from pyspark.sql import functions as F
-
-    li = load_table(spark, SF_SMALL, "lineitem").select("l_partkey")
-    raw = {
-        (r.row_idx, r.col_idx): r.c
-        for r in sketches.countmin_cells(li, "l_partkey").collect()
-    }
-    pre = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("w"))
-    weighted = {
-        (r.row_idx, r.col_idx): r.c
-        for r in sketches.countmin_cells(pre, "l_partkey", weight_col="w").collect()
-    }
-    assert weighted == raw
-
-
 def test_cms_matches_reference_and_is_one_sided(spark):
     li = load_table(spark, SF_SMALL, "lineitem").select("l_partkey")
     values = [str(r.l_partkey) for r in li.collect()]

@@ -1,5 +1,5 @@
-"""Merge-upsert table flow, approximate-sketch sanity, and the custom
-stateful streaming operator (state persists across restarts)."""
+"""CDC diff, approximate-sketch sanity, and the custom stateful
+streaming operator (state persists across restarts)."""
 
 from __future__ import annotations
 
@@ -22,32 +22,6 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="upsert_state_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_merge_into_parquet_roundtrip(spark, tmpdir):
-    path = f"{tmpdir}/tbl"
-    orders = load_table(spark, SF_SMALL, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    base = orders.filter(F.col("o_orderkey") <= 1000)
-    n0 = upsert.merge_into_parquet(spark, base, path, ["o_orderkey"])
-    assert n0 == base.count()
-    # update half + insert new keys
-    updates = orders.filter(F.col("o_orderkey").between(500, 1500)).withColumn(
-        "o_totalprice", F.lit(42.0)
-    )
-    n1 = upsert.merge_into_parquet(spark, updates, path, ["o_orderkey"])
-    merged = spark.read.parquet(path)
-    assert n1 == merged.count()
-    # keys union, updated rows carry the new price, untouched rows keep old
-    assert n1 == orders.filter(F.col("o_orderkey") <= 1500).count()
-    assert (
-        merged.filter(F.col("o_orderkey").between(500, 1500))
-        .filter(F.col("o_totalprice") != 42.0)
-        .count()
-        == 0
-    )
-    assert merged.filter((F.col("o_orderkey") < 500) & (F.col("o_totalprice") == 42.0)).count() == 0
 
 
 def test_approx_sketches_close_to_exact(spark):
