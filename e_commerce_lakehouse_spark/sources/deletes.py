@@ -104,18 +104,6 @@ def _write_dv_sidecar(
     return dv_dir, n
 
 
-def _fresh_current(manifest: dict, planned_id: int, op: str) -> None:
-    """TOCTOU gate: this op planned against ``planned_id`` but commits
-    against ``manifest`` — if another commit landed between the two
-    loads, _commit's CAS (checked against THIS load) would pass and the
-    stale plan would silently erase the concurrent commit. Replay."""
-    if planned_id != manifest["current"]:
-        raise S.CommitConflict(
-            f"{op}: planned against snapshot {planned_id} but current "
-            f"is {manifest['current']}; retrying"
-        )
-
-
 #: driver-side cap on the batch-key IN-list used to prune the
 #: matched-scan (the keyscan pattern): below it, the merge/apply read
 #: side is O(batch-touched files) via plan_scan + the Bloom file index;
@@ -153,7 +141,7 @@ def _batch_key_predicates(
 
 
 def _plan_matched_scan(
-    manifest: dict, root: str, source: DataFrame, keys: list[str], op: str
+    manifest: dict, root: str, source: DataFrame, keys: list[str]
 ) -> tuple[list[str] | None, dict]:
     """File list for the matched-position scan, pruned to the batch's
     keys when the batch is keyscan-small (the round-8 verdict's top
@@ -161,16 +149,15 @@ def _plan_matched_scan(
     batch even though its write side is O(batch)). Returns
     ``(rel_files | None, scan_meta)`` — None means 'scan everything'
     (keyscan over the cap); [] means the batch is empty or every file
-    was pruned. plan_scan reloads the manifest, so the freshness gate
-    re-raises when a concurrent commit slid between the two loads."""
+    was pruned. Planned on the writer's own ``manifest``, so the
+    commit's CAS covers the plan too."""
     preds, empty = _batch_key_predicates(source, keys)
     if empty:
         return [], {"keyscan": "empty_batch"}
     if preds is None:
         # over the cap, or every key column had NULL batch values
         return None, {"keyscan": "full"}
-    plan = S.plan_scan(root, preds)
-    _fresh_current(manifest, plan["snapshot_id"], op)
+    plan = S.plan_scan(root, preds, manifest=manifest)
     return plan["files"], {
         "keyscan": "pruned",
         "scan_candidates": plan["candidates"],
@@ -281,20 +268,16 @@ def delete_where_dv(
     current id when nothing matched — a no-op commits nothing)."""
     if not predicates:
         raise ValueError("delete_where_dv: predicates must be non-empty")
-    plan = S.plan_scan(root, predicates)
     manifest, entry = _load_guarded(root, "delete_where_dv")
-    _fresh_current(manifest, plan["snapshot_id"], "delete_where_dv")
+    plan = S.plan_scan(root, predicates, manifest=manifest)
     if not plan["files"]:
         return entry["id"]  # stats prove nothing matches
 
-    conj = functools.reduce(
-        operator.and_, [S._predicate_col(p) for p in predicates]
-    )
     raw = S._scan_entry_files(
         spark, entry, [os.path.join(root, f) for f in plan["files"]]
     )
     doomed = _minus_prior_dvs(spark, root, entry, _tag_positions(raw)).filter(
-        F.coalesce(conj, F.lit(False))
+        F.coalesce(S._conjunction(predicates), F.lit(False))
     )
     meta = {"predicates": [S._json_safe_predicate(p) for p in predicates]}
     return _commit_change(root, manifest, entry, "delete_dv", meta, doomed)
@@ -510,9 +493,7 @@ def _write_changes(
     matched = None
     try:
         key_frame = match_keys(src)
-        rel_files, scan_meta = _plan_matched_scan(
-            manifest, root, key_frame, keys, op
-        )
+        rel_files, scan_meta = _plan_matched_scan(manifest, root, key_frame, keys)
         if rel_files is None:
             rel_files = [
                 os.path.join(d, f)

@@ -46,7 +46,9 @@ write-side semantics.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
+import operator
 import os
 import re
 import shutil
@@ -1084,6 +1086,9 @@ def _gc_ref_files(root: str, older_than_s: float = 3600.0) -> list[str]:
     return removed
 
 
+_retrying = threading.local()  # set while a thread's outermost retry runs
+
+
 def _retry_conflicts(fn):
     """Re-run a whole table operation on :class:`CommitConflict` (up to
     :data:`COMMIT_RETRIES`). Correct for every decorated op because each
@@ -1091,18 +1096,30 @@ def _retry_conflicts(fn):
     the winning writer's state rather than blindly replaying a stale
     plan. A data dir written by a failed attempt is an orphan that
     :func:`remove_orphans` collects. ``write_snapshot`` is NOT decorated:
-    it rebases manually so the (expensive) data write happens once."""
-    import functools
+    it rebases manually so the (expensive) data write happens once.
+
+    Only the OUTERMOST decorated call on a thread retries: a nested one
+    (a streaming sink's batch cycle around a DV writer, the conditional
+    MERGE around ``apply_changes_dv``) re-raises to it, so every attempt
+    re-runs the whole outer cycle — its batch-id or ``expected_base``
+    check included — and a persistent conflict costs COMMIT_RETRIES
+    attempts, not COMMIT_RETRIES squared."""
 
     @functools.wraps(fn)
     def wrapper(*args, **kwargs):
-        for attempt in range(COMMIT_RETRIES):
-            try:
-                return fn(*args, **kwargs)
-            except CommitConflict:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-                time.sleep(0.005 * (attempt + 1))
+        if getattr(_retrying, "active", False):
+            return fn(*args, **kwargs)
+        _retrying.active = True
+        try:
+            for attempt in range(COMMIT_RETRIES):
+                try:
+                    return fn(*args, **kwargs)
+                except CommitConflict:
+                    if attempt == COMMIT_RETRIES - 1:
+                        raise
+                    time.sleep(0.005 * (attempt + 1))
+        finally:
+            _retrying.active = False
         raise AssertionError("unreachable")
 
     return wrapper
@@ -1147,6 +1164,50 @@ def _main_ancestors(manifest: dict) -> set:
         out.add(cur)
         cur = by_id[cur].get("parent")
     return out
+
+
+def _pin(
+    manifest: dict,
+    snapshot_id: int | None = None,
+    as_of: float | None = None,
+    tag: str | None = None,
+    branch: str | None = None,
+) -> dict:
+    """The entry a snapshot ref names on the caller's loaded
+    ``manifest`` — the one reading of the refs every read, scan,
+    RESTORE and pinned view shares: a ``snapshot_id``, a ``tag`` or a
+    ``branch`` head (at most one), else the newest published snapshot
+    committed at/before ``as_of`` (unix seconds), else the current
+    snapshot."""
+    if sum(x is not None for x in (snapshot_id, tag, branch)) > 1:
+        raise ValueError("pass at most one of snapshot_id / tag / branch")
+    root = manifest["_store"].root
+    if tag is not None:
+        tags = manifest.get("tags", {})
+        if tag not in tags:
+            raise KeyError(f"no tag {tag!r} on table {root}; tags: {sorted(tags)}")
+        snapshot_id = tags[tag]
+    if branch is not None:
+        branches = manifest.get("branches", {})
+        if branch not in branches:
+            raise KeyError(
+                f"unknown branch {branch!r}; existing: {sorted(branches)}"
+            )
+        snapshot_id = branches[branch]
+    if snapshot_id is None and as_of is not None:
+        anc = _main_ancestors(manifest)
+        eligible = [
+            s for s in manifest["snapshots"]
+            if s["ts"] <= as_of and s["id"] in anc
+        ]
+        if not eligible:
+            raise KeyError(f"no snapshot at or before {as_of}")
+        snapshot_id = eligible[-1]["id"]
+    if snapshot_id is None:
+        snapshot_id = manifest["current"]
+    if snapshot_id is None:
+        raise KeyError(f"table {root} has no snapshots")
+    return _entry(manifest, snapshot_id)
 
 
 def _entry(manifest: dict, snapshot_id: int) -> dict:
@@ -1542,45 +1603,6 @@ def _hidden_set(manifest: dict) -> set[str]:
     return set(manifest.get("hidden_cols", []))
 
 
-def _project_entry_schema(
-    df: DataFrame, entry: dict, hidden: set[str]
-) -> DataFrame:
-    """Make the ENTRY's recorded schema authoritative for reads: each
-    logical column resolves to its physical file column (per the
-    entry's column mapping — stable physical names survive renames)
-    of a :func:`_scan_entry_files` frame, which already carries every
-    physical column at its declared type (null-padded where a file
-    lacks it); an initial-default column reads its default on rows of
-    the dirs that predate it. File columns outside the schema (dropped
-    columns, hidden transform columns) never surface. This is what
-    makes schema evolution a manifest edit instead of a data rewrite —
-    the Iceberg/Delta read contract."""
-    import pyspark.sql.types as T
-
-    struct = T.StructType.fromJson(json.loads(entry["schema"]))
-    mapping = entry.get("mapping", {})
-    cols = []
-    for f in struct.fields:
-        if f.name in hidden:
-            continue
-        meta = f.metadata or {}
-        col = F.col(mapping.get(f.name, f.name))
-        if "initial_default" in meta:
-            # rows from dirs that predate the ADD read the default
-            # (the column did not exist there); every later write
-            # reads back exactly what it wrote, explicit NULLs
-            # included — dir membership, not value-coalescing.
-            # __src_dir is tagged by _with_src_dir BEFORE any DV
-            # anti-join (parquet _metadata resolves only on the
-            # scan relation)
-            col = F.when(
-                F.col("__src_dir").isin(list(meta.get("default_dirs", []))),
-                F.lit(meta["initial_default"]).cast(f.dataType),
-            ).otherwise(col)
-        cols.append(col.alias(f.name))
-    return df.select(*cols)
-
-
 def _scan_entry_files(spark: SparkSession, entry: dict, paths: list[str]) -> DataFrame:
     """Raw scan of a snapshot's files under the entry's PHYSICAL schema:
     the recorded fields, named through the column mapping, every one
@@ -1593,15 +1615,81 @@ def _scan_entry_files(spark: SparkSession, entry: dict, paths: list[str]) -> Dat
     the scan relation."""
     import pyspark.sql.types as T
 
-    struct = T.StructType.fromJson(json.loads(entry["schema"]))
     mapping = entry.get("mapping", {})
     phys = T.StructType(
         [
             T.StructField(mapping.get(f.name, f.name), f.dataType, True)
-            for f in struct.fields
+            for f in _struct_of(entry["schema"]).fields
         ]
     )
     return spark.read.schema(phys).parquet(*paths)
+
+
+@functools.lru_cache(maxsize=128)
+def _struct_of(schema_json: str):
+    """A recorded schema JSON as a StructType, parsed once per distinct
+    schema — read-only: callers build new types, never mutate it."""
+    import pyspark.sql.types as T
+
+    return T.StructType.fromJson(json.loads(schema_json))
+
+
+def _entry_frame(
+    spark: SparkSession,
+    root: str,
+    manifest: dict,
+    entry: dict,
+    rel_files: list[str] | None = None,
+) -> DataFrame:
+    """The merge-on-read frame of one snapshot entry — the one read
+    frame builder. Scans ``rel_files`` (root-relative, e.g. a
+    :func:`plan_scan` survivor list; default: every file of the entry)
+    with :func:`_scan_entry_files`, anti-joins the entry's deletion
+    vectors, and makes the entry's recorded schema authoritative: each
+    logical column resolves to its physical file column through the
+    column mapping (stable physical names survive renames), an
+    initial-default column reads its default on rows of the dirs that
+    predate it, and dropped or hidden columns never surface. This is
+    what makes schema evolution a manifest edit instead of a data
+    rewrite — the Iceberg/Delta read contract. With no file to read the
+    frame is empty, with that schema, and touches no storage."""
+    import pyspark.sql.types as T
+
+    hidden = _hidden_set(manifest)
+    fields = [f for f in _struct_of(entry["schema"]).fields if f.name not in hidden]
+    if rel_files is not None:
+        paths = [os.path.join(root, f) for f in rel_files]
+    elif "files" in entry:
+        paths = [os.path.join(root, d, f) for d, f in _entry_units(root, manifest, entry)]
+    else:
+        paths = [os.path.join(root, d) for d in entry["dirs"]]
+    if not paths:  # every file pruned, or replace_where deleted every row
+        return spark.createDataFrame([], T.StructType(fields))
+    df = _scan_entry_files(spark, entry, paths)
+    if any("initial_default" in (f.metadata or {}) for f in fields):
+        # each row's source DIR, off the raw scan's _metadata: it
+        # resolves only on the scan relation, so tag before the DV join
+        df = df.withColumn(
+            "__src_dir",
+            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2),
+        )
+    df = _apply_dvs(spark, root, entry, df)
+    mapping = entry.get("mapping", {})
+    cols = []
+    for f in fields:
+        meta = f.metadata or {}
+        col = F.col(mapping.get(f.name, f.name))
+        if "initial_default" in meta:
+            # rows from dirs that predate the ADD read the default (the
+            # column did not exist there); every later write reads back
+            # exactly what it wrote, explicit NULLs included — dir
+            # membership, not value-coalescing
+            col = F.when(
+                F.col("__src_dir").isin(list(meta.get("default_dirs", []))),
+                F.lit(meta["initial_default"]).cast(f.dataType),
+            ).otherwise(col)
+        cols.append(col.alias(f.name))
+    return df.select(*cols)
 
 
 def _read_dvs(spark: SparkSession, root: str, dvs: list[str]) -> DataFrame:
@@ -1609,26 +1697,6 @@ def _read_dvs(spark: SparkSession, root: str, dvs: list[str]) -> DataFrame:
     sidecars' fixed schema (no footer inference)."""
     return spark.read.schema("file STRING, pos BIGINT").parquet(
         *[os.path.join(root, d) for d in dvs]
-    )
-
-
-def _has_defaulted_fields(entry: dict) -> bool:
-    return any(
-        "initial_default" in (f.get("metadata") or {})
-        for f in json.loads(entry["schema"])["fields"]
-    )
-
-
-def _with_src_dir(df: DataFrame, entry: dict) -> DataFrame:
-    """Tag each row's source DIR (off the raw scan's ``_metadata`` —
-    resolvable only on the scan relation, so this must run before any
-    join) when the entry carries initial-default columns; a no-op
-    otherwise so the common read plan gains nothing."""
-    if not _has_defaulted_fields(entry):
-        return df
-    return df.withColumn(
-        "__src_dir",
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2),
     )
 
 
@@ -2028,7 +2096,7 @@ def _guard_identity_mapping(entry: dict, op: str) -> None:
 # metadata-only commits. Files always store STABLE physical column
 # names; the entry's logical schema plus a logical->physical "mapping"
 # (present only for renamed columns — Delta's column-mapping model)
-# drive every read through _project_entry_schema. No data file is
+# drive every read through _entry_frame. No data file is
 # touched by any of these, whatever the table size.
 # ---------------------------------------------------------------------------
 
@@ -2343,48 +2411,8 @@ def read_snapshot(
     before a column was added read it back as NULL, or as its initial
     default."""
     manifest = _load(root)
-    if sum(x is not None for x in (snapshot_id, tag, branch)) > 1:
-        raise ValueError("pass at most one of snapshot_id / tag / branch")
-    if branch is not None:
-        snapshot_id = resolve_branch(root, branch)
-    if tag is not None:
-        snapshot_id = resolve_tag(root, tag)
-    if snapshot_id is None and as_of is not None:
-        anc = _main_ancestors(manifest)
-        eligible = [
-            s for s in manifest["snapshots"]
-            if s["ts"] <= as_of and s["id"] in anc
-        ]
-        if not eligible:
-            raise KeyError(f"no snapshot at or before {as_of}")
-        snapshot_id = eligible[-1]["id"]
-    if snapshot_id is None:
-        snapshot_id = manifest["current"]
-    if snapshot_id is None:
-        raise KeyError(f"table {root} has no snapshots")
-    entry = _entry(manifest, snapshot_id)
-    if "files" in entry:
-        paths = [
-            os.path.join(root, d, f)
-            for d, f in _entry_units(root, manifest, entry)
-        ]
-        if not paths:  # e.g. replace_where deleted every row
-            import pyspark.sql.types as T
-
-            schema = T.StructType.fromJson(json.loads(entry["schema"]))
-            return spark.createDataFrame([], schema)
-    else:
-        paths = [os.path.join(root, d) for d in entry["dirs"]]
-    return _project_entry_schema(
-        _apply_dvs(
-            spark,
-            root,
-            entry,
-            _with_src_dir(_scan_entry_files(spark, entry, paths), entry),
-        ),
-        entry,
-        _hidden_set(manifest),
-    )
+    entry = _pin(manifest, snapshot_id, as_of=as_of, tag=tag, branch=branch)
+    return _entry_frame(spark, root, manifest, entry)
 
 
 def snapshot_changes(
@@ -2810,10 +2838,7 @@ def drop_tag(root: str, name: str) -> None:
 
 
 def resolve_tag(root: str, name: str) -> int:
-    tags = _load(root).get("tags", {})
-    if name not in tags:
-        raise KeyError(f"no tag {name!r} on table {root}; tags: {sorted(tags)}")
-    return tags[name]
+    return _pin(_load(root), tag=name)["id"]
 
 
 def metadata_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
@@ -3190,6 +3215,7 @@ def plan_scan(
     snapshot_id: int | None = None,
     as_of: float | None = None,
     tag: str | None = None,
+    manifest: dict | None = None,
 ) -> dict:
     """File-pruning plan for a predicate scan: which data files the
     manifest stats prove irrelevant, without opening ANY of them.
@@ -3204,6 +3230,10 @@ def plan_scan(
     time-range or key-range query touches the manifest (KBs) and the
     surviving files only; combined with :func:`optimize_zorder` the
     bounds are tight on every clustered column.
+
+    ``manifest`` is the caller's loaded manifest (default: a fresh
+    load): an op that plans and commits on ONE load needs no freshness
+    check beyond :func:`_commit`'s CAS.
     """
     for p in predicates:
         if len(p) < 2 or p[1] not in _OPS:
@@ -3213,25 +3243,9 @@ def plan_scan(
             raise ValueError(
                 f"predicate {p!r}: op {p[1]!r} takes {need - 2} value(s)"
             )
-    if tag is not None:
-        if snapshot_id is not None:
-            raise ValueError("pass at most one of snapshot_id / tag")
-        snapshot_id = resolve_tag(root, tag)
-    manifest = _load(root)
-    if snapshot_id is None and as_of is not None:
-        anc = _main_ancestors(manifest)
-        eligible = [
-            s for s in manifest["snapshots"]
-            if s["ts"] <= as_of and s["id"] in anc
-        ]
-        if not eligible:
-            raise KeyError(f"no snapshot at or before {as_of}")
-        snapshot_id = eligible[-1]["id"]
-    if snapshot_id is None:
-        snapshot_id = manifest["current"]
-    if snapshot_id is None:
-        raise KeyError(f"table {root} has no snapshots")
-    entry = _entry(manifest, snapshot_id)
+    if manifest is None:
+        manifest = _load(root)
+    entry = _pin(manifest, snapshot_id, as_of=as_of, tag=tag)
     dir_stats = manifest["dir_stats"]
     # hidden-partition pruning: predicates on a transformed source
     # column imply predicates on the hidden transform column, whose
@@ -3253,7 +3267,7 @@ def plan_scan(
         "files": kept,
         "pruned": pruned,
         "candidates": total,
-        "snapshot_id": snapshot_id,
+        "snapshot_id": entry["id"],
     }
 
 
@@ -3344,47 +3358,22 @@ def scan_snapshot(
     An all-files-pruned scan returns an empty frame with the
     snapshot's schema instead of touching storage."""
     manifest = _load(root)
+    entry = _pin(manifest, snapshot_id, as_of=as_of, tag=tag)
     # predicates name LOGICAL columns; manifest stats key PHYSICAL file
-    # columns — translate through the column mapping for the prune
-    # (identity until a rename; a missed translation only KEEPS files,
-    # never drops one — the residual filter below is the correctness
-    # boundary), then filter on the projected frame
-    ref = snapshot_id if snapshot_id is not None else manifest["current"]
-    mapping = _entry(manifest, ref).get("mapping", {}) if ref else {}
-    phys_preds = [(mapping.get(p[0], p[0]), *p[1:]) for p in predicates]
+    # columns — translate through the PINNED entry's column mapping for
+    # the prune (a missed translation only KEEPS files, never drops one:
+    # the residual filter is the correctness boundary)
+    mapping = entry.get("mapping", {})
     plan = plan_scan(
-        root, phys_preds, snapshot_id=snapshot_id, as_of=as_of, tag=tag
+        root, [(mapping.get(p[0], p[0]), *p[1:]) for p in predicates],
+        snapshot_id=entry["id"], manifest=manifest,
     )
-    manifest = _load(root)
-    entry = _entry(manifest, plan["snapshot_id"])
-    if not plan["files"]:
-        import pyspark.sql.types as T
+    df = _entry_frame(spark, root, manifest, entry, plan["files"])
+    return df.where(_conjunction(predicates)) if predicates else df
 
-        struct = T.StructType.fromJson(json.loads(entry["schema"]))
-        hidden = _hidden_set(manifest)
-        struct = T.StructType(
-            [f for f in struct.fields if f.name not in hidden]
-        )
-        return spark.createDataFrame([], struct)
-    df = _project_entry_schema(
-        _apply_dvs(
-            spark,
-            root,
-            entry,
-            _with_src_dir(
-                _scan_entry_files(
-                    spark, entry,
-                    [os.path.join(root, f) for f in plan["files"]],
-                ),
-                entry,
-            ),
-        ),
-        entry,
-        _hidden_set(manifest),
-    )
-    for p in predicates:
-        df = df.filter(_predicate_col(p))
-    return df
+
+def _conjunction(predicates: list[tuple]) -> Column:
+    return functools.reduce(operator.and_, map(_predicate_col, predicates))
 
 
 @_retry_conflicts
@@ -3414,9 +3403,6 @@ def replace_where(
     into ranges it claimed not to touch. An empty ``df`` makes this
     ``DELETE WHERE``. Returns the new snapshot id.
     """
-    import functools as _ft
-    import operator as _op
-
     from ..operators.constraints import guard_constraints
 
     if not predicates:
@@ -3430,18 +3416,9 @@ def replace_where(
             "conjunction would replace the whole table; use "
             "write_snapshot(op='overwrite') for that)"
         )
-    plan = plan_scan(root, predicates)  # validates predicate grammar
     manifest = _load(root)
+    plan = plan_scan(root, predicates, manifest=manifest)  # validates grammar
     entry = _entry(manifest, plan["snapshot_id"])
-    if plan["snapshot_id"] != manifest["current"]:
-        # TOCTOU: plan_scan loaded an older manifest; a commit landed
-        # between the two loads and _commit's CAS (checked against THIS
-        # load) would not see it — the stale plan would silently drop
-        # the concurrent commit's dirs. Replay from fresh state.
-        raise CommitConflict(
-            f"replace_where: planned against snapshot {plan['snapshot_id']} but "
-            f"current is {manifest['current']}; retrying"
-        )
     _guard_no_dvs(entry, "replace_where")
     _guard_identity_mapping(entry, "replace_where")
     _guard_no_initial_defaults(entry, "replace_where")
@@ -3464,7 +3441,7 @@ def replace_where(
         else:
             rewrite_paths.append(os.path.join(root, rel))
 
-    conj = _ft.reduce(_op.and_, [_predicate_col(p) for p in predicates])
+    conj = _conjunction(predicates)
     # NULL must VIOLATE here (a null doesn't satisfy the scope, so the
     # row would leak outside it) — unlike ANSI CHECK's null-satisfies.
     # Stored table CHECK constraints apply to the incoming rows too
@@ -3530,9 +3507,6 @@ def update_where(
     stats-selective update rewrites only the files its predicate
     range touches — the same triage as replace_where's boundary
     rewrite."""
-    import functools as _ft
-    import operator as _op
-
     from ..operators.constraints import guard_constraints
 
     if not predicates:
@@ -3540,18 +3514,9 @@ def update_where(
     unknown = [c for c in set_exprs if not c.isidentifier()]
     if not set_exprs or unknown:
         raise ValueError(f"set_exprs must be non-empty column->expr ({unknown=})")
-    plan = plan_scan(root, predicates)
     manifest = _load(root)
+    plan = plan_scan(root, predicates, manifest=manifest)
     entry = _entry(manifest, plan["snapshot_id"])
-    if plan["snapshot_id"] != manifest["current"]:
-        # TOCTOU: plan_scan loaded an older manifest; a commit landed
-        # between the two loads and _commit's CAS (checked against THIS
-        # load) would not see it — the stale plan would silently drop
-        # the concurrent commit's dirs. Replay from fresh state.
-        raise CommitConflict(
-            f"update_where: planned against snapshot {plan['snapshot_id']} but "
-            f"current is {manifest['current']}; retrying"
-        )
     _guard_no_dvs(entry, "update_where")
     _guard_identity_mapping(entry, "update_where")
     _guard_no_initial_defaults(entry, "update_where")
@@ -3582,8 +3547,7 @@ def update_where(
         # claim only when something rewrites: a fully-pruned no-op
         # UPDATE must not leave an empty orphan dir per call/retry
         data_dir = _claim_data_dir(root, snap_id, "update")
-        conj = _ft.reduce(_op.and_, [_predicate_col(p) for p in predicates])
-        cond = F.coalesce(conj, F.lit(False))
+        cond = F.coalesce(_conjunction(predicates), F.lit(False))
         rows = _scan_entry_files(spark, entry, rewrite_paths)
         # all assignments evaluate against the OLD row (one select)
         updated = rows.select(
@@ -3684,21 +3648,12 @@ def compact_files(
     as every other write."""
     if target_bytes <= 0:
         raise ValueError(f"target_bytes must be > 0, got {target_bytes}")
-    in_scope = None
-    if predicates:
-        plan = plan_scan(root, predicates)  # validates the grammar
-        in_scope = set(plan["files"])
     manifest = _load(root)
+    in_scope = None
+    if predicates:  # validates the grammar
+        in_scope = set(plan_scan(root, predicates, manifest=manifest)["files"])
     if manifest["current"] is None:
         raise KeyError(f"table {root} has no snapshots")
-    if predicates and plan["snapshot_id"] != manifest["current"]:
-        # TOCTOU: a commit slid between the two loads — the stale plan
-        # would mis-scope the triage (same gate as replace_where)
-        raise CommitConflict(
-            f"compact_files: planned against snapshot "
-            f"{plan['snapshot_id']} but current is "
-            f"{manifest['current']}; retrying"
-        )
     entry = _entry(manifest, manifest["current"])
     _guard_no_dvs(entry, "compact_files")
     _guard_identity_mapping(entry, "compact_files")
@@ -3799,17 +3754,9 @@ def optimize_zorder(
     from ..operators.layout import zorder_layout
 
     if predicates:
-        plan = plan_scan(root, predicates)  # validates the grammar
         manifest = _load(root)
-        if manifest["current"] is None:
-            raise KeyError(f"table {root} has no snapshots")
-        if plan["snapshot_id"] != manifest["current"]:
-            raise CommitConflict(
-                f"optimize_zorder: planned against snapshot "
-                f"{plan['snapshot_id']} but current is "
-                f"{manifest['current']}; retrying"
-            )
-        entry = _entry(manifest, manifest["current"])
+        plan = plan_scan(root, predicates, manifest=manifest)  # validates grammar
+        entry = _entry(manifest, plan["snapshot_id"])
         _guard_no_dvs(entry, "optimize_zorder")
         _guard_identity_mapping(entry, "optimize_zorder")
         _guard_no_initial_defaults(entry, "optimize_zorder")
@@ -4170,14 +4117,7 @@ def drop_branch(root: str, name: str) -> None:
 
 
 def resolve_branch(root: str, name: str) -> int:
-    manifest = _load(root)
-    try:
-        return manifest["branches"][name]
-    except KeyError:
-        raise KeyError(
-            f"unknown branch {name!r}; existing: "
-            f"{sorted(manifest.get('branches', {}))}"
-        ) from None
+    return _pin(_load(root), branch=name)["id"]
 
 
 @_retry_conflicts

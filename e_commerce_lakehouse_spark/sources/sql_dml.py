@@ -126,6 +126,25 @@ def _parse_literal(text: str):
     return float(n) if "." in n else int(n)
 
 
+def _instant(literal: str) -> float:
+    """Unix seconds of an ISO TIMESTAMP literal. A naive literal reads in
+    the SESSION time zone (spark.sql.session.timeZone), not the driver
+    OS zone: ``.timestamp()`` on a naive datetime uses the OS zone,
+    which silently shifts the instant (and the snapshot it picks) when
+    the two differ. Mirrors snapshots._canon_dt."""
+    t = _dt.datetime.fromisoformat(literal.replace("Z", "+00:00"))
+    if t.tzinfo is None:
+        tz = snapshots._session_tzinfo()
+        if tz is None:
+            raise ValueError(
+                "naive timestamp literal without an active Spark session "
+                "timezone — pass an offset-qualified ISO string instead: "
+                f"{literal!r}"
+            )
+        t = t.replace(tzinfo=tz)
+    return t.timestamp()
+
+
 _CMP = re.compile(r"^\s*(\w+)\s*(=|<=|>=|<|>)\s*(.+?)\s*$")
 _ISNULL = re.compile(r"^\s*(\w+)\s+IS\s+(NOT\s+)?NULL\s*$", re.IGNORECASE)
 _IN = re.compile(r"^\s*(\w+)\s+IN\s*\(([^()]*)\)\s*$", re.IGNORECASE)
@@ -519,17 +538,7 @@ def _execute_call(
         keep = int(named.pop("retain_last", 2))
         older = named.pop("older_than", None)
         if isinstance(older, str):  # ISO timestamp (Iceberg's TIMESTAMP arg)
-            t = _dt.datetime.fromisoformat(older.replace("Z", "+00:00"))
-            if t.tzinfo is None:
-                tz = snapshots._session_tzinfo()
-                if tz is None:
-                    raise ValueError(
-                        "naive older_than timestamp without an active "
-                        "Spark session timezone — pass an offset-"
-                        f"qualified ISO string: {older!r}"
-                    )
-                t = t.replace(tzinfo=tz)
-            older = t.timestamp()
+            older = _instant(older)
         return _done({
             "deleted": snapshots.expire_snapshots(
                 root, keep_last=keep,
@@ -1119,8 +1128,7 @@ def execute_dml(
                     "table, a provided DataFrame, nor a view"
                 ) from exc
         if where:
-            for p in parse_where(where):
-                df = df.filter(snapshots._predicate_col(p))
+            df = df.where(snapshots._conjunction(parse_where(where)))
         return df
 
     if (m := _CTAS.match(sql)) is not None:
@@ -1349,26 +1357,7 @@ def execute_dml(
         if version is not None:
             sid = int(version)
         else:
-            t = _dt.datetime.fromisoformat(as_of.replace("Z", "+00:00"))
-            if t.tzinfo is None:
-                tz = snapshots._session_tzinfo()
-                if tz is None:
-                    raise ValueError(
-                        "naive TIMESTAMP AS OF literal without an active "
-                        "Spark session timezone — pass an offset-qualified "
-                        f"ISO string instead: {as_of!r}"
-                    )
-                t = t.replace(tzinfo=tz)
-            ts = t.timestamp()
-            manifest = snapshots._load(root)
-            anc = snapshots._main_ancestors(manifest)
-            eligible = [
-                s for s in manifest["snapshots"]
-                if s["ts"] <= ts and s["id"] in anc
-            ]
-            if not eligible:
-                raise KeyError(f"no snapshot at or before {as_of!r}")
-            sid = eligible[-1]["id"]
+            sid = snapshots._pin(snapshots._load(root), as_of=_instant(as_of))["id"]
         new_id = snapshots.rollback(root, sid)
         return {
             "op": "restore",
@@ -1469,22 +1458,7 @@ def execute_dml(
         if version is not None:
             kwargs["snapshot_id"] = int(version)
         elif as_of is not None:
-            # Naive ISO literals must resolve in the SESSION timezone
-            # (spark.sql.session.timeZone), not the driver OS zone —
-            # .timestamp() on a naive datetime uses the OS zone, which
-            # silently shifts the instant and can pick the wrong
-            # snapshot when the two differ. Mirrors _canon_dt.
-            t = _dt.datetime.fromisoformat(as_of.replace("Z", "+00:00"))
-            if t.tzinfo is None:
-                tz = snapshots._session_tzinfo()
-                if tz is None:
-                    raise ValueError(
-                        "naive TIMESTAMP AS OF literal without an active "
-                        "Spark session timezone — pass an offset-qualified "
-                        f"ISO string instead: {as_of!r}"
-                    )
-                t = t.replace(tzinfo=tz)
-            kwargs["as_of"] = t.timestamp()
+            kwargs["as_of"] = _instant(as_of)
         elif tag is not None:
             kwargs["tag"] = tag
         elif br is not None:
@@ -1871,34 +1845,12 @@ def register_time_travel_view(
         raise ValueError(
             "pass exactly one of snapshot_id=, tag=, timestamp="
         )
-    if tag is not None:
-        sid = snapshots.resolve_tag(root, tag)
-    elif timestamp is not None:
-        import datetime as _dt2
-
-        t = _dt2.datetime.fromisoformat(timestamp.replace("Z", "+00:00"))
-        if t.tzinfo is None:
-            tz = snapshots._session_tzinfo()
-            if tz is None:
-                raise ValueError(
-                    "naive timestamp without an active Spark session "
-                    f"timezone — pass an offset-qualified ISO string: "
-                    f"{timestamp!r}"
-                )
-            t = t.replace(tzinfo=tz)
-        ts = t.timestamp()
-        manifest = snapshots._load(root)
-        anc = snapshots._main_ancestors(manifest)
-        eligible = [
-            s for s in manifest["snapshots"]
-            if s["ts"] <= ts and s["id"] in anc
-        ]
-        if not eligible:
-            raise KeyError(f"no snapshot at or before {timestamp!r}")
-        sid = eligible[-1]["id"]
-    else:
-        sid = int(snapshot_id)
-        snapshots._entry(snapshots._load(root), sid)  # must exist
+    sid = snapshots._pin(
+        snapshots._load(root),
+        None if snapshot_id is None else int(snapshot_id),
+        as_of=None if timestamp is None else _instant(timestamp),
+        tag=tag,
+    )["id"]
     _bind_view(spark, name, root, pushdown, sid)
     _VIEW_REGISTRY[(_session_key(spark), name)] = (root, pushdown, sid)
     return sid

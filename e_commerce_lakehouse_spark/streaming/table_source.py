@@ -810,7 +810,7 @@ class _TablePruningBatchReader(_TableBatchReader):
             return super().partitions()
         manifest = S._load(self.root)
         sid = self.snapshot_id or manifest["current"]
-        plan = S.plan_scan(self.root, self._pushed, snapshot_id=sid)
+        plan = S.plan_scan(self.root, self._pushed, snapshot_id=sid, manifest=manifest)
         keep = set(plan["files"])
         entry = S._entry(manifest, sid)
         dv_pos = _dv_positions(self.root, entry.get("dvs", []))

@@ -827,3 +827,29 @@ def test_dv_writers_compute_batch_once_and_release_it(spark, root):
             spark, root, bad.withColumn("_change_type", F.lit("insert")), ["id"]
         )
     assert not _persistent_rdd_ids(spark) - before
+
+
+def test_nested_conflict_retries_only_in_the_outermost_cycle(spark, root, monkeypatch):
+    """A DV writer called inside a retried sink cycle re-raises its
+    CommitConflict to that cycle instead of retrying itself: a
+    persistent conflict costs COMMIT_RETRIES writer attempts (each one
+    re-checking the batch id), not COMMIT_RETRIES squared."""
+    import time
+
+    from e_commerce_lakehouse_spark.streaming.sinks import (
+        foreach_batch_merge_snapshot,
+    )
+
+    S.write_snapshot(spark.createDataFrame([(1, 1)], "id long, k long"), root)
+    attempts = {"n": 0}
+
+    def conflicted(r, op):
+        attempts["n"] += 1
+        raise S.CommitConflict("simulated concurrent commit")
+
+    monkeypatch.setattr(D, "_load_guarded", conflicted)
+    monkeypatch.setattr(time, "sleep", lambda s: None)
+    batch = spark.createDataFrame([(1, 2)], "id long, k long")
+    with pytest.raises(S.CommitConflict, match="simulated"):
+        foreach_batch_merge_snapshot(root, ["id"])(batch, 0)
+    assert attempts["n"] == S.COMMIT_RETRIES

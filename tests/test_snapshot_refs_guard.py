@@ -1,0 +1,55 @@
+"""Snapshot refs resolve in one place and every pruning writer plans on
+its own manifest load: the published-history walk (``_main_ancestors``)
+is called only by ``snapshots._pin``, and no program module carries a
+"planned against snapshot" re-plan gate — ``_commit``'s version CAS is
+the one freshness check."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+FILES = [
+    ROOT / "__spark_entry__.py",
+    *(ROOT / "e_commerce_lakehouse_spark").rglob("*.py"),
+]
+
+
+class _Callers(ast.NodeVisitor):
+    """Enclosing function path of every call to ``name``."""
+
+    def __init__(self, name: str):
+        self.name, self.stack, self.found = name, [], []
+
+    def visit_FunctionDef(self, node):
+        self.stack.append(node.name)
+        self.generic_visit(node)
+        self.stack.pop()
+
+    visit_AsyncFunctionDef = visit_FunctionDef
+
+    def visit_Call(self, node):
+        f = node.func
+        if getattr(f, "id", None) == self.name or getattr(f, "attr", None) == self.name:
+            self.found.append(".".join(self.stack) or "<module>")
+        self.generic_visit(node)
+
+
+def test_main_ancestors_called_only_by_pin():
+    callers = set()
+    for f in FILES:
+        v = _Callers("_main_ancestors")
+        v.visit(ast.parse(f.read_text()))
+        callers |= {f"{f.relative_to(ROOT)}:{c}" for c in v.found}
+    assert callers == {"e_commerce_lakehouse_spark/sources/snapshots.py:_pin"}
+
+
+def test_no_replan_freshness_gates():
+    hits = [
+        f"{f.relative_to(ROOT)}:{n}"
+        for f in FILES
+        for n, line in enumerate(f.read_text().splitlines(), 1)
+        if "planned against snapshot" in line
+    ]
+    assert not hits, "re-plan freshness gate left in:\n" + "\n".join(hits)

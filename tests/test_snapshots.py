@@ -2609,3 +2609,66 @@ def test_concurrent_writes_keep_micros_timestamps(spark, tmp_path):
                 assert col.physical_type == "INT64", (f, col)
     finally:
         spark.conf.unset(key)
+
+
+@pytest.mark.parametrize("pin", ["tag", "as_of"])
+def test_pinned_scan_maps_predicates_through_the_pinned_snapshot(spark, root, pin):
+    """A predicate scan pinned by tag or as_of translates logical names
+    through the PINNED snapshot's column mapping. After the rename swap
+    a->c, b->a the current mapping sends ``a`` to b's storage, whose
+    stats (100..109) would prune the pinned snapshot's only file."""
+    S.write_snapshot(
+        spark.createDataFrame([(i, 100 + i) for i in range(10)], "a long, b long")
+        .repartition(1),
+        root,
+    )
+    S.tag_snapshot(root, "cut")
+    ts = S.history(root)[-1]["ts"]
+    S.rename_column(root, "a", "c")
+    S.rename_column(root, "b", "a")
+    ref = {"tag": "cut"} if pin == "tag" else {"as_of": ts}
+    got = S.scan_snapshot(spark, root, [("a", "=", 5)], **ref).collect()
+    want = S.read_snapshot(spark, root, **ref).filter("a = 5").collect()
+    assert got == want == [Row(a=5, b=105)]
+
+
+def test_one_manifest_load_per_snapshot_operation(spark, root, monkeypatch):
+    """Each read, scan and pruning-writer attempt resolves its snapshot
+    and plans its files on ONE manifest load (the commit's CAS is the
+    only freshness check a writer needs)."""
+    from e_commerce_lakehouse_spark.sources import deletes as D
+
+    S.write_snapshot(
+        spark.createDataFrame([(i, i % 3) for i in range(20)], "id long, k long")
+        .repartition(2),
+        root,
+    )
+    S.tag_snapshot(root, "cut")
+    S.create_branch(root, "stage")
+    orig, calls = S._load, {"n": 0}
+
+    def counting(r):
+        calls["n"] += 1
+        return orig(r)
+
+    monkeypatch.setattr(S, "_load", counting)
+
+    def loads(op) -> int:
+        calls["n"] = 0
+        op()
+        return calls["n"]
+
+    row = "id long, k long"
+    assert loads(lambda: S.scan_snapshot(spark, root, [("id", "=", 3)])) == 1
+    assert loads(lambda: S.scan_snapshot(spark, root, [("id", "=", 3)], tag="cut")) == 1
+    assert loads(lambda: S.read_snapshot(spark, root, tag="cut")) == 1
+    assert loads(lambda: S.read_snapshot(spark, root, branch="stage")) == 1
+    assert loads(lambda: S.replace_where(
+        spark, root, spark.createDataFrame([(3, 7)], row), [("id", "=", 3)]
+    )) == 1
+    assert loads(lambda: D.delete_where_dv(spark, root, [("id", "=", 4)])) == 1
+    assert loads(lambda: D.merge_upsert_dv(
+        spark, root, spark.createDataFrame([(5, 9)], row), ["id"]
+    )) == 1
+    got = {r.id: r.k for r in S.read_snapshot(spark, root).collect()}
+    assert (got[3], 4 in got, got[5], len(got)) == (7, False, 9, 19)

@@ -1164,3 +1164,23 @@ def test_vacuum_dry_run_and_restore_table(spark, root):
     assert out["restored_to"] == 1
     assert S.read_snapshot(spark, root3).count() == 7
     assert t_after_v1 > 0  # first-table marker kept for readability
+
+
+def test_naive_timestamp_literal_without_session_zone_is_refused(spark, root, monkeypatch):
+    """Every TIMESTAMP-literal route (SELECT and RESTORE ... AS OF, CALL
+    expire_snapshots older_than, register_time_travel_view) refuses a
+    naive literal when no session zone is known, instead of reading it
+    in the driver OS zone."""
+    S.write_snapshot(spark.range(3), root)
+    monkeypatch.setattr(S, "_session_tzinfo", lambda: None)
+    t, iso = {"t": root}, "2024-01-01T00:00:00"
+    for sql in (
+        f"SELECT * FROM t TIMESTAMP AS OF '{iso}'",
+        f"RESTORE TABLE t TO TIMESTAMP AS OF '{iso}'",
+        f"CALL expire_snapshots('t', older_than => '{iso}')",
+    ):
+        with pytest.raises(ValueError, match="naive"):
+            sql_dml.execute_dml(spark, sql, t)
+    with pytest.raises(ValueError, match="naive"):
+        sql_dml.register_time_travel_view(spark, "t_v", root, timestamp=iso)
+    assert len(S.history(root)) == 1  # nothing restored or expired
