@@ -430,7 +430,12 @@ def set_delete_mode(root: str, mode: str) -> None:
 
 
 def delete_mode(root: str) -> str:
-    return S._load(root).get("delete_mode", "copy-on-write")
+    return _mode_of(S._load(root))
+
+
+def _mode_of(manifest: dict) -> str:
+    """:func:`delete_mode` read off an already-loaded ``manifest``."""
+    return manifest.get("delete_mode", "copy-on-write")
 
 
 def _merged_rows(
@@ -575,15 +580,17 @@ def apply_changes_dv(
 
     ``expected_base``: the snapshot id the FEED's values were derived
     from, for callers whose post-states are read-modify-write over the
-    table itself (the conditional-MERGE executor computes ``SET c =
+    table itself (the SQL MERGE executor computes ``SET c =
     t.c + 1`` from a target read). The commit refuses with
     :class:`~.snapshots.CommitConflict` when the head moved past it —
     applying a stale-derived post-state would silently erase the
-    concurrent commit (write_snapshot's expected_base contract). The
-    caller's retry must RECOMPUTE the feed from the fresh head. Leave
-    None (default) when the feed is externally sourced (a CDC stream):
-    its values don't depend on table state, so the internal OCC retry
-    alone is correct.
+    concurrent commit (write_snapshot's expected_base contract). A
+    caller passing it must itself be a retry cycle
+    (``snapshots._retry_conflicts``) that RECOMPUTES the feed from the
+    fresh head on every attempt: this writer is nested in that cycle,
+    so it does not retry on its own. Leave None (default) when the feed
+    is externally sourced (a CDC stream): its values don't depend on
+    table state, so the writer's own OCC retry is correct.
 
     ``evolve_schema=True`` (Delta autoMerge inside the commit): feed
     columns absent from the target schema WIDEN it atomically in this
@@ -595,26 +602,15 @@ def apply_changes_dv(
     if "_change_type" not in changes.columns:
         raise ValueError("changes must carry _change_type (see cdc_diff)")
 
-    def stale(current) -> S.CommitConflict:
-        return S.CommitConflict(
-            f"apply_changes_dv: feed derived from snapshot {expected_base} "
-            f"but current is {current}; recompute the feed and retry"
-        )
-
-    if expected_base is not None:
-        # UN-retried staleness check: once the head has moved past
-        # expected_base it never moves back, so letting the writer's
-        # retry loop re-load and re-raise would burn every retry sleep
-        # before the RECOMPUTING caller sees the conflict
-        head = S._load(root)["current"]
-        if head != expected_base:
-            raise stale(head)
-
     def prepare(manifest: dict, cols: list[str]) -> list[str]:
         if expected_base is not None and manifest["current"] != expected_base:
-            # the same gate on the manifest this attempt commits with,
-            # so _commit's CAS covers the whole window
-            raise stale(manifest["current"])
+            # gated on the manifest this attempt commits with, so
+            # _commit's CAS covers the whole window
+            raise S.CommitConflict(
+                f"apply_changes_dv: feed derived from snapshot "
+                f"{expected_base} but current is {manifest['current']}; "
+                "recompute the feed and retry"
+            )
         extra = [
             c for c in changes.columns
             if evolve_schema and c not in cols and c != "_change_type"

@@ -3349,6 +3349,7 @@ def scan_snapshot(
     snapshot_id: int | None = None,
     as_of: float | None = None,
     tag: str | None = None,
+    branch: str | None = None,
 ) -> DataFrame:
     """Predicate scan with manifest-stats file skipping: prune via
     :func:`plan_scan`, read ONLY the surviving files, then apply the
@@ -3356,9 +3357,10 @@ def scan_snapshot(
     guarantee, the filter is the correctness boundary — exactly the
     Iceberg split between manifest evaluation and residual filters).
     An all-files-pruned scan returns an empty frame with the
-    snapshot's schema instead of touching storage."""
+    snapshot's schema instead of touching storage. The snapshot refs
+    are :func:`read_snapshot`'s."""
     manifest = _load(root)
-    entry = _pin(manifest, snapshot_id, as_of=as_of, tag=tag)
+    entry = _pin(manifest, snapshot_id, as_of=as_of, tag=tag, branch=branch)
     # predicates name LOGICAL columns; manifest stats key PHYSICAL file
     # columns — translate through the PINNED entry's column mapping for
     # the prune (a missed translation only KEEPS files, never drops one:

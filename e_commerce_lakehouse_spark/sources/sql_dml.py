@@ -15,9 +15,13 @@ statement                              routed to
                                        granular, stats-pruned)
 ``UPDATE t SET ... WHERE ...``         :func:`snapshots.update_where`
                                        (only may-match files rewritten)
-``MERGE INTO t USING s ON ... WHEN``   :func:`upsert.merge_upsert` /
-                                       ``apply_changes`` + one
-                                       overwrite commit
+``MERGE INTO t USING s ON ... WHEN``   ``_merge``: every clause
+                                       shape compiles to one CDC
+                                       feed, committed by
+                                       :func:`deletes.apply_changes_dv`
+                                       (merge-on-read) or
+                                       ``upsert.apply_changes`` + one
+                                       overwrite (copy-on-write)
 ``SELECT * FROM t [VERSION AS OF n |   :func:`snapshots.read_snapshot`
 TIMESTAMP AS OF 'iso' | TAG 'name']    / ``scan_snapshot`` (WHERE gets
 [WHERE ...]``                          stats file-skipping; returns
@@ -445,18 +449,6 @@ def _parse_merge_clauses(clauses_text: str) -> list[dict]:
     return out
 
 
-def _merge_is_canonical(clauses: list[dict]) -> bool:
-    """The original three-clause grammar: at most one unconditioned
-    clause per head, star/delete actions only — routed to the
-    whole-row-replace fast paths that predate conditional MERGE."""
-    heads = [c["head"] for c in clauses]
-    return all(
-        c["cond"] is None
-        and c["action"] in ("update_star", "delete", "insert_star")
-        for c in clauses
-    ) and len(set(heads)) == len(heads)
-
-
 def _parse_merge_on(on: str, t_alias: str, s_alias: str) -> list[str]:
     keys = []
     for part in re.split(r"\bAND\b", on, flags=re.IGNORECASE):
@@ -735,7 +727,7 @@ def _qualify_expr(
     return re.sub(r"\x00(\d+)\x00", lambda m: literals[int(m.group(1))], masked)
 
 
-def _merge_extended(
+def _merge(
     spark: SparkSession,
     root: str,
     source: DataFrame,
@@ -745,61 +737,51 @@ def _merge_extended(
     s_alias: str,
     evolve: bool = False,
 ) -> int:
-    """Conditional multi-clause MERGE (Delta/Iceberg ``WHEN MATCHED
-    AND <cond> THEN UPDATE SET c = expr`` surface; the reference pins
-    Iceberg, whose Spark runtime supports exactly this clause shape).
-    Clauses are compiled to ONE CDC feed — matched rows route through a
-    first-match-wins ``when()`` chain into delete / post-image rows
-    (UPDATE keeps unassigned columns at their target values), source
-    rows matching no key take the first applicable NOT MATCHED clause —
-    then the feed commits through the table's ``write.delete.mode``:
-    merge-on-read via :func:`deletes.apply_changes_dv` (O(batch) both
-    sides; matched evaluation reads only batch-key-pruned files), or
+    """The one SQL MERGE executor: every clause shape — the Delta/
+    Iceberg conditional multi-clause surface (``WHEN MATCHED AND <cond>
+    THEN UPDATE SET c = expr``; the reference pins Iceberg, whose Spark
+    runtime supports exactly this) and its unconditioned special cases
+    ``UPDATE SET *`` / ``DELETE`` / ``INSERT *`` alike. Clauses compile
+    to ONE CDC feed — matched rows route through a first-match-wins
+    ``when()`` chain into delete / post-image rows (UPDATE keeps
+    unassigned columns at their target values), source rows matching
+    no key take the first applicable NOT MATCHED clause — and the feed
+    commits through the table's ``write.delete.mode``: merge-on-read
+    via :func:`deletes.apply_changes_dv` (O(batch) both sides; the
+    target read opens only the files the batch's keys prune to), or
     copy-on-write via ``upsert.apply_changes`` + one overwrite commit.
+    Matching is row-wise: every target row of a matched key is
+    updated, duplicate-key targets included.
 
-    Because UPDATE expressions read target values, the feed is a
-    read-modify-write: both commit routes gate on the snapshot the
-    feed derived from (``expected_base``) and recompute on conflict —
-    a concurrent writer's commit is never erased by a stale feed."""
+    Each retry attempt loads the manifest ONCE and derives everything
+    from it — the delete mode, the target columns and types, the
+    clause validation, the ``evolve`` (``WITH SCHEMA EVOLUTION``)
+    columns and the pinned target read; the committing writer's own
+    load is the only other. Because UPDATE expressions read target
+    values, the feed is a read-modify-write: both commit routes gate
+    on the attempt's snapshot (``expected_base``), so a concurrent
+    commit fails the attempt and the retry recomputes the feed — it is
+    never erased by a stale one."""
     import functools
-    import json as _json
     import operator as _op
 
-    import pyspark.sql.types as T
-
-    from ..operators import upsert as _upsert
     from . import deletes
 
-    def _derive_schema(manifest):
-        """Target column list/types from ``manifest``'s head — called
-        per retry ATTEMPT (not captured once outside the loop): a
-        concurrent ADD COLUMN between feed derivation and a retry must
-        re-enter here, or the retry's overwrite would commit the OLD
-        column set and silently erase the schema commit."""
-        if manifest["current"] is None:
-            raise KeyError(f"table {root} has no snapshots")
-        entry = snapshots._entry(manifest, manifest["current"])
-        struct = T.StructType.fromJson(_json.loads(entry["schema"]))
+    def _target_schema(manifest: dict, entry: dict):
+        """Target columns + types of ``entry``, widened by the evolving
+        source columns (Delta autoMerge: they land ATOMICALLY inside
+        the merge commit, so a failed merge leaves the schema
+        untouched; pre-existing rows read NULL). A same-name column
+        with a drifted type is not evolution and keeps the
+        cast-to-target semantics every MERGE has."""
         hidden = snapshots._hidden_set(manifest)
-        t_cols = [f.name for f in struct.fields if f.name not in hidden]
-        dtypes = {f.name: f.dataType for f in struct.fields}
-        return t_cols, dtypes
-
-    new_fields: list[tuple] = []
-    if evolve:
-        # MERGE WITH SCHEMA EVOLUTION (Delta autoMerge parity): source
-        # columns absent from the target widen the schema INSIDE the
-        # merge commit itself — atomic, like Delta's autoMerge: a merge
-        # that fails (cardinality error, retry exhaustion) leaves the
-        # target schema untouched. Pre-existing rows read NULL. A
-        # same-name column with a drifted type is NOT evolution and
-        # keeps the cast-to-target semantics every MERGE has.
-        manifest0 = snapshots._load(root)
-        _, dtypes_now = _derive_schema(manifest0)
-        retired = set(manifest0.get("retired_physical", []))
-        hidden = snapshots._hidden_set(manifest0)
+        fields = snapshots._struct_of(entry["schema"]).fields
+        t_cols = [f.name for f in fields if f.name not in hidden]
+        dtypes = {f.name: f.dataType for f in fields}
+        add = []
+        retired = set(manifest.get("retired_physical", []))
         for f in source.schema.fields:
-            if f.name in dtypes_now:
+            if not evolve or f.name in dtypes:
                 continue
             if f.name in retired or f.name in hidden:
                 # the name's physical storage lingers in old files
@@ -817,79 +799,59 @@ def _merge_extended(
                     f"MERGE WITH SCHEMA EVOLUTION: invalid new column "
                     f"name {f.name!r}"
                 )
-            new_fields.append((f.name, f.dataType))
+            add.append((f.name, f.dataType))
+        return t_cols + [n for n, _ in add], {**dtypes, **dict(add)}, add
 
-    def _widen(t_cols, dtypes):
-        """Target columns + the evolving source columns a concurrent
-        ADD COLUMN has not landed yet — applied per retry attempt so a
-        racing explicit ADD of the same name is honored, not doubled."""
-        add = [(n, dt) for n, dt in new_fields if n not in dtypes]
-        return (
-            t_cols + [n for n, _ in add],
-            {**dtypes, **dict(add)},
-            add,
-        )
+    def _compile(t_cols: list[str]) -> list[dict]:
+        """Validate the clauses against the target columns, then
+        compile each clause's condition (``"when"``) and assignments
+        (``"exprs"``) to Columns — every grammar error surfaces before
+        any data is read."""
+        if any(c["action"] in ("update_star", "insert_star") for c in clauses):
+            missing = [c for c in t_cols if c not in source.columns]
+            if missing:
+                raise ValueError(
+                    f"MERGE source is missing target columns {missing} "
+                    "required by UPDATE SET * / INSERT *"
+                )
+        for c in clauses:
+            if c["action"] in ("update_set", "insert_values"):
+                for col in c["payload"]:
+                    if col not in t_cols:
+                        raise ValueError(
+                            f"MERGE assigns unknown column {col!r}; target "
+                            f"columns: {t_cols}"
+                        )
+                    if col in keys and c["action"] == "update_set":
+                        raise ValueError(
+                            f"cannot UPDATE SET merge key column {col!r}"
+                        )
+            if c["action"] == "insert_values":
+                for k in keys:
+                    if k not in c["payload"]:
+                        raise ValueError(
+                            f"MERGE INSERT column list must include key "
+                            f"column {k!r}"
+                        )
+        known = set(t_cols) | set(source.columns)
 
-    t_cols, dtypes, _ = _widen(*_derive_schema(snapshots._load(root)))
-    known = set(t_cols) | set(source.columns)
+        def _expr(text: str, matched: bool, what: str):
+            return F.expr(_qualify_expr(
+                text, t_alias, s_alias, known, allow_target=matched, what=what,
+            ))
 
-    # -- static validation before any read -----------------------------
-    needs_star = any(
-        c["action"] in ("update_star", "insert_star") for c in clauses
-    )
-    if needs_star:
-        missing = [c for c in t_cols if c not in source.columns]
-        if missing:
-            raise ValueError(
-                f"MERGE source is missing target columns {missing} "
-                "required by UPDATE SET * / INSERT *"
-            )
-    for c in clauses:
-        if c["action"] in ("update_set", "insert_values"):
-            for col in c["payload"]:
-                if col not in t_cols:
-                    raise ValueError(
-                        f"MERGE assigns unknown column {col!r}; target "
-                        f"columns: {t_cols}"
-                    )
-                if col in keys and c["action"] == "update_set":
-                    raise ValueError(
-                        f"cannot UPDATE SET merge key column {col!r}"
-                    )
-        if c["action"] == "insert_values":
-            for k in keys:
-                if k not in c["payload"]:
-                    raise ValueError(
-                        f"MERGE INSERT column list must include key "
-                        f"column {k!r}"
-                    )
-
-    def _cond_col(c: dict, allow_target: bool):
-        if c["cond"] is None:
-            return F.lit(True)
-        return F.expr(_qualify_expr(
-            c["cond"], t_alias, s_alias, known,
-            allow_target=allow_target, what="MERGE condition",
-        ))
-
-    matched_cl = [c for c in clauses if c["head"] == "MATCHED"]
-    notm_cl = [c for c in clauses if c["head"] == "NOT MATCHED"]
-    # compile every expression now so grammar errors surface before the
-    # retry loop ever reads data
-    for c in matched_cl:
-        _cond_col(c, True)
-        if c["action"] == "update_set":
-            for col, e in c["payload"].items():
-                F.expr(_qualify_expr(
-                    e, t_alias, s_alias, known, True, "SET expression",
-                ))
-    for c in notm_cl:
-        _cond_col(c, False)
-        if c["action"] == "insert_values":
-            for col, e in c["payload"].items():
-                F.expr(_qualify_expr(
-                    e, t_alias, s_alias, known, False, "INSERT expression",
-                ))
+        out = []
+        for c in clauses:
+            matched = c["head"] == "MATCHED"
+            what = "SET expression" if matched else "INSERT expression"
+            out.append({
+                **c,
+                "when": F.lit(True) if c["cond"] is None
+                else _expr(c["cond"], matched, "MERGE condition"),
+                "exprs": {col: _expr(e, matched, what)
+                          for col, e in (c["payload"] or {}).items()},
+            })
+        return out
 
     def _first_match_idx(cond_cols: list) -> F.Column:
         branch = F.lit(None).cast("int")
@@ -897,7 +859,9 @@ def _merge_extended(
             branch = F.when(cond_cols[i], F.lit(i)).otherwise(branch)
         return branch
 
-    def _build_feed(target: DataFrame, t_cols, dtypes) -> DataFrame:
+    def _build_feed(target: DataFrame, t_cols, dtypes, compiled) -> DataFrame:
+        matched_cl = [c for c in compiled if c["head"] == "MATCHED"]
+        notm_cl = [c for c in compiled if c["head"] == "NOT MATCHED"]
         tgt = target.select([F.col(c).alias(_TPFX + c) for c in t_cols])
         src = source.select(
             [F.col(c).alias(_SPFX + c) for c in source.columns]
@@ -922,7 +886,7 @@ def _merge_extended(
                     keys,
                     target.select(*keys),
                     modifies=functools.reduce(
-                        _op.or_, [_cond_col(c, True) for c in matched_cl]
+                        _op.or_, [c["when"] for c in matched_cl]
                     ),
                     pair=(src, tgt, key_eq),
                 )
@@ -936,8 +900,7 @@ def _merge_extended(
                 "__tid", F.monotonically_increasing_id()
             )
             pairs = src.join(tgt_w, key_eq, "inner").withColumn(
-                "__clause",
-                _first_match_idx([_cond_col(c, True) for c in matched_cl]),
+                "__clause", _first_match_idx([c["when"] for c in matched_cl]),
             )
             for i, c in enumerate(matched_cl):
                 sub = pairs.filter(F.col("__clause") == i)
@@ -947,6 +910,8 @@ def _merge_extended(
                     ]
                     ct = "delete"
                 elif c["action"] == "update_star":
+                    # whole-row replace, source NULLs included (not
+                    # merge_upsert's keep-target coalesce)
                     row = [
                         F.col(_SPFX + col).cast(dtypes[col]).alias(col)
                         for col in t_cols
@@ -955,11 +920,8 @@ def _merge_extended(
                 else:  # update_set: unassigned columns keep target values
                     row = [
                         (
-                            F.expr(_qualify_expr(
-                                c["payload"][col], t_alias, s_alias,
-                                known, True, "SET expression",
-                            )).cast(dtypes[col])
-                            if col in c["payload"]
+                            c["exprs"][col].cast(dtypes[col])
+                            if col in c["exprs"]
                             else F.col(_TPFX + col)
                         ).alias(col)
                         for col in t_cols
@@ -1009,8 +971,7 @@ def _merge_extended(
                 key_eq,
                 "left_anti",
             ).withColumn(
-                "__clause",
-                _first_match_idx([_cond_col(c, False) for c in notm_cl]),
+                "__clause", _first_match_idx([c["when"] for c in notm_cl]),
             )
             for i, c in enumerate(notm_cl):
                 sub = anti.filter(F.col("__clause") == i)
@@ -1021,12 +982,8 @@ def _merge_extended(
                     ]
                 else:  # insert_values: unlisted columns insert NULL
                     row = [
-                        (
-                            F.expr(_qualify_expr(
-                                c["payload"][col], t_alias, s_alias,
-                                known, False, "INSERT expression",
-                            )) if col in c["payload"] else F.lit(None)
-                        ).cast(dtypes[col]).alias(col)
+                        c["exprs"].get(col, F.lit(None))
+                        .cast(dtypes[col]).alias(col)
                         for col in t_cols
                     ]
                 parts.append(
@@ -1039,51 +996,38 @@ def _merge_extended(
             feed = feed.unionByName(p)
         return feed
 
-    mor = deletes.delete_mode(root) == "merge-on-read"
-
     @snapshots._retry_conflicts
     def _run() -> int:
-        # fresh per attempt: base AND the schema derived from it — a
-        # concurrent ADD COLUMN between attempts must widen this
-        # attempt's column set, not be overwritten by a stale t_cols
-        fresh = snapshots._load(root)
-        base = fresh["current"]
-        t_cols, dtypes, add = _widen(*_derive_schema(fresh))
-
-        def _pad(target: DataFrame) -> DataFrame:
+        # one load per attempt, and everything derives from it: a
+        # concurrent commit (ADD COLUMN, a delete-mode flip, a racing
+        # write) fails this attempt's commit and the retry re-derives
+        manifest = snapshots._load(root)
+        entry = snapshots._pin(manifest)
+        t_cols, dtypes, add = _target_schema(manifest, entry)
+        compiled = _compile(t_cols)
+        mor = deletes._mode_of(manifest) == "merge-on-read"
+        # merge-on-read reads only the files the manifest can't prune on
+        # the batch's key IN-list (the change writer's keyscan); the
+        # join is the exactness boundary, the prune a superset
+        rel_files = (
+            deletes._plan_matched_scan(manifest, root, source, keys)[0]
+            if mor else None
+        )
+        target = snapshots._entry_frame(spark, root, manifest, entry, rel_files)
+        for n, dt in add:
             # evolving columns don't exist on the target yet: NULL-pad
             # so the pair frame and UPDATE's keep-target-value branch
             # see them uniformly (Delta autoMerge read semantics)
-            for n, dt in add:
-                target = target.withColumn(n, F.lit(None).cast(dt))
-            return target
-
+            target = target.withColumn(n, F.lit(None).cast(dt))
+        feed = _build_feed(target, t_cols, dtypes, compiled)
         if mor:
-            # O(batch) matched evaluation: read only the files the
-            # manifest can't prune on the batch's key IN-list (the
-            # merge_upsert_dv keyscan pattern); exactness comes from
-            # the join, the prune is a superset
-            preds, empty = deletes._batch_key_predicates(source, keys)
-            if preds is not None and not empty:
-                target = snapshots.scan_snapshot(
-                    spark, root, preds, snapshot_id=base
-                )
-            else:
-                target = snapshots.read_snapshot(
-                    spark, root, snapshot_id=base
-                )
-            feed = _build_feed(_pad(target), t_cols, dtypes)
             return deletes.apply_changes_dv(
-                spark, root, feed, keys, expected_base=base,
+                spark, root, feed, keys, expected_base=entry["id"],
                 evolve_schema=bool(add),
             )
-        target = _pad(snapshots.read_snapshot(spark, root, snapshot_id=base))
-        feed = _build_feed(target, t_cols, dtypes)
-        new_state = _upsert.apply_changes(
-            target.select(*t_cols), feed, keys
-        )
         return snapshots.write_snapshot(
-            new_state, root, mode="overwrite", expected_base=base
+            upsert.apply_changes(target.select(*t_cols), feed, keys),
+            root, mode="overwrite", expected_base=entry["id"],
         )
 
     return _run()
@@ -1443,7 +1387,7 @@ def execute_dml(
             "format": "parquet",
             "location": root,
             "current_snapshot_id": manifest["current"],
-            "delete_mode": deletes.delete_mode(root),
+            "delete_mode": deletes._mode_of(manifest),
             "partition_spec": manifest.get("partition_spec", []),
             "constraints": manifest.get("constraints", {}),
             "metadata": meta_info,
@@ -1462,7 +1406,7 @@ def execute_dml(
         elif tag is not None:
             kwargs["tag"] = tag
         elif br is not None:
-            kwargs["snapshot_id"] = snapshots.resolve_branch(root, br)
+            kwargs["branch"] = br
         if where:
             df = snapshots.scan_snapshot(
                 spark, root, parse_where(where), **kwargs
@@ -1583,110 +1527,11 @@ def execute_dml(
                 raise KeyError(
                     f"MERGE source {src_name!r} is neither in sources nor a view"
                 ) from exc
-        if evolve_kw is not None:
-            # schema evolution always routes through the extended
-            # executor (the canonical fast paths select the TARGET's
-            # columns off the source, which would drop the new ones)
-            sid = _merge_extended(
-                spark, root, source, keys, parsed, t_alias, s_alias,
-                evolve=True,
-            )
-            return {"op": "merge", "table": name, "snapshot_id": sid}
-        if not _merge_is_canonical(parsed):
-            # conditional / multi-clause / explicit-assignment MERGE:
-            # compiled to one CDC feed, committed per write.delete.mode
-            sid = _merge_extended(
-                spark, root, source, keys, parsed, t_alias, s_alias
-            )
-            return {"op": "merge", "table": name, "snapshot_id": sid}
-        _ACTION_SQL = {
-            "update_star": "UPDATE SET *",
-            "delete": "DELETE",
-            "insert_star": "INSERT *",
-        }
-        clauses = {c["head"]: _ACTION_SQL[c["action"]] for c in parsed}
-        matched = clauses.get("MATCHED")
-        from . import deletes
-
-        if deletes.delete_mode(root) == "merge-on-read":
-            # honor write.delete.mode here too — otherwise the SQL
-            # entry point silently does the O(table) overwrite the
-            # property was set to avoid. All three clause shapes are
-            # whole-row-replace semantics, i.e. exactly a CDC feed:
-            # matched keys resolve by DV position, post-states append.
-            target = snapshots.read_snapshot(spark, root)
-            src = source.select(*target.columns)
-            tkeys = target.select(*keys).distinct()
-            parts = []
-            if matched is not None:
-                # same cardinality rule as the extended path: two
-                # source rows for one matched target key is an error,
-                # not two feed rows
-                _check_merge_cardinality(src, keys, tkeys)
-                ct = (
-                    "delete" if matched == "DELETE" else "update_postimage"
-                )
-                parts.append(
-                    src.join(tkeys, keys, "left_semi").withColumn(
-                        "_change_type", F.lit(ct)
-                    )
-                )
-            if "NOT MATCHED" in clauses:
-                parts.append(
-                    src.join(tkeys, keys, "left_anti").withColumn(
-                        "_change_type", F.lit("insert")
-                    )
-                )
-            feed = parts[0]
-            for p in parts[1:]:
-                feed = feed.unionByName(p)
-            sid = deletes.apply_changes_dv(spark, root, feed, keys)
-            return {"op": "merge", "table": name, "snapshot_id": sid}
-
-        # copy-on-write: a read-modify-write whose new state derives
-        # from the target read — pin the read to a snapshot and commit
-        # with expected_base so a concurrent commit between the two is
-        # retried (recomputed) instead of silently erased by a rebase
-        @snapshots._retry_conflicts
-        def _merge_cow() -> int:
-            base = snapshots._load(root)["current"]
-            target = snapshots.read_snapshot(spark, root, snapshot_id=base)
-            src = source.select(*target.columns)
-            if matched is not None:
-                _check_merge_cardinality(
-                    src, keys, target.select(*keys)
-                )
-            if matched == "DELETE":
-                # WHEN MATCHED DELETE (± INSERT *): route through the
-                # CDC applier — delete rows carry the feed's delete type
-                changes = src.withColumn("_change_type", F.lit("delete"))
-                new_state = upsert.apply_changes(target, changes, keys)
-                if "NOT MATCHED" in clauses:
-                    new_anti = src.join(target.select(*keys), keys, "left_anti")
-                    new_state = new_state.unionByName(new_anti)
-            elif matched == "UPDATE SET *":
-                # UPDATE SET * replaces EVERY column with the source
-                # value, NULLs included (SQL MERGE semantics) — NOT
-                # merge_upsert's coalesce, which would keep stale target
-                # values wherever the source is NULL (e.g. a
-                # MERGE-driven PII null-out)
-                target_keys = target.select(*keys).distinct()
-                updated = src.join(target_keys, keys, "left_semi")
-                untouched = target.join(src.select(*keys), keys, "left_anti")
-                new_state = untouched.unionByName(updated)
-                if "NOT MATCHED" in clauses:
-                    new_state = new_state.unionByName(
-                        src.join(target.select(*keys), keys, "left_anti")
-                    )
-            else:  # insert-only
-                new_state = target.unionByName(
-                    src.join(target.select(*keys), keys, "left_anti")
-                )
-            return snapshots.write_snapshot(
-                new_state, root, mode="overwrite", expected_base=base
-            )
-
-        return {"op": "merge", "table": name, "snapshot_id": _merge_cow()}
+        sid = _merge(
+            spark, root, source, keys, parsed, t_alias, s_alias,
+            evolve=evolve_kw is not None,
+        )
+        return {"op": "merge", "table": name, "snapshot_id": sid}
 
     raise ValueError(
         "unsupported statement (supported: DELETE FROM..WHERE, "

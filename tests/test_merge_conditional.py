@@ -1,7 +1,7 @@
-"""Conditional multi-clause MERGE (sources/sql_dml.py
-_merge_extended): WHEN [NOT] MATCHED [AND <cond>] THEN UPDATE SET
-c = expr / DELETE / INSERT (cols) VALUES (exprs) — the Delta/Iceberg
-clause surface beyond the canonical three. Semantics pinned:
+"""Conditional multi-clause MERGE (sources/sql_dml.py _merge, the one
+MERGE executor): WHEN [NOT] MATCHED [AND <cond>] THEN UPDATE SET
+c = expr / DELETE / INSERT (cols) VALUES (exprs) — the full
+Delta/Iceberg clause surface. Semantics pinned:
 first-match-wins clause order, unassigned UPDATE columns keep target
 values, unlisted INSERT columns are NULL, unmatched-by-any-clause rows
 are untouched; identical results on copy-on-write and merge-on-read
@@ -317,7 +317,7 @@ def test_duplicate_source_keys_matched_raise(spark, root, mode):
     """Two source rows matching ONE target row must raise the MERGE
     cardinality error (Delta/Iceberg 'single target row matched
     multiple source rows'), not silently commit both post-images —
-    on both commit routes, conditional and canonical clause shapes."""
+    on both commit routes, conditional and unconditioned clause shapes."""
     S.write_snapshot(
         spark.createDataFrame([(1, 10)], "id long, qty long"), root
     )
@@ -325,7 +325,7 @@ def test_duplicate_source_keys_matched_raise(spark, root, mode):
     dup = spark.createDataFrame(
         [(1, 100), (1, 200)], "id long, qty long"
     )
-    # extended (conditional) route
+    # conditional clause
     with pytest.raises(Exception, match="matched multiple source"):
         sql_dml.execute_dml(
             spark,
@@ -334,7 +334,7 @@ def test_duplicate_source_keys_matched_raise(spark, root, mode):
             {"tbl": root},
             sources={"src": dup},
         )
-    # canonical route (UPDATE SET *)
+    # unconditioned UPDATE SET *
     with pytest.raises(Exception, match="matched multiple source"):
         sql_dml.execute_dml(
             spark,
@@ -343,7 +343,7 @@ def test_duplicate_source_keys_matched_raise(spark, root, mode):
             {"tbl": root},
             sources={"src": dup},
         )
-    # canonical DELETE route
+    # unconditioned DELETE
     with pytest.raises(Exception, match="matched multiple source"):
         sql_dml.execute_dml(
             spark,

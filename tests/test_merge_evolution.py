@@ -1,4 +1,4 @@
-"""MERGE WITH SCHEMA EVOLUTION (sources/sql_dml.py _merge_extended
+"""MERGE WITH SCHEMA EVOLUTION (sources/sql_dml.py _merge
 evolve=True): Delta autoMerge parity — source columns absent from the
 target widen the schema ATOMICALLY inside the merge commit (a failed
 merge leaves the schema untouched), pre-existing rows read NULL,

@@ -2,7 +2,8 @@
 its own manifest load: the published-history walk (``_main_ancestors``)
 is called only by ``snapshots._pin``, and no program module carries a
 "planned against snapshot" re-plan gate — ``_commit``'s version CAS is
-the one freshness check."""
+the one freshness check. SQL MERGE has one executor: only its retry
+attempt calls the CDC appliers."""
 
 from __future__ import annotations
 
@@ -53,3 +54,11 @@ def test_no_replan_freshness_gates():
         if "planned against snapshot" in line
     ]
     assert not hits, "re-plan freshness gate left in:\n" + "\n".join(hits)
+
+
+def test_sql_merge_has_one_executor():
+    f = ROOT / "e_commerce_lakehouse_spark/sources/sql_dml.py"
+    for name in ("apply_changes_dv", "apply_changes"):
+        v = _Callers(name)
+        v.visit(ast.parse(f.read_text()))
+        assert set(v.found) == {"_merge._run"}, (name, v.found)

@@ -2637,6 +2637,7 @@ def test_one_manifest_load_per_snapshot_operation(spark, root, monkeypatch):
     and plans its files on ONE manifest load (the commit's CAS is the
     only freshness check a writer needs)."""
     from e_commerce_lakehouse_spark.sources import deletes as D
+    from e_commerce_lakehouse_spark.sources import sql_dml
 
     S.write_snapshot(
         spark.createDataFrame([(i, i % 3) for i in range(20)], "id long, k long")
@@ -2663,6 +2664,9 @@ def test_one_manifest_load_per_snapshot_operation(spark, root, monkeypatch):
     assert loads(lambda: S.scan_snapshot(spark, root, [("id", "=", 3)], tag="cut")) == 1
     assert loads(lambda: S.read_snapshot(spark, root, tag="cut")) == 1
     assert loads(lambda: S.read_snapshot(spark, root, branch="stage")) == 1
+    assert loads(lambda: S.scan_snapshot(spark, root, [("id", "=", 3)], branch="stage")) == 1
+    for stmt in ("SELECT * FROM t BRANCH 'stage'", "SELECT * FROM t BRANCH 'stage' WHERE id = 3"):
+        assert loads(lambda: sql_dml.execute_dml(spark, stmt, {"t": root})) == 1
     assert loads(lambda: S.replace_where(
         spark, root, spark.createDataFrame([(3, 7)], row), [("id", "=", 3)]
     )) == 1

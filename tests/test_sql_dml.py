@@ -212,6 +212,16 @@ def test_grammar_rejections(spark, root):
         sql_dml.execute_dml(spark, "GRANT SELECT ON t TO alice", {"t": root})
     with pytest.raises(ValueError, match="IS NULL"):
         sql_dml.parse_where("x = NULL")
+    # UPDATE SET * / INSERT * need every target column on the source
+    wide = root + "_wide"
+    S.write_snapshot(spark.createDataFrame([(1, "a")], "id long, v string"), wide)
+    with pytest.raises(ValueError, match="missing target columns"):
+        sql_dml.execute_dml(
+            spark,
+            "MERGE INTO t USING s ON t.id = s.id WHEN MATCHED THEN UPDATE SET *",
+            {"t": wide},
+            sources={"s": spark.range(1)},
+        )
 
 
 def test_merge_update_star_writes_source_nulls(spark, root):
@@ -685,6 +695,119 @@ def test_merge_cow_concurrent_commit_not_lost(spark, root, monkeypatch):
     monkeypatch.setattr(S, "_commit", orig)
     got = {r.id: r.v for r in S.read_snapshot(spark, root).collect()}
     assert got == {1: "A", 2: "b", 3: "c", 9: "z"}  # append survived
+
+
+def _race_one_append(spark, root, monkeypatch):
+    """Make the next ``_commit`` land a concurrent append of (9, 'z')
+    first — the writer's own commit then loses the CAS."""
+    orig, raced = S._commit, {"done": False}
+
+    def racing(r, m):
+        if not raced["done"]:
+            raced["done"] = True
+            S.write_snapshot(
+                spark.createDataFrame([(9, "z")], "id long, v string"),
+                root,
+                mode="append",
+            )
+        orig(r, m)
+
+    monkeypatch.setattr(S, "_commit", racing)
+
+
+MODES = ["copy-on-write", "merge-on-read"]
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_merge_insert_only_keeps_raced_append(spark, root, monkeypatch, mode):
+    """An insert-only MERGE raced by an append of a key the source also
+    inserts: the retry recomputes against the append, so the raced row
+    wins the key (the serial order append-then-merge), on both modes."""
+    from e_commerce_lakehouse_spark.sources import deletes as D
+
+    S.write_snapshot(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), root
+    )
+    D.set_delete_mode(root, mode)
+    _race_one_append(spark, root, monkeypatch)
+    sql_dml.execute_dml(
+        spark,
+        "MERGE INTO t USING s ON t.id = s.id WHEN NOT MATCHED THEN INSERT *",
+        {"t": root},
+        sources={"s": spark.createDataFrame([(9, "S9"), (3, "c")], "id long, v string")},
+    )
+    monkeypatch.undo()
+    got = sorted((r.id, r.v) for r in S.read_snapshot(spark, root).collect())
+    assert got == [(1, "a"), (2, "b"), (3, "c"), (9, "z")]
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_merge_update_star_duplicate_key_target_rowwise(spark, root, mode):
+    """An unconditional UPDATE SET * updates EVERY target row of a
+    matched key: a duplicate-key target keeps both rows, updated."""
+    from e_commerce_lakehouse_spark.sources import deletes as D
+
+    S.write_snapshot(
+        spark.createDataFrame(
+            [(1, "a"), (1, "b"), (2, "c")], "id long, v string"
+        ),
+        root,
+    )
+    D.set_delete_mode(root, mode)
+    sql_dml.execute_dml(
+        spark,
+        "MERGE INTO t USING s ON t.id = s.id WHEN MATCHED THEN UPDATE SET *",
+        {"t": root},
+        sources={"s": spark.createDataFrame([(1, "X")], "id long, v string")},
+    )
+    got = sorted((r.id, r.v) for r in S.read_snapshot(spark, root).collect())
+    assert got == [(1, "X"), (1, "X"), (2, "c")]
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_merge_two_manifest_loads(spark, tmp_path, monkeypatch, mode):
+    """Every uncontended MERGE shape loads the manifest exactly twice:
+    the executor attempt's own load and the committing writer's. A
+    DELETE-only MERGE needs only the key columns on its source."""
+    from e_commerce_lakehouse_spark.sources import deletes as D
+
+    src = spark.createDataFrame([(1, "S1"), (3, "S3")], "id long, v string")
+    on = "MERGE INTO t USING s ON t.id = s.id "
+    upsert = "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    shapes = [
+        (on + upsert, src, [(1, "S1"), (2, "b"), (3, "S3")]),
+        (on + "WHEN MATCHED THEN DELETE", src.select("id"), [(2, "b")]),
+        (on + "WHEN NOT MATCHED THEN INSERT *", src, [(1, "a"), (2, "b"), (3, "S3")]),
+        (
+            on + "WHEN MATCHED AND s.v = 'S1' THEN UPDATE SET v = s.v "
+            "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, 'new')",
+            src,
+            [(1, "S1"), (2, "b"), (3, "new")],
+        ),
+        (
+            "MERGE WITH SCHEMA EVOLUTION INTO t USING s ON t.id = s.id " + upsert,
+            src.withColumn("tag", F.col("v")),
+            [(1, "S1", "S1"), (2, "b", None), (3, "S3", "S3")],
+        ),
+    ]
+    orig, calls = S._load, {"n": 0}
+
+    def counting(r):
+        calls["n"] += 1
+        return orig(r)
+
+    for i, (stmt, source, want) in enumerate(shapes):
+        root = str(tmp_path / f"t{i}")
+        S.write_snapshot(
+            spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), root
+        )
+        D.set_delete_mode(root, mode)
+        monkeypatch.setattr(S, "_load", counting)
+        calls["n"] = 0
+        sql_dml.execute_dml(spark, stmt, {"t": root}, sources={"s": source})
+        monkeypatch.setattr(S, "_load", orig)
+        assert calls["n"] == 2, stmt
+        assert _rows(S.read_snapshot(spark, root)) == want, stmt
 
 
 def test_call_procedures_route_to_maintenance_ops(spark, root):
