@@ -745,13 +745,16 @@ def _merge(
     to ONE CDC feed — matched rows route through a first-match-wins
     ``when()`` chain into delete / post-image rows (UPDATE keeps
     unassigned columns at their target values), source rows matching
-    no key take the first applicable NOT MATCHED clause — and the feed
-    commits through the table's ``write.delete.mode``: merge-on-read
-    via :func:`deletes.apply_changes_dv` (O(batch) both sides; the
-    target read opens only the files the batch's keys prune to), or
-    copy-on-write via ``upsert.apply_changes`` + one overwrite commit.
-    Matching is row-wise: every target row of a matched key is
-    updated, duplicate-key targets included.
+    no key take the first applicable NOT MATCHED clause and insert —
+    and the feed commits through the table's ``write.delete.mode``:
+    merge-on-read via :func:`deletes.apply_changes_dv` (O(batch) both
+    sides; the target read opens only the files the batch's keys prune
+    to), or copy-on-write via ``upsert.apply_changes`` on the matched
+    side, the inserts appended, in one overwrite commit. Matching is
+    row-wise: every target row of a matched key is updated,
+    duplicate-key targets included. An INSERT touches no target row,
+    even one sharing its key: a NULL key matches nothing, so its
+    source row inserts beside the target's NULL-key rows.
 
     Each retry attempt loads the manifest ONCE and derives everything
     from it — the delete mode, the target columns and types, the
@@ -859,7 +862,10 @@ def _merge(
             branch = F.when(cond_cols[i], F.lit(i)).otherwise(branch)
         return branch
 
-    def _build_feed(target: DataFrame, t_cols, dtypes, compiled) -> DataFrame:
+    def _build_feed(target: DataFrame, t_cols, dtypes, compiled):
+        """``(changes, inserts)``: the matched side's key-addressed CDC
+        rows, and the NOT MATCHED rows, which address no target row —
+        either None when no clause of its kind exists."""
         matched_cl = [c for c in compiled if c["head"] == "MATCHED"]
         notm_cl = [c for c in compiled if c["head"] == "NOT MATCHED"]
         tgt = target.select([F.col(c).alias(_TPFX + c) for c in t_cols])
@@ -891,14 +897,19 @@ def _merge(
                     pair=(src, tgt, key_eq),
                 )
         parts: list[DataFrame] = []
+        ins: list[DataFrame] = []
+        # an unconditional matched clause fires for every pair, so no
+        # matched target row goes unmodified and the duplicate-key carry
+        # below is empty: it runs only when every matched clause has a
+        # condition
+        carry = bool(matched_cl) and all(c["cond"] is not None for c in matched_cl)
         if matched_cl:
             # __tid gives each target row an identity within this one
-            # query (stable per scan) — needed twice below: the
-            # per-target-row cardinality rule and the duplicate-key
-            # carry. Harmless extra column for the clause selects.
+            # query (stable per scan), for the carry. Harmless extra
+            # column for the clause selects.
             tgt_w = tgt.withColumn(
                 "__tid", F.monotonically_increasing_id()
-            )
+            ) if carry else tgt
             pairs = src.join(tgt_w, key_eq, "inner").withColumn(
                 "__clause", _first_match_idx([c["when"] for c in matched_cl]),
             )
@@ -930,6 +941,7 @@ def _merge(
                 parts.append(
                     sub.select(*row, F.lit(ct).alias("_change_type"))
                 )
+        if carry:
             # Row-completeness for DUPLICATE-KEY targets: the commit
             # routes are key-addressed (apply_changes / apply_changes_dv
             # replace every target row of a fed key), so a target row
@@ -986,15 +998,11 @@ def _merge(
                         .cast(dtypes[col]).alias(col)
                         for col in t_cols
                     ]
-                parts.append(
-                    sub.select(
-                        *row, F.lit("insert").alias("_change_type")
-                    )
-                )
-        feed = parts[0]
-        for p in parts[1:]:
-            feed = feed.unionByName(p)
-        return feed
+                ins.append(sub.select(*row))
+        return tuple(
+            functools.reduce(DataFrame.unionByName, f) if f else None
+            for f in (parts, ins)
+        )
 
     @snapshots._retry_conflicts
     def _run() -> int:
@@ -1008,10 +1016,24 @@ def _merge(
         mor = deletes._mode_of(manifest) == "merge-on-read"
         # merge-on-read reads only the files the manifest can't prune on
         # the batch's key IN-list (the change writer's keyscan); the
-        # join is the exactness boundary, the prune a superset
+        # join is the exactness boundary, the prune a superset — of
+        # every key the feed addresses only while each inserted key is
+        # its source row's own: an INSERT VALUES key expression or a
+        # key cast can land on a target row outside it, which the
+        # carry below must see
+        keys_pass = all(
+            source.schema[k].dataType == dtypes[k] for k in keys
+        ) and all(
+            re.fullmatch(
+                rf"{re.escape(s_alias)}\.{re.escape(k)}",
+                c["payload"][k].strip(), re.IGNORECASE,
+            )
+            for c in compiled if c["action"] == "insert_values"
+            for k in keys
+        )
         rel_files = (
             deletes._plan_matched_scan(manifest, root, source, keys)[0]
-            if mor else None
+            if mor and keys_pass else None
         )
         target = snapshots._entry_frame(spark, root, manifest, entry, rel_files)
         for n, dt in add:
@@ -1019,15 +1041,46 @@ def _merge(
             # so the pair frame and UPDATE's keep-target-value branch
             # see them uniformly (Delta autoMerge read semantics)
             target = target.withColumn(n, F.lit(None).cast(dt))
-        feed = _build_feed(target, t_cols, dtypes, compiled)
-        if mor:
-            return deletes.apply_changes_dv(
-                spark, root, feed, keys, expected_base=entry["id"],
-                evolve_schema=bool(add),
+        changes, inserts = _build_feed(target, t_cols, dtypes, compiled)
+        target = target.select(*t_cols)
+        if not mor:
+            state = target if changes is None else upsert.apply_changes(
+                target, changes, keys
             )
-        return snapshots.write_snapshot(
-            upsert.apply_changes(target.select(*t_cols), feed, keys),
-            root, mode="overwrite", expected_base=entry["id"],
+            if inserts is not None:
+                state = state.unionByName(inserts)
+            return snapshots.write_snapshot(
+                state, root, mode="overwrite", expected_base=entry["id"],
+            )
+        feed = [] if changes is None else [changes]
+        if inserts is not None:
+            # the DV applier addresses every fed key null-safe (the CDC
+            # contract), but an INSERT addresses no target row: a
+            # target row sharing an inserted key (a NULL key, which
+            # ``t.k = s.k`` never matches, or an INSERT VALUES
+            # expression's) and untouched by the matched side rides the
+            # feed unchanged, like the duplicate-key carry
+            ik = inserts.select(*[F.col(k).alias(_SPFX + k) for k in keys])
+            if keys_pass:
+                # a non-NULL source key that is inserted matched no
+                # target row — only a NULL-bearing one can share a key
+                ik = ik.filter(functools.reduce(
+                    _op.or_, [F.col(_SPFX + k).isNull() for k in keys]
+                ))
+            held = target.join(ik.distinct(), functools.reduce(_op.and_, [
+                F.col(k).eqNullSafe(F.col(_SPFX + k)) for k in keys
+            ]), "left_semi")
+            if changes is not None and not keys_pass:
+                # a modified key's rows are fed already (changed keys
+                # come from the equi-join, so never share a NULL one)
+                held = held.join(changes.select(*keys), keys, "left_anti")
+            feed += [
+                inserts.withColumn("_change_type", F.lit("insert")),
+                held.withColumn("_change_type", F.lit("update_postimage")),
+            ]
+        return deletes.apply_changes_dv(
+            spark, root, functools.reduce(DataFrame.unionByName, feed), keys,
+            expected_base=entry["id"], evolve_schema=bool(add),
         )
 
     return _run()

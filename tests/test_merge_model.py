@@ -2,8 +2,9 @@
 clause lists run through BOTH commit routes and compared against an
 independent pure-Python implementation of the MERGE contract
 (first-match-wins clauses, SQL three-valued conditions where NULL
-comparisons never match, UPDATE keeps unassigned columns, INSERT
-NULL-pads unlisted columns, unmatched-by-any-clause rows untouched)."""
+comparisons never match, a NULL merge key matches nothing, UPDATE keeps
+unassigned columns, INSERT NULL-pads unlisted columns,
+unmatched-by-any-clause rows untouched)."""
 
 from __future__ import annotations
 
@@ -15,9 +16,10 @@ from e_commerce_lakehouse_spark.sources import deletes as D
 from e_commerce_lakehouse_spark.sources import snapshots as S
 from e_commerce_lakehouse_spark.sources import sql_dml
 
-# rows are (k, a, b); a may be NULL (condition semantics), b may be NULL
+# rows are (k, a, b); k may be NULL (a NULL key matches nothing), a may
+# be NULL (condition semantics), b may be NULL
 _row = st.tuples(
-    st.integers(0, 9),
+    st.sampled_from([*range(10), None]),
     st.one_of(st.none(), st.integers(-5, 5)),
     st.one_of(st.none(), st.sampled_from(["x", "y", "z"])),
 )
@@ -97,7 +99,10 @@ def _model(target, source, matched, not_matched):
     exists)."""
     from collections import Counter
 
-    tgt = {r[0]: r for r in target}
+    # `t.k = s.k` never matches a NULL key: NULL-key target rows are
+    # untouched, NULL-key source rows go to the NOT MATCHED clauses
+    tgt = {r[0]: r for r in target if r[0] is not None}
+    kept = [r for r in target if r[0] is None]
     if matched:
         if any(cond is None for cond, _ in matched):
             # an unconditional clause means every matched pair
@@ -145,7 +150,7 @@ def _model(target, source, matched, not_matched):
                 else:  # INSERT (k, a) VALUES (s.k, s.a)
                     inserts.append((s[0], s[1], None))
                 break
-    return Counter(list(out.values()) + inserts)
+    return Counter(list(out.values()) + kept + inserts)
 
 
 def _render(matched, not_matched):

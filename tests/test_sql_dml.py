@@ -664,39 +664,6 @@ def test_merge_rejects_mispaired_clause_actions(spark, root):
     assert S.read_snapshot(spark, root).count() == 1
 
 
-def test_merge_cow_concurrent_commit_not_lost(spark, root, monkeypatch):
-    """ADVICE round-8 (medium): SQL MERGE's copy-on-write route derives
-    the whole new table state from a target read — a concurrent append
-    landing before its commit must be retried into the result, never
-    erased by a metadata rebase."""
-    S.write_snapshot(
-        spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), root
-    )
-    orig, raced = S._commit, {"done": False}
-
-    def racing(r, m):
-        if not raced["done"]:
-            raced["done"] = True
-            S.write_snapshot(
-                spark.createDataFrame([(9, "z")], "id long, v string"),
-                root,
-                mode="append",
-            )
-        orig(r, m)
-
-    monkeypatch.setattr(S, "_commit", racing)
-    sql_dml.execute_dml(
-        spark,
-        "MERGE INTO t USING s ON t.id = s.id "
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
-        {"t": root},
-        sources={"s": spark.createDataFrame([(1, "A"), (3, "c")], "id long, v string")},
-    )
-    monkeypatch.setattr(S, "_commit", orig)
-    got = {r.id: r.v for r in S.read_snapshot(spark, root).collect()}
-    assert got == {1: "A", 2: "b", 3: "c", 9: "z"}  # append survived
-
-
 def _race_one_append(spark, root, monkeypatch):
     """Make the next ``_commit`` land a concurrent append of (9, 'z')
     first — the writer's own commit then loses the CAS."""
@@ -713,6 +680,27 @@ def _race_one_append(spark, root, monkeypatch):
         orig(r, m)
 
     monkeypatch.setattr(S, "_commit", racing)
+
+
+def test_merge_cow_concurrent_commit_not_lost(spark, root, monkeypatch):
+    """ADVICE round-8 (medium): SQL MERGE's copy-on-write route derives
+    the whole new table state from a target read — a concurrent append
+    landing before its commit must be retried into the result, never
+    erased by a metadata rebase."""
+    S.write_snapshot(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"), root
+    )
+    _race_one_append(spark, root, monkeypatch)
+    sql_dml.execute_dml(
+        spark,
+        "MERGE INTO t USING s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        {"t": root},
+        sources={"s": spark.createDataFrame([(1, "A"), (3, "c")], "id long, v string")},
+    )
+    monkeypatch.undo()
+    got = {r.id: r.v for r in S.read_snapshot(spark, root).collect()}
+    assert got == {1: "A", 2: "b", 3: "c", 9: "z"}  # append survived
 
 
 MODES = ["copy-on-write", "merge-on-read"]
@@ -762,6 +750,55 @@ def test_merge_update_star_duplicate_key_target_rowwise(spark, root, mode):
     )
     got = sorted((r.id, r.v) for r in S.read_snapshot(spark, root).collect())
     assert got == [(1, "X"), (1, "X"), (2, "c")]
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_merge_insert_leaves_same_key_target_rows(spark, tmp_path, mode):
+    """An INSERT touches no target row, even one sharing its key:
+    ``t.id = s.id`` never matches a NULL key, so a NULL-key source row
+    inserts beside the target's NULL-key row, and an INSERT VALUES
+    expression may produce a key the target already holds, also in a
+    file the source keys prune away."""
+    from e_commerce_lakehouse_spark.sources import deletes as D
+
+    on = "MERGE INTO t USING s ON t.id = s.id "
+    star = "WHEN NOT MATCHED THEN INSERT *"
+    plus1 = "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id + 1, 'new')"
+    src = [(None, "S"), (1, "B"), (0, "Z")]
+    kept = [(None, "a"), (1000, "f")]
+    cases = [
+        (src, star, kept + [(1, "b"), (None, "S"), (0, "Z")]),
+        (src, "WHEN MATCHED THEN UPDATE SET * " + star,
+         kept + [(1, "B"), (None, "S"), (0, "Z")]),
+        (src, "WHEN MATCHED THEN DELETE " + star,
+         kept + [(None, "S"), (0, "Z")]),
+        (src, plus1, kept + [(1, "b"), (None, "new"), (1, "new")]),
+        (src, "WHEN MATCHED THEN UPDATE SET * " + plus1,
+         kept + [(1, "B"), (None, "new"), (1, "new")]),
+        (
+            [(0, "Z")],
+            "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id + 1000, 'new')",
+            kept + [(1, "b"), (1000, "new")],
+        ),
+    ]
+    schema = "id long, v string"
+    for i, (rows, clauses, want) in enumerate(cases):
+        root = str(tmp_path / f"t{i}")
+        S.write_snapshot(
+            spark.createDataFrame([(None, "a"), (1, "b")], schema), root
+        )
+        S.write_snapshot(
+            spark.createDataFrame([(1000, "f")], schema), root, mode="append"
+        )
+        D.set_delete_mode(root, mode)
+        sql_dml.execute_dml(
+            spark, on + clauses, {"t": root},
+            sources={"s": spark.createDataFrame(rows, schema)},
+        )
+        got = sorted(
+            (tuple(r) for r in S.read_snapshot(spark, root).collect()), key=repr
+        )
+        assert got == sorted(want, key=repr), clauses
 
 
 @pytest.mark.parametrize("mode", MODES)
