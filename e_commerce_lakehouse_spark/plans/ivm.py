@@ -41,7 +41,7 @@ rewritten file contributes an offsetting −1/+1 pair.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import merge_partial_aggregates
@@ -97,6 +97,20 @@ def full_state_aggregate(fact: DataFrame, spec: dict) -> DataFrame:
     )
 
 
+def _change_weight() -> Column:
+    """A CDC row's IVM weight: +1 for insert/update_postimage, −1 for
+    delete/update_preimage; an unknown ``_change_type`` raises
+    in-plan."""
+    return (
+        F.when(F.col("_change_type").isin("insert", "update_postimage"), F.lit(1))
+        .when(F.col("_change_type").isin("delete", "update_preimage"), F.lit(-1))
+        .otherwise(
+            F.expr("CAST(raise_error('ivm: unknown _change_type') AS INT)")
+        )
+        .cast("long")
+    )
+
+
 def signed_delta_aggregate(changes: DataFrame, spec: dict) -> DataFrame:
     """Per-key SIGNED partials of a CDC feed: weight +1 for
     insert/update_postimage rows, −1 for delete/update_preimage rows
@@ -105,14 +119,7 @@ def signed_delta_aggregate(changes: DataFrame, spec: dict) -> DataFrame:
     payload columns never ride past the first select. An unknown
     ``_change_type`` raises in-plan, inside the weight every measure
     consumes, so it cannot be pruned."""
-    w = (
-        F.when(F.col("_change_type").isin("insert", "update_postimage"), F.lit(1))
-        .when(F.col("_change_type").isin("delete", "update_preimage"), F.lit(-1))
-        .otherwise(
-            F.expr("CAST(raise_error('ivm: unknown _change_type') AS INT)")
-        )
-        .cast("long")
-    )
+    w = _change_weight()
     rows = changes.select(
         *[F.expr(e).alias(k) for k, e in spec["group"].items()],
         *[
@@ -469,18 +476,10 @@ def read_review_summary(
 
 def _signed(df: DataFrame) -> DataFrame:
     """CDC frame -> payload + ``_w`` (+1 insert/postimage, -1
-    delete/preimage), the same in-plan-guarded weighting as
-    :func:`signed_delta_aggregate`."""
-    w = (
-        F.when(F.col("_change_type").isin("insert", "update_postimage"), F.lit(1))
-        .when(F.col("_change_type").isin("delete", "update_preimage"), F.lit(-1))
-        .otherwise(
-            F.expr("CAST(raise_error('ivm: unknown _change_type') AS INT)")
-        )
-        .cast("long")
-    )
+    delete/preimage), :func:`signed_delta_aggregate`'s in-plan-guarded
+    weight."""
     cols = [c for c in df.columns if not c.startswith("_")]
-    return df.select(*cols, w.alias("_w"))
+    return df.select(*cols, _change_weight().alias("_w"))
 
 
 def _check_disjoint(a: DataFrame, b: DataFrame, keys: list[str]) -> None:

@@ -24,15 +24,18 @@ Contract with the rest of the lakehouse tier:
   (merged replacements, CDC post-states) exactly as write_snapshot
   guards its rows — the merge-on-read route is not a constraint
   bypass;
-- appends/rollbacks CARRY active DVs (write_snapshot/_attach,
-  rollback), expire/remove_orphans GC sidecar dirs exactly like data
-  dirs, time travel reads each snapshot with ITS dvs;
+- every commit goes through the one commit path
+  (``snapshots._child_entry`` + ``snapshots._commit_entry``), so
+  appends, rollbacks and schema DDL CARRY active DVs;
+  expire/remove_orphans GC sidecar dirs exactly like data dirs, time
+  travel reads each snapshot with ITS dvs;
 - ops that read data files raw (replace_where, update_where,
   compact_files, snapshot_file_changes) REFUSE while DVs are active
   (``_guard_no_dvs``) — :func:`rewrite_deletes` materializes the
-  deletes copy-on-write and clears the state, after which they work
-  again. ``optimize_zorder`` and ``snapshot_changes`` read through
-  ``read_snapshot`` and are DV-correct as-is;
+  deletes copy-on-write (through the rewrites' shared commit half,
+  ``snapshots._commit_rewrite``) and clears the state, after which
+  they work again. ``optimize_zorder`` and ``snapshot_changes`` read
+  through ``read_snapshot`` and are DV-correct as-is;
 - ``table_stats``/SHOW STATS subtract DV row counts (footer-only).
 
 Sizing note: a delete that dooms most of a file's rows is cheaper
@@ -48,7 +51,6 @@ import json
 import operator
 import os
 import shutil
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -186,9 +188,7 @@ def _load_guarded(root: str, op: str) -> tuple[dict, dict]:
     if manifest["current"] is None:
         raise KeyError(f"table {root} has no snapshots; write_snapshot first")
     entry = S._entry(manifest, manifest["current"])
-    S._guard_identity_mapping(entry, op)
-    S._guard_no_initial_defaults(entry, op)
-    S._guard_no_widened(entry, op)
+    S._guard_raw_layout(entry, op)
     return manifest, entry
 
 
@@ -201,22 +201,22 @@ def _commit_change(
     marked: DataFrame | None,
     appended: DataFrame | None = None,
 ) -> int:
-    """The sidecar-and-commit half every DV writer shares: ``marked``'s
+    """The sidecar half every DV writer shares: ``marked``'s
     ``(_file, _pos)`` go to one sidecar, ``appended`` (CHECK-guarded)
     to one data dir, and ONE entry on top of ``entry`` carries both —
-    atomic. The entry's schema widens by any column ``appended``
-    carries beyond the table's (apply_changes_dv's evolve_schema).
+    atomic, through the one commit path. The entry's schema widens by
+    any column ``appended`` carries beyond the table's
+    (apply_changes_dv's evolve_schema).
 
     An ``appended`` frame always commits, even when it writes no rows
     and nothing is marked: an empty micro-batch's entry is its
     exactly-once record (its meta carries the batch id), it just
     references no empty dir. Without one (DELETE), a change that marks
     nothing commits nothing and returns ``entry``'s id."""
-    snap_id = manifest["snapshots"][-1]["id"] + 1
     dvs = list(entry.get("dvs", []))
     n_marked = 0
     if marked is not None:
-        dv_dir, n_marked = _write_dv_sidecar(root, snap_id, marked)
+        dv_dir, n_marked = _write_dv_sidecar(root, S._next_id(manifest), marked)
         if dv_dir is not None:
             dvs.append(dv_dir)
     if appended is None and not n_marked:
@@ -226,33 +226,13 @@ def _commit_change(
         table_cols = {f["name"] for f in json.loads(schema)["fields"]}
         if set(appended.columns) - table_cols:
             schema = S._merge_append_schema(schema, appended.schema)
-        data_dir = S._claim_data_dir(root, snap_id, op)
-        S._write_data_dir(_guarded(appended, manifest), root, data_dir, manifest)
-        if S._parquet_dir_rows(root, data_dir):
-            manifest["dir_stats"][data_dir] = S._collect_dir_stats(root, data_dir)
-        else:
-            shutil.rmtree(os.path.join(root, data_dir), ignore_errors=True)
-            data_dir = None
-    new_entry = {
-        "id": snap_id,
-        "op": op,
-        "ts": time.time(),
-        "dirs": entry["dirs"] + ([data_dir] if data_dir else []),
-        "parent": manifest["current"],
-        "schema": schema,
-        "meta": {**meta, "n_deleted": n_marked},
-    }
-    if dvs:
-        new_entry["dvs"] = dvs
-    if "files" in entry:
-        files = {d: list(fs) for d, fs in entry["files"].items()}
-        if data_dir:
-            files[data_dir] = sorted(manifest["dir_stats"][data_dir])
-        new_entry["files"] = files
-    manifest["snapshots"].append(new_entry)
-    manifest["current"] = snap_id
-    S._commit(root, manifest)
-    return snap_id
+        data_dir = S._write_rows_dir(
+            _guarded(appended, manifest), root, manifest, op
+        )
+    return S._commit_entry(root, manifest, S._child_entry(
+        manifest, op, entry, add_dir=data_dir, dvs=dvs, schema=schema,
+        meta={**meta, "n_deleted": n_marked},
+    ))
 
 
 @S._retry_conflicts
@@ -349,8 +329,7 @@ def rewrite_deletes(
     if not rewrite and len(dvs) <= 1:
         return entry["id"]  # nothing to purge, stack already minimal
 
-    snap_id = manifest["snapshots"][-1]["id"] + 1
-    files = {d: sorted(names) for d, names in keep.items()}
+    survivors = None
     if rewrite:
         tagged = _tag_positions(
             S._scan_entry_files(
@@ -362,12 +341,6 @@ def rewrite_deletes(
             (tagged._file == dv.file) & (tagged._pos == dv.pos),
             "left_anti",
         ).drop("_file", "_pos")
-        data_dir = S._claim_data_dir(root, snap_id, "purge")
-        S._write_data_dir(survivors, root, data_dir, manifest)
-        manifest["dir_stats"][data_dir] = S._collect_dir_stats(
-            root, data_dir
-        )
-        files[data_dir] = sorted(manifest["dir_stats"][data_dir])
 
     new_dvs: list[str] = []
     if keep_marked:
@@ -377,40 +350,27 @@ def rewrite_deletes(
         remaining = dv.filter(F.col("file").isin(keep_marked)).select(
             F.col("file").alias("_file"), F.col("pos").alias("_pos")
         )
-        dv_dir, _n = _write_dv_sidecar(root, snap_id, remaining)
+        dv_dir, _n = _write_dv_sidecar(root, S._next_id(manifest), remaining)
         if dv_dir is not None:
             new_dvs = [dv_dir]
 
-    new_entry = {
-        "id": snap_id,
-        "op": "rewrite_deletes",
-        "ts": time.time(),
-        "dirs": sorted(files),
-        "files": files,
-        "parent": manifest["current"],
-        "schema": entry["schema"],
-        # row-preserving by construction (Delta marks REORG PURGE
-        # dataChange=false too): every visible row of the parent is
-        # either carried verbatim, rewritten minus ALREADY-DELETED
-        # positions, or still marked by the consolidated sidecar —
-        # streams skip this commit instead of refusing/re-emitting,
-        # which together with compact's flag makes the whole maintain()
-        # choreography safe under live consumers. Identity mapping is
-        # guarded above, so a skipping stream's pinned projection
-        # stays valid.
-        "data_change": False,
-        "meta": {
-            "purged_dvs": list(dvs),
-            "rewritten": sorted(rewrite),
-            "kept_marked": len(keep_marked),
-        },
+    meta = {
+        "purged_dvs": list(dvs),
+        "rewritten": sorted(rewrite),
+        "kept_marked": len(keep_marked),
     }
-    if new_dvs:
-        new_entry["dvs"] = new_dvs
-    manifest["snapshots"].append(new_entry)
-    manifest["current"] = snap_id
-    S._commit(root, manifest)
-    return snap_id
+    # row-preserving by construction (Delta marks REORG PURGE
+    # dataChange=false too): every visible row of the parent is either
+    # carried verbatim, rewritten minus ALREADY-DELETED positions, or
+    # still marked by the consolidated sidecar — streams skip this
+    # commit instead of refusing/re-emitting, which together with
+    # compact's flag makes the whole maintain() choreography safe under
+    # live consumers. Identity mapping is guarded above, so a skipping
+    # stream's pinned projection stays valid.
+    return S._commit_rewrite(
+        root, manifest, entry, "rewrite_deletes", "purge", survivors, keep,
+        meta, dvs=new_dvs, data_change=False,
+    )
 
 
 @S._retry_conflicts

@@ -1237,21 +1237,26 @@ def _stat_value(v):
     return None
 
 
-def _collect_dir_stats(root: str, data_dir: str, stats_cols=None) -> dict:
-    """Per-file column stats for one immutable data dir, read from
-    parquet FOOTERS only (pyarrow metadata — zero data pages touched,
-    the same place Iceberg's write path gets its manifest stats).
-    Returns {relative_file: {col: {"mn","mx","nulls","rows"}}} with
-    ``mn``/``mx`` absent when the footer carries no usable bound."""
+def _collect_dir_stats(
+    root: str, data_dir: str, stats_cols=None
+) -> tuple[dict, int]:
+    """Per-file column stats and the total row count of one immutable
+    data dir, from ONE pass over its parquet FOOTERS (pyarrow metadata
+    — zero data pages touched, the same place Iceberg's write path gets
+    its manifest stats). The stats are {relative_file: {col: {"mn",
+    "mx","nulls","rows"}}} with ``mn``/``mx`` absent when the footer
+    carries no usable bound."""
     import pyarrow.parquet as pq
 
     out: dict = {}
+    n_rows = 0
     dpath = os.path.join(root, data_dir)
     for name in sorted(os.listdir(dpath)):
         if not name.endswith(".parquet"):
             continue
         md = pq.ParquetFile(os.path.join(dpath, name)).metadata
         rows = md.num_rows
+        n_rows += rows
         cols: dict = {}
         for rg in range(md.num_row_groups):
             g = md.row_group(rg)
@@ -1295,7 +1300,7 @@ def _collect_dir_stats(root: str, data_dir: str, stats_cols=None) -> dict:
         for c in cols.values():
             c.pop("no_bounds", None)
         out[name] = cols
-    return out
+    return out, n_rows
 
 
 #: per-session [active writers, the caller's value] of the parquet
@@ -1407,6 +1412,94 @@ def _write_data_dir(
         except Exception:
             shutil.rmtree(os.path.join(root, data_dir), ignore_errors=True)
             raise
+
+
+def _next_id(manifest: dict) -> int:
+    """The id the next committed entry takes (ids are globally
+    monotonic across refs)."""
+    return (manifest["snapshots"][-1]["id"] + 1) if manifest["snapshots"] else 1
+
+
+def _write_rows_dir(
+    df: DataFrame, root: str, manifest: dict, op: str, stats_cols=None
+) -> str | None:
+    """Claim the next snapshot's data dir (``op`` names it), write
+    ``df`` into it and read its footers ONCE: the per-file stats land
+    in ``manifest["dir_stats"]`` and the dir is returned. A dir whose
+    footers hold no rows is removed and None returned — no entry ever
+    references a 0-row file (its stats would be empty, which hides the
+    table's row count and can never be pruned)."""
+    data_dir = _claim_data_dir(root, _next_id(manifest), op)
+    _write_data_dir(df, root, data_dir, manifest)
+    stats, n_rows = _collect_dir_stats(root, data_dir, stats_cols)
+    if not n_rows:
+        shutil.rmtree(os.path.join(root, data_dir), ignore_errors=True)
+        return None
+    manifest["dir_stats"][data_dir] = stats
+    return data_dir
+
+
+def _child_entry(
+    manifest: dict,
+    op: str,
+    src: dict | None = None,
+    add_dir: str | None = None,
+    **fields,
+) -> dict:
+    """The one builder of a new snapshot entry (next id, ``op``, now):
+    its content — dirs, per-dir file lists, deletion vectors, column
+    mapping, schema — is ``src``'s (None: no data), with ``fields``
+    replacing any of it (and setting ``meta`` / ``data_change``), plus
+    ``add_dir``, a data dir this commit wrote (None: it wrote no rows).
+    Passing ``files`` makes a file-granular entry whose dirs are that
+    map's. ``files`` appears only on file-granular entries, and the
+    new dir joins their file lists; an absent or empty ``dvs`` or
+    ``mapping`` stays absent; ``data_change`` is recorded only when
+    False. The parent is set by :func:`_commit_entry`."""
+    entry: dict = {"id": _next_id(manifest), "op": op, "ts": time.time(), "meta": {}}
+    if src is not None:
+        entry["dirs"], entry["schema"] = list(src["dirs"]), src["schema"]
+        if "files" in src:
+            entry["files"] = dict(src["files"])
+        if src.get("dvs"):
+            entry["dvs"] = list(src["dvs"])
+        if src.get("mapping"):
+            entry["mapping"] = dict(src["mapping"])
+    entry.update(fields)
+    if "files" in fields:
+        entry["dirs"] = sorted(entry["files"])
+    entry.setdefault("dirs", [])
+    if add_dir is not None:
+        entry["dirs"] = entry["dirs"] + [add_dir]
+        if "files" in entry:
+            entry["files"] = {
+                **entry["files"], add_dir: sorted(manifest["dir_stats"][add_dir])
+            }
+    for k in ("dvs", "mapping"):
+        if not entry.get(k):
+            entry.pop(k, None)
+    if entry.get("data_change", True):
+        entry.pop("data_change", None)
+    return entry
+
+
+def _commit_entry(
+    root: str, manifest: dict, entry: dict, branch: str | None = None
+) -> int:
+    """The one commit path of a new snapshot entry: its parent is the
+    head of the ref it advances (``branch``, else main's ``current``);
+    it is appended, the ref moves to it, and :func:`_commit`'s version
+    CAS publishes both at once or raises :class:`CommitConflict`.
+    Returns the entry's id."""
+    if branch is None:
+        entry["parent"] = manifest["current"]
+        manifest["current"] = entry["id"]
+    else:
+        entry["parent"] = manifest["branches"][branch]
+        manifest["branches"][branch] = entry["id"]
+    manifest["snapshots"].append(entry)
+    _commit(root, manifest)
+    return entry["id"]
 
 
 @_retry_conflicts
@@ -1827,8 +1920,6 @@ def write_snapshot(
         from ..operators.constraints import guard_constraints
 
         df = guard_constraints(df, stored)
-    next_id = (manifest["snapshots"][-1]["id"] + 1) if manifest["snapshots"] else 1
-    data_dir = _claim_data_dir(root, next_id, mode)
     if stats_cols is not None and manifest.get("partition_spec"):
         # a stats_cols restriction must not blind the hidden transform
         # columns or the spec would stop pruning
@@ -1846,78 +1937,39 @@ def write_snapshot(
             df = df.select(
                 *[F.col(c).alias(cmap.get(c, c)) for c in df.columns]
             )
-    _write_data_dir(df, root, data_dir, manifest)
-    dir_stats = _collect_dir_stats(root, data_dir, stats_cols)
-    schema_json = logical_schema.json()
-
-    def _attach(m: dict, base: int | None) -> int:
-        """Build this write's manifest entry against ``m``'s state and
-        advance the ref — called once, and again per conflict REBASE
-        (data dir + stats reused; only metadata recomputes)."""
-        snap_id = (m["snapshots"][-1]["id"] + 1) if m["snapshots"] else 1
-        dirs, files, dvs, mapping = [data_dir], None, None, None
-        entry_schema = schema_json
-        if mode == "append" and base is not None:
-            parent = _entry(m, base)
-            dirs = parent["dirs"] + [data_dir]
-            if "files" in parent:
-                # the parent references dirs at FILE granularity (a
-                # replace_where/compact commit): the append must carry
-                # the kept-file lists forward or dropped files resurrect
-                files = dict(parent["files"])
-            if parent.get("dvs"):
-                # active deletion vectors likewise carry forward, or
-                # DV-deleted rows of parent files resurrect
-                dvs = list(parent["dvs"])
-            if parent.get("mapping"):
-                # logical->physical column mapping carries like dvs
-                mapping = dict(parent["mapping"])
-            # an append never SHRINKS the logical table: parent fields
-            # win (order/type), new fields append — schema evolution by
-            # widening write (recomputed per rebase: a concurrent
-            # append may have widened the parent first)
-            entry_schema = _merge_append_schema(
-                parent["schema"], logical_schema
-            )
-        m["dir_stats"][data_dir] = dir_stats
-        if files is not None:
-            files[data_dir] = sorted(dir_stats)
-        entry = {
-            "id": snap_id,
-            "op": mode if branch is None else f"{mode}@{branch}",
-            "ts": time.time(),
-            "dirs": dirs,
-            "parent": base,
-            "schema": entry_schema,
-            "meta": meta or {},
-        }
-        if not data_change:
-            entry["data_change"] = False
-        if files is not None:
-            entry["files"] = files
-        if dvs is not None:
-            entry["dvs"] = dvs
-        if mapping is not None:
-            entry["mapping"] = mapping
-        m["snapshots"].append(entry)
-        if branch is None:
-            m["current"] = snap_id
-        else:
-            m["branches"][branch] = snap_id
-        return snap_id
+    # an empty write still commits (a stream batch's entry is its
+    # exactly-once record) but references no data dir
+    data_dir = _write_rows_dir(df, root, manifest, mode, stats_cols)
+    op = mode if branch is None else f"{mode}@{branch}"
 
     # Optimistic-concurrency commit loop (Iceberg's retryable fast
     # append): the parquet write above happened ONCE; a conflicting
-    # concurrent commit only forces re-deriving ids/parent/dir lists
-    # against the winner's manifest. Drift this writer validated or
-    # derived from — constraints (df was guarded under them) and the
-    # partition spec (the data was clustered under it) — cannot be
-    # rebased and re-raises the conflict instead.
+    # concurrent commit only forces re-deriving the entry (id, parent,
+    # dir lists) against the winner's manifest. Drift this writer
+    # validated or derived from — constraints (df was guarded under
+    # them) and the partition spec (the data was clustered under it) —
+    # cannot be rebased and re-raises the conflict instead.
     for attempt in range(COMMIT_RETRIES):
-        snap_id = _attach(manifest, base_id)
+        # an append carries the parent's content (file lists, deletion
+        # vectors, column mapping — or dropped and DV-deleted rows
+        # resurrect) and never SHRINKS the logical table: parent fields
+        # win (order/type), new fields append — schema evolution by
+        # widening write (re-merged per rebase: a concurrent append may
+        # have widened the parent first)
+        parent = (
+            _entry(manifest, base_id)
+            if mode == "append" and base_id is not None else None
+        )
+        entry = _child_entry(
+            manifest, op, parent, add_dir=data_dir,
+            schema=(
+                _merge_append_schema(parent["schema"], logical_schema)
+                if parent is not None else logical_schema.json()
+            ),
+            meta=meta or {}, data_change=data_change,
+        )
         try:
-            _commit(root, manifest)
-            return snap_id
+            return _commit_entry(root, manifest, entry, branch)
         except CommitConflict:
             if attempt == COMMIT_RETRIES - 1:
                 raise
@@ -1934,7 +1986,7 @@ def write_snapshot(
                 # old logical names into the new schema would re-add a
                 # renamed/dropped field pointing at live physical data.
                 # Concurrent APPENDS (same or widened schema) rebase
-                # fine — _attach re-merges against the fresh parent.
+                # fine — the next attempt re-merges against the fresh parent.
                 old_parent = _entry(manifest, base_id)
                 new_base = (
                     fresh.get("branches", {}).get(branch)
@@ -1957,7 +2009,10 @@ def write_snapshot(
                     }
                     if old_fields - new_fields:  # a drop slid in
                         raise
-            # carry this write's dtype stamps + hidden-col registrations
+            # carry this write's stats, dtype stamps and hidden-col
+            # registrations
+            if data_dir is not None:
+                fresh["dir_stats"][data_dir] = manifest["dir_stats"][data_dir]
             if manifest.get("partition_spec"):
                 fresh["partition_spec"] = manifest["partition_spec"]
             hidden = set(fresh.get("hidden_cols", [])) | set(
@@ -2075,19 +2130,44 @@ def _guard_no_dvs(entry: dict, op: str) -> None:
         )
 
 
-def _guard_identity_mapping(entry: dict, op: str) -> None:
-    """Ops that read data FILES raw resolve columns by their physical
-    file names; after a metadata-only RENAME those differ from the
-    logical schema, and the op would silently mis-resolve (or re-write
-    files without carrying the mapping, losing the rename for every
-    later reader). Refuse loudly; :func:`materialize_schema` rewrites
-    the table to identity mapping and re-enables them."""
+def _guard_raw_layout(entry: dict, op: str) -> None:
+    """Ops that read data FILES raw refuse the three metadata-only
+    schema states such a read gets silently wrong, each with the fix
+    spelled out (:func:`materialize_schema` rewrites the table out of
+    all three):
+
+    - renamed columns: the files keep their physical names, so the op
+      would mis-resolve columns (or rewrite files without the mapping,
+      losing the rename for every later reader);
+    - initial defaults: pre-ADD rows would surface as NULL, and a
+      rewrite would move them out of the recorded default dirs;
+    - metadata-widened columns: files sit at mixed physical widths
+      (the scan reads them, but the rewrite and changelog semantics
+      stay single-width)."""
     if entry.get("mapping"):
         raise ValueError(
             f"{op}: snapshot {entry['id']} has renamed columns "
             f"(column mapping {entry['mapping']}); this operation "
             "reads data files raw by physical name — run "
             "materialize_schema() first"
+        )
+    fields = json.loads(entry["schema"])["fields"]
+    defaulted = [
+        f["name"] for f in fields
+        if "initial_default" in (f.get("metadata") or {})
+    ]
+    if defaulted:
+        raise ValueError(
+            f"{op}: snapshot {entry['id']} has columns with initial "
+            f"defaults {defaulted}; this operation reads data files "
+            "raw (pre-ADD rows would surface as NULL) — run "
+            "materialize_schema() first"
+        )
+    if any("widened_from" in (f.get("metadata") or {}) for f in fields):
+        raise ValueError(
+            f"{op}: snapshot {entry['id']} has metadata-widened columns "
+            "(files at mixed physical widths); run materialize_schema() "
+            "first"
         )
 
 
@@ -2099,43 +2179,6 @@ def _guard_identity_mapping(entry: dict, op: str) -> None:
 # drive every read through _entry_frame. No data file is
 # touched by any of these, whatever the table size.
 # ---------------------------------------------------------------------------
-
-
-def _guard_no_widened(entry: dict, op: str) -> None:
-    """Raw-file ops refuse a table whose files sit at mixed physical
-    widths after a metadata-only type widening, with the fix spelled
-    out. The scan itself reads them (the manifest schema up-casts the
-    narrow files); the refusal keeps these ops' rewrite and changelog
-    semantics to single-width tables until materialize_schema runs."""
-    if any(
-        "widened_from" in (f.get("metadata") or {})
-        for f in json.loads(entry["schema"])["fields"]
-    ):
-        raise ValueError(
-            f"{op}: snapshot {entry['id']} has metadata-widened columns "
-            "(files at mixed physical widths); run materialize_schema() "
-            "first"
-        )
-
-
-def _guard_no_initial_defaults(entry: dict, op: str) -> None:
-    """Raw-file ops see pre-ADD rows as NULL where the logical read
-    contract says initial_default, and their rewrites move rows out of
-    the recorded default dirs — either way the default silently
-    degrades. Refuse; materialize_schema bakes defaults into data and
-    clears the metadata."""
-    struct = json.loads(entry["schema"])
-    defaulted = [
-        f["name"] for f in struct["fields"]
-        if "initial_default" in (f.get("metadata") or {})
-    ]
-    if defaulted:
-        raise ValueError(
-            f"{op}: snapshot {entry['id']} has columns with initial "
-            f"defaults {defaulted}; this operation reads data files "
-            "raw (pre-ADD rows would surface as NULL) — run "
-            "materialize_schema() first"
-        )
 
 
 def _schema_ddl_commit(root: str, op: str, mutate) -> int:
@@ -2154,28 +2197,10 @@ def _schema_ddl_commit(root: str, op: str, mutate) -> int:
         fields = list(struct.fields)
         mapping = dict(entry.get("mapping", {}))
         mutate(fields, mapping, manifest)
-        new_id = manifest["snapshots"][-1]["id"] + 1
-        new_entry = {
-            "id": new_id,
-            "op": op,
-            "ts": time.time(),
-            "dirs": list(entry["dirs"]),
-            "parent": manifest["current"],
-            "schema": T.StructType(fields).json(),
-            "meta": {},
-        }
-        if "files" in entry:
-            new_entry["files"] = {
-                d: list(fs) for d, fs in entry["files"].items()
-            }
-        if entry.get("dvs"):
-            new_entry["dvs"] = list(entry["dvs"])
-        if mapping:
-            new_entry["mapping"] = mapping
-        manifest["snapshots"].append(new_entry)
-        manifest["current"] = new_id
-        _commit(root, manifest)
-        return new_id
+        return _commit_entry(root, manifest, _child_entry(
+            manifest, op, entry,
+            schema=T.StructType(fields).json(), mapping=mapping,
+        ))
 
     return _run()
 
@@ -2266,7 +2291,7 @@ def add_column(root: str, name: str, dtype: str, default=None) -> int:
             | _hidden_set(manifest)  # transform columns live in files
         )
         if name in taken:
-            phys = f"{name}__c{manifest['snapshots'][-1]['id'] + 1}"
+            phys = f"{name}__c{_next_id(manifest)}"
             mapping[name] = phys
         meta = {}
         if default is not None:
@@ -2387,7 +2412,7 @@ def drop_column(root: str, name: str) -> int:
 def materialize_schema(spark: SparkSession, root: str) -> int:
     """Rewrite the table copy-on-write so physical names == logical
     names again (clears the column mapping), re-enabling the raw-file
-    ops `_guard_identity_mapping` blocks. The analog of
+    ops `_guard_raw_layout` blocks. The analog of
     rewrite_deletes for the schema tier; O(table) by nature — schedule
     it like compaction, not per rename."""
     base = _load(root)["current"]
@@ -2518,15 +2543,10 @@ def snapshot_file_changes(
     # file-granular feed cannot see it (and raw reads would resurrect
     # earlier DV deletes) — refuse; snapshot_changes (read_snapshot
     # based) is DV-correct, or rewrite_deletes first
-    _guard_no_dvs(_entry(manifest, from_id), "snapshot_file_changes")
-    _guard_no_dvs(_entry(manifest, to_id), "snapshot_file_changes")
-    _guard_identity_mapping(_entry(manifest, from_id), "snapshot_file_changes")
-    _guard_no_initial_defaults(_entry(manifest, from_id), "snapshot_file_changes")
-    _guard_no_widened(_entry(manifest, from_id), "snapshot_file_changes")
-    _guard_identity_mapping(_entry(manifest, to_id), "snapshot_file_changes")
-    _guard_no_initial_defaults(_entry(manifest, to_id), "snapshot_file_changes")
-    _guard_no_widened(_entry(manifest, to_id), "snapshot_file_changes")
     from_entry, to_entry = _entry(manifest, from_id), _entry(manifest, to_id)
+    for e in (from_entry, to_entry):
+        _guard_no_dvs(e, "snapshot_file_changes")
+        _guard_raw_layout(e, "snapshot_file_changes")
     old = set(_entry_units(root, manifest, from_entry))
     new = set(_entry_units(root, manifest, to_entry))
     added = sorted(os.path.join(d, f) for d, f in new - old)
@@ -2570,30 +2590,12 @@ def rollback(root: str, snapshot_id: int) -> int:
     target's (Iceberg ``rollback_to_snapshot`` — history is preserved,
     the rollback itself is auditable, no data moves)."""
     manifest = _load(root)
+    # row-identical: the target's file lists, column mapping and
+    # deletion vectors come along with its dirs and schema
     target = _entry(manifest, snapshot_id)
-    new_id = manifest["snapshots"][-1]["id"] + 1
-    entry = {
-        "id": new_id,
-        "op": f"rollback->{snapshot_id}",
-        "ts": time.time(),
-        "dirs": list(target["dirs"]),
-        "parent": manifest["current"],
-        "schema": target["schema"],
-    }
-    if "files" in target:
-        # file-granular target (replace_where/compact): the rollback
-        # must be row-identical, so the kept-file lists come along
-        entry["files"] = {d: list(fs) for d, fs in target["files"].items()}
-    if target.get("mapping"):
-        # row-identical includes the target's logical->physical names
-        entry["mapping"] = dict(target["mapping"])
-    if target.get("dvs"):
-        # row-identical includes the target's deletion vectors
-        entry["dvs"] = list(target["dvs"])
-    manifest["snapshots"].append(entry)
-    manifest["current"] = new_id
-    _commit(root, manifest)
-    return new_id
+    return _commit_entry(
+        root, manifest, _child_entry(manifest, f"rollback->{snapshot_id}", target)
+    )
 
 
 def history(root: str) -> list[dict]:
@@ -3378,6 +3380,50 @@ def _conjunction(predicates: list[tuple]) -> Column:
     return functools.reduce(operator.and_, map(_predicate_col, predicates))
 
 
+def _commit_rewrite(
+    root: str,
+    manifest: dict,
+    entry: dict,
+    op: str,
+    dir_op: str,
+    rows: DataFrame | None,
+    keep: dict[str, list[str]],
+    meta: dict,
+    dvs: list[str] = (),
+    data_change: bool = True,
+) -> int:
+    """The commit half every file-granular rewrite shares
+    (:func:`replace_where`, :func:`update_where`, :func:`compact_files`,
+    :func:`optimize_zorder` WHERE, ``deletes.rewrite_deletes``): the
+    new entry references the ``keep`` files ``{dir: [file]}`` of
+    ``entry`` verbatim plus one new data dir (``dir_op`` names it)
+    holding ``rows`` (None: nothing to write), at FILE granularity —
+    Iceberg's manifest-file model. Its schema is ``entry``'s merged
+    with the written frame's (:func:`_merge_rewrite_schema`: a
+    metadata-only added column survives the rewrite) and its deletion
+    vectors are ``dvs`` (the copy-on-write rewrites refuse DV'd
+    entries). A rewrite that drops no file, adds no row and leaves
+    the deletion vectors and the schema as they were commits nothing
+    and returns ``entry``'s id."""
+    data_dir, schema = None, entry["schema"]
+    if rows is not None:
+        data_dir = _write_rows_dir(rows, root, manifest, dir_op)
+        schema = _merge_rewrite_schema(manifest, schema, rows.schema)
+    n_kept = sum(map(len, keep.values()))
+    if (
+        data_dir is None
+        and n_kept == sum(1 for _ in _entry_units(root, manifest, entry))
+        and list(dvs) == list(entry.get("dvs") or [])
+        and json.loads(schema) == json.loads(entry["schema"])
+    ):
+        return entry["id"]
+    return _commit_entry(root, manifest, _child_entry(
+        manifest, op, entry, add_dir=data_dir,
+        files={d: sorted(fs) for d, fs in keep.items()},
+        dvs=list(dvs), schema=schema, meta=meta, data_change=data_change,
+    ))
+
+
 @_retry_conflicts
 def replace_where(
     spark: SparkSession,
@@ -3403,7 +3449,9 @@ def replace_where(
     (raise_error) exactly like a CHECK constraint, so a mis-scoped
     backfill fails before the commit instead of silently leaking rows
     into ranges it claimed not to touch. An empty ``df`` makes this
-    ``DELETE WHERE``. Returns the new snapshot id.
+    ``DELETE WHERE``. Returns the new snapshot id — the current one
+    when the replace drops no file and writes no row (a no-op commits
+    nothing).
     """
     from ..operators.constraints import guard_constraints
 
@@ -3422,9 +3470,7 @@ def replace_where(
     plan = plan_scan(root, predicates, manifest=manifest)  # validates grammar
     entry = _entry(manifest, plan["snapshot_id"])
     _guard_no_dvs(entry, "replace_where")
-    _guard_identity_mapping(entry, "replace_where")
-    _guard_no_initial_defaults(entry, "replace_where")
-    _guard_no_widened(entry, "replace_where")
+    _guard_raw_layout(entry, "replace_where")
     dir_stats = manifest["dir_stats"]
 
     keep_verbatim: dict[str, list[str]] = {}
@@ -3456,35 +3502,14 @@ def replace_where(
             ~F.coalesce(conj, F.lit(False))
         )
         new_rows = retained.unionByName(new_rows, allowMissingColumns=True)
-
-    snap_id = manifest["snapshots"][-1]["id"] + 1
-    data_dir = _claim_data_dir(root, snap_id, "replace")
-    _write_data_dir(new_rows, root, data_dir, manifest)
-
-    files = {d: sorted(names) for d, names in keep_verbatim.items()}
-    manifest["dir_stats"][data_dir] = _collect_dir_stats(
-        root, data_dir
+    # temporal predicate values ISO-encode (raw datetimes are not
+    # JSON-serializable and would crash the commit AFTER the data dir
+    # was written)
+    meta = {"predicates": [_json_safe_predicate(p) for p in predicates]}
+    return _commit_rewrite(
+        root, manifest, entry, "replace_where", "replace", new_rows,
+        keep_verbatim, meta,
     )
-    files[data_dir] = sorted(manifest["dir_stats"][data_dir])
-    manifest["snapshots"].append(
-        {
-            "id": snap_id,
-            "op": "replace_where",
-            "ts": time.time(),
-            "dirs": sorted(files),
-            "files": files,
-            "parent": manifest["current"],
-            # parent-merged: metadata-only added columns survive
-            "schema": _merge_rewrite_schema(manifest, entry["schema"], new_rows.schema),
-            # temporal predicate values ISO-encode (raw datetimes are
-            # not JSON-serializable and would crash the commit AFTER
-            # the data dir was written)
-            "meta": {"predicates": [_json_safe_predicate(p) for p in predicates]},
-        }
-    )
-    manifest["current"] = snap_id
-    _commit(root, manifest)
-    return snap_id
 
 
 @_retry_conflicts
@@ -3505,7 +3530,8 @@ def update_where(
 
     ``set_exprs`` maps column -> SQL expression evaluated against the
     pre-update row (standard UPDATE semantics: all assignments see the
-    OLD values). Returns the new snapshot id. At 100 TB a
+    OLD values). Returns the new snapshot id (the current one when the
+    stats prune every file: a no-op commits nothing). At 100 TB a
     stats-selective update rewrites only the files its predicate
     range touches — the same triage as replace_where's boundary
     rewrite."""
@@ -3520,12 +3546,10 @@ def update_where(
     plan = plan_scan(root, predicates, manifest=manifest)
     entry = _entry(manifest, plan["snapshot_id"])
     _guard_no_dvs(entry, "update_where")
-    _guard_identity_mapping(entry, "update_where")
-    _guard_no_initial_defaults(entry, "update_where")
-    _guard_no_widened(entry, "update_where")
+    _guard_raw_layout(entry, "update_where")
     # validate SET columns against the snapshot's LOGICAL schema up
     # front — an all-files-pruned predicate must not let a typo'd
-    # column name commit a silent no-op snapshot
+    # column name pass as a silent no-op
     logical_cols = {
         f["name"] for f in json.loads(entry["schema"]).get("fields", [])
     }
@@ -3543,12 +3567,8 @@ def update_where(
         else:
             rewrite_paths.append(os.path.join(root, rel))
 
-    files = {d: sorted(names) for d, names in keep_verbatim.items()}
-    snap_id = manifest["snapshots"][-1]["id"] + 1
+    updated = None  # fully pruned: nothing rewrites, nothing commits
     if rewrite_paths:
-        # claim only when something rewrites: a fully-pruned no-op
-        # UPDATE must not leave an empty orphan dir per call/retry
-        data_dir = _claim_data_dir(root, snap_id, "update")
         cond = F.coalesce(_conjunction(predicates), F.lit(False))
         rows = _scan_entry_files(spark, entry, rewrite_paths)
         # all assignments evaluate against the OLD row (one select)
@@ -3565,34 +3585,14 @@ def update_where(
             ]
         )
         updated = guard_constraints(updated, manifest.get("constraints", {}))
-        _write_data_dir(updated, root, data_dir, manifest)
-        manifest["dir_stats"][data_dir] = _collect_dir_stats(
-            root, data_dir
-        )
-        files[data_dir] = sorted(manifest["dir_stats"][data_dir])
-        # merge with the parent schema: a metadata-only added column
-        # (not yet present in any data file) must survive the rewrite
-        schema = _merge_rewrite_schema(manifest, entry["schema"], updated.schema)
-    else:
-        schema = entry["schema"]
-    manifest["snapshots"].append(
-        {
-            "id": snap_id,
-            "op": "update_where",
-            "ts": time.time(),
-            "dirs": sorted(files),
-            "files": files,
-            "parent": manifest["current"],
-            "schema": schema,
-            "meta": {
-                "predicates": [_json_safe_predicate(p) for p in predicates],
-                "set": dict(set_exprs),
-            },
-        }
+    meta = {
+        "predicates": [_json_safe_predicate(p) for p in predicates],
+        "set": dict(set_exprs),
+    }
+    return _commit_rewrite(
+        root, manifest, entry, "update_where", "update", updated,
+        keep_verbatim, meta,
     )
-    manifest["current"] = snap_id
-    _commit(root, manifest)
-    return snap_id
 
 
 def delete_keys(
@@ -3658,9 +3658,7 @@ def compact_files(
         raise KeyError(f"table {root} has no snapshots")
     entry = _entry(manifest, manifest["current"])
     _guard_no_dvs(entry, "compact_files")
-    _guard_identity_mapping(entry, "compact_files")
-    _guard_no_initial_defaults(entry, "compact_files")
-    _guard_no_widened(entry, "compact_files")
+    _guard_raw_layout(entry, "compact_files")
 
     keep: dict[str, list[str]] = {}
     small: list[tuple[str, str, int]] = []
@@ -3679,47 +3677,19 @@ def compact_files(
     merged = _scan_entry_files(
         spark, entry, [os.path.join(root, d, f) for d, f, _ in small]
     ).repartition(n_out)
-    snap_id = manifest["snapshots"][-1]["id"] + 1
-    data_dir = _claim_data_dir(root, snap_id, "compact")
-    _write_data_dir(merged, root, data_dir, manifest)
-
-    files = {d: sorted(names) for d, names in keep.items()}
-    manifest["dir_stats"][data_dir] = _collect_dir_stats(
-        root, data_dir
+    meta = {"compacted_files": len(small), "out_files": int(n_out)}
+    if predicates:
+        meta["predicates"] = [_json_safe_predicate(p) for p in predicates]
+    # Delta's dataChange=false: this commit rearranges bytes but
+    # preserves the visible row multiset exactly (the predicate selects
+    # FILES, never rows, and the DV/layout guards above hold
+    # row-identity) — streaming table readers skip it silently instead
+    # of refusing/re-emitting, which is what makes OPTIMIZE safe under
+    # live consumers
+    return _commit_rewrite(
+        root, manifest, entry, "compact", "compact", merged, keep, meta,
+        data_change=False,
     )
-    files[data_dir] = sorted(manifest["dir_stats"][data_dir])
-    manifest["snapshots"].append(
-        {
-            "id": snap_id,
-            "op": "compact",
-            "ts": time.time(),
-            "dirs": sorted(files),
-            "files": files,
-            "parent": manifest["current"],
-            # Delta's dataChange=false: this commit rearranges bytes but
-            # preserves the visible row multiset exactly (the predicate
-            # selects FILES, never rows, and the DV/mapping/default
-            # guards above hold row-identity) — streaming table readers
-            # skip it silently instead of refusing/re-emitting, which is
-            # what makes OPTIMIZE safe under live consumers
-            "data_change": False,
-            # parent-merged: metadata-only added columns survive (the
-            # compacted files predate the ADD and simply lack them)
-            "schema": _merge_rewrite_schema(manifest, entry["schema"], merged.schema),
-            "meta": {
-                "compacted_files": len(small),
-                "out_files": int(n_out),
-                **(
-                    {"predicates": [_json_safe_predicate(p) for p in predicates]}
-                    if predicates
-                    else {}
-                ),
-            },
-        }
-    )
-    manifest["current"] = snap_id
-    _commit(root, manifest)
-    return snap_id
 
 
 @_retry_conflicts
@@ -3760,9 +3730,7 @@ def optimize_zorder(
         plan = plan_scan(root, predicates, manifest=manifest)  # validates grammar
         entry = _entry(manifest, plan["snapshot_id"])
         _guard_no_dvs(entry, "optimize_zorder")
-        _guard_identity_mapping(entry, "optimize_zorder")
-        _guard_no_initial_defaults(entry, "optimize_zorder")
-        _guard_no_widened(entry, "optimize_zorder")
+        _guard_raw_layout(entry, "optimize_zorder")
         if not plan["files"]:
             return manifest["current"]  # nothing in scope
         pruned = set(plan["pruned"])
@@ -3776,39 +3744,16 @@ def optimize_zorder(
         clustered = zorder_layout(
             rows, cluster_cols, num_files=num_files, bits=bits
         )
-        snap_id = manifest["snapshots"][-1]["id"] + 1
-        data_dir = _claim_data_dir(root, snap_id, "zorder")
-        _write_data_dir(clustered, root, data_dir, manifest)
-        files = {d: sorted(names) for d, names in keep.items()}
-        manifest["dir_stats"][data_dir] = _collect_dir_stats(
-            root, data_dir
+        meta = {
+            "cluster_cols": list(cluster_cols),
+            "rewritten": len(plan["files"]),
+            "predicates": [_json_safe_predicate(p) for p in predicates],
+        }
+        # row-preserving layout rewrite: Delta's dataChange=false
+        return _commit_rewrite(
+            root, manifest, entry, "zorder_where", "zorder", clustered,
+            keep, meta, data_change=False,
         )
-        files[data_dir] = sorted(manifest["dir_stats"][data_dir])
-        manifest["snapshots"].append(
-            {
-                "id": snap_id,
-                "op": "zorder_where",
-                "ts": time.time(),
-                "dirs": sorted(files),
-                "files": files,
-                "parent": manifest["current"],
-                # row-preserving layout rewrite: Delta's dataChange=false
-                "data_change": False,
-                "schema": _merge_rewrite_schema(
-                    manifest, entry["schema"], clustered.schema
-                ),
-                "meta": {
-                    "cluster_cols": list(cluster_cols),
-                    "rewritten": len(plan["files"]),
-                    "predicates": [
-                        _json_safe_predicate(p) for p in predicates
-                    ],
-                },
-            }
-        )
-        manifest["current"] = snap_id
-        _commit(root, manifest)
-        return snap_id
 
     manifest0 = _load(root)
     base = manifest0["current"]
@@ -4021,7 +3966,13 @@ def table_stats(root: str, snapshot_id: int | None = None) -> dict:
     the snapshot's files (None when any file lacks the stat). The
     ANALYZE TABLE answer without reading a single data page — footer
     stats were collected at write time."""
-    manifest = _load(root)
+    return _table_stats(_load(root), snapshot_id)
+
+
+def _table_stats(manifest: dict, snapshot_id: int | None = None) -> dict:
+    """:func:`table_stats` computed on the caller's loaded
+    ``manifest``."""
+    root = manifest["_store"].root
     sid = snapshot_id if snapshot_id is not None else manifest["current"]
     if sid is None:
         raise KeyError(f"table {root} has no snapshots")

@@ -1401,8 +1401,9 @@ def execute_dml(
         root = _resolve(tables, name)
         from . import deletes
 
-        stats = snapshots.table_stats(root)
+        # one load: the stats and the detail fields describe one version
         manifest = snapshots._load(root)
+        stats = snapshots._table_stats(manifest)
         # metadata-tier footprint: version-manifest count/bytes and ref
         # files (entry/files/stats) — the observability for the split
         # layout's O(batch) commit contract

@@ -162,11 +162,7 @@ def foreach_batch_merge_snapshot(
         @snap._retry_conflicts
         def attempt() -> None:
             manifest = snap._load(root)
-            done = {
-                e.get("meta", {}).get("stream_batch_id")
-                for e in manifest["snapshots"]
-            }
-            if batch_id in done:
+            if _batch_committed(manifest, batch_id):
                 return
             base = manifest["current"]
             if base is not None:
@@ -258,11 +254,7 @@ def foreach_batch_apply_changes(
         @snap._retry_conflicts
         def attempt() -> None:
             manifest = snap._load(root)
-            done = {
-                e.get("meta", {}).get("stream_batch_id")
-                for e in manifest["snapshots"]
-            }
-            if batch_id in done:
+            if _batch_committed(manifest, batch_id):
                 return
             base = manifest["current"]
             if base is not None:
@@ -301,6 +293,16 @@ def foreach_batch_apply_changes(
     return fn
 
 
+def _batch_committed(manifest: dict, batch_id: int) -> bool:
+    """The exactly-once check every snapshot sink makes before writing:
+    does a committed entry of ``manifest`` already carry stream batch
+    ``batch_id`` in its meta (a replayed batch then writes nothing)?"""
+    return any(
+        e.get("meta", {}).get("stream_batch_id") == batch_id
+        for e in manifest["snapshots"]
+    )
+
+
 def _commit_batch_once(fact_root: str, batch_df: DataFrame, batch_id: int) -> None:
     """The exactly-once micro-batch commit both materialized-view
     sinks share: append the batch to the fact snapshot table with its
@@ -309,11 +311,7 @@ def _commit_batch_once(fact_root: str, batch_df: DataFrame, batch_id: int) -> No
     from ..sources import snapshots as snap
 
     manifest = snap._load(fact_root)
-    done = {
-        e.get("meta", {}).get("stream_batch_id")
-        for e in manifest["snapshots"]
-    }
-    if batch_id not in done:
+    if not _batch_committed(manifest, batch_id):
         snap.write_snapshot(
             batch_df,
             fact_root,

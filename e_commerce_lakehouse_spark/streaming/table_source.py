@@ -631,6 +631,10 @@ class _TableStreamReader(DataSourceStreamReader):
 
     # -- execution (workers) ------------------------------------------
     def read(self, partition):
+        if partition is None:
+            # Spark plans one None partition when partitions() returns
+            # none: an entry with no files, or every file pruned
+            return
         tbl = pq.read_table(partition.path)
         if getattr(partition, "emit_pos", None) is not None:
             # changelog 'delete' partition: emit exactly the rows at

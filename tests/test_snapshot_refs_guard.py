@@ -3,7 +3,8 @@ its own manifest load: the published-history walk (``_main_ancestors``)
 is called only by ``snapshots._pin``, and no program module carries a
 "planned against snapshot" re-plan gate — ``_commit``'s version CAS is
 the one freshness check. SQL MERGE has one executor: only its retry
-attempt calls the CDC appliers."""
+attempt calls the CDC appliers. Every new snapshot entry lands through
+the one commit helper (``snapshots._commit_entry``)."""
 
 from __future__ import annotations
 
@@ -62,3 +63,65 @@ def test_sql_merge_has_one_executor():
         v = _Callers(name)
         v.visit(ast.parse(f.read_text()))
         assert set(v.found) == {"_merge._run"}, (name, v.found)
+
+
+def _ref_writes(tree) -> list[tuple[str, int, str]]:
+    """``(enclosing function, line, kind)`` of every
+    ``<x>["snapshots"].append(...)`` call and every assignment to
+    ``<x>["current"]``."""
+
+    def key(node):
+        return (
+            node.slice.value
+            if isinstance(node, ast.Subscript) and isinstance(node.slice, ast.Constant)
+            else None
+        )
+
+    out = []
+
+    def walk(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "append"
+            and key(node.func.value) == "snapshots"
+        ):
+            out.append((fn, node.lineno, "snapshots.append"))
+        targets = (
+            node.targets if isinstance(node, ast.Assign)
+            else [node.target] if isinstance(node, (ast.AugAssign, ast.AnnAssign))
+            else []
+        )
+        for t in targets:
+            for sub in ast.walk(t):
+                if key(sub) == "current" and isinstance(sub.ctx, ast.Store):
+                    out.append((fn, node.lineno, "current ="))
+        for child in ast.iter_child_nodes(node):
+            walk(child, fn)
+
+    walk(tree, "<module>")
+    return out
+
+
+def test_snapshot_entries_commit_through_one_helper():
+    """Appending an entry and moving ``current`` happen only inside
+    ``snapshots._commit_entry``; the one other ref move is
+    ``fast_forward``'s publish, which points ``current`` at an existing
+    snapshot."""
+    allowed = {
+        ("e_commerce_lakehouse_spark/sources/snapshots.py", "_commit_entry", "snapshots.append"),
+        ("e_commerce_lakehouse_spark/sources/snapshots.py", "_commit_entry", "current ="),
+        ("e_commerce_lakehouse_spark/sources/snapshots.py", "fast_forward", "current ="),
+    }
+    found = set()
+    stray = []
+    for f in FILES:
+        rel = str(f.relative_to(ROOT))
+        for fn, line, kind in _ref_writes(ast.parse(f.read_text())):
+            found.add((rel, fn, kind))
+            if (rel, fn, kind) not in allowed:
+                stray.append(f"{rel}:{line} {fn}: {kind}")
+    assert not stray, "entry built outside the commit helper:\n" + "\n".join(stray)
+    assert found == allowed

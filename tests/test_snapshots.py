@@ -2676,3 +2676,104 @@ def test_one_manifest_load_per_snapshot_operation(spark, root, monkeypatch):
     )) == 1
     got = {r.id: r.k for r in S.read_snapshot(spark, root).collect()}
     assert (got[3], 4 in got, got[5], len(got)) == (7, False, 9, 19)
+    assert loads(lambda: sql_dml.execute_dml(spark, "DESCRIBE DETAIL t", {"t": root})) == 1
+
+
+def _zero_row_refs(root) -> list[str]:
+    """Files referenced by any committed entry that hold no rows."""
+    import pyarrow.parquet as pq
+
+    m = S._load(root)
+    return [
+        f"{e['id']}:{d}/{f}"
+        for e in m["snapshots"]
+        for d, f in S._entry_units(root, m, e)
+        if pq.read_metadata(os.path.join(root, d, f)).num_rows == 0
+    ]
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_noop_dml_commits_nothing_and_keeps_row_count(spark, root, mode):
+    """A DELETE or UPDATE that matches no row commits nothing: the
+    snapshot count and ``table_stats`` stay as they were (a 0-row
+    rewrite file would record empty stats and turn ``n_rows`` into
+    None), and TRUNCATE reports 0 rows. No committed entry references
+    a 0-row file."""
+    from e_commerce_lakehouse_spark.sources import deletes as D
+    from e_commerce_lakehouse_spark.sources import sql_dml
+
+    S.write_snapshot(
+        spark.createDataFrame([(i, i % 3) for i in range(20)], "id long, k long")
+        .repartition(2),
+        root,
+    )
+    D.set_delete_mode(root, mode)
+    t = {"t": root}
+    n_snaps = len(S.history(root))
+    for stmt in (
+        "DELETE FROM t WHERE id = 999",
+        "UPDATE t SET k = 5 WHERE id = 999",
+        "DELETE FROM t WHERE id = 999",
+    ):
+        sid = sql_dml.execute_dml(spark, stmt, t)["snapshot_id"]
+        assert sid == n_snaps, stmt
+        assert len(S.history(root)) == n_snaps, stmt
+        assert S.table_stats(root)["n_rows"] == 20, stmt
+    plan = S.plan_scan(root, [("id", "=", 999)])
+    assert plan["files"] == [], plan
+    # a matching DELETE still commits, and deleting every row leaves an
+    # entry with no file instead of a 0-row one
+    sql_dml.execute_dml(spark, "DELETE FROM t WHERE k = 0", t)
+    assert S.table_stats(root)["n_rows"] == 13
+    view = f"noop_{mode.replace('-', '_')}"
+    conf = "spark.sql.python.filterPushdown.enabled"
+    was = spark.conf.get(conf, "false")
+
+    def assert_empty_reads():
+        # the DataSource readers (pushdown views, pinned views, the
+        # batch format) read an entry with no files as 0 rows
+        sql_dml.register_snapshot_views(spark, {view: root})
+        sid = S.history(root)[-1]["id"]
+        sql_dml.register_time_travel_view(spark, f"{view}_tt", root, snapshot_id=sid)
+        for df in (
+            spark.sql(f"SELECT * FROM {view}"),
+            spark.sql(f"SELECT * FROM {view} WHERE id = 3"),
+            spark.table(f"{view}_tt"),
+            spark.read.format("snapshot_table").option("path", root).load(),
+        ):
+            assert df.columns == ["id", "k"]
+            assert df.collect() == []
+
+    try:
+        # a pushed filter the stats prune from every file reads 0 rows
+        sql_dml.register_snapshot_views(spark, {view: root})
+        assert spark.sql(f"SELECT * FROM {view} WHERE id = 999").collect() == []
+        if mode == "copy-on-write":
+            sql_dml.execute_dml(spark, "DELETE FROM t WHERE id >= 0", t)
+            assert S.table_stats(root)["n_rows"] == 0
+            assert_empty_reads()
+        sql_dml.execute_dml(spark, "TRUNCATE TABLE t", t)
+        stats = S.table_stats(root)
+        assert (stats["n_rows"], stats["n_files"]) == (0, 0)
+        assert S.read_snapshot(spark, root).columns == ["id", "k"]
+        assert_empty_reads()
+    finally:
+        spark.conf.set(conf, was)
+        for v in (view, f"{view}_tt"):
+            spark.catalog.dropTempView(v)
+            sql_dml._VIEW_REGISTRY.pop((sql_dml._session_key(spark), v), None)
+    assert _zero_row_refs(root) == []
+
+
+def test_empty_replace_where_commits_only_a_schema_change(spark, root):
+    """A rewrite that writes no row and drops no file commits nothing,
+    unless the replacement frame widens the schema: then the new
+    column is committed (with no data dir) as before."""
+    S.write_snapshot(spark.range(10).repartition(2), root)
+    preds = [("id", ">", 100)]
+    assert S.replace_where(spark, root, spark.range(0), preds) == 1
+    widened = spark.range(0).withColumn("note", F.lit("x"))
+    assert S.replace_where(spark, root, widened, preds) == 2
+    assert S.read_snapshot(spark, root).columns == ["id", "note"]
+    assert S.table_stats(root)["n_rows"] == 10
+    assert _zero_row_refs(root) == []
