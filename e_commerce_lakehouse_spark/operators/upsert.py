@@ -6,9 +6,10 @@ MERGE is expressed relationally — a full-outer join where the source
 wins on conflict.
 
 Scale notes: one shuffle on the merge key (or zero if both sides are
-bucketed on it). These are the copy-on-write forms; snapshot tables
-write the same values merge-on-read through ``sources.deletes``
-(``merge_upsert_dv`` / ``apply_changes_dv``, pytest-pinned to them).
+bucketed on it). These are the reference model of the values: snapshot
+tables write them through ``sources.deletes``' one row-level change
+writer in either delete mode (``merge_upsert_dv`` /
+``apply_changes_dv``, pytest-pinned to them).
 """
 
 from __future__ import annotations

@@ -1,47 +1,47 @@
-"""Deletion vectors — merge-on-read row-level DELETE / MERGE / CDC
-apply for the snapshot tables (Delta's deletion-vector / Iceberg's
-positional-delete model; engine extension — the reference pins Iceberg
-format-version 1 with no row-level delete story at all,
-silver_clean_transform.py:77-79).
+"""Row-level changes — DELETE / UPDATE / MERGE / CDC apply — for the
+snapshot tables in both of Iceberg's ``write.delete.mode``s (engine
+extension — the reference pins Iceberg format-version 1 with no
+row-level delete story at all, silver_clean_transform.py:77-79).
 
-Why copy-on-write DELETE is wrong at 100 TB: ``replace_where`` deleting
-7 rows that straddle a 1 GB file rewrites the whole gigabyte. A
-deletion vector instead records the doomed rows' POSITIONS — a KB-scale
-sidecar parquet of ``(file, pos)`` — and commits a manifest entry whose
-data dirs are byte-identical to the parent's. Write amplification drops
-from O(file bytes) to O(deleted rows); the read side pays one
-broadcast anti-join (``snapshots._apply_dvs``), map-side, no shuffle.
+SQL DELETE, UPDATE and MERGE, ``snapshots.replace_where`` /
+``update_where``, CDC APPLY and both streaming sinks all go through
+ONE writer, :func:`_write_changes` (Delta's two-phase MERGE/UPDATE,
+Armbrust et al., VLDB 2020). A route gives it a file plan (the stats
+prune for predicates, the keyscan for keys), a row matcher and a
+post-state builder; the writer marks the matched rows' POSITIONS once
+and the delete mode picks the commit half:
+
+- merge-on-read (:func:`_commit_change`): the marks go to a KB-scale
+  ``(file, pos)`` deletion-vector sidecar and the post-states append
+  as one dir — O(changed rows) written, no data file rewritten; reads
+  pay one broadcast anti-join (``snapshots._apply_dvs``);
+- copy-on-write (:func:`_commit_purge`): only the files holding a
+  mark (or an existing DV) are re-read and their survivors written
+  with the post-states into one dir, stats-proven all-match files
+  drop unread, the rest carry over verbatim — the purge
+  :func:`rewrite_deletes` runs, so the entry never carries a DV.
 
 Contract with the rest of the lakehouse tier:
 
 - positions come from the parquet scanner's own ``_metadata.row_index``
   (stable for immutable files) keyed by ``dir/file`` so a relocated
   table root keeps its DVs valid;
-- every DV writer anti-joins the snapshot's PRIOR DVs before marking,
-  so a position is deleted at most once across sidecars — which is
-  what lets ``table_stats`` subtract footer row counts exactly;
-- stored CHECK constraints guard the rows these writers APPEND
-  (merged replacements, CDC post-states) exactly as write_snapshot
-  guards its rows — the merge-on-read route is not a constraint
-  bypass;
-- every commit goes through the one commit path
-  (``snapshots._child_entry`` + ``snapshots._commit_entry``), so
-  appends, rollbacks and schema DDL CARRY active DVs;
-  expire/remove_orphans GC sidecar dirs exactly like data dirs, time
-  travel reads each snapshot with ITS dvs;
-- ops that read data files raw (replace_where, update_where,
-  compact_files, snapshot_file_changes) REFUSE while DVs are active
-  (``_guard_no_dvs``) — :func:`rewrite_deletes` materializes the
-  deletes copy-on-write (through the rewrites' shared commit half,
-  ``snapshots._commit_rewrite``) and clears the state, after which
-  they work again. ``optimize_zorder`` and ``snapshot_changes`` read
-  through ``read_snapshot`` and are DV-correct as-is;
-- ``table_stats``/SHOW STATS subtract DV row counts (footer-only).
+- marks skip the snapshot's PRIOR DVs, so a position is deleted at
+  most once across sidecars and ``table_stats`` subtracts footer row
+  counts exactly;
+- stored CHECK constraints guard every appended row in both modes;
+- every commit goes through the one commit path, so appends,
+  rollbacks and schema DDL CARRY active DVs, expire/remove_orphans GC
+  sidecar dirs like data dirs, and time travel reads each snapshot
+  with ITS dvs; a change that marks, appends and drops nothing and
+  keeps the schema commits nothing, except a sink's batch record;
+- compact_files, snapshot_file_changes and the public copy-on-write
+  APIs (replace_where, update_where) REFUSE while DVs are active
+  (``_guard_no_dvs``) until :func:`rewrite_deletes` materializes them.
 
-Sizing note: a delete that dooms most of a file's rows is cheaper
-copy-on-write (``replace_where`` DROPS all-match files without reading
-them); DVs win when deletes are sparse relative to file size — the
-CDC/MERGE/GDPR shape.
+Deletion vectors win when changes are sparse relative to file size
+(the CDC/MERGE/GDPR shape); copy-on-write when a change dooms most
+rows of the files it touches, or readers must never pay the anti-join.
 """
 
 from __future__ import annotations
@@ -57,6 +57,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import snapshots as S
+
+MOR, COW = "merge-on-read", "copy-on-write"
 
 
 def _tag_positions(df: DataFrame) -> DataFrame:
@@ -84,6 +86,26 @@ def _minus_prior_dvs(
         (tagged._file == olddv.file) & (tagged._pos == olddv.pos),
         "left_anti",
     )
+
+
+def _purged(
+    spark: SparkSession,
+    root: str,
+    entry: dict,
+    rel_files: list[str],
+    doomed: DataFrame,
+) -> DataFrame:
+    """The copy-on-write purge: the rows of ``rel_files`` (root-relative
+    files of ``entry``) minus the ``doomed`` ``(file, pos)`` positions,
+    read once off the raw scan."""
+    tagged = _tag_positions(
+        S._scan_entry_files(spark, entry, [os.path.join(root, p) for p in rel_files])
+    )
+    return tagged.join(
+        doomed,
+        (tagged._file == doomed.file) & (tagged._pos == doomed.pos),
+        "left_anti",
+    ).drop("_file", "_pos")
 
 
 def _write_dv_sidecar(
@@ -147,12 +169,12 @@ def _plan_matched_scan(
 ) -> tuple[list[str] | None, dict]:
     """File list for the matched-position scan, pruned to the batch's
     keys when the batch is keyscan-small (the round-8 verdict's top
-    item: without this the merge-on-read READ side is O(table) per
-    batch even though its write side is O(batch)). Returns
-    ``(rel_files | None, scan_meta)`` — None means 'scan everything'
-    (keyscan over the cap); [] means the batch is empty or every file
-    was pruned. Planned on the writer's own ``manifest``, so the
-    commit's CAS covers the plan too."""
+    item: without this the READ side is O(table) per batch even though
+    the write side is O(batch)). Returns ``(rel_files | None,
+    scan_meta)`` — None means 'scan everything' (keyscan over the
+    cap); [] means the batch is empty or every file was pruned.
+    Planned on the writer's own ``manifest``, so the commit's CAS
+    covers the plan too."""
     preds, empty = _batch_key_predicates(source, keys)
     if empty:
         return [], {"keyscan": "empty_batch"}
@@ -168,9 +190,9 @@ def _plan_matched_scan(
 
 
 def _guarded(df: DataFrame, manifest: dict) -> DataFrame:
-    """Stored CHECK constraints apply to every row a DV writer APPENDS
-    (same gate write_snapshot uses) — merge-on-read must not be the
-    route that sneaks a violating row past them."""
+    """Stored CHECK constraints apply to every row the writer APPENDS
+    (same gate write_snapshot uses) — no delete mode may be the route
+    that sneaks a violating row past them."""
     stored = manifest.get("constraints", {})
     if not stored:
         return df
@@ -199,43 +221,236 @@ def _commit_change(
     op: str,
     meta: dict,
     marked: DataFrame | None,
-    appended: DataFrame | None = None,
+    appended: DataFrame | None,
 ) -> int:
-    """The sidecar half every DV writer shares: ``marked``'s
-    ``(_file, _pos)`` go to one sidecar, ``appended`` (CHECK-guarded)
-    to one data dir, and ONE entry on top of ``entry`` carries both —
-    atomic, through the one commit path. The entry's schema widens by
+    """The merge-on-read half of the writer: ``marked``'s ``(_file,
+    _pos)`` go to one sidecar, ``appended`` to one data dir, and ONE
+    entry on top of ``entry`` carries both — atomic, through the one
+    commit path, no data file rewritten. The entry's schema widens by
     any column ``appended`` carries beyond the table's
-    (apply_changes_dv's evolve_schema).
-
-    An ``appended`` frame always commits, even when it writes no rows
-    and nothing is marked: an empty micro-batch's entry is its
-    exactly-once record (its meta carries the batch id), it just
-    references no empty dir. Without one (DELETE), a change that marks
-    nothing commits nothing and returns ``entry``'s id."""
+    (:func:`_changes`' evolve_schema). A change that marks and
+    appends nothing and keeps the schema commits nothing and returns
+    ``entry``'s id, unless ``meta`` is a sink's batch record."""
     dvs = list(entry.get("dvs", []))
     n_marked = 0
     if marked is not None:
         dv_dir, n_marked = _write_dv_sidecar(root, S._next_id(manifest), marked)
         if dv_dir is not None:
             dvs.append(dv_dir)
-    if appended is None and not n_marked:
-        return entry["id"]
     schema, data_dir = entry["schema"], None
     if appended is not None:
         table_cols = {f["name"] for f in json.loads(schema)["fields"]}
         if set(appended.columns) - table_cols:
             schema = S._merge_append_schema(schema, appended.schema)
-        data_dir = S._write_rows_dir(
-            _guarded(appended, manifest), root, manifest, op
-        )
+        data_dir = S._write_rows_dir(appended, root, manifest, op)
+    if not (n_marked or data_dir or schema != entry["schema"] or S._is_batch_record(meta)):
+        return entry["id"]
     return S._commit_entry(root, manifest, S._child_entry(
         manifest, op, entry, add_dir=data_dir, dvs=dvs, schema=schema,
         meta={**meta, "n_deleted": n_marked},
     ))
 
 
+def _commit_purge(
+    spark: SparkSession,
+    root: str,
+    manifest: dict,
+    entry: dict,
+    op: str,
+    meta: dict,
+    marked: DataFrame | None,
+    appended: DataFrame | None,
+    dropped: set[str],
+) -> int:
+    """The copy-on-write half of the writer: the files holding a
+    ``marked`` position are purged (:func:`_purged`), their survivors
+    written with ``appended`` into one dir, the ``dropped`` files leave
+    unread and the rest carry over, through
+    :func:`snapshots._commit_rewrite`. A change that commits also
+    purges the files the entry's DVs mark: the entry carries no DV."""
+    units = [os.path.join(d, f) for d, f in S._entry_units(root, manifest, entry)]
+    rewrite, doomed, dvs = set(), None, entry.get("dvs") or []
+    if marked is not None:
+        rewrite = {r[0] for r in marked.select("_file").distinct().collect()}
+        doomed = marked.select(F.col("_file").alias("file"), F.col("_pos").alias("pos"))
+    if dvs and (rewrite or dropped or S._is_batch_record(meta) or (
+        appended is not None and (not appended.isEmpty() or json.loads(
+            S._merge_rewrite_schema(manifest, entry["schema"], appended.schema)
+        ) != json.loads(entry["schema"]))
+    )):
+        old = S._read_dvs(spark, root, dvs)
+        rewrite |= {r[0] for r in old.select("file").distinct().collect()} & set(units)
+        doomed, dvs = old if doomed is None else doomed.unionByName(old), []
+    rows = _purged(spark, root, entry, sorted(rewrite), doomed) if rewrite else None
+    if appended is not None:
+        rows = appended if rows is None else rows.unionByName(
+            appended, allowMissingColumns=True
+        )
+    keep: dict[str, list[str]] = {}
+    for rel in units:
+        if rel not in rewrite and rel not in dropped:
+            keep.setdefault(os.path.dirname(rel), []).append(os.path.basename(rel))
+    return S._commit_rewrite(
+        root, manifest, entry, op, op, rows, keep,
+        {**meta, "rewritten": sorted(rewrite), "dropped": len(dropped)}, dvs=dvs,
+    )
+
+
 @S._retry_conflicts
+def _write_changes(
+    spark: SparkSession,
+    root: str,
+    mode: str,
+    op: str,
+    plan: Callable[[dict, dict, DataFrame | None], tuple],
+    match: Callable[[DataFrame, DataFrame | None], DataFrame],
+    post_state: Callable[[DataFrame | None, DataFrame | None], DataFrame] | None = None,
+    batch: DataFrame | None = None,
+    meta: dict | None = None,
+    prepare: Callable[[dict, dict, list[str]], list[str]] | None = None,
+) -> int:
+    """The one row-level change writer (module docstring), on ONE
+    manifest load per OCC attempt; the entry is named ``<op>_dv`` on
+    merge-on-read, ``<op>`` on copy-on-write. ``prepare(manifest,
+    entry, table_cols)`` checks the attempt and returns the ``batch``
+    columns; ``plan(manifest, entry, batch)`` returns the files to scan
+    (None: all), those the stats prove all-match (copy-on-write drops
+    them unread) and the plan's commit meta; ``match(tagged, batch)``
+    keeps the matched rows of the position-tagged scan;
+    ``post_state(matched, batch)`` builds the appended rows. The batch
+    and the matched rows stay persisted for the call."""
+    entry_op = f"{op}_dv" if mode == MOR else op
+    manifest, entry = _load_guarded(root, entry_op)
+    cols = [f["name"] for f in json.loads(entry["schema"])["fields"]]
+    if prepare is not None:
+        cols = prepare(manifest, entry, cols)
+    src = None if batch is None else batch.select(*cols).persist()
+    matched = None
+    try:
+        files, dropped, plan_meta = plan(manifest, entry, src)
+        if files is None:
+            files = [os.path.join(d, f) for d, f in S._entry_units(root, manifest, entry)]
+        dropped = dropped if mode == COW else set()
+        files = [f for f in files if f not in dropped]
+        if files:
+            raw = S._scan_entry_files(spark, entry, [os.path.join(root, f) for f in files])
+            matched = match(_minus_prior_dvs(spark, root, entry, _tag_positions(raw)), src)
+            if post_state is not None or mode == COW:
+                matched = matched.persist()
+        appended = None
+        if post_state is not None:
+            appended = _guarded(post_state(matched, src), manifest)
+        meta = {**(meta or {}), **plan_meta}
+        if mode == MOR:
+            return _commit_change(root, manifest, entry, entry_op, meta, matched, appended)
+        return _commit_purge(
+            spark, root, manifest, entry, entry_op, meta, matched, appended, dropped
+        )
+    finally:
+        if matched is not None:
+            matched.unpersist()
+        if src is not None:
+            src.unpersist()
+
+
+def _where(root: str, predicates: list[tuple], drop_all_match: bool = False) -> dict:
+    """The predicate route's plan and matcher: the manifest stats prune
+    the files, rows satisfying the conjunction match (NULL satisfies
+    none). ``drop_all_match`` (a DELETE or replace, whose post-states
+    read no matched row): files the stats prove all-match drop."""
+    if not predicates:
+        raise ValueError("predicates must be non-empty")
+
+    def plan(manifest: dict, entry: dict, src) -> tuple:
+        files = S.plan_scan(root, predicates, manifest=manifest)["files"]
+        stats = manifest["dir_stats"]
+        dropped = {
+            rel for rel in files if drop_all_match and all(
+                S._file_all_match(
+                    stats.get(os.path.dirname(rel), {}).get(os.path.basename(rel), {}),
+                    q[0], q[1], q[2] if len(q) == 3 else None,
+                )
+                for q in predicates
+            )
+        }
+        return files, dropped, {
+            "predicates": [S._json_safe_predicate(q) for q in predicates]
+        }
+
+    return {
+        "plan": plan,
+        "match": lambda tagged, src: tagged.filter(
+            F.coalesce(S._conjunction(predicates), F.lit(False))
+        ),
+    }
+
+
+def _update(
+    root: str,
+    predicates: list[tuple],
+    set_exprs: dict[str, str],
+    refuse_dvs: bool = False,
+) -> dict:
+    """The UPDATE ... SET ``set_exprs`` WHERE ``predicates`` route:
+    every assignment evaluates against the OLD row (standard UPDATE
+    semantics), cast to the column's type. ``refuse_dvs``: refuse an
+    entry with deletion vectors (``snapshots.update_where``)."""
+    unknown = [c for c in set_exprs if not c.isidentifier()]
+    if not set_exprs or unknown:
+        raise ValueError(f"set_exprs must be non-empty column->expr ({unknown=})")
+
+    def prepare(manifest: dict, entry: dict, cols: list[str]) -> list[str]:
+        if refuse_dvs:
+            S._guard_no_dvs(entry, "update_where")
+        # an all-files-pruned predicate must not let a typo'd column
+        # name pass as a silent no-op
+        bad = [c for c in set_exprs if c not in cols]
+        if bad:
+            raise ValueError(f"update_where: unknown columns {bad}")
+        return cols
+
+    def post_state(matched: DataFrame | None, src) -> DataFrame | None:
+        if matched is None:
+            return None
+        rows = matched.drop("_file", "_pos")
+        return rows.select(*[
+            F.expr(set_exprs[c]).cast(rows.schema[c].dataType).alias(c)
+            if c in set_exprs else F.col(c)
+            for c in rows.columns
+        ])
+
+    return {
+        **_where(root, predicates), "post_state": post_state,
+        "prepare": prepare, "meta": {"set": dict(set_exprs)},
+    }
+
+
+def _keyed(
+    root: str,
+    keys: list[str],
+    batch: DataFrame,
+    match_keys: Callable[[DataFrame], DataFrame],
+    post_state: Callable[[DataFrame | None, DataFrame], DataFrame],
+    planned: tuple[list[str] | None, dict] | None = None,
+) -> dict:
+    """A keyed batch's route: target rows match ``match_keys(batch)``
+    null-safe, in the keyscan's files (:func:`_plan_matched_scan`) or
+    ``planned``'s, a keyscan the caller ran on the same snapshot."""
+
+    def plan(manifest: dict, entry: dict, src: DataFrame) -> tuple:
+        files, scan = planned or _plan_matched_scan(manifest, root, match_keys(src), keys)
+        return files, set(), {"scan": scan}
+
+    def match(tagged: DataFrame, src: DataFrame) -> DataFrame:
+        kf = F.broadcast(match_keys(src))
+        cond = functools.reduce(
+            operator.and_, [tagged[k].eqNullSafe(kf[k]) for k in keys]
+        )
+        return tagged.join(kf, cond, "left_semi")
+
+    return {"plan": plan, "match": match, "post_state": post_state, "batch": batch}
+
+
 def delete_where_dv(
     spark: SparkSession, root: str, predicates: list[tuple]
 ) -> int:
@@ -246,21 +461,7 @@ def delete_where_dv(
     matching positions are written. Already-deleted positions are
     never re-marked. Returns the new snapshot id (the unchanged
     current id when nothing matched — a no-op commits nothing)."""
-    if not predicates:
-        raise ValueError("delete_where_dv: predicates must be non-empty")
-    manifest, entry = _load_guarded(root, "delete_where_dv")
-    plan = S.plan_scan(root, predicates, manifest=manifest)
-    if not plan["files"]:
-        return entry["id"]  # stats prove nothing matches
-
-    raw = S._scan_entry_files(
-        spark, entry, [os.path.join(root, f) for f in plan["files"]]
-    )
-    doomed = _minus_prior_dvs(spark, root, entry, _tag_positions(raw)).filter(
-        F.coalesce(S._conjunction(predicates), F.lit(False))
-    )
-    meta = {"predicates": [S._json_safe_predicate(p) for p in predicates]}
-    return _commit_change(root, manifest, entry, "delete_dv", meta, doomed)
+    return _write_changes(spark, root, MOR, "delete", **_where(root, predicates))
 
 
 def _file_rows(fstats: dict | None) -> int | None:
@@ -282,8 +483,9 @@ def rewrite_deletes(
     (Delta ``REORG TABLE ... APPLY (PURGE)``): files with NO deleted
     positions carry over VERBATIM (file-granular entry, zero I/O);
     files with deletes are read once, their surviving rows rewritten
-    into one new dir. At the default ``min_deleted_frac=0.0`` every
-    marked file purges and the committed entry carries no ``dvs`` — the
+    into one new dir (:func:`_purged`, the copy-on-write writer's
+    purge). At the default ``min_deleted_frac=0.0`` every marked file
+    purges and the committed entry carries no ``dvs`` — the
     raw-reading ops (replace_where & co.) work again.
 
     ``min_deleted_frac`` gates WHICH files rewrite (the Delta/Iceberg
@@ -329,18 +531,7 @@ def rewrite_deletes(
     if not rewrite and len(dvs) <= 1:
         return entry["id"]  # nothing to purge, stack already minimal
 
-    survivors = None
-    if rewrite:
-        tagged = _tag_positions(
-            S._scan_entry_files(
-                spark, entry, [os.path.join(root, p) for p in rewrite]
-            )
-        )
-        survivors = tagged.join(
-            F.broadcast(dv),
-            (tagged._file == dv.file) & (tagged._pos == dv.pos),
-            "left_anti",
-        ).drop("_file", "_pos")
+    survivors = _purged(spark, root, entry, rewrite, dv) if rewrite else None
 
     new_dvs: list[str] = []
     if keep_marked:
@@ -376,11 +567,12 @@ def rewrite_deletes(
 @S._retry_conflicts
 def set_delete_mode(root: str, mode: str) -> None:
     """Table property choosing how row-level writes execute (Iceberg's
-    ``write.delete.mode``): ``copy-on-write`` (default — rewrite
-    straddling files) or ``merge-on-read`` (deletion vectors). Read by
-    the SQL DELETE and MERGE routes and by the streaming MERGE /
-    APPLY CHANGES sinks; the Python APIs stay explicit."""
-    if mode not in ("copy-on-write", "merge-on-read"):
+    ``write.delete.mode``): ``copy-on-write`` (rewrite the files a
+    change touches) or ``merge-on-read`` (deletion vectors). Read by
+    the SQL DELETE, UPDATE and MERGE routes (unset: copy-on-write) and
+    by the streaming MERGE / APPLY CHANGES sinks (unset:
+    merge-on-read); the Python APIs stay explicit."""
+    if mode not in (COW, MOR):
         raise ValueError(
             f"delete mode must be copy-on-write|merge-on-read, got {mode!r}"
         )
@@ -393,9 +585,10 @@ def delete_mode(root: str) -> str:
     return _mode_of(S._load(root))
 
 
-def _mode_of(manifest: dict) -> str:
-    """:func:`delete_mode` read off an already-loaded ``manifest``."""
-    return manifest.get("delete_mode", "copy-on-write")
+def _mode_of(manifest: dict, default: str = COW) -> str:
+    """:func:`delete_mode` read off an already-loaded ``manifest``;
+    ``default`` when the property is unset."""
+    return manifest.get("delete_mode", default)
 
 
 def _merged_rows(
@@ -418,75 +611,6 @@ def _merged_rows(
     )
 
 
-@S._retry_conflicts
-def _write_changes(
-    spark: SparkSession,
-    root: str,
-    batch: DataFrame,
-    keys: list[str],
-    match_keys: Callable[[DataFrame], DataFrame],
-    post_state: Callable[[DataFrame | None, DataFrame], DataFrame],
-    meta: dict | None,
-    op: str,
-    entry_op: str,
-    prepare: Callable[[dict, list[str]], list[str]] | None = None,
-) -> int:
-    """The one merge-on-read change commit (MERGE, CDC APPLY and every
-    route onto them: the SQL MERGE, both streaming sinks, the ingest
-    CDC MERGE): the current rows of the batch's keys are DV-deleted by
-    position and their post-states append as one delta dir, in ONE
-    manifest entry. O(batch) writes, and — when the batch's distinct
-    keys fit under :data:`MAX_KEYSCAN_KEYS` — O(batch-touched files)
-    reads: the matched-scan opens only the files ``plan_scan`` + the
-    Bloom file index cannot prune on the keys' IN-list.
-
-    ``match_keys(batch)`` is the key frame target rows match null-safe;
-    ``post_state(matched, batch)`` builds the appended rows from the
-    matched target rows (None when no file was scanned) and the batch.
-    ``prepare(manifest, table_cols)`` runs each attempt's checks
-    against the loaded manifest and returns the batch columns to
-    project (default: the table's)."""
-    manifest, entry = _load_guarded(root, op)
-    cols = [f["name"] for f in json.loads(entry["schema"])["fields"]]
-    if prepare is not None:
-        cols = prepare(manifest, cols)
-    # the batch feeds three consumers (the key collect, the matched
-    # join, the appended rows): persist its projection for this call so
-    # each reads the cache instead of recomputing the batch (typically
-    # a foreachBatch frame over a Python RDD)
-    src = batch.select(*cols).persist()
-    matched = None
-    try:
-        key_frame = match_keys(src)
-        rel_files, scan_meta = _plan_matched_scan(manifest, root, key_frame, keys)
-        if rel_files is None:
-            rel_files = [
-                os.path.join(d, f)
-                for d, f in S._entry_units(root, manifest, entry)
-            ]
-        if rel_files:
-            raw = S._scan_entry_files(
-                spark, entry, [os.path.join(root, f) for f in rel_files]
-            )
-            tagged = _minus_prior_dvs(spark, root, entry, _tag_positions(raw))
-            kf = F.broadcast(key_frame)
-            cond = functools.reduce(
-                operator.and_, [tagged[k].eqNullSafe(kf[k]) for k in keys]
-            )
-            # batch-bounded: persisted so the appended rows' join reads
-            # the cache instead of scanning the candidate files again
-            matched = tagged.join(kf, cond, "left_semi").persist()
-        return _commit_change(
-            root, manifest, entry, entry_op,
-            {**(meta or {}), "scan": scan_meta},
-            matched, post_state(matched, src),
-        )
-    finally:
-        if matched is not None:
-            matched.unpersist()
-        src.unpersist()
-
-
 def merge_upsert_dv(
     spark: SparkSession,
     root: str,
@@ -500,10 +624,8 @@ def merge_upsert_dv(
     keys append as one delta dir, and a single manifest entry carries
     both — atomic, exactly like ``operators.upsert.merge_upsert``'s
     values (per-column ``coalesce(source, target)``, pytest-pinned)
-    but O(batch) instead of O(table): the copy-on-write merge path
-    rewrites the WHOLE table every call (mode='overwrite'), which at
-    100 TB is a full-table shuffle+write per micro-batch. A NULL source
-    key matches nothing (merge_upsert's equi-join), so its row
+    but O(batch) writes and O(batch-touched files) reads. A NULL
+    source key matches nothing (merge_upsert's equi-join), so its row
     inserts. ``meta`` rides the commit (the streaming sink's
     exactly-once batch id); the commit's ``meta["scan"]`` records
     candidates/kept so the pruning is observable per batch.
@@ -511,11 +633,25 @@ def merge_upsert_dv(
     Source must carry every table column and at most one row per key
     (pre-dedup by sequence column upstream, as the MERGE sink does)."""
     return _write_changes(
-        spark, root, source, keys,
+        spark, root, MOR, "merge", meta=meta, **_upsert(root, source, keys)
+    )
+
+
+def _upsert(root: str, source: DataFrame, keys: list[str]) -> dict:
+    """:func:`merge_upsert_dv`'s route (also the MERGE sink's)."""
+    return _keyed(
+        root, keys, source,
         lambda b: b.select(*keys).dropna(subset=keys),
         lambda matched, b: _merged_rows(matched, b, keys),
-        meta, "merge_upsert_dv", "merge_dv",
     )
+
+
+def _post_states(changes: DataFrame) -> DataFrame:
+    """A CDC feed's post-state rows (insert / update_postimage),
+    without ``_change_type`` — what the applier appends."""
+    return changes.filter(
+        F.col("_change_type").isin("insert", "update_postimage")
+    ).drop("_change_type")
 
 
 def apply_changes_dv(
@@ -534,40 +670,49 @@ def apply_changes_dv(
     feed's post-state rows (insert / update_postimage) append as one
     delta dir, and a single manifest entry carries both. O(feed)
     writes and O(feed-touched files) reads, like
-    :func:`merge_upsert_dv`, instead of the copy-on-write path's
-    O(table) rewrite per batch. Feed contract unchanged: table columns
-    + ``_change_type``, at most one post-state per key.
+    :func:`merge_upsert_dv`. Feed contract unchanged: table columns +
+    ``_change_type``, at most one post-state per key. The arguments
+    are :func:`_changes`'."""
+    return _write_changes(
+        spark, root, MOR, "apply_changes", meta=meta,
+        **_changes(root, changes, keys, expected_base, evolve_schema),
+    )
 
-    ``expected_base``: the snapshot id the FEED's values were derived
-    from, for callers whose post-states are read-modify-write over the
-    table itself (the SQL MERGE executor computes ``SET c =
-    t.c + 1`` from a target read). The commit refuses with
-    :class:`~.snapshots.CommitConflict` when the head moved past it —
-    applying a stale-derived post-state would silently erase the
-    concurrent commit (write_snapshot's expected_base contract). A
-    caller passing it must itself be a retry cycle
-    (``snapshots._retry_conflicts``) that RECOMPUTES the feed from the
-    fresh head on every attempt: this writer is nested in that cycle,
-    so it does not retry on its own. Leave None (default) when the feed
-    is externally sourced (a CDC stream): its values don't depend on
-    table state, so the writer's own OCC retry is correct.
 
-    ``evolve_schema=True`` (Delta autoMerge inside the commit): feed
-    columns absent from the target schema WIDEN it atomically in this
-    same commit — appended post-state files carry them, pre-existing
-    rows read NULL (the append-widening read semantics every append
-    already has). Names whose physical storage lingers in old files
-    (previously dropped columns, hidden partition columns) are refused
-    — they need an explicit add_column's fresh physical name."""
+def _changes(
+    root: str,
+    changes: DataFrame,
+    keys: list[str],
+    expected_base: int | None = None,
+    evolve_schema: bool = False,
+    planned: tuple[list[str] | None, dict] | None = None,
+) -> dict:
+    """The CDC apply route (:func:`apply_changes_dv`, the SQL MERGE
+    executor, the APPLY CHANGES sink).
+
+    ``expected_base``: the snapshot the FEED's values were derived from
+    (the SQL MERGE executor's ``SET c = t.c + 1`` reads the target).
+    The commit refuses with :class:`~.snapshots.CommitConflict` when
+    the head moved past it, since a stale-derived post-state would
+    erase the concurrent commit; the caller must be a retry cycle that
+    recomputes the feed each attempt. Leave None for an externally
+    sourced feed (a CDC stream): the writer's own OCC retry is correct.
+    ``planned``: that caller's keyscan (:func:`_keyed`).
+
+    ``evolve_schema=True`` (Delta autoMerge): feed columns absent from
+    the target WIDEN its schema in this same commit; pre-existing rows
+    read NULL. Names whose physical storage lingers in old files
+    (dropped or hidden partition columns) are refused — they need an
+    explicit add_column's fresh physical name."""
     if "_change_type" not in changes.columns:
         raise ValueError("changes must carry _change_type (see cdc_diff)")
 
-    def prepare(manifest: dict, cols: list[str]) -> list[str]:
+    def prepare(manifest: dict, entry: dict, cols: list[str]) -> list[str]:
         if expected_base is not None and manifest["current"] != expected_base:
             # gated on the manifest this attempt commits with, so
             # _commit's CAS covers the whole window
             raise S.CommitConflict(
-                f"apply_changes_dv: feed derived from snapshot "
+                f"apply_changes: feed derived from snapshot "
                 f"{expected_base} but current is {manifest['current']}; "
                 "recompute the feed and retry"
             )
@@ -582,7 +727,7 @@ def apply_changes_dv(
         ]
         if bad:
             raise ValueError(
-                f"apply_changes_dv: cannot evolve schema with {bad} — "
+                f"apply_changes: cannot evolve schema with {bad} — "
                 "their physical storage lingers in old files; "
                 "add_column first (fresh physical name)"
             )
@@ -591,14 +736,15 @@ def apply_changes_dv(
             raise ValueError(f"changes missing target columns {missing}")
         return cols + extra + ["_change_type"]
 
-    return _write_changes(
-        spark, root, changes, keys,
-        lambda b: b.select(*keys).distinct(),
-        lambda matched, b: b.filter(
-            F.col("_change_type").isin("insert", "update_postimage")
-        ).drop("_change_type"),
-        meta, "apply_changes_dv", "apply_changes_dv", prepare,
-    )
+    return {
+        **_keyed(
+            root, keys, changes,
+            lambda b: b.select(*keys).distinct(),
+            lambda matched, b: _post_states(b),
+            planned,
+        ),
+        "prepare": prepare,
+    }
 
 
 def maintain(

@@ -1100,7 +1100,7 @@ def _retry_conflicts(fn):
 
     Only the OUTERMOST decorated call on a thread retries: a nested one
     (a streaming sink's batch cycle around a DV writer, the conditional
-    MERGE around ``apply_changes_dv``) re-raises to it, so every attempt
+    MERGE executor around the change writer) re-raises to it, so every attempt
     re-runs the whole outer cycle — its batch-id or ``expected_base``
     check included — and a persistent conflict costs COMMIT_RETRIES
     attempts, not COMMIT_RETRIES squared."""
@@ -1240,12 +1240,13 @@ def _stat_value(v):
 def _collect_dir_stats(
     root: str, data_dir: str, stats_cols=None
 ) -> tuple[dict, int]:
-    """Per-file column stats and the total row count of one immutable
-    data dir, from ONE pass over its parquet FOOTERS (pyarrow metadata
-    — zero data pages touched, the same place Iceberg's write path gets
-    its manifest stats). The stats are {relative_file: {col: {"mn",
-    "mx","nulls","rows"}}} with ``mn``/``mx`` absent when the footer
-    carries no usable bound."""
+    """Per-file column stats and the total row count of one freshly
+    written data dir, from ONE pass over its parquet FOOTERS (pyarrow
+    metadata — zero data pages touched, the same place Iceberg's write
+    path gets its manifest stats). The stats are {relative_file: {col:
+    {"mn","mx","nulls","rows"}}} with ``mn``/``mx`` absent when the
+    footer carries no usable bound. A 0-row file (an empty write task)
+    is removed from the dir instead: its stats would be empty."""
     import pyarrow.parquet as pq
 
     out: dict = {}
@@ -1256,6 +1257,11 @@ def _collect_dir_stats(
             continue
         md = pq.ParquetFile(os.path.join(dpath, name)).metadata
         rows = md.num_rows
+        if not rows:
+            for junk in (name, f".{name}.crc"):
+                if os.path.exists(os.path.join(dpath, junk)):
+                    os.remove(os.path.join(dpath, junk))
+            continue
         n_rows += rows
         cols: dict = {}
         for rg in range(md.num_row_groups):
@@ -1425,10 +1431,11 @@ def _write_rows_dir(
 ) -> str | None:
     """Claim the next snapshot's data dir (``op`` names it), write
     ``df`` into it and read its footers ONCE: the per-file stats land
-    in ``manifest["dir_stats"]`` and the dir is returned. A dir whose
-    footers hold no rows is removed and None returned — no entry ever
-    references a 0-row file (its stats would be empty, which hides the
-    table's row count and can never be pruned)."""
+    in ``manifest["dir_stats"]`` and the dir is returned. Each 0-row
+    file is removed, and a dir whose footers hold no rows is removed
+    and None returned — no entry ever references a 0-row file (its
+    stats would be empty, which hides the table's row count and can
+    never be pruned)."""
     data_dir = _claim_data_dir(root, _next_id(manifest), op)
     _write_data_dir(df, root, data_dir, manifest)
     stats, n_rows = _collect_dir_stats(root, data_dir, stats_cols)
@@ -3275,9 +3282,10 @@ def plan_scan(
 
 def _file_all_match(stats: dict, col: str, op: str, val) -> bool:
     """True only when the footer bounds PROVE every row satisfies
-    ``col op val`` — the dual of :func:`_file_may_match`, used by
-    :func:`replace_where` to DROP whole files without reading them.
-    Conservative the other way round: missing stats / nulls / type
+    ``col op val`` — the dual of :func:`_file_may_match`, used by the
+    copy-on-write DELETE and replace (``deletes._where``) to DROP whole
+    files without reading them. Conservative the other way round:
+    missing stats / nulls / type
     mismatches return False (the file gets rewritten, never wrongly
     dropped)."""
     s = stats.get(col)
@@ -3380,6 +3388,13 @@ def _conjunction(predicates: list[tuple]) -> Column:
     return functools.reduce(operator.and_, map(_predicate_col, predicates))
 
 
+def _is_batch_record(meta: dict) -> bool:
+    """A streaming sink's commit carries its micro-batch id: the entry
+    is the batch's exactly-once record, so it commits even when the
+    batch changes nothing."""
+    return "stream_batch_id" in meta
+
+
 def _commit_rewrite(
     root: str,
     manifest: dict,
@@ -3392,19 +3407,20 @@ def _commit_rewrite(
     dvs: list[str] = (),
     data_change: bool = True,
 ) -> int:
-    """The commit half every file-granular rewrite shares
-    (:func:`replace_where`, :func:`update_where`, :func:`compact_files`,
-    :func:`optimize_zorder` WHERE, ``deletes.rewrite_deletes``): the
+    """The commit half every file-granular rewrite shares (the
+    copy-on-write half of ``deletes._write_changes``,
+    :func:`compact_files`, :func:`optimize_zorder` WHERE,
+    ``deletes.rewrite_deletes``): the
     new entry references the ``keep`` files ``{dir: [file]}`` of
     ``entry`` verbatim plus one new data dir (``dir_op`` names it)
     holding ``rows`` (None: nothing to write), at FILE granularity —
     Iceberg's manifest-file model. Its schema is ``entry``'s merged
     with the written frame's (:func:`_merge_rewrite_schema`: a
     metadata-only added column survives the rewrite) and its deletion
-    vectors are ``dvs`` (the copy-on-write rewrites refuse DV'd
-    entries). A rewrite that drops no file, adds no row and leaves
-    the deletion vectors and the schema as they were commits nothing
-    and returns ``entry``'s id."""
+    vectors are ``dvs``. A rewrite that drops no file, adds no row and
+    leaves the deletion vectors and the schema as they were commits
+    nothing and returns ``entry``'s id, unless ``meta`` is a streaming
+    sink's batch record (:func:`_is_batch_record`)."""
     data_dir, schema = None, entry["schema"]
     if rows is not None:
         data_dir = _write_rows_dir(rows, root, manifest, dir_op)
@@ -3415,6 +3431,7 @@ def _commit_rewrite(
         and n_kept == sum(1 for _ in _entry_units(root, manifest, entry))
         and list(dvs) == list(entry.get("dvs") or [])
         and json.loads(schema) == json.loads(entry["schema"])
+        and not _is_batch_record(meta)
     ):
         return entry["id"]
     return _commit_entry(root, manifest, _child_entry(
@@ -3424,7 +3441,6 @@ def _commit_rewrite(
     ))
 
 
-@_retry_conflicts
 def replace_where(
     spark: SparkSession,
     root: str,
@@ -3434,16 +3450,11 @@ def replace_where(
     """Selective overwrite (Delta ``replaceWhere`` / Iceberg
     ``overwrite(filter)``): atomically replace exactly the rows
     matching ``predicates`` (the :func:`plan_scan` conjunction grammar)
-    with ``df``, leaving every other row's FILE untouched on disk.
-
-    File triage from manifest stats, no data read for the easy cases:
-      - bounds prove NO row matches  -> file carried over verbatim;
-      - bounds prove EVERY row matches -> file dropped, never read;
-      - straddling files only        -> read, keep ``NOT predicate``
-        rows, rewrite into the new commit's dir alongside ``df``.
-    The new snapshot references old dirs at FILE granularity
-    (``entry["files"]``, Iceberg's manifest-file model), so at 100 TB
-    a partition-shaped replace rewrites only boundary files.
+    with ``df`` — a copy-on-write change through
+    ``deletes._write_changes``, so only the files holding a matching
+    row are rewritten (stats-proven all-match files drop unread, every
+    other file carries over verbatim at FILE granularity). Refuses a
+    snapshot with deletion vectors.
 
     ``df`` must itself satisfy the predicates — enforced in-plan
     (raise_error) exactly like a CHECK constraint, so a mis-scoped
@@ -3454,6 +3465,7 @@ def replace_where(
     nothing).
     """
     from ..operators.constraints import guard_constraints
+    from . import deletes
 
     if not predicates:
         # An empty conjunction is vacuously true for every file ("all
@@ -3466,160 +3478,45 @@ def replace_where(
             "conjunction would replace the whole table; use "
             "write_snapshot(op='overwrite') for that)"
         )
-    manifest = _load(root)
-    plan = plan_scan(root, predicates, manifest=manifest)  # validates grammar
-    entry = _entry(manifest, plan["snapshot_id"])
-    _guard_no_dvs(entry, "replace_where")
-    _guard_raw_layout(entry, "replace_where")
-    dir_stats = manifest["dir_stats"]
 
-    keep_verbatim: dict[str, list[str]] = {}
-    rewrite_paths: list[str] = []
-    pruned = set(plan["pruned"])  # no row can match -> keep verbatim
-    for d, fname in _entry_units(root, manifest, entry):
-        rel = os.path.join(d, fname)
-        stats = dir_stats.get(d, {}).get(fname, {})
-        if rel in pruned:
-            keep_verbatim.setdefault(d, []).append(fname)
-        elif all(
-            _file_all_match(stats, p[0], p[1], p[2] if len(p) == 3 else None)
-            for p in predicates
-        ):
-            continue  # every row matches: drop whole file, never read
-        else:
-            rewrite_paths.append(os.path.join(root, rel))
-
-    conj = _conjunction(predicates)
-    # NULL must VIOLATE here (a null doesn't satisfy the scope, so the
-    # row would leak outside it) — unlike ANSI CHECK's null-satisfies.
-    # Stored table CHECK constraints apply to the incoming rows too
-    # (retained rows passed them at their own write).
-    guards: dict = dict(manifest.get("constraints", {}))
-    guards["replace_where_scope"] = F.coalesce(conj, F.lit(False))
-    new_rows = guard_constraints(df, guards)
-    if rewrite_paths:
-        retained = _scan_entry_files(spark, entry, rewrite_paths).filter(
-            ~F.coalesce(conj, F.lit(False))
-        )
-        new_rows = retained.unionByName(new_rows, allowMissingColumns=True)
-    # temporal predicate values ISO-encode (raw datetimes are not
-    # JSON-serializable and would crash the commit AFTER the data dir
-    # was written)
-    meta = {"predicates": [_json_safe_predicate(p) for p in predicates]}
-    return _commit_rewrite(
-        root, manifest, entry, "replace_where", "replace", new_rows,
-        keep_verbatim, meta,
+    # NULL must VIOLATE the scope (a null row would leak outside it) —
+    # unlike ANSI CHECK's null-satisfies; the writer adds the stored
+    # CHECK constraints
+    return deletes._write_changes(
+        spark, root, deletes.COW, "replace",
+        post_state=lambda matched, src: guard_constraints(df, {
+            "replace_where_scope": F.coalesce(_conjunction(predicates), F.lit(False))
+        }),
+        prepare=lambda manifest, entry, cols: (
+            _guard_no_dvs(entry, "replace_where") or cols
+        ),
+        **deletes._where(root, predicates, True),
     )
 
 
-@_retry_conflicts
 def update_where(
     spark: SparkSession,
     root: str,
     predicates: list[tuple],
     set_exprs: dict[str, str],
 ) -> int:
-    """``UPDATE ... SET ... WHERE ...`` at file granularity: files whose
-    stats PROVE no row matches carry over verbatim (never read); every
-    other file is read once and rewritten with ``set_exprs`` applied to
-    matching rows only (non-matching rows pass through byte-identical
-    values). Unlike :func:`replace_where` there is no scope guard —
-    an update may move a row OUT of the predicate's range (``SET
-    price = 0 WHERE price > 100``); stored CHECK constraints still
-    gate the rewritten rows in-plan.
+    """``UPDATE ... SET ... WHERE ...`` copy-on-write through
+    ``deletes._write_changes``: only the files holding a matching row
+    are rewritten. Unlike :func:`replace_where` there is no scope guard
+    — an update may move a row OUT of the predicate's range (``SET
+    price = 0 WHERE price > 100``); stored CHECK constraints still gate
+    the updated rows in-plan. Refuses a snapshot with deletion vectors.
 
     ``set_exprs`` maps column -> SQL expression evaluated against the
-    pre-update row (standard UPDATE semantics: all assignments see the
-    OLD values). Returns the new snapshot id (the current one when the
-    stats prune every file: a no-op commits nothing). At 100 TB a
-    stats-selective update rewrites only the files its predicate
-    range touches — the same triage as replace_where's boundary
-    rewrite."""
-    from ..operators.constraints import guard_constraints
+    pre-update row (all assignments see the OLD values). Returns the
+    new snapshot id (the current one when no row matches: a no-op
+    commits nothing)."""
+    from . import deletes
 
-    if not predicates:
-        raise ValueError("update_where: predicates must be non-empty")
-    unknown = [c for c in set_exprs if not c.isidentifier()]
-    if not set_exprs or unknown:
-        raise ValueError(f"set_exprs must be non-empty column->expr ({unknown=})")
-    manifest = _load(root)
-    plan = plan_scan(root, predicates, manifest=manifest)
-    entry = _entry(manifest, plan["snapshot_id"])
-    _guard_no_dvs(entry, "update_where")
-    _guard_raw_layout(entry, "update_where")
-    # validate SET columns against the snapshot's LOGICAL schema up
-    # front — an all-files-pruned predicate must not let a typo'd
-    # column name pass as a silent no-op
-    logical_cols = {
-        f["name"] for f in json.loads(entry["schema"]).get("fields", [])
-    }
-    bad = [c for c in set_exprs if c not in logical_cols]
-    if bad:
-        raise ValueError(f"update_where: unknown columns {bad}")
-
-    keep_verbatim: dict[str, list[str]] = {}
-    rewrite_paths: list[str] = []
-    pruned = set(plan["pruned"])
-    for d, fname in _entry_units(root, manifest, entry):
-        rel = os.path.join(d, fname)
-        if rel in pruned:
-            keep_verbatim.setdefault(d, []).append(fname)
-        else:
-            rewrite_paths.append(os.path.join(root, rel))
-
-    updated = None  # fully pruned: nothing rewrites, nothing commits
-    if rewrite_paths:
-        cond = F.coalesce(_conjunction(predicates), F.lit(False))
-        rows = _scan_entry_files(spark, entry, rewrite_paths)
-        # all assignments evaluate against the OLD row (one select)
-        updated = rows.select(
-            *[
-                (
-                    F.when(cond, F.expr(set_exprs[c]).cast(rows.schema[c].dataType))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    if c in set_exprs
-                    else F.col(c)
-                )
-                for c in rows.columns
-            ]
-        )
-        updated = guard_constraints(updated, manifest.get("constraints", {}))
-    meta = {
-        "predicates": [_json_safe_predicate(p) for p in predicates],
-        "set": dict(set_exprs),
-    }
-    return _commit_rewrite(
-        root, manifest, entry, "update_where", "update", updated,
-        keep_verbatim, meta,
+    return deletes._write_changes(
+        spark, root, deletes.COW, "update",
+        **deletes._update(root, predicates, set_exprs, refuse_dvs=True),
     )
-
-
-def delete_keys(
-    spark: SparkSession, root: str, key_col: str, keys: list
-) -> int:
-    """Key-targeted deletion (the GDPR right-to-be-forgotten request):
-    remove every row whose ``key_col`` is in ``keys``, as a
-    :func:`replace_where` DELETE — so only files whose stats bounds
-    admit one of the keys are even read, and of those, only files
-    actually containing matching rows change bytes... files provably
-    outside every key's range carry over verbatim. On a table
-    clustered by the key (:func:`optimize_zorder`), a handful of keys
-    touches a handful of files regardless of table size.
-
-    ``keys`` is an in-memory list (deletion requests are small by
-    nature); batch large backlogs into chunks."""
-    if not keys:
-        raise ValueError("keys must be non-empty")
-    manifest = _load(root)
-    if manifest["current"] is None:
-        raise KeyError(f"table {root} has no snapshots")
-    import pyspark.sql.types as T
-
-    entry = _entry(manifest, manifest["current"])
-    schema = T.StructType.fromJson(json.loads(entry["schema"]))
-    empty = spark.createDataFrame([], schema)
-    return replace_where(spark, root, empty, [(key_col, "in", list(keys))])
 
 
 @_retry_conflicts

@@ -10,18 +10,13 @@ transactional operators rather than re-implementing them:
 =====================================  ================================
 statement                              routed to
 =====================================  ================================
-``DELETE FROM t WHERE ...``            :func:`snapshots.replace_where`
-                                       (empty replacement — file-
-                                       granular, stats-pruned)
-``UPDATE t SET ... WHERE ...``         :func:`snapshots.update_where`
-                                       (only may-match files rewritten)
-``MERGE INTO t USING s ON ... WHEN``   ``_merge``: every clause
-                                       shape compiles to one CDC
-                                       feed, committed by
-                                       :func:`deletes.apply_changes_dv`
-                                       (merge-on-read) or
-                                       ``upsert.apply_changes`` + one
-                                       overwrite (copy-on-write)
+``DELETE FROM t WHERE ...``            ``deletes._write_changes`` in
+``UPDATE t SET ... WHERE ...``         the table's write.delete.mode:
+``MERGE INTO t USING s ON ... WHEN``   deletion vectors, or a rewrite
+                                       of only the touched files
+                                       (copy-on-write, the default);
+                                       ``_merge`` compiles every MERGE
+                                       clause shape to one CDC feed
 ``SELECT * FROM t [VERSION AS OF n |   :func:`snapshots.read_snapshot`
 TIMESTAMP AS OF 'iso' | TAG 'name']    / ``scan_snapshot`` (WHERE gets
 [WHERE ...]``                          stats file-skipping; returns
@@ -96,7 +91,6 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import upsert
 from . import snapshots
 
 _LITERAL = re.compile(
@@ -746,25 +740,26 @@ def _merge(
     ``when()`` chain into delete / post-image rows (UPDATE keeps
     unassigned columns at their target values), source rows matching
     no key take the first applicable NOT MATCHED clause and insert —
-    and the feed commits through the table's ``write.delete.mode``:
-    merge-on-read via :func:`deletes.apply_changes_dv` (O(batch) both
-    sides; the target read opens only the files the batch's keys prune
-    to), or copy-on-write via ``upsert.apply_changes`` on the matched
-    side, the inserts appended, in one overwrite commit. Matching is
-    row-wise: every target row of a matched key is updated,
-    duplicate-key targets included. An INSERT touches no target row,
-    even one sharing its key: a NULL key matches nothing, so its
-    source row inserts beside the target's NULL-key rows.
+    and the feed commits through the row-level change writer
+    (``deletes._changes``) in the table's ``write.delete.mode``:
+    deletion vectors (merge-on-read) or a rewrite of only the files
+    holding a changed row (copy-on-write). Both sides are O(batch):
+    the target read opens only the files the batch's keys prune to,
+    and the writer reuses that keyscan. Matching is row-wise: every
+    target row of a matched key is updated, duplicate-key targets
+    included. An INSERT touches no target row, even one sharing its
+    key: a NULL key matches nothing, so its source row inserts beside
+    the target's NULL-key rows.
 
     Each retry attempt loads the manifest ONCE and derives everything
     from it — the delete mode, the target columns and types, the
     clause validation, the ``evolve`` (``WITH SCHEMA EVOLUTION``)
-    columns and the pinned target read; the committing writer's own
-    load is the only other. Because UPDATE expressions read target
-    values, the feed is a read-modify-write: both commit routes gate
-    on the attempt's snapshot (``expected_base``), so a concurrent
-    commit fails the attempt and the retry recomputes the feed — it is
-    never erased by a stale one."""
+    columns, the keyscan and the pinned target read; the committing
+    writer's own load is the only other. Because UPDATE expressions
+    read target values, the feed is a read-modify-write: the commit
+    gates on the attempt's snapshot (``expected_base``), so a
+    concurrent commit fails the attempt and the retry recomputes the
+    feed — it is never erased by a stale one."""
     import functools
     import operator as _op
 
@@ -942,9 +937,9 @@ def _merge(
                     sub.select(*row, F.lit(ct).alias("_change_type"))
                 )
         if carry:
-            # Row-completeness for DUPLICATE-KEY targets: the commit
-            # routes are key-addressed (apply_changes / apply_changes_dv
-            # replace every target row of a fed key), so a target row
+            # Row-completeness for DUPLICATE-KEY targets: the CDC
+            # applier is key-addressed (it replaces every target row
+            # of a fed key), so a target row
             # whose key IS modified by some pair but which itself
             # matched no clause must ride the feed as a carry
             # post-image, or it would silently vanish with its
@@ -1013,14 +1008,13 @@ def _merge(
         entry = snapshots._pin(manifest)
         t_cols, dtypes, add = _target_schema(manifest, entry)
         compiled = _compile(t_cols)
-        mor = deletes._mode_of(manifest) == "merge-on-read"
-        # merge-on-read reads only the files the manifest can't prune on
-        # the batch's key IN-list (the change writer's keyscan); the
-        # join is the exactness boundary, the prune a superset — of
-        # every key the feed addresses only while each inserted key is
-        # its source row's own: an INSERT VALUES key expression or a
-        # key cast can land on a target row outside it, which the
-        # carry below must see
+        # the target read opens only the files the manifest can't prune
+        # on the batch's key IN-list (the change writer's keyscan, run
+        # once and handed to it); the join is the exactness boundary,
+        # the prune a superset — of every key the feed addresses only
+        # while each inserted key is its source row's own: an INSERT
+        # VALUES key expression or a key cast can land on a target row
+        # outside it, which the carry below must see
         keys_pass = all(
             source.schema[k].dataType == dtypes[k] for k in keys
         ) and all(
@@ -1031,11 +1025,11 @@ def _merge(
             for c in compiled if c["action"] == "insert_values"
             for k in keys
         )
-        rel_files = (
-            deletes._plan_matched_scan(manifest, root, source, keys)[0]
-            if mor and keys_pass else None
+        planned = (
+            deletes._plan_matched_scan(manifest, root, source, keys)
+            if keys_pass else (None, {"keyscan": "full"})
         )
-        target = snapshots._entry_frame(spark, root, manifest, entry, rel_files)
+        target = snapshots._entry_frame(spark, root, manifest, entry, planned[0])
         for n, dt in add:
             # evolving columns don't exist on the target yet: NULL-pad
             # so the pair frame and UPDATE's keep-target-value branch
@@ -1043,18 +1037,9 @@ def _merge(
             target = target.withColumn(n, F.lit(None).cast(dt))
         changes, inserts = _build_feed(target, t_cols, dtypes, compiled)
         target = target.select(*t_cols)
-        if not mor:
-            state = target if changes is None else upsert.apply_changes(
-                target, changes, keys
-            )
-            if inserts is not None:
-                state = state.unionByName(inserts)
-            return snapshots.write_snapshot(
-                state, root, mode="overwrite", expected_base=entry["id"],
-            )
         feed = [] if changes is None else [changes]
         if inserts is not None:
-            # the DV applier addresses every fed key null-safe (the CDC
+            # the applier addresses every fed key null-safe (the CDC
             # contract), but an INSERT addresses no target row: a
             # target row sharing an inserted key (a NULL key, which
             # ``t.k = s.k`` never matches, or an INSERT VALUES
@@ -1078,9 +1063,13 @@ def _merge(
                 inserts.withColumn("_change_type", F.lit("insert")),
                 held.withColumn("_change_type", F.lit("update_postimage")),
             ]
-        return deletes.apply_changes_dv(
-            spark, root, functools.reduce(DataFrame.unionByName, feed), keys,
-            expected_base=entry["id"], evolve_schema=bool(add),
+        return deletes._write_changes(
+            spark, root, deletes._mode_of(manifest), "apply_changes",
+            **deletes._changes(
+                root, functools.reduce(DataFrame.unionByName, feed), keys,
+                expected_base=entry["id"], evolve_schema=bool(add),
+                planned=planned,
+            ),
         )
 
     return _run()
@@ -1548,21 +1537,24 @@ def execute_dml(
 
         # Iceberg's write.delete.mode: merge-on-read marks positions in
         # a deletion vector (no file rewrites); copy-on-write (default)
-        # routes through replace_where
-        if deletes.delete_mode(root) == "merge-on-read":
-            sid = deletes.delete_where_dv(spark, root, parse_where(where))
+        # rewrites only the files holding a matched row
+        preds, mode = parse_where(where), deletes.delete_mode(root)
+        if mode == deletes.MOR:
+            sid = deletes.delete_where_dv(spark, root, preds)
         else:
-            empty = _empty_like(spark, root)
-            sid = snapshots.replace_where(
-                spark, root, empty, parse_where(where)
+            sid = deletes._write_changes(
+                spark, root, mode, "delete", **deletes._where(root, preds, True)
             )
         return {"op": "delete", "table": name, "snapshot_id": sid}
 
     if (m := _UPDATE.match(sql)) is not None:
         name, set_clause, where = m.groups()
         root = _resolve(tables, name)
-        sid = snapshots.update_where(
-            spark, root, parse_where(where), parse_set(set_clause)
+        from . import deletes
+
+        sid = deletes._write_changes(
+            spark, root, deletes.delete_mode(root), "update",
+            **deletes._update(root, parse_where(where), parse_set(set_clause)),
         )
         return {"op": "update", "table": name, "snapshot_id": sid}
 

@@ -11,7 +11,7 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 from typing import Protocol
 
 from pyspark.sql import DataFrame
@@ -123,24 +123,25 @@ def foreach_batch_merge_snapshot(
     ``order_col``: when a batch can carry several rows per key, keep
     the max-``order_col`` row per key (ties broken by the key tuple)
     before merging; None asserts nothing and merges the batch as-is —
-    a multi-row key would then surface as a full_outer fanout, so
+    a multi-row key would then write one post-state per row, so
     pre-dedup or pass order_col.
 
     A crash BETWEEN the data write and the manifest swap leaves an
     orphan snap dir invisible to every reader — replay rewrites the
     batch under the next snapshot id; no torn state is readable.
 
-    Write strategy: merge-on-read by DEFAULT (deletion-vector
-    ``merge_upsert_dv`` — O(batch) bytes per trigger); set the table
-    property ``write.delete.mode='copy-on-write'`` to opt into the
-    full-rewrite path, whose per-batch cost is O(table). Schedule
+    Write strategy: the row-level change writer
+    (``sources.deletes._write_changes``), merge-on-read by DEFAULT
+    (deletion-vector ``merge_upsert_dv`` — O(batch) bytes per trigger);
+    the table property ``write.delete.mode='copy-on-write'`` rewrites
+    only the files holding a matched row instead. Schedule
     ``sources.deletes.maintain()`` as the compaction story for the
     default path.
     """
-    from ..operators.upsert import merge_upsert
-    from ..sources import snapshots as snap
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
+        from ..sources import deletes
+
         src = batch_df
         if order_col is not None:
             from pyspark.sql import Window
@@ -154,54 +155,17 @@ def foreach_batch_merge_snapshot(
                 .drop("_rn")
             )
 
-        # the whole read-check-write cycle retries on CommitConflict:
-        # the batch-id check, the target read and the merge all
-        # recompute against the winner's state — and the CoW write is
-        # pinned to the snapshot it derived from (expected_base), so a
-        # concurrent commit can never be silently erased by a rebase
-        @snap._retry_conflicts
-        def attempt() -> None:
-            manifest = snap._load(root)
-            if _batch_committed(manifest, batch_id):
-                return
-            base = manifest["current"]
-            if base is not None:
-                from ..sources import deletes
-
-                # the STREAMING sink defaults to merge-on-read when the
-                # table property is unset: per-micro-batch upserts are
-                # exactly the sparse-write shape DVs were built for
-                if manifest.get("delete_mode", "merge-on-read") != "copy-on-write":
-                    # DEFAULT O(batch) path: matched positions
-                    # DV-deleted + merged rows appended in ONE commit
-                    # (batch id rides it, same exactly-once
-                    # transaction) — the copy-on-write branch below
-                    # rewrites the WHOLE table per micro-batch, which
-                    # at 100 TB is a full-table shuffle+write every
-                    # trigger, so it is opt-in via the table property
-                    deletes.merge_upsert_dv(
-                        batch_df.sparkSession,
-                        root,
-                        src,
-                        list(keys),
-                        meta={"stream_batch_id": batch_id},
-                    )
-                    return
-                target = snap.read_snapshot(
-                    batch_df.sparkSession, root, snapshot_id=base
-                )
-                merged = merge_upsert(target, src.select(*target.columns), keys)
+        def write(mode: str, meta: dict) -> None:
+            spark = batch_df.sparkSession
+            if mode == deletes.MOR:
+                deletes.merge_upsert_dv(spark, root, src, list(keys), meta=meta)
             else:
-                merged = src
-            snap.write_snapshot(
-                merged,
-                root,
-                mode="overwrite",
-                meta={"stream_batch_id": batch_id},
-                expected_base=base,
-            )
+                deletes._write_changes(
+                    spark, root, mode, "merge", meta=meta,
+                    **deletes._upsert(root, src, list(keys)),
+                )
 
-        attempt()
+        _write_batch_once(root, batch_id, src, write)
 
     return fn
 
@@ -212,9 +176,9 @@ def foreach_batch_apply_changes(
     """Exactly-once streaming CDC consumer (DLT ``APPLY CHANGES INTO``
     as a foreachBatch sink): each micro-batch is a change feed — rows
     carry ``_change_type`` (see ``operators.upsert.cdc_diff``) — folded
-    onto the snapshot table at ``root`` via ``apply_changes``, which
-    unlike the MERGE sink can DELETE. Idempotence is the same
-    batch-id-in-the-manifest transaction as
+    onto the snapshot table at ``root`` with ``apply_changes``'
+    semantics, which unlike the MERGE sink can DELETE. Idempotence is
+    the same batch-id-in-the-manifest transaction as
     :func:`foreach_batch_merge_snapshot`.
 
     ``order_col`` is DLT's SEQUENCE BY: within a batch, a key's fate is
@@ -226,10 +190,10 @@ def foreach_batch_apply_changes(
     Merge-on-read by default, like :func:`foreach_batch_merge_snapshot`
     (``write.delete.mode='copy-on-write'`` opts out).
     """
-    from ..operators.upsert import apply_changes
-    from ..sources import snapshots as snap
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
+        from ..sources import deletes
+
         src = batch_df
         if order_col is not None:
             from pyspark.sql import Window
@@ -247,50 +211,46 @@ def foreach_batch_apply_changes(
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-        data_cols = [c for c in src.columns if c != "_change_type"]
 
-        # retried read-check-write cycle with the CoW write pinned to
-        # the snapshot it derived from — see foreach_batch_merge_snapshot
-        @snap._retry_conflicts
-        def attempt() -> None:
-            manifest = snap._load(root)
-            if _batch_committed(manifest, batch_id):
-                return
-            base = manifest["current"]
-            if base is not None:
-                from ..sources import deletes
-
-                # property unset -> merge-on-read, as in the MERGE sink
-                if manifest.get("delete_mode", "merge-on-read") != "copy-on-write":
-                    # DEFAULT O(feed) commit: changed keys DV-deleted
-                    # by position, post-state rows appended, batch id
-                    # in the same transaction (vs the O(table)
-                    # overwrite below, opt-in via the table property)
-                    deletes.apply_changes_dv(
-                        batch_df.sparkSession,
-                        root,
-                        src,
-                        list(keys),
-                        meta={"stream_batch_id": batch_id},
-                    )
-                    return
-                target = snap.read_snapshot(
-                    batch_df.sparkSession, root, snapshot_id=base
-                )
-            else:
-                target = src.select(*data_cols).filter(F.lit(False))
-            applied = apply_changes(target, src, keys)
-            snap.write_snapshot(
-                applied,
-                root,
-                mode="overwrite",
-                meta={"stream_batch_id": batch_id},
-                expected_base=base,
+        def write(mode: str, meta: dict) -> None:
+            deletes._write_changes(
+                batch_df.sparkSession, root, mode, "apply_changes", meta=meta,
+                **deletes._changes(root, src, list(keys)),
             )
 
-        attempt()
+        _write_batch_once(root, batch_id, deletes._post_states(src), write)
 
     return fn
+
+
+def _write_batch_once(
+    root: str, batch_id: int, first: DataFrame, write: Callable[[str, dict], None]
+) -> None:
+    """The exactly-once micro-batch commit both snapshot sinks share,
+    one retried read-check-write cycle: a committed batch id writes
+    nothing; an empty table takes ``first`` as its first snapshot;
+    otherwise ``write(mode, meta)`` commits through the row-level
+    change writer in the table's delete mode (unset: merge-on-read, the
+    sparse-write shape DVs were built for). The batch id rides the
+    commit's meta; a conflict re-runs the cycle, batch-id check
+    included."""
+    from ..sources import deletes
+    from ..sources import snapshots as snap
+
+    @snap._retry_conflicts
+    def attempt() -> None:
+        manifest = snap._load(root)
+        if _batch_committed(manifest, batch_id):
+            return
+        meta = {"stream_batch_id": batch_id}
+        if manifest["current"] is None:
+            snap.write_snapshot(
+                first, root, mode="overwrite", meta=meta, expected_base=None
+            )
+            return
+        write(deletes._mode_of(manifest, deletes.MOR), meta)
+
+    attempt()
 
 
 def _batch_committed(manifest: dict, batch_id: int) -> bool:

@@ -3,8 +3,10 @@ its own manifest load: the published-history walk (``_main_ancestors``)
 is called only by ``snapshots._pin``, and no program module carries a
 "planned against snapshot" re-plan gate — ``_commit``'s version CAS is
 the one freshness check. SQL MERGE has one executor: only its retry
-attempt calls the CDC appliers. Every new snapshot entry lands through
-the one commit helper (``snapshots._commit_entry``)."""
+attempt calls the CDC applier. Row-level writes go through the one
+change writer, never the reference upsert operators. Every new
+snapshot entry lands through the one commit helper
+(``snapshots._commit_entry``)."""
 
 from __future__ import annotations
 
@@ -57,12 +59,37 @@ def test_no_replan_freshness_gates():
     assert not hits, "re-plan freshness gate left in:\n" + "\n".join(hits)
 
 
-def test_sql_merge_has_one_executor():
-    f = ROOT / "e_commerce_lakehouse_spark/sources/sql_dml.py"
-    for name in ("apply_changes_dv", "apply_changes"):
+def _callers(name: str, files=FILES) -> set[str]:
+    """``path:enclosing function`` of every call to ``name``."""
+    out = set()
+    for f in files:
         v = _Callers(name)
         v.visit(ast.parse(f.read_text()))
-        assert set(v.found) == {"_merge._run"}, (name, v.found)
+        out |= {f"{f.relative_to(ROOT)}:{c}" for c in v.found}
+    return out
+
+
+def test_sql_merge_has_one_executor():
+    f = ROOT / "e_commerce_lakehouse_spark/sources/sql_dml.py"
+    v = _Callers("_changes")
+    v.visit(ast.parse(f.read_text()))
+    assert set(v.found) == {"_merge._run"}, v.found
+
+
+def test_row_level_writes_use_the_one_change_writer():
+    """``operators.upsert.merge_upsert`` / ``apply_changes`` stay the
+    reference model (the driver contract and the tests use them): no
+    storage or streaming module writes a table through them. Matched
+    rows are position-tagged only by the change writer and the purge
+    it shares with ``rewrite_deletes``."""
+    pkg = ROOT / "e_commerce_lakehouse_spark"
+    write_paths = [*(pkg / "sources").rglob("*.py"), *(pkg / "streaming").rglob("*.py")]
+    for name in ("merge_upsert", "apply_changes"):
+        assert not _callers(name, write_paths), name
+    deletes = "e_commerce_lakehouse_spark/sources/deletes.py"
+    assert _callers("_tag_positions") == {
+        f"{deletes}:_write_changes", f"{deletes}:_purged"
+    }
 
 
 def _ref_writes(tree) -> list[tuple[str, int, str]]:

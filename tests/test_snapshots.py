@@ -523,8 +523,11 @@ def test_tagged_scan_and_constraints_metadata(spark, root):
 
 
 def test_delete_keys_touches_only_owning_files(spark, root):
-    """GDPR deletion: only files whose bounds admit a requested key are
-    rewritten; everything else carries over verbatim."""
+    """GDPR deletion (``DELETE ... WHERE k IN (...)``): only files
+    whose bounds admit a requested key are rewritten; everything else
+    carries over verbatim."""
+    from e_commerce_lakehouse_spark.sources import sql_dml
+
     S.write_snapshot(spark.range(0, 8_000).repartitionByRange(8, "id"), root)
     m = S._load(root)
     d1 = S._entry(m, 1)["dirs"][0]
@@ -532,7 +535,9 @@ def test_delete_keys_touches_only_owning_files(spark, root):
         f: os.path.getsize(os.path.join(root, d1, f))
         for f in S._dir_files(root, m, d1)
     }
-    sid = S.delete_keys(spark, root, "id", [42, 43, 7777])
+    sid = sql_dml.execute_dml(
+        spark, "DELETE FROM t WHERE id IN (42, 43, 7777)", {"t": root}
+    )["snapshot_id"]
     out = S.read_snapshot(spark, root)
     assert out.count() == 8_000 - 3
     assert out.filter(F.col("id").isin(42, 43, 7777)).count() == 0
@@ -542,8 +547,6 @@ def test_delete_keys_touches_only_owning_files(spark, root):
     assert len(carried) >= 6
     for f in carried:
         assert os.path.getsize(os.path.join(root, d1, f)) == before[f]
-    with pytest.raises(ValueError, match="non-empty"):
-        S.delete_keys(spark, root, "id", [])
 
 
 def test_temporal_shape_pruning_is_conservative(spark, root):
@@ -2710,12 +2713,17 @@ def test_noop_dml_commits_nothing_and_keeps_row_count(spark, root, mode):
     D.set_delete_mode(root, mode)
     t = {"t": root}
     n_snaps = len(S.history(root))
+    absent = {"s": spark.createDataFrame([(999, 1)], "id long, k long")}
     for stmt in (
         "DELETE FROM t WHERE id = 999",
         "UPDATE t SET k = 5 WHERE id = 999",
         "DELETE FROM t WHERE id = 999",
+        # both files survive the stats, but no row matches
+        "UPDATE t SET k = 9 WHERE id = 5 AND k = 0",
+        "DELETE FROM t WHERE id = 5 AND k = 0",
+        "MERGE INTO t USING s ON t.id = s.id WHEN MATCHED THEN UPDATE SET *",
     ):
-        sid = sql_dml.execute_dml(spark, stmt, t)["snapshot_id"]
+        sid = sql_dml.execute_dml(spark, stmt, t, sources=absent)["snapshot_id"]
         assert sid == n_snaps, stmt
         assert len(S.history(root)) == n_snaps, stmt
         assert S.table_stats(root)["n_rows"] == 20, stmt
@@ -2777,3 +2785,94 @@ def test_empty_replace_where_commits_only_a_schema_change(spark, root):
     assert S.read_snapshot(spark, root).columns == ["id", "note"]
     assert S.table_stats(root)["n_rows"] == 10
     assert _zero_row_refs(root) == []
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_merge_appends_no_zero_row_file(spark, root, mode):
+    """A one-row upsert MERGE and an insert-only MERGE write their
+    appended rows without a 0-row file beside them: every referenced
+    file holds rows, and ``table_stats`` keeps an exact row count."""
+    from e_commerce_lakehouse_spark.sources import deletes as D
+    from e_commerce_lakehouse_spark.sources import sql_dml
+
+    S.write_snapshot(
+        spark.createDataFrame([(i, i % 3) for i in range(20)], "id long, k long")
+        .repartition(2),
+        root,
+    )
+    D.set_delete_mode(root, mode)
+    on = "MERGE INTO t USING s ON t.id = s.id "
+    for stmt, row, n in (
+        (on + "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *", (5, 7), 20),
+        (on + "WHEN NOT MATCHED THEN INSERT *", (50, 1), 21),
+    ):
+        src = {"s": spark.createDataFrame([row], "id long, k long")}
+        sql_dml.execute_dml(spark, stmt, {"t": root}, sources=src)
+        assert _zero_row_refs(root) == [], stmt
+        assert S.table_stats(root)["n_rows"] == n, stmt
+    got = {r.id: r.k for r in S.read_snapshot(spark, root).collect()}
+    assert (got[5], got[50], len(got)) == (7, 1, 21)
+
+
+def _range_files(root) -> dict[str, bytes]:
+    """``dir/file`` -> bytes of every data file under the table root."""
+    out = {}
+    for d in os.listdir(root):
+        p = os.path.join(root, d)
+        if d.startswith("snap-") and os.path.isdir(p):
+            for f in os.listdir(p):
+                if f.endswith(".parquet"):
+                    with open(os.path.join(p, f), "rb") as fh:
+                        out[os.path.join(d, f)] = fh.read()
+    return out
+
+
+def test_cow_row_change_rewrites_only_the_owning_file(spark, root, tmp_path):
+    """Copy-on-write rewrites only the files a change touches: on an
+    8-file range table a one-row SQL MERGE, UPDATE and DELETE, and a
+    one-row copy-on-write sink batch, each replace exactly the file
+    holding the row. The other 7 stay in the entry, byte-identical on
+    disk, and the entry carries no deletion vector."""
+    from e_commerce_lakehouse_spark.sources import deletes as D
+    from e_commerce_lakehouse_spark.sources import sql_dml
+    from e_commerce_lakehouse_spark.streaming import sinks
+
+    src = spark.createDataFrame([(4321, -1)], "id long, k long")
+    cases = [
+        ("MERGE INTO t USING s ON t.id = s.id WHEN MATCHED THEN UPDATE SET * "
+         "WHEN NOT MATCHED THEN INSERT *", {4321: -1}),
+        ("UPDATE t SET k = -1 WHERE id = 4321", {4321: -1}),
+        ("DELETE FROM t WHERE id = 4321", {}),
+        ("sink", {4321: -1}),
+    ]
+    for i, (stmt, changed) in enumerate(cases):
+        r = str(tmp_path / f"t{i}")
+        S.write_snapshot(
+            spark.range(0, 8_000).select("id", (F.col("id") % 5).alias("k"))
+            .repartitionByRange(8, "id"),
+            r,
+        )
+        D.set_delete_mode(r, "copy-on-write")
+        m = S._load(r)
+        base = S._entry(m, m["current"])
+        units = [os.path.join(d, f) for d, f in S._entry_units(r, m, base)]
+        assert len(units) == 8
+        before = _range_files(r)
+        if stmt == "sink":
+            sinks.foreach_batch_merge_snapshot(r, ["id"])(src, 0)
+        else:
+            sql_dml.execute_dml(spark, stmt, {"t": r}, sources={"s": src})
+        m = S._load(r)
+        entry = S._entry(m, m["current"])
+        assert entry["id"] == base["id"] + 1 and "dvs" not in entry, stmt
+        now = [os.path.join(d, f) for d, f in S._entry_units(r, m, entry)]
+        carried = [u for u in now if u in before]
+        assert len(carried) == 7, (stmt, now)
+        assert entry["meta"]["rewritten"] == sorted(set(units) - set(carried)), stmt
+        after = _range_files(r)
+        for u in carried:
+            assert after[u] == before[u], (stmt, u)
+        got = {row.id: row.k for row in S.read_snapshot(spark, r).collect()}
+        want = {i: i % 5 for i in range(8_000) if i != 4321} | changed
+        assert got == want, stmt
+        assert _zero_row_refs(r) == []

@@ -638,6 +638,44 @@ def test_delete_mode_routes_dv_and_reorg_purge(spark, root):
         )
 
 
+def test_merge_on_read_update_after_delete(spark, root):
+    """On a merge-on-read table SQL DELETE, UPDATE and MERGE each commit
+    a deletion-vector entry (UPDATE follows ``write.delete.mode`` too,
+    also once the table holds a DV) and rewrite no data file."""
+    S.write_snapshot(
+        spark.range(1000).select("id", (F.col("id") % 10).alias("k"))
+        .repartitionByRange(4, "id"),
+        root,
+    )
+    t = {"t": root}
+    sql_dml.execute_dml(
+        spark,
+        "ALTER TABLE t SET TBLPROPERTIES ('write.delete.mode'='merge-on-read')",
+        t,
+    )
+    files_before = {
+        d: sorted(os.listdir(os.path.join(root, d)))
+        for d in os.listdir(root)
+        if d.startswith("snap-") and os.path.isdir(os.path.join(root, d))
+    }
+    want = {i: i % 10 for i in range(1000) if i % 10 != 3}
+    src = spark.createDataFrame([(7, 70), (2000, 1)], "id long, k long")
+    for stmt, n_dvs in (
+        ("DELETE FROM t WHERE k = 3", 1),
+        ("UPDATE t SET k = k + 100 WHERE id < 20", 2),
+        ("MERGE INTO t USING s ON t.id = s.id WHEN MATCHED THEN UPDATE SET * "
+         "WHEN NOT MATCHED THEN INSERT *", 3),
+    ):
+        out = sql_dml.execute_dml(spark, stmt, t, sources={"s": src})
+        entry = S._entry(S._load(root), out["snapshot_id"])
+        assert entry["op"].endswith("_dv") and len(entry["dvs"]) == n_dvs, stmt
+    want.update({i: i % 10 + 100 for i in range(20) if i % 10 != 3})
+    want.update({7: 70, 2000: 1})
+    assert {r.id: r.k for r in S.read_snapshot(spark, root).collect()} == want
+    for d, fs in files_before.items():  # no data file rewritten
+        assert sorted(os.listdir(os.path.join(root, d))) == fs
+
+
 def test_merge_rejects_mispaired_clause_actions(spark, root):
     """'WHEN MATCHED THEN INSERT *' parses lexically but is nonsense —
     on the merge-on-read route it used to crash with IndexError (no
@@ -804,8 +842,9 @@ def test_merge_insert_leaves_same_key_target_rows(spark, tmp_path, mode):
 @pytest.mark.parametrize("mode", MODES)
 def test_merge_two_manifest_loads(spark, tmp_path, monkeypatch, mode):
     """Every uncontended MERGE shape loads the manifest exactly twice:
-    the executor attempt's own load and the committing writer's. A
-    DELETE-only MERGE needs only the key columns on its source."""
+    the executor attempt's own load and the committing writer's, and
+    runs one keyscan, which the writer reuses. A DELETE-only MERGE
+    needs only the key columns on its source."""
     from e_commerce_lakehouse_spark.sources import deletes as D
 
     src = spark.createDataFrame([(1, "S1"), (3, "S3")], "id long, v string")
@@ -828,11 +867,17 @@ def test_merge_two_manifest_loads(spark, tmp_path, monkeypatch, mode):
         ),
     ]
     orig, calls = S._load, {"n": 0}
+    orig_keys, keyscans = D._batch_key_predicates, {"n": 0}
 
     def counting(r):
         calls["n"] += 1
         return orig(r)
 
+    def counting_keys(*a, **k):
+        keyscans["n"] += 1
+        return orig_keys(*a, **k)
+
+    monkeypatch.setattr(D, "_batch_key_predicates", counting_keys)
     for i, (stmt, source, want) in enumerate(shapes):
         root = str(tmp_path / f"t{i}")
         S.write_snapshot(
@@ -840,10 +885,11 @@ def test_merge_two_manifest_loads(spark, tmp_path, monkeypatch, mode):
         )
         D.set_delete_mode(root, mode)
         monkeypatch.setattr(S, "_load", counting)
-        calls["n"] = 0
+        calls["n"] = keyscans["n"] = 0
         sql_dml.execute_dml(spark, stmt, {"t": root}, sources={"s": source})
         monkeypatch.setattr(S, "_load", orig)
         assert calls["n"] == 2, stmt
+        assert keyscans["n"] == 1, stmt
         assert _rows(S.read_snapshot(spark, root)) == want, stmt
 
 

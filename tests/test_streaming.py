@@ -677,13 +677,14 @@ def test_merge_sink_defaults_to_merge_on_read(spark, tmpdir):
     got = {r.k: r.v for r in snap.read_snapshot(spark, root).collect()}
     assert got == {"a": 9, "b": 2, "c": 3}
 
-    # explicit copy-on-write opts out
+    # explicit copy-on-write opts out: the batch rewrites the files it
+    # touches (no whole-table overwrite)
     root2 = f"{tmpdir}/tbl2"
     sink2 = sinks.foreach_batch_merge_snapshot(root2, ["k"], order_col="seq")
     sink2(spark.createDataFrame([("a", 1, 1)], schema), 0)
     D.set_delete_mode(root2, "copy-on-write")
     sink2(spark.createDataFrame([("a", 5, 2)], schema), 1)
-    assert [h["op"] for h in snap.history(root2)] == ["overwrite", "overwrite"]
+    assert [h["op"] for h in snap.history(root2)] == ["overwrite", "merge"]
     assert {r.k: r.v for r in snap.read_snapshot(spark, root2).collect()} == {"a": 5}
 
 
