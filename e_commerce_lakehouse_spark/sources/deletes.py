@@ -16,10 +16,11 @@ and the delete mode picks the commit half:
   as one dir — O(changed rows) written, no data file rewritten; reads
   pay one broadcast anti-join (``snapshots._apply_dvs``);
 - copy-on-write (:func:`_commit_purge`): only the files holding a
-  mark (or an existing DV) are re-read and their survivors written
-  with the post-states into one dir, stats-proven all-match files
-  drop unread, the rest carry over verbatim — the purge
-  :func:`rewrite_deletes` runs, so the entry never carries a DV.
+  mark are re-read, and their unmatched rows written with the
+  post-states into one dir; stats-proven all-match files drop
+  unread, the rest carry over verbatim. A change that commits also
+  purges the files the entry's DVs mark (the purge
+  :func:`rewrite_deletes` runs), so the entry never carries a DV.
 
 Contract with the rest of the lakehouse tier:
 
@@ -40,8 +41,11 @@ Contract with the rest of the lakehouse tier:
   (``_guard_no_dvs``) until :func:`rewrite_deletes` materializes them.
 
 Deletion vectors win when changes are sparse relative to file size
-(the CDC/MERGE/GDPR shape); copy-on-write when a change dooms most
-rows of the files it touches, or readers must never pay the anti-join.
+(the CDC/MERGE/GDPR shape). Copy-on-write reads the candidate files
+once to find the touched ones and the touched ones once more to
+rewrite them (Delta's two phases): choose it when readers must never
+pay the anti-join, or when the stats leave many more files than a
+change touches.
 """
 
 from __future__ import annotations
@@ -93,19 +97,16 @@ def _purged(
     root: str,
     entry: dict,
     rel_files: list[str],
-    doomed: DataFrame,
+    rest: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """The copy-on-write purge: the rows of ``rel_files`` (root-relative
-    files of ``entry``) minus the ``doomed`` ``(file, pos)`` positions,
-    read once off the raw scan."""
-    tagged = _tag_positions(
-        S._scan_entry_files(spark, entry, [os.path.join(root, p) for p in rel_files])
-    )
-    return tagged.join(
-        doomed,
-        (tagged._file == doomed.file) & (tagged._pos == doomed.pos),
-        "left_anti",
-    ).drop("_file", "_pos")
+    files of ``entry``) minus the positions ``entry``'s DVs mark, read
+    once off the raw scan; ``rest`` (a change's unmatched side) keeps
+    only the rows the change leaves."""
+    live = S._apply_dvs(spark, root, entry, S._scan_entry_files(
+        spark, entry, [os.path.join(root, p) for p in rel_files]
+    ))
+    return live if rest is None else rest(live)
 
 
 def _write_dv_sidecar(
@@ -261,38 +262,44 @@ def _commit_purge(
     marked: DataFrame | None,
     appended: DataFrame | None,
     dropped: set[str],
+    rest: Callable[[DataFrame], DataFrame],
 ) -> int:
     """The copy-on-write half of the writer: the files holding a
-    ``marked`` position are purged (:func:`_purged`), their survivors
-    written with ``appended`` into one dir, the ``dropped`` files leave
-    unread and the rest carry over, through
-    :func:`snapshots._commit_rewrite`. A change that commits also
-    purges the files the entry's DVs mark: the entry carries no DV."""
-    units = [os.path.join(d, f) for d, f in S._entry_units(root, manifest, entry)]
-    rewrite, doomed, dvs = set(), None, entry.get("dvs") or []
+    ``marked`` row are read once more and their ``rest`` rows (the
+    matcher's unmatched side) written with ``appended`` into one dir
+    (:func:`_purged`), the ``dropped`` files leave unread and the rest
+    carry over, through :func:`snapshots._commit_rewrite`. A change
+    that commits also purges the carried files the entry's DVs mark
+    (``_commit_rewrite``'s ``purge``): the entry carries no DV."""
+    rewrite = set()
     if marked is not None:
         rewrite = {r[0] for r in marked.select("_file").distinct().collect()}
-        doomed = marked.select(F.col("_file").alias("file"), F.col("_pos").alias("pos"))
-    if dvs and (rewrite or dropped or S._is_batch_record(meta) or (
-        appended is not None and (not appended.isEmpty() or json.loads(
-            S._merge_rewrite_schema(manifest, entry["schema"], appended.schema)
-        ) != json.loads(entry["schema"]))
-    )):
-        old = S._read_dvs(spark, root, dvs)
-        rewrite |= {r[0] for r in old.select("file").distinct().collect()} & set(units)
-        doomed, dvs = old if doomed is None else doomed.unionByName(old), []
-    rows = _purged(spark, root, entry, sorted(rewrite), doomed) if rewrite else None
+    rows = _purged(spark, root, entry, sorted(rewrite), rest) if rewrite else None
     if appended is not None:
         rows = appended if rows is None else rows.unionByName(
             appended, allowMissingColumns=True
         )
     keep: dict[str, list[str]] = {}
-    for rel in units:
-        if rel not in rewrite and rel not in dropped:
-            keep.setdefault(os.path.dirname(rel), []).append(os.path.basename(rel))
+    for d, f in S._entry_units(root, manifest, entry):
+        if (rel := os.path.join(d, f)) not in rewrite and rel not in dropped:
+            keep.setdefault(d, []).append(f)
+
+    def purge(keep: dict[str, list[str]]) -> DataFrame | None:
+        old = S._read_dvs(spark, root, entry["dvs"])
+        hit = {r[0] for r in old.select("file").distinct().collect()}
+        files = [
+            os.path.join(d, f) for d, fs in keep.items() for f in fs
+            if os.path.join(d, f) in hit
+        ]
+        for rel in files:
+            keep[os.path.dirname(rel)].remove(os.path.basename(rel))
+        return _purged(spark, root, entry, files) if files else None
+
+    dvs = entry.get("dvs") or []
     return S._commit_rewrite(
         root, manifest, entry, op, op, rows, keep,
-        {**meta, "rewritten": sorted(rewrite), "dropped": len(dropped)}, dvs=dvs,
+        {**meta, "rewritten": sorted(rewrite), "dropped": len(dropped)},
+        dvs=dvs, purge=purge if dvs else None,
     )
 
 
@@ -303,7 +310,7 @@ def _write_changes(
     mode: str,
     op: str,
     plan: Callable[[dict, dict, DataFrame | None], tuple],
-    match: Callable[[DataFrame, DataFrame | None], DataFrame],
+    match: Callable[[DataFrame, DataFrame | None, str], DataFrame],
     post_state: Callable[[DataFrame | None, DataFrame | None], DataFrame] | None = None,
     batch: DataFrame | None = None,
     meta: dict | None = None,
@@ -315,10 +322,12 @@ def _write_changes(
     entry, table_cols)`` checks the attempt and returns the ``batch``
     columns; ``plan(manifest, entry, batch)`` returns the files to scan
     (None: all), those the stats prove all-match (copy-on-write drops
-    them unread) and the plan's commit meta; ``match(tagged, batch)``
-    keeps the matched rows of the position-tagged scan;
-    ``post_state(matched, batch)`` builds the appended rows. The batch
-    and the matched rows stay persisted for the call."""
+    them unread) and the plan's commit meta; ``match(tagged, batch,
+    how)`` keeps the matched rows of a scan (``how`` ``left_semi``; the
+    writer's scan is position-tagged) or the rest (``left_anti``: the
+    rows a copy-on-write rewrite keeps); ``post_state(matched, batch)`` builds the appended rows.
+    The batch and, when a post-state reads them, the matched rows stay
+    persisted for the call."""
     entry_op = f"{op}_dv" if mode == MOR else op
     manifest, entry = _load_guarded(root, entry_op)
     cols = [f["name"] for f in json.loads(entry["schema"])["fields"]]
@@ -334,8 +343,9 @@ def _write_changes(
         files = [f for f in files if f not in dropped]
         if files:
             raw = S._scan_entry_files(spark, entry, [os.path.join(root, f) for f in files])
-            matched = match(_minus_prior_dvs(spark, root, entry, _tag_positions(raw)), src)
-            if post_state is not None or mode == COW:
+            tagged = _minus_prior_dvs(spark, root, entry, _tag_positions(raw))
+            matched = match(tagged, src, "left_semi")
+            if post_state is not None:
                 matched = matched.persist()
         appended = None
         if post_state is not None:
@@ -344,7 +354,8 @@ def _write_changes(
         if mode == MOR:
             return _commit_change(root, manifest, entry, entry_op, meta, matched, appended)
         return _commit_purge(
-            spark, root, manifest, entry, entry_op, meta, matched, appended, dropped
+            spark, root, manifest, entry, entry_op, meta, matched, appended, dropped,
+            lambda tagged: match(tagged, src, "left_anti"),
         )
     finally:
         if matched is not None:
@@ -377,12 +388,11 @@ def _where(root: str, predicates: list[tuple], drop_all_match: bool = False) -> 
             "predicates": [S._json_safe_predicate(q) for q in predicates]
         }
 
-    return {
-        "plan": plan,
-        "match": lambda tagged, src: tagged.filter(
-            F.coalesce(S._conjunction(predicates), F.lit(False))
-        ),
-    }
+    def match(tagged: DataFrame, src, how: str) -> DataFrame:
+        hit = F.coalesce(S._conjunction(predicates), F.lit(False))
+        return tagged.filter(hit if how == "left_semi" else ~hit)
+
+    return {"plan": plan, "match": match}
 
 
 def _update(
@@ -441,12 +451,12 @@ def _keyed(
         files, scan = planned or _plan_matched_scan(manifest, root, match_keys(src), keys)
         return files, set(), {"scan": scan}
 
-    def match(tagged: DataFrame, src: DataFrame) -> DataFrame:
+    def match(tagged: DataFrame, src: DataFrame, how: str) -> DataFrame:
         kf = F.broadcast(match_keys(src))
         cond = functools.reduce(
             operator.and_, [tagged[k].eqNullSafe(kf[k]) for k in keys]
         )
-        return tagged.join(kf, cond, "left_semi")
+        return tagged.join(kf, cond, how)
 
     return {"plan": plan, "match": match, "post_state": post_state, "batch": batch}
 
@@ -462,17 +472,6 @@ def delete_where_dv(
     never re-marked. Returns the new snapshot id (the unchanged
     current id when nothing matched — a no-op commits nothing)."""
     return _write_changes(spark, root, MOR, "delete", **_where(root, predicates))
-
-
-def _file_rows(fstats: dict | None) -> int | None:
-    """Footer row count for one file from its recorded stats (every
-    column of a file shares it); None when unrecorded."""
-    if not fstats:
-        return None
-    first = next(iter(fstats.values()), None)
-    if isinstance(first, dict):
-        return first.get("rows")
-    return None
 
 
 @S._retry_conflicts
@@ -521,7 +520,7 @@ def rewrite_deletes(
         rel = os.path.join(d, f)
         n_del = per_file_deleted.get(rel, 0)
         if n_del:
-            rows = _file_rows(dir_stats.get(d, {}).get(f))
+            rows = S._file_rows(dir_stats.get(d, {}).get(f))
             if rows is None or rows <= 0 or n_del >= min_deleted_frac * rows:
                 rewrite.append(rel)
                 continue
@@ -531,7 +530,7 @@ def rewrite_deletes(
     if not rewrite and len(dvs) <= 1:
         return entry["id"]  # nothing to purge, stack already minimal
 
-    survivors = _purged(spark, root, entry, rewrite, dv) if rewrite else None
+    survivors = _purged(spark, root, entry, rewrite) if rewrite else None
 
     new_dvs: list[str] = []
     if keep_marked:

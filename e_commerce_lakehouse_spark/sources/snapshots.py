@@ -54,6 +54,7 @@ import re
 import shutil
 import threading
 import time
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -627,8 +628,7 @@ def _entry_summary(manifest: dict, s: dict) -> dict:
         fnames = s["files"].get(d, list(st)) if "files" in s else list(st)
         n_files += len(fnames)
         for f in fnames:
-            first = next(iter((st.get(f) or {}).values()), None)
-            rows = first.get("rows") if isinstance(first, dict) else None
+            rows = _file_rows(st.get(f))
             if rows is None:
                 known = False
             else:
@@ -676,13 +676,7 @@ def _entry_summary(manifest: dict, s: dict) -> dict:
             rm_files += len(gone)
             st = peek(d)
             for f in gone:
-                first = (
-                    next(iter((st.get(f) or {}).values()), None)
-                    if isinstance(st, dict) else None
-                )
-                rows = (
-                    first.get("rows") if isinstance(first, dict) else None
-                )
+                rows = _file_rows(st.get(f)) if isinstance(st, dict) else None
                 if rows is None:
                     rows_known = False
                 else:
@@ -1235,6 +1229,13 @@ def _stat_value(v):
         except (TypeError, ValueError):
             return None
     return None
+
+
+def _file_rows(fstats: dict | None) -> int | None:
+    """Footer row count for one file from its recorded stats (every
+    column of a file shares it); None when unrecorded."""
+    first = next(iter((fstats or {}).values()), None)
+    return first.get("rows") if isinstance(first, dict) else None
 
 
 def _collect_dir_stats(
@@ -2936,8 +2937,7 @@ def metadata_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
                 if os.path.exists(p):
                     n_bytes += os.path.getsize(p)
                 fst = st.get(f) or {}
-                first = next(iter(fst.values()), None)
-                r = first.get("rows") if isinstance(first, dict) else None
+                r = _file_rows(fst)
                 if r is None:
                     rows_known = False
                 else:
@@ -3406,6 +3406,7 @@ def _commit_rewrite(
     meta: dict,
     dvs: list[str] = (),
     data_change: bool = True,
+    purge: Callable[[dict[str, list[str]]], DataFrame | None] | None = None,
 ) -> int:
     """The commit half every file-granular rewrite shares (the
     copy-on-write half of ``deletes._write_changes``,
@@ -3420,7 +3421,13 @@ def _commit_rewrite(
     vectors are ``dvs``. A rewrite that drops no file, adds no row and
     leaves the deletion vectors and the schema as they were commits
     nothing and returns ``entry``'s id, unless ``meta`` is a streaming
-    sink's batch record (:func:`_is_batch_record`)."""
+    sink's batch record (:func:`_is_batch_record`).
+
+    ``purge`` (the copy-on-write writer's) lifts ``entry``'s deletion
+    vectors once the rewrite is known to commit: ``purge(keep)`` takes
+    the files they mark out of ``keep`` and returns those files' rows
+    minus the marks (None: no such file), written into a second
+    ``purge`` dir; the entry then carries no deletion vector."""
     data_dir, schema = None, entry["schema"]
     if rows is not None:
         data_dir = _write_rows_dir(rows, root, manifest, dir_op)
@@ -3434,9 +3441,16 @@ def _commit_rewrite(
         and not _is_batch_record(meta)
     ):
         return entry["id"]
+    if purge is not None:
+        if data_dir is not None:
+            keep[data_dir] = list(manifest["dir_stats"][data_dir])
+        purged, dvs = purge(keep), []
+        data_dir = None if purged is None else _write_rows_dir(
+            purged, root, manifest, "purge"
+        )
     return _commit_entry(root, manifest, _child_entry(
         manifest, op, entry, add_dir=data_dir,
-        files={d: sorted(fs) for d, fs in keep.items()},
+        files={d: sorted(fs) for d, fs in keep.items() if fs},
         dvs=list(dvs), schema=schema, meta=meta, data_change=data_change,
     ))
 
@@ -3893,11 +3907,11 @@ def _table_stats(manifest: dict, snapshot_id: int | None = None) -> dict:
         for col, s in fstats.items():
             if not col.startswith("_p_") and isinstance(s, dict):
                 universe.add(col)
-        first = next(iter(fstats.values()), None)
-        if first is None or first.get("rows") is None:
+        rows = _file_rows(fstats)
+        if rows is None:
             rows_known = False
         else:
-            n_rows += first["rows"]
+            n_rows += rows
     nulls: dict = {c: 0 for c in universe}
     for fstats in per_file:
         for col in universe:

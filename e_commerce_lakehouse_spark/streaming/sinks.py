@@ -144,16 +144,7 @@ def foreach_batch_merge_snapshot(
 
         src = batch_df
         if order_col is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*keys).orderBy(
-                F.col(order_col).desc(), *[F.col(k) for k in keys]
-            )
-            src = (
-                src.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+            src = _first_per_key(src, keys, F.col(order_col).desc(), *map(F.col, keys))
 
         def write(mode: str, meta: dict) -> None:
             spark = batch_df.sparkSession
@@ -196,20 +187,13 @@ def foreach_batch_apply_changes(
 
         src = batch_df
         if order_col is not None:
-            from pyspark.sql import Window
-
             pre_last = (F.col("_change_type") == "update_preimage").cast("int")
             # _change_type joins the sort so a delete-vs-insert tie at
             # the same sequence value resolves the same way on every
             # task/retry (keys are constant within the partition and
             # cannot break this tie)
-            w = Window.partitionBy(*keys).orderBy(
-                F.col(order_col).desc(), pre_last.asc(), F.col("_change_type").asc()
-            )
-            src = (
-                src.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
+            src = _first_per_key(
+                src, keys, F.col(order_col).desc(), pre_last.asc(), F.col("_change_type").asc()
             )
 
         def write(mode: str, meta: dict) -> None:
@@ -221,6 +205,14 @@ def foreach_batch_apply_changes(
         _write_batch_once(root, batch_id, deletes._post_states(src), write)
 
     return fn
+
+
+def _first_per_key(df: DataFrame, keys: list[str], *order) -> DataFrame:
+    """Each key's first row under ``order`` (DLT's SEQUENCE BY)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 def _write_batch_once(

@@ -80,16 +80,13 @@ def test_row_level_writes_use_the_one_change_writer():
     """``operators.upsert.merge_upsert`` / ``apply_changes`` stay the
     reference model (the driver contract and the tests use them): no
     storage or streaming module writes a table through them. Matched
-    rows are position-tagged only by the change writer and the purge
-    it shares with ``rewrite_deletes``."""
+    rows are position-tagged only by the change writer."""
     pkg = ROOT / "e_commerce_lakehouse_spark"
     write_paths = [*(pkg / "sources").rglob("*.py"), *(pkg / "streaming").rglob("*.py")]
     for name in ("merge_upsert", "apply_changes"):
         assert not _callers(name, write_paths), name
     deletes = "e_commerce_lakehouse_spark/sources/deletes.py"
-    assert _callers("_tag_positions") == {
-        f"{deletes}:_write_changes", f"{deletes}:_purged"
-    }
+    assert _callers("_tag_positions") == {f"{deletes}:_write_changes"}
 
 
 def _ref_writes(tree) -> list[tuple[str, int, str]]:

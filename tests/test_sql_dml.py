@@ -676,6 +676,48 @@ def test_merge_on_read_update_after_delete(spark, root):
         assert sorted(os.listdir(os.path.join(root, d))) == fs
 
 
+def test_cow_change_on_a_dv_table_purges_every_mark(spark, root):
+    """A copy-on-write change on a table that holds deletion vectors (a
+    merge-on-read sink fed it; SQL's unset mode is copy-on-write) lifts
+    every mark: a file the stats prove all-match drops unread, a
+    touched file is rewritten minus its marks, and an untouched marked
+    file is purged; no deleted row comes back. A change that matches
+    nothing commits nothing and keeps the marks."""
+    from e_commerce_lakehouse_spark.sources import deletes as D
+
+    for lo in (0, 1000, 2000):  # three files with disjoint id ranges
+        S.write_snapshot(
+            spark.range(lo, lo + 1000).select("id", (F.col("id") % 10).alias("k"))
+            .repartition(1),
+            root, mode="append",
+        )
+    t = {"t": root}
+    want = {i: i % 10 for i in range(3000)}
+
+    def marks(ids):
+        D.delete_where_dv(spark, root, [("id", "in", ids)])
+        for i in ids:
+            del want[i]
+
+    def check(stmt, n_dvs):
+        out = sql_dml.execute_dml(spark, stmt, t)
+        m = S._load(root)
+        assert len(S._entry(m, m["current"]).get("dvs", [])) == n_dvs, stmt
+        assert {r.id: r.k for r in S.read_snapshot(spark, root).collect()} == want, stmt
+        assert S.table_stats(root)["n_rows"] == len(want), stmt
+        return out
+
+    marks([5, 1500, 2500])
+    sid = S._load(root)["current"]
+    assert check("DELETE FROM t WHERE id = 99999", 1)["snapshot_id"] == sid
+    for i in range(1000):
+        want.pop(i, None)
+    check("DELETE FROM t WHERE id < 1000", 0)  # the 0-999 file drops unread
+    marks([1600, 2600])
+    want[1200] = -1
+    check("UPDATE t SET k = -1 WHERE id = 1200", 0)
+
+
 def test_merge_rejects_mispaired_clause_actions(spark, root):
     """'WHEN MATCHED THEN INSERT *' parses lexically but is nonsense —
     on the merge-on-read route it used to crash with IndexError (no
